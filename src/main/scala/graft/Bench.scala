@@ -5,6 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Per-round benchmark main (driver contract): times every registered
   * query on SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
+  * Two stdout lines carry `"metric":"total"`: the full line with the
+  * per-query map, then (after the per-query `{"q","sec"}` lines) the
+  * compact [[compactLine]], which ends the output. Consumers take the
+  * LAST `"metric":"total"` line; both carry the same total, and the
+  * name stays because existing parsers key on it.
+  *
   * Each query is forced through the `noop` sink — unlike `count()`,
   * which lets Catalyst prune projected columns, noop materializes every
   * output column through the full physical plan, so transform-only

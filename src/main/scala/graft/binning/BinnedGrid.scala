@@ -1,7 +1,10 @@
 package graft.binning
 
+import graft.binning.MetaNode.{MArr, MInt, MNum, MObj, MStr}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Driver-resident dense N-D histogram volume — the engine's analogue of
   * the reference's "histdict" / xarray containers (SURVEY.md §1.1 B/C:
@@ -15,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 case class BinnedGrid(data: Array[Long], axes: Seq[BinAxis]) {
   val shape: Seq[Int] = axes.map(_.nbins)
-  private val strides: Seq[Long] = shape.indices.map(i => shape.drop(i + 1).product.toLong)
+  private val strides: Array[Long] = BinnedGrid.strides(shape)
   require(data.length == shape.product, s"data ${data.length} != ${shape.product}")
 
   def apply(idx: Int*): Long = {
@@ -120,17 +123,22 @@ case class BinnedGrid(data: Array[Long], axes: Seq[BinAxis]) {
     out
   }
 
-  /** Back to the sparse relational layout for further distributed work. */
+  /** Back to the sparse relational layout (`bin_<axis>…, cnt`, one row
+    * per non-empty cell) for further distributed work. The cells travel
+    * as two primitive arrays in one partition; rows are built in the task. */
   def toDF(spark: SparkSession): DataFrame = {
-    val rows = data.zipWithIndex.collect { case (c, flat) if c > 0 =>
-      val idx = axes.indices.map(d => (flat / strides(d)) % shape(d))
-      Row.fromSeq(idx :+ c)
+    val n = data.count(_ != 0)
+    val flats = new Array[Int](n)
+    val counts = new Array[Long](n)
+    var flat = 0
+    var k = 0
+    while (flat < data.length) {
+      if (data(flat) != 0) { flats(k) = flat; counts(k) = data(flat); k += 1 }
+      flat += 1
     }
-    val schema = org.apache.spark.sql.types.StructType(
-      axes.map(a => org.apache.spark.sql.types.StructField(s"bin_${a.name}",
-        org.apache.spark.sql.types.LongType)) :+
-        org.apache.spark.sql.types.StructField("cnt", org.apache.spark.sql.types.LongType))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    val schema = StructType(axes.map(a => StructField(s"bin_${a.name}", LongType)) :+
+      StructField("cnt", LongType))
+    spark.createDataFrame(BinnedGrid.cellRows(spark, flats, counts, shape), schema)
   }
 }
 
@@ -143,15 +151,33 @@ object BinnedGrid {
     "kx" -> "1/A", "ky" -> "1/A", "E" -> "eV", "delay" -> "ps",
     "value" -> "a.u.", "user" -> "id", "hour" -> "h")
 
+  /** Row-major strides of `shape`: flat index = Σ bin(d) · strides(d). */
+  private[binning] def strides(shape: Seq[Int]): Array[Long] =
+    shape.indices.map(i => shape.drop(i + 1).map(_.toLong).product).toArray
+
+  /** One partition holding the (flat index, count) arrays, expanded into
+    * `bin_<axis>…, cnt` rows inside the task. */
+  private def cellRows(spark: SparkSession, flats: Array[Int], counts: Array[Long],
+                       shape: Seq[Int]): RDD[Row] = {
+    val dims = shape.map(_.toLong).toArray
+    val str = strides(shape)
+    spark.sparkContext.parallelize(Seq((flats, counts)), 1).flatMap { case (fs, cs) =>
+      fs.indices.iterator.map(k => Row.fromSeq(dims.indices.map(d => (fs(k) / str(d)) % dims(d)) :+ cs(k)))
+    }
+  }
+
   /** Densify a sparse relational histogram (bin_*..., cnt) produced by
     * [[Binning.histogramNd]] into a driver grid. */
   def collect(hist: DataFrame, axes: Seq[BinAxis]): BinnedGrid = {
-    val strides = axes.indices.map(i => axes.drop(i + 1).map(_.nbins).product.toLong)
+    val n = axes.length
+    val str = strides(axes.map(_.nbins))
     val data = new Array[Long](axes.map(_.nbins).product)
     hist.select(axes.map(a => col(s"bin_${a.name}")) :+ col("cnt"): _*)
       .collect().foreach { r =>
-        val flat = axes.indices.map(d => r.getLong(d) * strides(d)).sum
-        data(flat.toInt) = r.getLong(axes.length)
+        var flat = 0L
+        var d = 0
+        while (d < n) { flat += r.getLong(d) * str(d); d += 1 }
+        data(flat.toInt) = r.getLong(n)
       }
     BinnedGrid(data, axes)
   }
@@ -159,6 +185,13 @@ object BinnedGrid {
   /** Persist as a parquet of sparse cells plus a JSON axes sidecar —
     * the engine's equivalent of the reference's `binned/ + axes/` HDF5
     * layout (`xarray_to_h5`, `fprocessing.py:3354-3416`).
+    *
+    * Like the reference, the volume is written on the driver, with no
+    * Spark job: `path/binned/` becomes one parquet file holding only the
+    * non-empty cells, columns `bin_<axis>…: long, cnt: long` — readable
+    * by `spark.read.parquet` and equal to [[BinnedGrid.toDF]]. A second
+    * save to the same path replaces the first. `axes.json` and
+    * `metadata.json` sit beside `binned/`.
     *
     * `meta` carries the reference's NESTED metadata tree (the
     * `gather_metadata` dict written group-by-group by the recursive
@@ -171,88 +204,95 @@ object BinnedGrid {
   def save(grid: BinnedGrid, spark: SparkSession, path: String,
            metadata: Map[String, String] = Map.empty,
            meta: Option[MetaNode.MObj] = None): Unit = {
-    grid.toDF(spark).coalesce(1).write.mode("overwrite").parquet(s"$path/binned")
-    def q(x: String) = "\"" + x.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val axesJson = grid.axes.map { a =>
-      val unit = metadata.getOrElse(s"unit_${a.name}",
-        defaultUnits.getOrElse(a.name, "a.u."))
-      s"""{"name":"${a.name}","nbins":${a.nbins},"lo":${a.lo},"hi":${a.hi},"unit":${q(unit)}}"""
-    }.mkString("[", ",", "]")
-    val metaJson = meta match {
-      case Some(tree) => MetaTree.render(tree)
-      case None => metadata.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-        .mkString("{", ",", "}")
-    }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/axes.json"), axesJson)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/metadata.json"), metaJson)
+    CellsParquet.write(grid, spark.sparkContext.hadoopConfiguration, s"$path/binned")
+    writeAxes(path, grid.axes, metadata)
+    writeText(path, "metadata.json", MetaTree.render(
+      meta.getOrElse(MObj(metadata.toSeq.map { case (k, v) => k -> MStr(v) }))))
   }
+
+  /** Load a volume written by [[save]] — on the driver, like the write.
+    * Every `*.parquet` under `path/binned/` is read, so volumes that an
+    * older Spark-job writer saved as several parts still load. */
+  def load(spark: SparkSession, path: String): BinnedGrid =
+    CellsParquet.read(spark.sparkContext.hadoopConfiguration, s"$path/binned", readAxes(path))
 
   /** Persist a ≥2-D grid as separated per-slice datasets `V0..Vn` along
     * `cutAxis` — the reference's 4D export layout (`saveDict` h5 branch,
     * `fprocessing.py:931-955`: 4D data is rolled on `cutaxis` (default
     * 3, the delay axis) and written as 3D datasets `binned/V{i}`, with
     * every original axis vector under `axes/`). Here: one sparse parquet
-    * per slice at `path/binned/<sliceName><i>`, the FULL original axes
-    * in `axes.json`, and the cut parameters in `sliced.json`.
+    * per slice at `path/binned/<sliceName><i>`, written like [[save]]'s,
+    * the FULL original axes in `axes.json`, and the cut parameters in
+    * `sliced.json`.
     */
   def saveSliced(grid: BinnedGrid, spark: SparkSession, path: String,
                  cutAxis: Int = 3, sliceName: String = "V",
                  metadata: Map[String, String] = Map.empty): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val binned = new org.apache.hadoop.fs.Path(s"$path/binned")
+    binned.getFileSystem(conf).delete(binned, true)
     val slices = grid.sliceAlong(cutAxis)
     slices.zipWithIndex.foreach { case (g, i) =>
-      g.toDF(spark).coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/binned/$sliceName$i")
+      CellsParquet.write(g, conf, s"$path/binned/$sliceName$i")
     }
-    val axesJson = grid.axes.map { a =>
-      val unit = metadata.getOrElse(s"unit_${a.name}",
-        defaultUnits.getOrElse(a.name, "a.u."))
-      s"""{"name":"${a.name}","nbins":${a.nbins},"lo":${a.lo},"hi":${a.hi},"unit":"$unit"}"""
-    }.mkString("[", ",", "]")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/axes.json"), axesJson)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$path/sliced.json"),
-      s"""{"cutAxis":$cutAxis,"sliceName":"$sliceName","n":${slices.length}}""")
+    writeAxes(path, grid.axes, metadata)
+    writeText(path, "sliced.json", MetaTree.render(MObj.of(
+      "cutAxis" -> MInt(cutAxis), "sliceName" -> MStr(sliceName), "n" -> MInt(slices.length))))
   }
 
   /** Load a [[saveSliced]] layout back into the full N-D grid (slices
     * re-stacked at the recorded cut axis). */
   def loadSliced(spark: SparkSession, path: String): BinnedGrid = {
-    val axesJson = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$path/axes.json"))
-    val axes = """\{"name":"([^"]+)","nbins":(\d+),"lo":([-0-9.eE]+),"hi":([-0-9.eE]+)""".r
-      .findAllMatchIn(axesJson).map { m =>
-        BinAxis(m.group(1), m.group(2).toInt, m.group(3).toDouble, m.group(4).toDouble)
-      }.toSeq
-    val sliced = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$path/sliced.json"))
-    val cutAxis = """"cutAxis":(\d+)""".r.findFirstMatchIn(sliced).get.group(1).toInt
-    val sliceName = """"sliceName":"([^"]+)"""".r.findFirstMatchIn(sliced).get.group(1)
-    val n = """"n":(\d+)""".r.findFirstMatchIn(sliced).get.group(1).toInt
+    val axes = readAxes(path)
+    val sliced = MetaTree.parse(readText(path, "sliced.json")).asInstanceOf[MObj]
+    val cutAxis = sliced.int("cutAxis").toInt
+    val sliceName = sliced.str("sliceName")
+    val n = sliced.int("n").toInt
     require(n == axes(cutAxis).nbins, s"slice count $n != axis ${axes(cutAxis).name}")
     val restAxes = axes.patch(cutAxis, Nil, 1)
+    val conf = spark.sparkContext.hadoopConfiguration
     val slices = (0 until n).map { i =>
-      collect(spark.read.parquet(s"$path/binned/$sliceName$i"), restAxes)
+      CellsParquet.read(conf, s"$path/binned/$sliceName$i", restAxes)
     }
     // inverse of sliceAlong's single row-major pass
     val shape = axes.map(_.nbins)
-    val strides = shape.indices.map(i => shape.drop(i + 1).product.toLong)
+    val str = strides(shape)
     val data = new Array[Long](shape.product)
     val src = new Array[Int](n)
     var flat = 0
     while (flat < data.length) {
-      val ci = ((flat / strides(cutAxis)) % n).toInt
+      val ci = ((flat / str(cutAxis)) % n).toInt
       data(flat) = slices(ci).data(src(ci))
       src(ci) += 1
       flat += 1
     }
     BinnedGrid(data, axes)
   }
+
+  /** The `axes.json` sidecar [[save]] and [[saveSliced]] share: one
+    * object per axis with its binning and unit (`metadata`'s
+    * `unit_<axis>`, else [[defaultUnits]], else `a.u.`). */
+  private def writeAxes(path: String, axes: Seq[BinAxis], metadata: Map[String, String]): Unit =
+    writeText(path, "axes.json", MetaTree.render(MArr(axes.map { a =>
+      val unit = metadata.getOrElse(s"unit_${a.name}", defaultUnits.getOrElse(a.name, "a.u."))
+      MObj.of("name" -> MStr(a.name), "nbins" -> MInt(a.nbins), "lo" -> MNum(a.lo),
+        "hi" -> MNum(a.hi), "unit" -> MStr(unit))
+    })))
+
+  private def readAxes(path: String): Seq[BinAxis] =
+    MetaTree.parse(readText(path, "axes.json")) match {
+      case MArr(items) => items.map {
+        case o: MObj => BinAxis(o.str("name"), o.int("nbins").toInt, o.num("lo"), o.num("hi"))
+        case other => throw new IllegalArgumentException(s"$path/axes.json: bad axis $other")
+      }
+      case other => throw new IllegalArgumentException(s"$path/axes.json root must be an array, got $other")
+    }
+
+  private def writeText(path: String, name: String, text: String): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$path/$name"), text)
+
+  private def readText(path: String, name: String): String =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(s"$path/$name"))
 
   /** Export a 2D grid as a float32 TIFF or 16-bit PNG image — the
     * reference's `saveDict(form='tiff'/'png')` branches
@@ -269,15 +309,6 @@ object BinnedGrid {
       case _ => throw new IllegalArgumentException(
         s"saveImage: unsupported extension in '$path' (use .tiff/.tif or .png)")
     }
-  }
-
-  def load(spark: SparkSession, path: String): BinnedGrid = {
-    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$path/axes.json"))
-    val axes = """\{"name":"([^"]+)","nbins":(\d+),"lo":([-0-9.eE]+),"hi":([-0-9.eE]+)""".r
-      .findAllMatchIn(json).map { m =>
-        BinAxis(m.group(1), m.group(2).toInt, m.group(3).toDouble, m.group(4).toDouble)
-      }.toSeq
-    collect(spark.read.parquet(s"$path/binned"), axes)
   }
 
   /** Load the metadata sidecar written by [[save]] as the full nested

@@ -27,9 +27,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    rebuild): the optimizer's isnotnull on the build side defeats
   *    exchange reuse between the passes, each moves compact rows;
   *  - index + doc-side + probe dedup joins (dedup_jaccard_join 3,
-  *    dedup_contain_join 4, dedup_lsh_pairs 4, *_incr): each input
+  *    dedup_contain_join 3, dedup_lsh_pairs 4, *_incr): each input
   *    contributes its own scan by design, plus the verification join's
-  *    re-derivation where the index is built in-query;
+  *    re-derivation where the index is built in-query
+  *    (dedup_contain_join has none: its count-only verification
+  *    consumes the candidate set once);
   *  - audit queries run BOTH chains by definition (lsh_recall 4,
   *    emb_ann_recall 5);
   *  - corpus_funnel 4 re-runs the survivor chain per stage by design
@@ -82,7 +84,7 @@ object ScanCountGate {
     "dedup_cdc_pairs" -> 0,
     "dedup_components" -> 0,
     "dedup_contain_incr" -> 3,
-    "dedup_contain_join" -> 4,
+    "dedup_contain_join" -> 3,
     "dedup_editdist_dfcap" -> 2,
     "dedup_editdist_incr" -> 2,
     "dedup_editdist_matches" -> 2,

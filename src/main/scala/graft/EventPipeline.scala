@@ -90,11 +90,15 @@ final case class EventPipeline(df: DataFrame) {
       d.withColumn(c, Calib.jitterUniform(col(c), 0.5, amp, seed + i))
     })
 
-  /** distributedBinning (fprocessing.py:2448-2486): run the N-D histogram
-    * and densify the result on the driver. */
+  /** distributedBinning (fprocessing.py:2448-2486): bin the events
+    * straight into a driver grid ([[Binning.histogramGrid]]). Tasks count
+    * their events per tile of the flattened grid, tiles merge by key on
+    * the executors, and the driver receives each non-empty tile once —
+    * the reference's per-partition histograms plus combine, without a
+    * shuffle row per cell. Grids above the JVM array limit are refused;
+    * bin those with [[binnedTable]]. */
   def distributedBinning(axes: Seq[BinAxis]): BinnedGrid =
-    BinnedGrid.collect(
-      Binning.histogramNd(df, axes.map(a => col(a.name) -> a)), axes)
+    Binning.histogramGrid(df, axes.map(a => col(a.name) -> a))
 
   /** Sparse relational binning (keeps the result distributed). */
   def binnedTable(axes: Seq[BinAxis]): DataFrame =

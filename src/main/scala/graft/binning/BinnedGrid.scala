@@ -3,7 +3,6 @@ package graft.binning
 import graft.binning.MetaNode.{MArr, MInt, MNum, MObj, MStr}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Driver-resident dense N-D histogram volume — the engine's analogue of
@@ -19,11 +18,24 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 case class BinnedGrid(data: Array[Long], axes: Seq[BinAxis]) {
   val shape: Seq[Int] = axes.map(_.nbins)
   private val strides: Array[Long] = BinnedGrid.strides(shape)
-  require(data.length == shape.product, s"data ${data.length} != ${shape.product}")
+  private val nbins: Array[Int] = shape.toArray
+  private val cells: Long = nbins.map(_.toLong).product
+  require(data.length == cells, s"data ${data.length} != ${shape.mkString("x")} = $cells cells")
 
+  /** Count of the cell at one index per axis; each index must lie in
+    * `[0, nbins)` of its axis. */
   def apply(idx: Int*): Long = {
-    require(idx.length == axes.length)
-    data(idx.zip(strides).map { case (i, s) => i * s }.sum.toInt)
+    require(idx.length == axes.length, s"${idx.length} indices into a ${axes.length}-D grid")
+    var flat = 0L
+    var d = 0
+    while (d < strides.length) {
+      val i = idx(d)
+      if (i < 0 || i >= nbins(d))
+        throw new IndexOutOfBoundsException(s"index $i out of [0, ${nbins(d)}) on axis ${axes(d).name}")
+      flat += i * strides(d)
+      d += 1
+    }
+    data(flat.toInt)
   }
 
   def totalCount: Long = data.sum
@@ -164,22 +176,6 @@ object BinnedGrid {
     spark.sparkContext.parallelize(Seq((flats, counts)), 1).flatMap { case (fs, cs) =>
       fs.indices.iterator.map(k => Row.fromSeq(dims.indices.map(d => (fs(k) / str(d)) % dims(d)) :+ cs(k)))
     }
-  }
-
-  /** Densify a sparse relational histogram (bin_*..., cnt) produced by
-    * [[Binning.histogramNd]] into a driver grid. */
-  def collect(hist: DataFrame, axes: Seq[BinAxis]): BinnedGrid = {
-    val n = axes.length
-    val str = strides(axes.map(_.nbins))
-    val data = new Array[Long](axes.map(_.nbins).product)
-    hist.select(axes.map(a => col(s"bin_${a.name}")) :+ col("cnt"): _*)
-      .collect().foreach { r =>
-        var flat = 0L
-        var d = 0
-        while (d < n) { flat += r.getLong(d) * str(d); d += 1 }
-        data(flat.toInt) = r.getLong(n)
-      }
-    BinnedGrid(data, axes)
   }
 
   /** Persist as a parquet of sparse cells plus a JSON axes sidecar —

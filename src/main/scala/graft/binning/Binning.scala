@@ -1,6 +1,7 @@
 package graft.binning
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -50,25 +51,45 @@ case class BinAxis(name: String, nbins: Int, lo: Double, hi: Double) {
 }
 
 /** N-D histogram binning — the reference's core aggregation
-  * (`distributedBinning`, `fprocessing.py:2448-2486`), re-expressed as a
-  * Catalyst aggregation.
+  * (`distributedBinning`, `fprocessing.py:2448-2486`). Every entry point
+  * filters and keys events with the same Catalyst expressions
+  * ([[BinAxis.pred]], [[BinAxis.bin]], row-major flat key); they differ
+  * in where the result lives:
   *
-  * Two physical paths, chosen by grid size / sparsity (SURVEY.md §2.4):
+  *  - [[histogramGrid]] (`EventPipeline.distributedBinning`) returns a
+  *    driver-resident [[BinnedGrid]]. Each task counts its events into
+  *    dense per-tile counters (runs of 2^14 flat cells — Spangle's
+  *    chunking, PAPERS.md) and emits only the tiles it touched,
+  *    `reduceByKey` merges each tile on one reducer, and the driver
+  *    copies every non-empty tile into the grid once, as its reduce
+  *    task's result arrives. This is the reference's per-partition
+  *    histogram + parallel combine (`fprocessing.py:1722-1740`) with the
+  *    combine distributed by tile: no per-cell shuffle rows, and besides
+  *    the grid the driver holds only the tiles of the reduce results in
+  *    flight.
   *
-  *  - '''Relational''' ([[histogramNd]]): `groupBy(binExprs).count()`.
-  *    Catalyst runs partial (map-side) + final hash aggregation — the
-  *    same algebra as the reference's per-partition histogram + parallel
-  *    combine (`fprocessing.py:1722-1740`) but with the shuffle keyed by
-  *    bin, so the *final* aggregation is itself distributed. This is the
-  *    100 TB path: no single node ever holds more than its key range.
+  *  - [[histogramNd]] (`EventPipeline.binnedTable`, the registered
+  *    `hist_*` queries) returns `bin_<axis>…, cnt` rows and stays
+  *    relational: `groupBy(flat key).count()`, partial + final hash
+  *    aggregation keyed by cell. Its output stays distributed, so it
+  *    scales to grids no driver array could hold.
   *
-  *  - '''Dense''' ([[NdHistogramAgg]]): a `TypedImperativeAggregate`
-  *    whose buffer is the whole `Array[Long]` grid. One pass, no
-  *    row-level shuffle — only `numPartitions` serialized grids move.
-  *    Right when the grid is small (≤ ~1e7 cells) and dense; wrong for
-  *    huge grids (all partials converge on one reducer).
+  * [[NdHistogramAgg]] keeps the whole-grid-buffer aggregate behind the
+  * `nd_histogram` SQL function and the `hist_3d_dense*` queries; no
+  * workflow step uses it.
   */
 object Binning {
+
+  /** The range filter (every axis's `lo <= x < hi`) applied to `df`, and
+    * the row-major flat bin key over `axes` — the one place both entry
+    * points build their bin math, from [[BinAxis.pred]]/[[BinAxis.bin]]. */
+  private def filteredFlatKey(df: DataFrame, axes: Seq[(Column, BinAxis)]): (DataFrame, Column) = {
+    val pred = axes.map { case (c, a) => a.pred(c) }.reduce(_ && _)
+    val flat = axes.tail.foldLeft(axes.head._2.bin(axes.head._1)) {
+      case (acc, (c, a)) => acc * lit(a.nbins.toLong) + a.bin(c)
+    }
+    (df.filter(pred), flat)
+  }
 
   /** Relational N-D histogram: returns DataFrame[bin_<axis>..., cnt: Long],
     * empty bins absent (sparse). Scales to arbitrary grid sizes.
@@ -81,11 +102,10 @@ object Binning {
     * div/mod decomposition).
     */
   def histogramNd(df: DataFrame, axes: Seq[(Column, BinAxis)]): DataFrame = {
-    val pred = axes.map { case (c, a) => a.pred(c) }.reduce(_ && _)
+    val (filtered, flat) = filteredFlatKey(df, axes)
     if (axes.length == 1) {
-      val (c, a) = axes.head
-      df.filter(pred)
-        .groupBy(a.bin(c).as(s"bin_${a.name}"))
+      filtered
+        .groupBy(flat.as(s"bin_${axes.head._2.name}"))
         .agg(count(lit(1)).as("cnt"))
     } else {
       // overflow-safe cell count; flat keys must stay below 2^53 because
@@ -93,19 +113,62 @@ object Binning {
       // (and a BigInt bound also catches Long-overflowing products)
       val cells = axes.map(a => BigInt(a._2.nbins)).product
       require(cells < (BigInt(1) << 53), s"grid of $cells cells too large for flat key")
-      val flat = axes.tail.foldLeft(axes.head._2.bin(axes.head._1)) {
-        case (acc, (c, a)) => acc * lit(a.nbins.toLong) + a.bin(c)
-      }
       val strides = axes.indices.map(i => axes.drop(i + 1).map(_._2.nbins.toLong).product)
       val binCols = axes.zipWithIndex.map { case ((_, a), i) =>
         // integral `div`, not `/`: Divide on longs goes through Double and
         // mis-decomposes keys above 2^53 — div keeps it exact
         (expr(s"_flat div ${strides(i)}") % lit(a.nbins.toLong)).as(s"bin_${a.name}")
       }
-      df.filter(pred)
+      filtered
         .groupBy(flat.as("_flat"))
         .agg(count(lit(1)).as("cnt"))
         .select(binCols :+ col("cnt"): _*)
+    }
+  }
+
+  /** Largest grid [[histogramGrid]] builds: the JVM's array length limit. */
+  private val MaxGridCells: Int = Int.MaxValue - 8
+
+  /** Bin `df` straight into a driver-resident [[BinnedGrid]] over `axes`
+    * (same cells and counts as [[histogramNd]]'s rows). Catalyst runs the
+    * range filter and the flat key; each task counts its events into
+    * per-tile [[TileCounter]]s and emits the tiles it touched, which
+    * `reduceByKey` merges over `min(tiles, spark.sql.shuffle.partitions)`
+    * reducers; the driver copies each non-empty tile into the grid as its
+    * reduce task's result arrives. The query runs as one SQL execution,
+    * so query listeners see it. */
+  def histogramGrid(df: DataFrame, axes: Seq[(Column, BinAxis)]): BinnedGrid = {
+    val data = new Array[Long](gridCells(axes))
+    foreachTile(df, axes)((t, c) => c.copyInto(data, t * TileCounter.Cells))
+    BinnedGrid(data, axes.map(_._2))
+  }
+
+  /** Cell count of the grid over `axes`, refused above [[MaxGridCells]]. */
+  private def gridCells(axes: Seq[(Column, BinAxis)]): Int = {
+    val cells = axes.map(a => BigInt(a._2.nbins)).product
+    require(cells <= MaxGridCells,
+      s"grid ${axes.map(_._2.nbins).mkString("x")} = $cells cells exceeds the driver-array " +
+        s"limit of $MaxGridCells; keep it distributed with EventPipeline.binnedTable " +
+        "(Binning.histogramNd)")
+    cells.toInt
+  }
+
+  /** Run [[histogramGrid]]'s job and hand each merged, non-empty tile to
+    * `f` on the driver, one reduce partition at a time, so the driver
+    * holds only the tiles of the results in flight besides what `f`
+    * keeps. */
+  private[binning] def foreachTile(df: DataFrame, axes: Seq[(Column, BinAxis)])(
+      f: (Int, TileCounter) => Unit): Unit = {
+    val n = gridCells(axes)
+    val (filtered, flat) = filteredFlatKey(df, axes)
+    val qe = filtered.select(flat).queryExecution
+    val reducers = math.min(TileCounter.tiles(n), qe.sparkSession.sessionState.conf.numShufflePartitions)
+    SQLExecution.withNewExecutionId(qe, Some("histogramGrid")) {
+      val merged = qe.toRdd
+        .mapPartitions(rows => TileCounter.countTiles(rows, n))
+        .reduceByKey((a: TileCounter, b: TileCounter) => a.merge(b), reducers)
+      merged.sparkContext.runJob(merged, (it: Iterator[(Int, TileCounter)]) => it.toArray,
+        (_: Int, part: Array[(Int, TileCounter)]) => part.foreach { case (t, c) => f(t, c) })
     }
   }
 

@@ -273,7 +273,11 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     // Equivalence: inter ⊆ cand by construction and a band-collision
     // pair with zero shared shingles aggregates to inter=0 — exactly
     // the jaccard-0 row the old left-join+fill produced — so the
-    // filtered output is identical for every threshold.
+    // filtered output is identical for every threshold, up to a ~2⁻⁶⁰
+    // collision probability: count(1) equals the old sizes.n only while
+    // (doc_id, h) is unique per doc, and a 60-bit intra-doc hash
+    // collision now skews |A| as well as |A∩B| (the old shape skewed
+    // only |A∩B|).
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = cand
       .join(sh.as("s1"), col("d1") === col("s1.doc_id"))
@@ -497,8 +501,10 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     // candidate corpus doc's shingle count (every candidate has bands,
     // hence ≥ 1 shingle, so the inner sc join never drops a pair; a
     // band collision with no shared shingle aggregates to inter=0 —
-    // the jaccard-0 row the old left-join+fill produced). Drops the
-    // sizesC aggregate and the pair-keyed cand⋈inter rejoin.
+    // the jaccard-0 row the old left-join+fill produced). The output
+    // equals the old shape's up to a ~2⁻⁶⁰ collision probability: a
+    // 60-bit intra-doc phash collision skews this |A| as well as |A∩B|.
+    // Drops the sizesC aggregate and the pair-keyed cand⋈inter rejoin.
     val sizesB = shB.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = broadcast(cand)
       .join(shC.as("sc"), col("corpus_id") === col("sc.doc_id"))

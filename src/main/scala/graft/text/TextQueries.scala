@@ -105,8 +105,9 @@ object TextQueries
     // on the PRODUCTION hash path (portableHash=false: the O(n)
     // rolling-polynomial kernel) rather than the O(n·L) materialize-
     // every-window-and-md5 path the DuckDB oracle replays: the output
-    // depends only on the duplicated-window SET, which any
-    // collision-free hash reproduces identically — the two paths'
+    // depends only on the duplicated-window SET, which both hashes
+    // (60-bit md5 prefix, 61-bit polynomial) reproduce identically up to
+    // a ~2⁻⁶⁰ collision probability — the two paths'
     // result equality is spec-pinned (TextQueriesSpec) and the oracle
     // board stays hash-green. Measured at sf0.1: 6.6/6.4/3.8 s →
     // 1.7/1.9/1.1 s for the three queries.

@@ -83,9 +83,8 @@ class AnalysisSpec extends AnyFunSuite {
 
   test("BinnedGrid: collect/slice/rebin/profile/save/load round-trip") {
     val axes = Seq(BinAxis("user", 40, 0.0, 200.0), BinAxis("value", 100, 0.0, 500.0))
-    val hist = Binning.histogramNd(Tables.events(spark, sfDir),
+    val grid = Binning.histogramGrid(Tables.events(spark, sfDir),
       Seq(col("user_id").cast("double") -> axes(0), col("value") -> axes(1)))
-    val grid = BinnedGrid.collect(hist, axes)
     assert(grid.totalCount == Tables.events(spark, sfDir)
       .filter(col("user_id") >= 0 && col("user_id") < 200 && col("value") >= 0 && col("value") < 500).count())
 

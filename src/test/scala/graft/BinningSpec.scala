@@ -119,8 +119,7 @@ class BinningSpec extends AnyFunSuite {
     import graft.binning.BinnedGrid
     val ev = Tables.events(spark, sfDir)
     val axes = graft.ops.EventQueries.cols4d(ev).zip(graft.ops.EventQueries.axes4d)
-    val grid = BinnedGrid.collect(Binning.histogramNd(ev, axes),
-      graft.ops.EventQueries.axes4d)
+    val grid = Binning.histogramGrid(ev, axes)
     assert(grid.totalCount > 0)
     // slice along the trailing (delay-analogue) axis, the reference's
     // default cutaxis=3 (saveDict, fprocessing.py:931-955)

@@ -66,9 +66,8 @@ class IoFormatsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import SparkTestSession._
     val axes = Seq(graft.binning.BinAxis("value", 20, 0.0, 500.0))
-    val grid = graft.binning.BinnedGrid.collect(
-      graft.binning.Binning.histogramNd(Tables.events(spark, sfDir),
-        Seq(col("value") -> axes(0))), axes)
+    val grid = graft.binning.Binning.histogramGrid(Tables.events(spark, sfDir),
+      Seq(col("value") -> axes(0)))
     val tmp = java.nio.file.Files.createTempDirectory("graft_ibw3")
     val p = tmp.resolve("hist.ibw").toString
     // histogram sink → ibw (reference saveDict(form='ibw'))
@@ -84,9 +83,8 @@ class IoFormatsSpec extends AnyFunSuite {
     import SparkTestSession._
     val axes = Seq(graft.binning.BinAxis("user", 10, 0.0, 200.0),
       graft.binning.BinAxis("value", 20, 0.0, 500.0))
-    val grid = graft.binning.BinnedGrid.collect(
-      graft.binning.Binning.histogramNd(Tables.events(spark, sfDir), Seq(
-        col("user_id").cast("double") -> axes(0), col("value") -> axes(1))), axes)
+    val grid = graft.binning.Binning.histogramGrid(Tables.events(spark, sfDir), Seq(
+      col("user_id").cast("double") -> axes(0), col("value") -> axes(1)))
     val tmp = java.nio.file.Files.createTempDirectory("graft_tiff")
     val p = tmp.resolve("hist.tiff").toString
     graft.binning.BinnedGrid.saveImage(grid, p)

@@ -131,9 +131,8 @@ class MetaTreeSpec extends AnyFunSuite {
 
   test("BinnedGrid.save writes the nested tree and load round-trips it") {
     val axes = Seq(BinAxis("user", 40, 0.0, 200.0), BinAxis("value", 100, 0.0, 500.0))
-    val hist = Binning.histogramNd(Tables.events(spark, sfDir),
+    val grid = Binning.histogramGrid(Tables.events(spark, sfDir),
       Seq(col("user_id").cast("double") -> axes(0), col("value") -> axes(1)))
-    val grid = BinnedGrid.collect(hist, axes)
 
     val tree = MetaTree.gather(
       ts("2019-06-01T12:00:00"), ts("2019-06-01T12:30:00"),

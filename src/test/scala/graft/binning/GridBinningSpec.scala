@@ -1,0 +1,224 @@
+package graft.binning
+
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkTestSession._
+import graft.Tables
+import graft.ops.EventQueries
+
+/** [[Binning.histogramGrid]] (the engine behind
+  * `EventPipeline.distributedBinning`) against a plain-Scala reference
+  * binner, against [[Binning.histogramNd]]'s rows, and on the edge
+  * inputs real detector data brings; plus [[BinnedGrid]]'s index checks
+  * and [[TileCounter]]'s merge and serialization. */
+class GridBinningSpec extends AnyFunSuite {
+
+  /** Reference binner, independent of Catalyst: coordinate d of a row is
+    * axis d's value (null, Float or Double); an event counts when every
+    * coordinate is in `[lo, hi)`, at `min(floor((x - lo) · nbins / width),
+    * nbins - 1)` per axis, row-major. */
+  private def reference(rows: Seq[Row], axes: Seq[BinAxis]): Array[Long] = {
+    val data = new Array[Long](axes.map(_.nbins).product)
+    rows.foreach { r =>
+      val xs = axes.indices.map { d =>
+        if (r.isNullAt(d)) Double.NaN
+        else r.get(d) match {
+          case f: Float => f.toDouble
+          case v: Double => v
+        }
+      }
+      if (axes.zip(xs).forall { case (a, x) => x >= a.lo && x < a.hi }) {
+        val flat = axes.zip(xs).foldLeft(0L) { case (acc, (a, x)) =>
+          acc * a.nbins + math.min(math.floor((x - a.lo) * a.nbins / a.width).toLong, a.nbins - 1L)
+        }
+        data(flat.toInt) += 1
+      }
+    }
+    data
+  }
+
+  private def frame(rows: Seq[Row], axes: Seq[BinAxis], t: DataType = DoubleType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4),
+      StructType(axes.map(a => StructField(a.name, t, nullable = true))))
+
+  private def grid(df: DataFrame, axes: Seq[BinAxis]): BinnedGrid =
+    Binning.histogramGrid(df, axes.map(a => col(a.name) -> a))
+
+  private def mergedTiles(df: DataFrame, axes: Seq[BinAxis]): Seq[(Int, TileCounter)] = {
+    val tiles = Seq.newBuilder[(Int, TileCounter)]
+    Binning.foreachTile(df, axes.map(a => col(a.name) -> a))((t, c) => tiles += t -> c)
+    tiles.result()
+  }
+
+  private def checkAgainstReference(rows: Seq[Row], axes: Seq[BinAxis], t: DataType = DoubleType): BinnedGrid = {
+    val g = grid(frame(rows, axes, t), axes)
+    val want = reference(rows, axes)
+    assert(g.axes == axes)
+    assert(g.data.sameElements(want),
+      s"first differing cell: ${g.data.indices.find(i => g.data(i) != want(i))}")
+    g
+  }
+
+  private def uniform(n: Int, axes: Seq[BinAxis], seed: Long): Seq[Row] = {
+    val rng = new java.util.Random(seed)
+    Seq.fill(n)(Row.fromSeq(axes.map(a => a.lo + rng.nextDouble() * a.width)))
+  }
+
+  test("NaN, ±Inf and null coordinates are dropped like out-of-range values") {
+    val axes = Seq(BinAxis("x", 10, 0.0, 10.0), BinAxis("y", 4, -2.0, 2.0))
+    val rows = Seq(
+      Row(1.5, 0.5), Row(Double.NaN, 0.5), Row(1.5, Double.NaN),
+      Row(Double.PositiveInfinity, 0.5), Row(Double.NegativeInfinity, 0.5),
+      Row(1.5, Double.PositiveInfinity), Row(null, 0.5), Row(1.5, null), Row(null, null),
+      Row(-0.5, 0.5), Row(9.5, -1.5))
+    val g = checkAgainstReference(rows, axes)
+    assert(g.totalCount == 2)
+  }
+
+  test("x = lo lands in bin 0, x = hi is dropped, nextDown(hi) is clamped into the last bin") {
+    // (nextDown(0.9) - 0.2) · 7 / 0.7 rounds up to 7
+    val ax = BinAxis("v", 7, 0.2, 0.9)
+    val edge = Math.nextDown(0.9)
+    assert(math.floor((edge - ax.lo) * ax.nbins / ax.width) == ax.nbins)
+    val g = checkAgainstReference(Seq(Row(0.2), Row(0.9), Row(edge), Row(0.5), Row(Math.nextDown(0.2))), Seq(ax))
+    assert(g.data.toSeq == Seq(1L, 0L, 0L, 1L, 0L, 0L, 1L))
+  }
+
+  test("float32 columns bin like the reference's widened doubles") {
+    val axes = Seq(BinAxis("kx", 50, -1.5, 1.5), BinAxis("E", 40, -3.0, 0.5))
+    val rng = new java.util.Random(7)
+    val rows = Seq.fill(20000)(Row(((rng.nextDouble() * 3.4) - 1.7).toFloat,
+      ((rng.nextDouble() * 4.0) - 3.25).toFloat)) ++
+      Seq(Row(-1.5f, 0.5f), Row(1.5f, -3.0f), Row(Float.NaN, 0f), Row(0f, Float.NegativeInfinity))
+    checkAgainstReference(rows, axes, FloatType)
+  }
+
+  test("empty input, fully filtered input and empty partitions") {
+    import spark.implicits._
+    val ax = BinAxis("v", 5, 0.0, 5.0)
+    assert(grid(Seq.empty[Double].toDF("v"), Seq(ax)).data.toSeq == Seq.fill(5)(0L))
+    assert(grid(Seq(7.0, -1.0).toDF("v"), Seq(ax)).totalCount == 0)
+    // round-robin of 3 rows over 8 partitions leaves at least 5 empty
+    val sparse = Seq(0.5, 2.5, 2.7).toDF("v").repartition(8)
+    assert(grid(sparse, Seq(ax)).data.toSeq == Seq(1L, 0L, 2L, 0L, 0L))
+  }
+
+  test("one hot cell holding most events") {
+    val axes = Seq(BinAxis("X", 64, 0.0, 64.0), BinAxis("Y", 64, 0.0, 64.0))
+    val rows = Seq.fill(9000)(Row(31.5, 12.25)) ++ uniform(1000, axes, 3)
+    val g = checkAgainstReference(rows, axes)
+    assert(g(31, 12) >= 9000)
+  }
+
+  test("a well-filled grid whose cell count is not a multiple of the tile size") {
+    // 200 x 200 = 40000 cells: tiles of 16384, 16384 and 7232 cells
+    val axes = Seq(BinAxis("x", 200, 0.0, 1.0), BinAxis("y", 200, 0.0, 1.0))
+    val rows = uniform(200000, axes, 11)
+    checkAgainstReference(rows, axes)
+    val tiles = mergedTiles(frame(rows, axes), axes)
+    assert(tiles.map(_._1).sorted == Seq(0, 1, 2))
+  }
+
+  test("a 2M-cell grid with few events: each touched tile reaches the driver once") {
+    val axes = Seq(BinAxis("x", 2000, 0.0, 1.0), BinAxis("y", 1000, 0.0, 1.0))
+    val rows = uniform(3000, axes, 13)
+    checkAgainstReference(rows, axes)
+    val tiles = mergedTiles(frame(rows, axes), axes)
+    assert(tiles.length > 100 && tiles.map(_._1).distinct.length == tiles.length)
+  }
+
+  test("3-D grid of 7 x 11 x 300 cells (a partial last tile)") {
+    val axes = Seq(BinAxis("a", 7, 0.0, 7.0), BinAxis("b", 11, -1.0, 1.0), BinAxis("c", 300, 0.0, 3.0))
+    checkAgainstReference(uniform(5000, axes, 17) ++ Seq(Row(6.999, 0.999, 2.9999)), axes)
+  }
+
+  test("equals histogramNd's rows on the events table in 1-D to 4-D") {
+    val ev = Tables.events(spark, sfDir)
+    val all = EventQueries.cols4d(ev).zip(EventQueries.axes4d)
+    for (axes <- Seq(all.take(1), Seq(all(0), all(2)), all.take(3), all)) {
+      val g = Binning.histogramGrid(ev, axes)
+      val str = BinnedGrid.strides(g.shape)
+      val rel = new Array[Long](g.data.length)
+      Binning.histogramNd(ev, axes).collect().foreach { r =>
+        rel(axes.indices.map(d => r.getLong(d) * str(d)).sum.toInt) = r.getLong(axes.length)
+      }
+      assert(g.totalCount > 0)
+      assert(g.data.sameElements(rel), s"${axes.length}-D grid differs from histogramNd")
+    }
+  }
+
+  test("invariant under repartition(1/3/8)") {
+    val ev = Tables.events(spark, sfDir)
+    val axes = EventQueries.cols4d(ev).zip(EventQueries.axes4d).take(3)
+    val grids = Seq(1, 3, 8).map(p => Binning.histogramGrid(ev.repartition(p), axes).data)
+    assert(grids.forall(_.sameElements(grids.head)))
+  }
+
+  test("shuffles at most input partitions x tiles records") {
+    val axes = Seq(BinAxis("x", 300, 0.0, 300.0), BinAxis("y", 200, 0.0, 200.0)) // 60000 cells, 4 tiles
+    val df = spark.range(0, 200000, 1, 6)
+      .select((col("id") % 300).cast("double").as("x"), (col("id") % 199).cast("double").as("y"))
+    val records = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val g = grid(df, axes)
+      ListenerBusDrain(sc)
+      assert(g.totalCount == 200000)
+      assert(records.get > 0 && records.get <= 6 * TileCounter.tiles(60000), s"${records.get} shuffle records")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("refuses a grid above the JVM array limit and names binnedTable") {
+    import spark.implicits._
+    val huge = Seq(col("v") -> BinAxis("a", 65536, 0.0, 1.0), col("v") -> BinAxis("b", 65536, 0.0, 1.0))
+    val e = intercept[IllegalArgumentException](Binning.histogramGrid(Seq(0.5).toDF("v"), huge))
+    assert(e.getMessage.contains("binnedTable"))
+  }
+
+  test("BinnedGrid checks every index against its axis and the shape in Long") {
+    val axes = Seq(BinAxis("a", 100, 0.0, 1.0), BinAxis("b", 100, 0.0, 1.0), BinAxis("c", 200, 0.0, 1.0))
+    val data = new Array[Long](2000000)
+    data(20000) = 5 // cell (1, 0, 0)
+    val g = BinnedGrid(data, axes)
+    assert(g(1, 0, 0) == 5)
+    intercept[IndexOutOfBoundsException](g(0, 100, 0))
+    intercept[IndexOutOfBoundsException](g(0, 0, -1))
+    intercept[IllegalArgumentException](g(0, 0))
+    // 65536 x 65536 wraps to 0 as an Int product
+    intercept[IllegalArgumentException](
+      BinnedGrid(Array.empty[Long], Seq(BinAxis("a", 65536, 0.0, 1.0), BinAxis("b", 65536, 0.0, 1.0))))
+  }
+
+  test("TileCounter: Java serialization round-trips, merge adds") {
+    def cells(c: TileCounter): Seq[Long] = {
+      val out = new Array[Long](100)
+      c.copyInto(out, 0)
+      out.toSeq
+    }
+    val a = new TileCounter(100)
+    Seq(3, 3, 99).foreach(a.add)
+    val bytes = new ByteArrayOutputStream
+    val out = new ObjectOutputStream(bytes)
+    out.writeObject(a)
+    out.close()
+    val b = new ObjectInputStream(new ByteArrayInputStream(bytes.toByteArray)).readObject().asInstanceOf[TileCounter]
+    assert(cells(b) == cells(a))
+    b.add(0)
+    val merged = cells(a.merge(b))
+    assert(merged(3) == 4 && merged(99) == 2 && merged(0) == 1 && merged.sum == 7)
+  }
+}

@@ -11,7 +11,8 @@ import org.apache.spark.sql.expressions.Window
   * 2M-vector embedding corpus, then times the three pillars:
   *
   *   - `hist_3d_rel`   relational N-D histogram, 240k-bin 3D grid
-  *   - `hist_3d_shard` sharded dense path on the same grid
+  *   - `hist_3d_shard` tiled driver-grid path (`Binning.histogramGrid`)
+  *                     on the same grid; the name predates the tiles
   *   - `lsh_pairs`     full MinHash/LSH dedup chain (skew-salted,
   *                     native xxhash64 shingle hashing)
   *   - `lsh_pairs_md5` the same chain with the md5-derived portable
@@ -344,7 +345,7 @@ object BenchLarge {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import graft.binning.{BinAxis, Binning, NdHistogramAgg}
+    import graft.binning.{BinAxis, Binning}
 
     val axes3 = Seq(
       col("user") -> BinAxis("user", 40, 0.0, 200.0),
@@ -573,8 +574,7 @@ object BenchLarge {
       h.agg(sum("cnt")).collect()(0).getLong(0)
     }
     timed("hist_3d_shard") {
-      val h = NdHistogramAgg.histogramNdDenseSharded(events(spark, rows), axes3)
-      h.agg(sum("cnt")).collect()(0).getLong(0)
+      Binning.histogramGrid(events(spark, rows), axes3).totalCount
     }
     var pairs: DataFrame = null
     // min-of-3 for the two hash variants: the r6 committed numbers put

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import graft.binning.NdHistogramAgg
+import graft.binning.{BinAxis, NdHistogramAgg}
 
 /** Session extension registering the engine's custom Catalyst functions
   * on the SQL surface, so `spark.sql` users get the operators without
@@ -19,8 +19,9 @@ import graft.binning.NdHistogramAgg
   * }}}
   *
   * `nd_histogram(col1..colN, nbins1, lo1, hi1, ..., nbinsN, loN, hiN)`:
-  * the dense N-D histogram TypedImperativeAggregate (SURVEY.md §4.3.1);
-  * returns the flattened row-major Array[Long] grid.
+  * the dense N-D histogram TypedImperativeAggregate (SURVEY.md §4.3.1)
+  * over one [[graft.binning.BinAxis]] per column; returns the flattened
+  * row-major Array[Long] grid.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -54,18 +55,12 @@ object GraftExtensions {
     require(args.length % 4 == 0 && args.nonEmpty,
       "nd_histogram(col1..colN, nbins1, lo1, hi1, ..., nbinsN, loN, hiN)")
     val n = args.length / 4
-    // cast each input column to double: NdHistogramAgg reads doubles from
-    // its projection, so an uncast BIGINT column would be reinterpreted
-    // bitwise and silently mis-binned
-    val cols = args.take(n).map(c =>
-      org.apache.spark.sql.catalyst.expressions.Cast(c, org.apache.spark.sql.types.DoubleType))
-    val spec = args.drop(n).grouped(3).toSeq
-    NdHistogramAgg(
-      cols.toIndexedSeq,
-      spec.map(g => litInt(g(0))).toArray,
-      spec.map(g => litDouble(g(1))).toArray,
-      spec.map(g => litDouble(g(2))).toArray
-    ).toAggregateExpression(isDistinct = false)
+    // each axis is named after its column argument, so BinAxis's
+    // nbins > 0 and lo < hi check names the axis it rejects
+    val axes = args.take(n).zip(args.drop(n).grouped(3).toSeq).map { case (c, g) =>
+      c -> BinAxis(c.sql, litInt(g(0)), litDouble(g(1)), litDouble(g(2)))
+    }
+    NdHistogramAgg.forAxes(axes).toAggregateExpression(isDistinct = false)
   }
 
   val ndHistogramDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (

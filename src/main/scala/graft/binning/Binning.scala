@@ -27,8 +27,8 @@ case class BinAxis(name: String, nbins: Int, lo: Double, hi: Double) {
     * nbins-1: for x just below hi, `(x-lo)*nbins/width` can round up to
     * exactly nbins even though the range predicate passed — without the
     * clamp that bin index overflows dense grids. The clamp appears
-    * identically in [[sqlBin]] and the dense path so all three engines
-    * agree bit-for-bit. */
+    * identically in [[sqlBin]] so Spark and the oracle agree
+    * bit-for-bit. */
   def bin(c: Column): Column =
     least(floor((c - lit(lo)) * lit(nbins.toDouble) / lit(width)),
       lit((nbins - 1).toLong)).cast(LongType)
@@ -51,10 +51,11 @@ case class BinAxis(name: String, nbins: Int, lo: Double, hi: Double) {
 }
 
 /** N-D histogram binning — the reference's core aggregation
-  * (`distributedBinning`, `fprocessing.py:2448-2486`). Every entry point
-  * filters and keys events with the same Catalyst expressions
-  * ([[BinAxis.pred]], [[BinAxis.bin]], row-major flat key); they differ
-  * in where the result lives:
+  * (`distributedBinning`, `fprocessing.py:2448-2486`). There are three
+  * entry points, chosen by where the caller wants the result; all three
+  * range-filter and key events with the same Catalyst expressions
+  * ([[BinAxis.pred]], [[BinAxis.bin]], row-major flat key, built by
+  * [[rangedFlatKey]]):
   *
   *  - [[histogramGrid]] (`EventPipeline.distributedBinning`) returns a
   *    driver-resident [[BinnedGrid]]. Each task counts its events into
@@ -74,20 +75,27 @@ case class BinAxis(name: String, nbins: Int, lo: Double, hi: Double) {
   *    aggregation keyed by cell. Its output stays distributed, so it
   *    scales to grids no driver array could hold.
   *
-  * [[NdHistogramAgg]] keeps the whole-grid-buffer aggregate behind the
-  * `nd_histogram` SQL function and the `hist_3d_dense*` queries; no
-  * workflow step uses it.
+  *  - the `nd_histogram` SQL function (`GraftExtensions`) returns the
+  *    flattened grid as one SQL array: [[NdHistogramAgg]] counts the
+  *    flat key into one dense buffer per task, for grids of up to
+  *    [[NdHistogramAgg.DENSE_MAX_CELLS]] cells.
   */
 object Binning {
 
-  /** The range filter (every axis's `lo <= x < hi`) applied to `df`, and
-    * the row-major flat bin key over `axes` — the one place both entry
-    * points build their bin math, from [[BinAxis.pred]]/[[BinAxis.bin]]. */
-  private def filteredFlatKey(df: DataFrame, axes: Seq[(Column, BinAxis)]): (DataFrame, Column) = {
+  /** The range predicate (every axis's `lo <= x < hi`) and the row-major
+    * flat bin key over `axes` — the one place the entry points build
+    * their bin math, from [[BinAxis.pred]]/[[BinAxis.bin]]. */
+  private[binning] def rangedFlatKey(axes: Seq[(Column, BinAxis)]): (Column, Column) = {
     val pred = axes.map { case (c, a) => a.pred(c) }.reduce(_ && _)
     val flat = axes.tail.foldLeft(axes.head._2.bin(axes.head._1)) {
       case (acc, (c, a)) => acc * lit(a.nbins.toLong) + a.bin(c)
     }
+    (pred, flat)
+  }
+
+  /** `df` range-filtered on `axes`, and the flat key ([[rangedFlatKey]]). */
+  private def filteredFlatKey(df: DataFrame, axes: Seq[(Column, BinAxis)]): (DataFrame, Column) = {
+    val (pred, flat) = rangedFlatKey(axes)
     (df.filter(pred), flat)
   }
 
@@ -113,7 +121,7 @@ object Binning {
       // (and a BigInt bound also catches Long-overflowing products)
       val cells = axes.map(a => BigInt(a._2.nbins)).product
       require(cells < (BigInt(1) << 53), s"grid of $cells cells too large for flat key")
-      val strides = axes.indices.map(i => axes.drop(i + 1).map(_._2.nbins.toLong).product)
+      val strides = BinnedGrid.strides(axes.map(_._2.nbins))
       val binCols = axes.zipWithIndex.map { case ((_, a), i) =>
         // integral `div`, not `/`: Divide on longs goes through Double and
         // mis-decomposes keys above 2^53 — div keeps it exact

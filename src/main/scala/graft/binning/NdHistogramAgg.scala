@@ -2,98 +2,53 @@ package graft.binning
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.when
 import org.apache.spark.sql.types._
 
-/** Dense-path N-D histogram: a Catalyst `TypedImperativeAggregate` whose
-  * buffer is the whole flattened `Array[Long]` grid — the Spark-native
-  * equivalent of the reference's per-partition numba kernels + parallel
-  * combine (`/root/reference/mpes/fprocessing.py:3525-3609`,
-  * `fprocessing.py:1722-1740`).
-  *
-  * Execution shape: each task updates one heap-resident grid per
-  * partition (tight JVM loop, no per-row shuffle rows), partials are
-  * serialized once and merged map→final. Only `numPartitions` grids move
-  * over the wire instead of one row per event — for a 100×100×200 grid
-  * over 1e9 events that is ~16 MB × partitions versus 1e9 shuffle rows.
-  *
-  * Scale guidance (SURVEY.md §2.4, measured at 50M rows on 32 cores):
-  * the dense path wins up to ~5e5 cells (2.5 s vs 6-9 s relational at
-  * 480k bins); beyond that the per-partition grid buffers dominate
-  * (allocation + serialization + single-reducer merge) and the
-  * relational `groupBy(bins).count()` path wins (6 s vs 42 s at 2M
-  * bins), since its final aggregation distributes by key instead of
-  * converging on one reducer.
-  *
-  * Update semantics match [[BinAxis]]: floor bin index, [lo, hi) range
-  * guard, out-of-range rows dropped.
-  */
+/** The aggregate behind the `nd_histogram` SQL function: one dense
+  * row-major `Array[Long]` grid of shape `nbins` per task, merged
+  * map→final on one reducer, so grids are capped at
+  * [[NdHistogramAgg.DENSE_MAX_CELLS]]. Its one input is [[Binning]]'s
+  * flat key, null for an event outside the range (or null, or NaN) on
+  * any axis — the bin math lives in [[BinAxis]] alone — and `update`
+  * adds 1 at a non-null key. */
 case class NdHistogramAgg(
-    children: Seq[Expression],
+    child: Expression,
     nbins: Array[Int],
-    los: Array[Double],
-    his: Array[Double],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
 
   // Guard BEFORE any Int product: 65536x65536 axes would silently wrap
   // nbins.product (to 0 or negative) and surface as an opaque
-  // NegativeArraySizeException deep inside the aggregate. The relational
-  // path has its own BigInt 2^53 guard (Binning.scala); the dense path —
-  // also reachable from arbitrary SQL via nd_histogram — enforces the
-  // documented dense-grid limit here, with the remedy in the message.
-  require(nbins.forall(_ > 0), "nd_histogram: every nbins must be positive")
+  // NegativeArraySizeException deep inside the aggregate.
   require(nbins.map(BigInt(_)).product <= NdHistogramAgg.DENSE_MAX_CELLS,
     s"nd_histogram dense path: ${nbins.mkString("x")} = " +
       s"${nbins.map(BigInt(_)).product} cells exceeds the dense-grid limit " +
       s"of ${NdHistogramAgg.DENSE_MAX_CELLS} (per-partition buffers would " +
       "dominate); use the relational path (Binning.histogramNd) for grids this large")
 
-  private val ndim = nbins.length
   private val totalBins: Int = nbins.product
-  private val widths: Array[Double] = Array.tabulate(ndim)(i => his(i) - los(i))
-  // row-major strides
-  private val strides: Array[Int] = {
-    val s = new Array[Int](ndim)
-    var acc = 1
-    var i = ndim - 1
-    while (i >= 0) { s(i) = acc; acc *= nbins(i); i -= 1 }
-    s
-  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](totalBins)
 
-  // Codegen-compiled projection of the input columns, built once per
-  // task: per-row interpreted `children(i).eval` costs ~3-4x in the
-  // update hot loop (measured at 50M rows).
-  @transient private lazy val inputProj =
-    org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(children)
+  // Codegen-compiled projection of the key, built once per task:
+  // per-row interpreted `child.eval` costs ~3-4x in the update hot loop
+  // (measured at 50M rows).
+  @transient private lazy val inputProj = UnsafeProjection.create(Seq(child))
 
   override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
     val row = inputProj(input)
-    var flat = 0
-    var i = 0
-    while (i < ndim) {
-      if (row.isNullAt(i)) return buffer
-      val x = row.getDouble(i)
-      if (x < los(i) || x >= his(i)) return buffer // range guard: drop row
-      // bit-identical to BinAxis.bin: ((x-lo)*nbins)/width, floored,
-      // clamped to nbins-1 for the hi-epsilon rounding edge
-      val b = math.floor((x - los(i)) * nbins(i) / widths(i)).toInt
-      val bc = if (b >= nbins(i)) nbins(i) - 1 else b
-      flat += bc * strides(i)
-      i += 1
-    }
-    buffer(flat) += 1L
+    if (!row.isNullAt(0)) buffer(row.getLong(0).toInt) += 1L
     buffer
   }
 
@@ -121,75 +76,26 @@ case class NdHistogramAgg(
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): NdHistogramAgg =
     copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): NdHistogramAgg =
-    copy(children = newChildren)
+  override protected def withNewChildInternal(newChild: Expression): NdHistogramAgg =
+    copy(child = newChild)
   override def prettyName: String = "nd_histogram"
 }
 
 object NdHistogramAgg {
 
-  /** Hard cell-count ceiling for the dense path (~1e7 cells = an 80 MB
-    * Array[Long] buffer per partition). Measured crossover vs the
-    * relational path is ~5e5 cells (SURVEY §2.4 / SCALE.md); beyond this
-    * limit the dense path is strictly worse AND risks Int overflow in
-    * buffer sizing, so it is refused outright. */
+  /** Hard cell-count ceiling (~1e7 cells = an 80 MB Array[Long] buffer
+    * per partition); beyond it the per-partition buffers dominate AND
+    * buffer sizing risks Int overflow, so the grid is refused outright. */
   val DENSE_MAX_CELLS: BigInt = BigInt(10000000)
 
-  /** Aggregate `cols` into one dense flattened grid (single row,
-    * ArrayType(LongType), row-major over `axes`). */
-  def ndHistogram(cols: Seq[Column], axes: Seq[BinAxis]): Column = {
-    require(cols.length == axes.length)
-    val exprs = cols.map(c => GraftBridge.expression(c.cast("double")))
-    GraftBridge.aggColumn(NdHistogramAgg(
-      exprs.toIndexedSeq,
-      axes.map(_.nbins).toArray,
-      axes.map(_.lo).toArray,
-      axes.map(_.hi).toArray))
-  }
-
-  /** Dense grid computed via [[NdHistogramAgg]], exploded back to the
-    * sparse relational layout (bin_<axis>..., cnt) so it is comparable
-    * with the `groupBy` path and SQL oracles. */
-  def histogramNdDense(df: DataFrame, axes: Seq[(Column, BinAxis)]): DataFrame = {
-    val grid = df.agg(ndHistogram(axes.map(_._1), axes.map(_._2)).as("grid"))
-    val n = axes.map(_._2.nbins)
-    val strides = n.indices.map(i => n.drop(i + 1).product.toLong)
-    // integral `div`, not `/`: Divide on longs routes through Double and
-    // mis-decomposes flat keys above 2^53 (same fix as Binning.scala's
-    // relational decomposition — kept consistent even though dense grids
-    // are Int-bounded today)
-    val binCols = axes.zipWithIndex.map { case ((_, ax), i) =>
-      (expr(s"flat div ${strides(i)}L") % lit(n(i).toLong)).as(s"bin_${ax.name}")
-    }
-    grid.select(posexplode(col("grid")).as(Seq("flat", "cnt")))
-      .filter(col("cnt") > 0)
-      .select(binCols :+ col("cnt"): _*)
-  }
-
-  /** Sharded dense path: group by the LEADING axis bin and run the dense
-    * aggregate per slab over the remaining axes — the executor-level
-    * form of the reference's parallel-combine slab trick
-    * (`fprocessing.py:1722-1740` splits the grid the same way). The
-    * plain dense path converges every partition's whole-grid buffer on
-    * ONE final reducer (its loss mode beyond ~5e5 cells); here the final
-    * merge distributes across `nbins₀` keys and each buffer shrinks by
-    * the same factor, so the dense path's tight-update-loop advantage
-    * extends to grids the single-buffer form cannot handle.
-    */
-  def histogramNdDenseSharded(df: DataFrame, axes: Seq[(Column, BinAxis)]): DataFrame = {
-    require(axes.length >= 2, "sharded dense path needs a leading axis to shard on")
-    val (c0, ax0) = axes.head
-    val rest = axes.tail
-    val n = rest.map(_._2.nbins)
-    val strides = n.indices.map(i => n.drop(i + 1).product.toLong)
-    val binCols = rest.zipWithIndex.map { case ((_, ax), i) =>
-      (expr(s"flat div ${strides(i)}L") % lit(n(i).toLong)).as(s"bin_${ax.name}")
-    }
-    df.filter(ax0.pred(c0))
-      .groupBy(ax0.bin(c0).as(s"bin_${ax0.name}"))
-      .agg(ndHistogram(rest.map(_._1), rest.map(_._2)).as("grid"))
-      .select(col(s"bin_${ax0.name}"), posexplode(col("grid")).as(Seq("flat", "cnt")))
-      .filter(col("cnt") > 0)
-      .select(col(s"bin_${ax0.name}") +: binCols :+ col("cnt"): _*)
+  /** `nd_histogram` over `axes`, each column cast to double and binned
+    * on its axis: the aggregate counts [[Binning.rangedFlatKey]]'s key
+    * where the range predicate holds. The cast makes every axis compare
+    * and bin in double, like [[Binning.histogramNd]] over a double
+    * column, whatever the argument's SQL type. */
+  def forAxes(axes: Seq[(Expression, BinAxis)]): NdHistogramAgg = {
+    val (inRange, flat) = Binning.rangedFlatKey(
+      axes.map { case (c, a) => GraftBridge.column(Cast(c, DoubleType)) -> a })
+    NdHistogramAgg(GraftBridge.catalyst(when(inRange, flat)), axes.map(_._2.nbins).toArray)
   }
 }

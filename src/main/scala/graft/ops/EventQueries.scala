@@ -56,25 +56,6 @@ object EventQueries {
         col("value") -> axValue))
     },
 
-    // dense TypedImperativeAggregate path, exploded to the sparse layout —
-    // must agree bin-for-bin with the relational hist_3d oracle
-    "hist_3d_dense" -> { (s, dir) =>
-      graft.binning.NdHistogramAgg.histogramNdDense(Tables.events(s, dir), Seq(
-        col("user_id").cast("double") -> axUser,
-        hour(col("ts")).cast("double") -> axHour,
-        col("value") -> axValue))
-    },
-
-    // sharded dense path: per-leading-bin dense sub-grids — distributed
-    // final merge (the reference's slab parallel-combine at executor
-    // level); must agree bin-for-bin with the same oracle
-    "hist_3d_dense_shard" -> { (s, dir) =>
-      graft.binning.NdHistogramAgg.histogramNdDenseSharded(Tables.events(s, dir), Seq(
-        col("user_id").cast("double") -> axUser,
-        hour(col("ts")).cast("double") -> axHour,
-        col("value") -> axValue))
-    },
-
     // 4D binning — the reference's actual headline case (kx, ky, E,
     // delay scans; dedicated 4D kernels fprocessing.py:3594-3609). Same
     // flat-key relational aggregation; the key spans 4 axes (1.152M
@@ -308,8 +289,6 @@ object EventQueries {
       },
       "hist_2d" -> histSql2,
       "hist_3d" -> histSql3,
-      "hist_3d_dense" -> histSql3,
-      "hist_3d_dense_shard" -> histSql3,
       "hist_4d" -> Binning.histogramNdSql("events", Seq(
         "CAST(user_id AS DOUBLE)" -> axUser,
         "CAST(hour(ts) AS DOUBLE)" -> axHour,

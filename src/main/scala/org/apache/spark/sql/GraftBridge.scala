@@ -14,6 +14,11 @@ object GraftBridge {
     * the public `Column.expr`). */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Column → plain Catalyst tree, converted now rather than wrapped for
+    * a Dataset to unwrap: the form an expression built for the SQL
+    * function registry must take, since SQL analysis resolves it as is. */
+  def catalyst(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
+
   def aggColumn(f: AggregateFunction): Column =
     classic.ExpressionUtils.column(f.toAggregateExpression(isDistinct = false))
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.binning.{BinAxis, Binning, NdHistogramAgg}
+import graft.binning.{BinAxis, Binning, NdHistogramSql}
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -46,9 +46,8 @@ class BinningSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.keys.forall(b => b >= 0 && b < 7), s"bin out of range: $got")
     assert(got.values.sum == 3)
-    // dense path agrees bin-for-bin on the same edge data
-    val dense = NdHistogramAgg.histogramNdDense(df, Seq(col("v") -> ax2))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // nd_histogram agrees bin-for-bin on the same edge data
+    val dense = NdHistogramSql.cells(df, Seq(col("v") -> ax2)).map { case (b, c) => b.head -> c }
     assert(dense == got)
   }
 
@@ -76,27 +75,40 @@ class BinningSpec extends AnyFunSuite {
       col("value") -> BinAxis("value", 100, 0.0, 500.0))
     val rel = Binning.histogramNd(ev, axes).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val dense = NdHistogramAgg.histogramNdDense(ev, axes).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    // nd_histogram through SQL
+    val dense = NdHistogramSql.cells(ev, axes).map { case (b, c) => (b(0), b(1)) -> c }
     assert(dense == rel)
   }
 
   test("sharded dense path == relational path (distributed final merge)") {
+    // the tiled driver-grid path: 40 x 1000 = 40000 cells, three tiles
     val ev = Tables.events(spark, sfDir)
     val axes = Seq(
       col("user_id").cast("double") -> BinAxis("user", 40, 0.0, 200.0),
-      col("value") -> BinAxis("value", 100, 0.0, 500.0))
+      col("value") -> BinAxis("value", 1000, 0.0, 500.0))
     val rel = Binning.histogramNd(ev, axes).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val shard = NdHistogramAgg.histogramNdDenseSharded(ev, axes).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val resultTasks = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        resultTasks.set(e.stageInfos.maxBy(_.stageId).numTasks)
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    val grid = try {
+      val g = Binning.histogramGrid(ev, axes)
+      org.apache.spark.ListenerBusDrain(sc)
+      g
+    } finally sc.removeSparkListener(listener)
+    val shard = NdHistogramSql.cells(grid.data, grid.shape).map { case (b, c) => (b(0), b(1)) -> c }
     assert(shard == rel)
-    // final aggregation is keyed by the leading bin, not SinglePartition
-    assert(!graft.ops.Scale.hasSinglePartitionExchange(
-      NdHistogramAgg.histogramNdDenseSharded(ev, axes)))
+    // the final merge is keyed by tile: tiles merge over more than one reducer
+    assert(resultTasks.get > 1, s"${resultTasks.get} reduce tasks")
   }
 
   test("4D: relational == dense == sharded dense on the headline 4-axis grid") {
+    // dense: nd_histogram; sharded: the tiled histogramGrid
     // the reference's actual headline case (kx, ky, E, delay scans;
     // dedicated 4D kernels fprocessing.py:3594-3609), stood in by the
     // user x hour x value x minute axes of hist_4d
@@ -105,11 +117,12 @@ class BinningSpec extends AnyFunSuite {
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) -> r.getLong(4)).toMap
     val rel = toMap(Binning.histogramNd(ev, axes))
-    val dense = toMap(NdHistogramAgg.histogramNdDense(ev, axes))
-    val shard = toMap(NdHistogramAgg.histogramNdDenseSharded(ev, axes))
+    val dense = NdHistogramSql.cells(ev, axes).map { case (b, c) => (b(0), b(1), b(2), b(3)) -> c }
+    val g = Binning.histogramGrid(ev, axes)
+    val shard = NdHistogramSql.cells(g.data, g.shape).map { case (b, c) => (b(0), b(1), b(2), b(3)) -> c }
     assert(rel.nonEmpty && rel.values.sum > 0)
-    assert(dense == rel, "dense 4D path diverges from relational")
-    assert(shard == rel, "sharded dense 4D path diverges from relational")
+    assert(dense == rel, "nd_histogram 4D grid diverges from relational")
+    assert(shard == rel, "histogramGrid 4D grid diverges from relational")
     // and the query surface runs the same grid
     val viaQuery = toMap(SparkEntry.queries("hist_4d")(spark, sfDir))
     assert(viaQuery == rel)
@@ -143,31 +156,20 @@ class BinningSpec extends AnyFunSuite {
   }
 
   test("dense path refuses oversized grids with a clear message") {
-    import spark.implicits._
-    val df = Seq(1.0).toDF("v")
-    // 65536 x 65536 would wrap Int nbins.product without the guard
-    val huge = Seq(
-      col("v") -> BinAxis("a", 65536, 0.0, 1.0),
-      col("v") -> BinAxis("b", 65536, 0.0, 1.0))
-    val e = intercept[IllegalArgumentException] {
-      NdHistogramAgg.histogramNdDense(df, huge).collect()
-    }
-    assert(e.getMessage.contains("dense-grid limit"))
-    assert(e.getMessage.contains("Binning.histogramNd"))
-    // same guard on the SQL surface (nd_histogram via GraftExtensions)
+    // 65536 x 65536 would wrap Int nbins.product without the guard;
+    // nd_histogram via GraftExtensions is the dense path's one surface
     GraftExtensions.register(spark)
     val e2 = intercept[Exception] {
       spark.sql("SELECT nd_histogram(v, v, 65536, 0.0, 1.0, 65536, 0.0, 1.0) FROM VALUES (1.0) t(v)").collect()
     }
     assert(e2.getMessage.contains("dense-grid limit"))
+    assert(e2.getMessage.contains("Binning.histogramNd"))
   }
 
   test("dense path invariant under repartitioning (merge correctness)") {
     val ev = Tables.events(spark, sfDir)
     val axes = Seq(col("value") -> BinAxis("value", 100, 0.0, 500.0))
-    def run(parts: Int) =
-      NdHistogramAgg.histogramNdDense(ev.repartition(parts), axes)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def run(parts: Int) = NdHistogramSql.cells(ev.repartition(parts), axes)
     assert(run(1) == run(3) && run(3) == run(8))
   }
 

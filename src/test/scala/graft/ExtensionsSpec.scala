@@ -98,6 +98,14 @@ class ExtensionsSpec extends AnyFunSuite {
       spark.sql("SELECT nd_histogram(value, 50, 0.0) FROM ev").collect()
     }
     assert(e.getMessage.contains("nd_histogram") || e.getCause != null)
+    // lo > hi, lo == hi and nbins = 0 are refused by BinAxis, naming the axis
+    for (axis <- Seq("4, 5.0, 1.0", "4, 1.0, 1.0", "0, 0.0, 1.0")) {
+      val bad = intercept[Exception] {
+        spark.sql(s"SELECT nd_histogram(v, $axis) FROM VALUES (2.0), (3.0), (CAST('NaN' AS DOUBLE)) t(v)")
+          .collect()
+      }
+      assert(bad.getMessage.contains("bad axis t.v"), s"($axis): ${bad.getMessage}")
+    }
   }
 }
 

@@ -166,8 +166,6 @@ object ScanCountGate {
     "hist_2d" -> 1,
     "hist_2d_weighted" -> 1,
     "hist_3d" -> 1,
-    "hist_3d_dense" -> 1,
-    "hist_3d_dense_shard" -> 1,
     "hist_4d" -> 1,
     "hist_per_axis" -> 2,
     "hist_rebin" -> 1,

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,11 +14,12 @@ import graft.SparkTestSession._
 import graft.Tables
 import graft.ops.EventQueries
 
-/** [[Binning.histogramGrid]] (the engine behind
-  * `EventPipeline.distributedBinning`) against a plain-Scala reference
-  * binner, against [[Binning.histogramNd]]'s rows, and on the edge
-  * inputs real detector data brings; plus [[BinnedGrid]]'s index checks
-  * and [[TileCounter]]'s merge and serialization. */
+/** The three binning entry points — [[Binning.histogramGrid]] (the
+  * engine behind `EventPipeline.distributedBinning`),
+  * [[Binning.histogramNd]]'s rows and the `nd_histogram` SQL function —
+  * against a plain-Scala reference binner on the edge inputs real
+  * detector data brings; plus [[BinnedGrid]]'s index checks and
+  * [[TileCounter]]'s merge and serialization. */
 class GridBinningSpec extends AnyFunSuite {
 
   /** Reference binner, independent of Catalyst: coordinate d of a row is
@@ -58,12 +59,27 @@ class GridBinningSpec extends AnyFunSuite {
     tiles.result()
   }
 
+  /** [[Binning.histogramNd]]'s rows spread into a flat row-major grid. */
+  private def relationalGrid(df: DataFrame, axes: Seq[(Column, BinAxis)]): Array[Long] = {
+    val str = BinnedGrid.strides(axes.map(_._2.nbins))
+    val out = new Array[Long](axes.map(_._2.nbins).product)
+    Binning.histogramNd(df, axes).collect().foreach { r =>
+      out(axes.indices.map(d => r.getLong(d) * str(d)).sum.toInt) = r.getLong(axes.length)
+    }
+    out
+  }
+
+  /** All three entry points over `rows` equal the reference binner. */
   private def checkAgainstReference(rows: Seq[Row], axes: Seq[BinAxis], t: DataType = DoubleType): BinnedGrid = {
-    val g = grid(frame(rows, axes, t), axes)
+    val df = frame(rows, axes, t)
+    val cols = axes.map(a => col(a.name) -> a)
+    val g = grid(df, axes)
     val want = reference(rows, axes)
     assert(g.axes == axes)
-    assert(g.data.sameElements(want),
-      s"first differing cell: ${g.data.indices.find(i => g.data(i) != want(i))}")
+    for ((path, got) <- Seq("histogramGrid" -> g.data, "histogramNd" -> relationalGrid(df, cols),
+                            "nd_histogram" -> NdHistogramSql.grid(df, cols)))
+      assert(got.sameElements(want),
+        s"$path: first differing cell: ${got.indices.find(i => got(i) != want(i))}")
     g
   }
 
@@ -104,11 +120,15 @@ class GridBinningSpec extends AnyFunSuite {
   test("empty input, fully filtered input and empty partitions") {
     import spark.implicits._
     val ax = BinAxis("v", 5, 0.0, 5.0)
-    assert(grid(Seq.empty[Double].toDF("v"), Seq(ax)).data.toSeq == Seq.fill(5)(0L))
-    assert(grid(Seq(7.0, -1.0).toDF("v"), Seq(ax)).totalCount == 0)
+    def all(df: DataFrame): Seq[Seq[Long]] = {
+      val cols = Seq(col("v") -> ax)
+      Seq(grid(df, Seq(ax)).data, relationalGrid(df, cols), NdHistogramSql.grid(df, cols)).map(_.toSeq)
+    }
+    assert(all(Seq.empty[Double].toDF("v")).forall(_ == Seq.fill(5)(0L)))
+    assert(all(Seq(7.0, -1.0).toDF("v")).forall(_.sum == 0))
     // round-robin of 3 rows over 8 partitions leaves at least 5 empty
     val sparse = Seq(0.5, 2.5, 2.7).toDF("v").repartition(8)
-    assert(grid(sparse, Seq(ax)).data.toSeq == Seq(1L, 0L, 2L, 0L, 0L))
+    assert(all(sparse).forall(_ == Seq(1L, 0L, 2L, 0L, 0L)))
   }
 
   test("one hot cell holding most events") {
@@ -145,13 +165,8 @@ class GridBinningSpec extends AnyFunSuite {
     val all = EventQueries.cols4d(ev).zip(EventQueries.axes4d)
     for (axes <- Seq(all.take(1), Seq(all(0), all(2)), all.take(3), all)) {
       val g = Binning.histogramGrid(ev, axes)
-      val str = BinnedGrid.strides(g.shape)
-      val rel = new Array[Long](g.data.length)
-      Binning.histogramNd(ev, axes).collect().foreach { r =>
-        rel(axes.indices.map(d => r.getLong(d) * str(d)).sum.toInt) = r.getLong(axes.length)
-      }
       assert(g.totalCount > 0)
-      assert(g.data.sameElements(rel), s"${axes.length}-D grid differs from histogramNd")
+      assert(g.data.sameElements(relationalGrid(ev, axes)), s"${axes.length}-D grid differs from histogramNd")
     }
   }
 

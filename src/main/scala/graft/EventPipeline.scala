@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.binning.{BinAxis, BinnedGrid, Binning}
+import graft.io.Sources
 import graft.transforms.Calib
 
 /** Fluent workflow API mirroring the reference's `dataframeProcessor`
@@ -109,9 +110,12 @@ final case class EventPipeline(df: DataFrame) {
 }
 
 object EventPipeline {
-  /** read(source='folder', ftype='parquet') analogue. */
+  /** read(source='folder', ftype='parquet') analogue, through
+    * [[graft.io.Sources.parquet]]: the schema comes from one footer read
+    * on the driver, so opening the folder runs no Spark job — an
+    * interactive session re-reads it for every re-binning. */
   def read(spark: SparkSession, path: String): EventPipeline =
-    EventPipeline(spark.read.parquet(path))
+    EventPipeline(Sources.parquet(spark, path))
 
   def fromEvents(spark: SparkSession, sfDir: String): EventPipeline =
     EventPipeline(Tables.events(spark, sfDir))

@@ -1,16 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.io.Sources
 
 /** Table loading helpers for the driver-generated parquet test tables
   * (TESTDATA.md). At cluster scale these would be partitioned parquet
-  * directories; the API shape is identical (`spark.read.parquet` on a
-  * path), so everything downstream scales without change.
+  * directories; the API shape is identical ([[Sources.parquet]] on a
+  * path, which resolves the schema from one footer on the driver and
+  * runs no Spark job), so everything downstream scales without change.
   */
 object Tables {
   /** Read one named table from an sf directory. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Sources.parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "orders")

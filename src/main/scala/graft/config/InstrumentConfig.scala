@@ -2,6 +2,7 @@ package graft.config
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.io.Sources
 
 /** The reference's static instrument-configuration tables, materialized
   * as small parquet dimension tables (SURVEY §2 "aperture/lens-mode
@@ -119,9 +120,9 @@ object InstrumentConfig {
   }
 
   def loadAperture(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/aperture_config")
+    Sources.parquet(spark, s"$path/aperture_config")
   def loadLensMode(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/lens_mode_config")
+    Sources.parquet(spark, s"$path/lens_mode_config")
 
   /** Demo calibration schedule for the `config_asof` query: weekly
     * aperture re-selections inside the test events' Jan-2024 range,

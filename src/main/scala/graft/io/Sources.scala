@@ -1,6 +1,14 @@
 package graft.io
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Source/sink helpers — SURVEY.md §2.1 parity: FileCollection-style
   * gather/filter/select over file lists (`base.py:91-182`), natural sort
@@ -49,13 +57,136 @@ object Sources {
   /** Multi-format reader (`readDataframe`, `fprocessing.py:1962-2027`). */
   def readFiles(spark: SparkSession, paths: Seq[String], ftype: String = "parquet"): DataFrame =
     ftype match {
-      case "parquet" => spark.read.parquet(paths: _*)
+      case "parquet" => parquet(spark, paths: _*)
       case "json" => spark.read.json(paths: _*)
       case "csv" => spark.read.option("header", "true").option("inferSchema", "true").csv(paths: _*)
       case "tsv" => spark.read.option("sep", "\t").option("header", "true")
         .option("inferSchema", "true").csv(paths: _*)
       case other => throw new IllegalArgumentException(s"unsupported ftype $other")
     }
+
+  /** The engine's one parquet reader: `spark.read.parquet(paths)`
+    * without the Spark job that reader runs to infer the schema.
+    *
+    * With `spark.sql.parquet.mergeSchema` off (the default), Spark's
+    * inference reads the footer of one file and launches a one-task job
+    * to do it. Here that footer is read on the driver instead
+    * ([[footerSchema]]) and handed to the reader as its schema, so Spark
+    * still lists the files and builds the same `HadoopFsRelation`, but
+    * runs no job (its listing runs one only past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths or
+    * directories, as before). When the footer cannot decide the
+    * schema, and when schema merging is on, the read goes to
+    * `spark.read.parquet` unchanged, with Spark's own errors and
+    * semantics.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val schema =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+      else footerSchema(spark, paths: _*)
+    schema.fold(spark.read)(spark.read.schema).parquet(paths: _*)
+  }
+
+  /** The data schema Spark infers for `paths` without schema merging,
+    * read from one footer on the driver.
+    *
+    * The file is the one Spark's inference picks among the listed leaf
+    * files, sorted by path: the first `_common_metadata`, else the first
+    * `_metadata`, else the first data file. Listing follows Spark's
+    * hidden-name rule and stops at the first data file: the top of each
+    * path (summary files sit there), then its subdirectories in path
+    * order, depth first, for `key=value` layouts; globs expand with
+    * `globStatus`. Summary files below the top level are not seen.
+    *
+    * `None` when Spark has to decide: a path or glob that matches
+    * nothing, no data file (an empty directory), a streaming file sink's
+    * output (Spark lists it from `_spark_metadata`), a footer that cannot
+    * be read, or a footer column that is also a partition key of the
+    * chosen file (Spark then types the partition column itself).
+    */
+  def footerSchema(spark: SparkSession, paths: String*): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val roots = paths.map { p =>
+      Try {
+        val path = new Path(p)
+        val fs = path.getFileSystem(conf)
+        val matched =
+          if (p.exists("{}[]*?\\".contains(_))) Option(fs.globStatus(path)).toSeq.flatten
+          else Seq(fs.getFileStatus(path))
+        matched.map(st => leaves(fs, st))
+      }.getOrElse(Nil)
+    }
+    val found = if (roots.exists(r => r.isEmpty || r.contains(None))) Nil else roots.flatten.flatten
+    def firstSummary(name: String) =
+      found.flatMap(_.summaries).filter(_.getPath.getName == name).minByOption(_.getPath.toString)
+    val chosen = firstSummary("_common_metadata").map(_ -> Seq.empty[String])
+      .orElse(firstSummary("_metadata").map(_ -> Seq.empty[String]))
+      .orElse(found.flatMap(_.data).minByOption(_._1.getPath.toString))
+    chosen.flatMap { case (file, dirs) =>
+      val keys = dirs.filter(_.contains('=')).map(_.takeWhile(_ != '=').toLowerCase).toSet
+      Try {
+        val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter(spark))
+      }.toOption.filterNot(_.fieldNames.exists(n => keys(n.toLowerCase)))
+    }
+  }
+
+  /** What Spark's listing of one root path offers its schema inference:
+    * the summary files at the root's top level, and its first data file
+    * in path order with the directory names between the root and it. */
+  private final case class Leaves(summaries: Seq[FileStatus], data: Option[(FileStatus, Seq[String])])
+
+  private def leaves(fs: FileSystem, root: FileStatus): Option[Leaves] = {
+    val name = root.getPath.getName
+    if (root.isDirectory) {
+      val all = fs.listStatus(root.getPath).toSeq
+      // a streaming file sink's output: Spark reads the files its log names
+      if (all.exists(_.getPath.getName == "_spark_metadata")) None
+      else {
+        val top = all.filterNot(st => hidden(st.getPath.getName))
+        Some(Leaves(top.filter(st => st.isFile && isSummary(st.getPath.getName)), firstData(fs, top, Nil)))
+      }
+    } else if (hidden(name)) Some(Leaves(Nil, None))
+    else if (isSummary(name)) Some(Leaves(Seq(root), None))
+    else Some(Leaves(Nil, Some(root -> Nil)))
+  }
+
+  /** The first data file among `children` and below, in the order of
+    * their full paths: a directory `d` sorts as `d/`, and is listed only
+    * when no earlier entry holds a data file. */
+  private def firstData(fs: FileSystem, children: Seq[FileStatus],
+                        dirs: Seq[String]): Option[(FileStatus, Seq[String])] =
+    children.sortBy(st => st.getPath.getName + (if (st.isDirectory) "/" else "")).iterator.map { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) firstData(fs, visible(fs, st.getPath), dirs :+ name)
+      else if (isSummary(name)) None
+      else Some(st -> dirs)
+    }.collectFirst { case Some(f) => f }
+
+  private def visible(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filterNot(st => hidden(st.getPath.getName))
+
+  /** Spark's rule for names its file listing skips
+    * (`HadoopFSUtils.shouldFilterOutPathName`): `_` and `.` names, except
+    * `_` names holding `=` and the summary files, and `._COPYING_`
+    * files. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  private def isSummary(name: String): Boolean = name == "_common_metadata" || name == "_metadata"
+
+  /** The converter Spark's inference builds, from the same session flags
+    * (`ParquetFileFormat.mergeSchemasInParallel`). */
+  private def converter(spark: SparkSession): ParquetToSparkSchemaConverter = {
+    val c = spark.sessionState.conf
+    new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = c.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+      nanosAsLong = c.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+  }
 
   /** Parquet sink with append option (`convert(form='parquet')`). */
   def writeParquet(df: DataFrame, path: String, append: Boolean = false): Unit =

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.binning.BinAxis
+import graft.io.Sources
 
 /** Structured Streaming surface (SURVEY.md §2.9). The reference has no
   * streaming engine — its events are batch rows with a reconstructed
@@ -31,15 +32,15 @@ object StreamOps {
     * layout depends on the producer (TIMESTAMP(NANOS) read as raw
     * nanos, TIMESTAMP_MICROS without UTC adjustment read as
     * TIMESTAMP_NTZ — the same two layouts Tables.events normalizes), so
-    * any file already in the folder is probed once at stream-definition
-    * time; an empty folder defaults to the raw-nanos contract. Either
+    * the footer of a file already in the folder is read once on the
+    * driver at stream-definition time ([[Sources.footerSchema]], no
+    * Spark job); an empty folder defaults to the raw-nanos contract. Either
     * way the stream normalizes to a microsecond TimestampType `ts`.
     */
   def readEvents(spark: SparkSession, eventsDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probed = scala.util.Try(
-      spark.read.parquet(eventsDir).schema("ts").dataType).toOption
-    val tsType = probed.getOrElse(LongType)
+    val tsType = Sources.footerSchema(spark, eventsDir)
+      .flatMap(_.find(_.name == "ts")).fold[DataType](LongType)(_.dataType)
     val schema = StructType(eventsRawSchema.map {
       case f if f.name == "ts" => f.copy(dataType = tsType)
       case f                   => f

@@ -1058,7 +1058,7 @@ object BenchLarge {
     // exact verification, never all-pairs. The check counts pairs.
     timed("jaccard_join", clearBetween = true, clearAfter = true) {
       graft.text.TextQueries.jaccardJoin(docs(spark, nDocs, template),
-        threshold = 0.8, portableHash = false, persistLineage = persist).count()
+        threshold = 0.8, persistLineage = persist).count()
     }
     // incremental exact join: a 5% batch vs the 95% corpus's
     // pre-materialized (untimed) prefix index + df table + doc-id-keyed
@@ -1111,7 +1111,7 @@ object BenchLarge {
     // on hot shingles). The check counts ordered pairs.
     timed("contain_join", clearBetween = true, clearAfter = true) {
       graft.text.TextQueries.containJoin(docs(spark, nDocs, template),
-        threshold = 0.8, portableHash = false, persistLineage = persist).count()
+        threshold = 0.8, persistLineage = persist).count()
     }
     // LSH recall audit at corpus scale: runs BOTH the exact chain
     // (ground truth) and the LSH chain at the production threshold —

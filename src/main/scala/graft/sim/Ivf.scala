@@ -220,10 +220,11 @@ object Ivf {
         org.apache.spark.sql.GraftBridge.expression(df("embedding")),
         centroids, nprobe)))
 
-  /** DuckDB literal for the centroid matrix (shortest-round-trip doubles
-    * — both engines parse them back to identical IEEE values). */
+  /** DuckDB literal for the centroid matrix: exponent-carrying doubles
+    * ([[DuckLiteral]]), which DuckDB parses to the same IEEE values —
+    * a plain decimal rendering would go through DECIMAL first. */
   private def centsDuck(centroids: Array[Array[Double]]): String =
-    centroids.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
+    DuckLiteral.matrix(centroids)
 
   /** DuckDB fragment: quantized distance list `ds` over `embedding`
     * given a `cents` CTE exposing the matrix as column `cc`. */

@@ -250,16 +250,17 @@ object Pca {
     vectors.withColumn("proj", proj).select(cols: _*)
   }
 
-  /** DuckDB twin of [[project]] from the trained literals (shortest
-    * round-trip doubles, identical per-term round-then-sum).
+  /** DuckDB twin of [[project]] from the trained literals (exact
+    * DOUBLE literals via [[DuckLiteral]], identical per-term
+    * round-then-sum).
     * `withEmbedding` carries the original vector through — the
     * reduced-space SemDeDup oracle verifies candidates on it. */
   def projectSql(mean: Array[Double], comps: Array[Array[Double]],
                  table: String = "embeddings",
                  withEmbedding: Boolean = false): String = {
     val dim = mean.length
-    val mu = mean.mkString("[", ", ", "]")
-    val pc = comps.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")
+    val mu = DuckLiteral.list(mean)
+    val pc = DuckLiteral.matrix(comps)
     val outs = comps.indices.map { k =>
       s"""  CAST(list_sum(list_transform(range(1, ${dim + 1}), i ->
          |    CAST(round((CAST(embedding[i] AS DOUBLE) - mu[i]) * pc[${k + 1}][i] * 1e12) AS BIGINT))) AS BIGINT) AS pc${k + 1}_e12""".stripMargin

@@ -122,8 +122,7 @@ object Pq {
   // ---- DuckDB oracle fragments (same literals, same arithmetic) ----
 
   private def cbDuck(cbs: Array[Array[Array[Double]]]): String =
-    cbs.map(_.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")
+    cbs.map(DuckLiteral.matrix).mkString("[", ", ", "]")
 
   /** Full oracle for emb_ivfpq_topk given the trained literals. Mirrors
     * the Spark plan stage for stage: assign cells, residuals, encode,
@@ -139,7 +138,7 @@ object Pq {
     def norm(e: String) = s"CAST(list_sum(list_transform($e, x -> CAST(round(CAST(x AS DOUBLE) * CAST(x AS DOUBLE) * 1e12) AS BIGINT))) AS BIGINT)"
     s"""WITH asg AS (${Ivf.assignSql(cents)}),
        |cbl AS (SELECT ${cbDuck(cbs)} AS cb),
-       |cents2 AS (SELECT ${cents.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]")} AS cc),
+       |cents2 AS (SELECT ${DuckLiteral.matrix(cents)} AS cc),
        |res AS (
        |  SELECT vec_id, embedding, cell,
        |    list_transform(range(1, ${dim + 1}), i ->

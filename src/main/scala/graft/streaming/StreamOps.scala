@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.binning.BinAxis
 import graft.io.Sources
+import graft.text.{SimJoin, TextQueries}
 
 /** Structured Streaming surface (SURVEY.md §2.9). The reference has no
   * streaming engine — its events are batch rows with a reconstructed
@@ -408,16 +409,12 @@ object StreamOps {
           }
         })
       .toDF()
+    val (inter, uni) = SimJoin.overlap("sh1", "sh2")
     cands
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("d1", "d2")
-      .select(col("d1"), col("d2"),
-        size(array_intersect(col("sh1"), col("sh2"))).cast("long").as("inter"),
-        (size(col("sh1")) + size(col("sh2"))
-          - size(array_intersect(col("sh1"), col("sh2")))).cast("long").as("uni"),
-        (size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          (size(col("sh1")) + size(col("sh2"))
-            - size(array_intersect(col("sh1"), col("sh2"))))).as("jaccard"))
+      .select(col("d1"), col("d2"), inter.cast("long").as("inter"),
+        uni.cast("long").as("uni"), SimJoin.jaccard(inter, uni).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -467,10 +464,9 @@ object StreamOps {
         posexplode(graft.text.TextQueries.bandSigsExpr("text")).as(Seq("band", "sig")))
     val idx = corpusIndex.select(col("doc_id").as("dup_of"),
       col("band"), col("sig"), col("hashes").as("ch"))
-    val inter = size(array_intersect(col("bh"), col("ch")))
-    val uni = size(col("bh")) + size(col("ch")) - inter
+    val (inter, uni) = SimJoin.overlap("bh", "ch")
     enriched.join(idx, Seq("band", "sig"))
-      .withColumn("jaccard", inter.cast("double") / uni)
+      .withColumn("jaccard", SimJoin.jaccard(inter, uni))
       .filter(col("jaccard") >= threshold)
       .select(col("batch_id"), col("ts"), col("dup_of"), col("jaccard"))
       .dropDuplicatesWithinWatermark("batch_id", "dup_of")
@@ -842,47 +838,18 @@ object StreamOps {
                            threshold: Double = 0.8,
                            watermark: String = "10 minutes",
                            unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val tPpm = math.round(threshold * 1e6)
-    // plan-time index compatibility: probing the wrong index KIND, a
-    // differently-hashed index (this gate always hashes incoming text
-    // with the portable md5 expression), a higher build threshold, or
-    // a different token order each silently break recall 1 — the
-    // metadata stamped at build time fails them loudly (this gate's
-    // per-row prefix is plain hash order by construction). STRICT:
-    // absent metadata (a schema-stripped index) fails too, unless the
-    // caller explicitly vouches via unsafeAssumeCompatible.
-    graft.text.TextQueries.requireIndexCompatible(corpusIndex,
-      graft.text.TextQueries.KindJaccardPrefix, portableHash = true,
-      tPpm = Some(tPpm), hashOrdered = Some(true),
-      strict = !unsafeAssumeCompatible)
-    graft.text.TextQueries.requireIndexCompatible(corpusDocSide,
-      graft.text.TextQueries.KindDocSide, portableHash = true, column = "hs",
-      strict = !unsafeAssumeCompatible)
-    if (!unsafeAssumeCompatible)
-      graft.text.TextQueries.requireSameBuild(corpusIndex, corpusDocSide)
-    docs.withWatermark("ts", watermark)
-      .select(col("doc_id").as("batch_id"), col("ts"),
-        sort_array(graft.text.TextQueries.shingleHashesExpr("text")).as("bhs"))
-      .withColumn("bn", size(col("bhs")))
-      .select(col("batch_id"), col("ts"), col("bhs"), col("bn"),
-        explode(expr(
-          s"""slice(bhs, 1,
-             |  size(bhs) - cast(($tPpm * size(bhs) + 999999) div 1000000 as int) + 1)""".stripMargin))
-          .as("h"))
-      // candidate match on the COMPACT (h, doc_id) bucket index, then a
-      // second stream-static equi-join pulls the verification payload
-      // from the doc_id-bucketed side — two static tables, both append-
-      // mode-legal; the hash arrays never ride a bucket row
-      .join(corpusIndex.select(col("h"), col("doc_id").as("dup_of")), Seq("h"))
-      .join(corpusDocSide.select(col("doc_id").as("dup_of"),
-        col("n").as("cn"), col("hs")), Seq("dup_of"))
-      .withColumn("inter", size(array_intersect(col("bhs"), col("hs"))).cast("long"))
+    val tPpm = SimJoin.thresholdPpm(threshold)
+    // this gate always hashes incoming text with the portable md5
+    // expression, and its per-row prefix is plain hash order
+    SimJoin.requireProbeCompatible(corpusIndex, corpusDocSide,
+      TextQueries.KindJaccardPrefix, portableHash = true, unsafeAssumeCompatible,
+      tPpm = Some(tPpm), hashOrdered = Some(true))
+    SimJoin.streamVerify(docs, watermark, tPpm, corpusIndex, corpusDocSide,
+        Seq(col("n").as("cn")))
       .withColumn("uni", col("bn") + col("cn") - col("inter"))
-      .filter(col("inter") * lit(1000000L) >= lit(tPpm) * col("uni"))
+      .filter(SimJoin.ppmGate(tPpm, "uni"))
       .select(col("batch_id"), col("ts"), col("dup_of"),
-        (col("inter").cast("double") / col("uni")).as("jaccard"))
+        SimJoin.jaccard(col("inter"), col("uni")).as("jaccard"))
       .dropDuplicatesWithinWatermark("batch_id", "dup_of")
   }
 
@@ -909,43 +876,17 @@ object StreamOps {
                            threshold: Double = 0.8,
                            watermark: String = "10 minutes",
                            unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val tPpm = math.round(threshold * 1e6)
+    val tPpm = SimJoin.thresholdPpm(threshold)
     // the containment theorem requires the FULL-token index: a
     // prefix-cut jaccardIndex has the identical compact schema but is
     // the documented recall hole — and a non-portable-hash index can
-    // never match this gate's md5-hashed incoming tokens; both fail at
-    // plan time via the build metadata. STRICT: absent metadata (a
-    // schema-stripped index) fails too, unless the caller explicitly
-    // vouches via unsafeAssumeCompatible.
-    graft.text.TextQueries.requireIndexCompatible(corpusIndex,
-      graft.text.TextQueries.KindContainFull, portableHash = true,
-      strict = !unsafeAssumeCompatible)
-    graft.text.TextQueries.requireIndexCompatible(corpusDocSide,
-      graft.text.TextQueries.KindDocSide, portableHash = true, column = "hs",
-      strict = !unsafeAssumeCompatible)
-    if (!unsafeAssumeCompatible)
-      graft.text.TextQueries.requireSameBuild(corpusIndex, corpusDocSide)
-    docs.withWatermark("ts", watermark)
-      .select(col("doc_id").as("batch_id"), col("ts"),
-        sort_array(graft.text.TextQueries.shingleHashesExpr("text")).as("bhs"))
-      .withColumn("bn", size(col("bhs")))
-      .select(col("batch_id"), col("ts"), col("bhs"), col("bn"),
-        explode(expr(
-          s"""slice(bhs, 1,
-             |  size(bhs) - cast(($tPpm * size(bhs) + 999999) div 1000000 as int) + 1)""".stripMargin))
-          .as("h"))
-      // compact full-token bucket probe, then the doc_id-keyed
-      // verification join — same two-static-table shape as the Jaccard
-      // gate; the corpus hash arrays live once per doc, never per token
-      .join(corpusIndex.select(col("h"), col("doc_id").as("dup_of")), Seq("h"))
-      .join(corpusDocSide.select(col("doc_id").as("dup_of"), col("hs")),
-        Seq("dup_of"))
-      .withColumn("inter", size(array_intersect(col("bhs"), col("hs"))).cast("long"))
-      .filter(col("inter") * lit(1000000L) >= lit(tPpm) * col("bn"))
+    // never match this gate's md5-hashed incoming tokens
+    SimJoin.requireProbeCompatible(corpusIndex, corpusDocSide,
+      TextQueries.KindContainFull, portableHash = true, unsafeAssumeCompatible)
+    SimJoin.streamVerify(docs, watermark, tPpm, corpusIndex, corpusDocSide, Nil)
+      .filter(SimJoin.ppmGate(tPpm, "bn"))
       .select(col("batch_id"), col("ts"), col("dup_of"),
-        expr("inter * 1000000L div bn").as("contain_ppm"))
+        SimJoin.containPpm("bn").as("contain_ppm"))
       .dropDuplicatesWithinWatermark("batch_id", "dup_of")
   }
 

@@ -117,8 +117,7 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * explode variant would shuffle K× the shingle volume for no reason.
     */
   private[text] def minhashSig(docs: DataFrame): DataFrame =
-    minhashSigFromShingles(
-      shingles(docs).select(col("doc_id"), phash(col("shingle")).as("h")))
+    minhashSigFromShingles(SimJoin.shingleHashes(docs, portableHash = true))
 
   /** Wide signature frame (doc_id, m0..m15) from the compact
     * hashed-shingle frame (doc_id, h): the 30-bit minhash input is just
@@ -199,45 +198,16 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
 
   /** Full LSH dedup chain over any (doc_id, text) frame — the body of
     * the `dedup_lsh_pairs` query, public so `BenchLarge` can drive it at
-    * synthetic-corpus scale. The shingle and band-signature lineages
-    * feed multiple joins and are deliberately NOT persisted: re-deriving
-    * the codegen'd tokenize+explode+agg chain per branch measured 2.0 s
-    * steady-state at sf0.1 vs 5.4 s with MEMORY_AND_DISK persist (the
-    * columnar cache build costs more than the recompute), and at corpus
-    * scale materializing a multi-TB intermediate is strictly worse than
-    * re-scanning the pruned source columns. */
+    * synthetic-corpus scale: band self-join candidates, count-only
+    * verify, double `jaccard >= threshold` gate (the oracle replays it).
+    * `portableHash` picks the shingle hash ([[SimJoin.shingleHash]]):
+    * the banded pair set is a function of it. `persistLineage` caches
+    * the compact hash frame, the bands and the candidates, each
+    * consumed several times ([[SimJoin.persistIf]]). */
   def lshPairs(docs: DataFrame, threshold: Double = 0.5,
                persistLineage: Boolean = false,
                portableHash: Boolean = true): DataFrame = {
-    // Everything downstream of the tokenize+explode works on the 60-bit
-    // portable shingle hash, not the shingle string: minhash folds it to
-    // 30 bits anyway, and |A∩B|/|A∪B| over 60-bit hashes equals the
-    // string Jaccard up to a ~2⁻⁶⁰ collision probability (the same
-    // argument the streaming path documents) — while every shuffle row
-    // shrinks from (doc_id, ~40-byte string) to (doc_id, long).
-    //
-    // `portableHash` picks the hash itself: md5-hex→conv (bit-portable
-    // to the DuckDB oracle — the correctness-gate default) vs native
-    // xxhash64 (codegen'd, no hex-string round-trip). Measured verdict
-    // (BENCH_LARGE.json, 2M docs, min-of-3 calibrated passes): the two
-    // chains are within ~10% of each other and the SIGN of the gap has
-    // flipped between committed rounds (md5 14% ahead in one, xxhash
-    // 10% ahead in the next) — the chain is shuffle/explode-bound, not
-    // hash-bound, so the portability tax is inside run-to-run noise.
-    // Choose by requirement, not speed: portableHash=true whenever an
-    // external system must reproduce the signatures, false otherwise.
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
-    val sh0 = shingles(docs).select(col("doc_id"), hashed.as("h"))
-    // `persistLineage` caches that compact frame, which the branches
-    // below re-derive (signatures, sizes, both sides of the verify
-    // join): at sf0.1 recompute wins (2.0 s vs 5.4 s — cache build
-    // exceeded the recompute); at corpus scale the md5+explode chain
-    // dominates and the tradeoff flips — callers choose per scale.
-    val sh = if (persistLineage)
-      sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sh0
+    val sh = SimJoin.shingleHashes(docs, portableHash, persistLineage)
     // band signature: concat of the band's r minhash values in seed
     // order — built STRAIGHT from the wide (doc_id, m0..m15) frame as a
     // codegen'd string concat + a 4-way explode (2M → 8M rows), NOT by
@@ -246,50 +216,13 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     // expensive subtree, and its three consumers (selfPairs' eager
     // skew-detection aggregate plus both references to `cand` below)
     // each paid it again. Same sig strings, same oracle.
-    val bands0 = bandFrame(minhashWide(sh))
-    // under persistLineage, cache bands and cand so each consumer pays
-    // the minhash aggregation once (caches stay session-owned, as `sh`)
-    val bands = if (persistLineage)
-      bands0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else bands0
-    // candidate pairs via the skew-aware self-join: degenerate
-    // "identical template" band buckets are triangle-salted so their
-    // n² pair-work spreads across reducers (Scale.selfPairs) — output
-    // is exactly the all-pairs result, so the oracle is unchanged
-    val cand0 = graft.ops.Scale.selfPairs(bands, Seq("band", "sig"), "doc_id")
-      .select(col("doc_id_1").as("d1"), col("doc_id_2").as("d2")).distinct()
-    val cand = if (persistLineage)
-      cand0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else cand0
-    // exact Jaccard on candidates only (LSH prunes the O(n^2) space).
-    // Count-only verify over ONE consumption of the candidate set
-    // (guide §2.4): fan d1's compact (doc_id, h) rows out once per
-    // candidate, LEFT-join the d2 side on (d2, h), and take BOTH |A|
-    // and |A∩B| from the same aggregation — count(1) over the fan-out
-    // IS |A| (one row per distinct shingle of d1, kept by the left
-    // join whether or not d2 matches), so the former shape's second
-    // candidate-subtree evaluation, its d1-sizes corpus pass, and the
-    // pair-keyed cand⋈inter rejoin all drop out of the plan.
-    // Equivalence: inter ⊆ cand by construction and a band-collision
-    // pair with zero shared shingles aggregates to inter=0 — exactly
-    // the jaccard-0 row the old left-join+fill produced — so the
-    // filtered output is identical for every threshold, up to a ~2⁻⁶⁰
-    // collision probability: count(1) equals the old sizes.n only while
-    // (doc_id, h) is unique per doc, and a 60-bit intra-doc hash
-    // collision now skews |A| as well as |A∩B| (the old shape skewed
-    // only |A∩B|).
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(sh.as("s2"),
-        col("d2") === col("s2.doc_id") && col("s1.h") === col("s2.h"), "left")
-      .groupBy("d1", "d2")
-      .agg(count(lit(1)).as("n1"), count(col("s2.doc_id")).as("inter"))
-    inter
-      .join(sizes.as("n2"), col("d2") === col("n2.doc_id"))
+    val bands = SimJoin.persistIf(bandFrame(minhashWide(sh)), persistLineage)
+    val cand = SimJoin.persistIf(SimJoin.selfCandidates(bands, Seq("band", "sig")), persistLineage)
+    SimJoin.countVerify(cand, "d1", "d2", sh, sh, "n1")
+      .join(SimJoin.docSizes(sh).as("n2"), col("d2") === col("n2.doc_id"))
       .select(col("d1"), col("d2"), col("inter"),
         (col("n1") + col("n2.n") - col("inter")).as("uni"),
-        (col("inter").cast("double") / (col("n1") + col("n2.n") - col("inter"))).as("jaccard"))
+        SimJoin.jaccard(col("inter"), col("n1") + col("n2.n") - col("inter")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -384,10 +317,7 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
 
   def bandSignatures(docs: DataFrame, portableHash: Boolean = true,
                      buildId: Option[String] = None): DataFrame = {
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
-    val sh = shingles(docs).select(col("doc_id"), hashed.as("h"))
+    val sh = SimJoin.shingleHashes(docs, portableHash)
     // the LSH member of the index-contract stamp discipline: a
     // native-hash band index probed by md5-hashed batch bands collides
     // on ZERO signatures — the documented silent-zero-candidates hole,
@@ -477,45 +407,26 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     // `Scale.releaseAllPinned(Some("lsh_against"))` between batches
     // releases exactly this family (`spark.catalog.clearCache()` is
     // the blunt alternative: it also drops caches the caller owns).
-    // Compact rows: candidate pairs / (doc_id, h).
-    val cand = graft.ops.Scale.pinPersisted(cBands.as("cb")
-      .join(broadcast(bandSignatures(batch, portableHash)).as("nb"), Seq("band", "sig"))
-      .select(col("nb.doc_id").as("batch_id"), col("cb.doc_id").as("corpus_id"))
-      .distinct(), "lsh_against")
-    // verify on candidate docs only: the corpus prunes to candidate ids
-    // (broadcast semi join) before any shingling happens. Both shingle
-    // frames are pinned for the same reason: each feeds the
-    // intersection join AND its own size aggregate — lazily the
-    // candidate-pruned corpus re-shingles (and the batch re-shingles)
-    // once per consumer. The corpus side is candidate-bounded, the
-    // batch side batch-bounded.
-    val candIds = cand.select(col("corpus_id").as("doc_id")).distinct()
-    val shC = graft.ops.Scale.pinPersisted(
-      shingles(corpus.join(broadcast(candIds), Seq("doc_id"), "left_semi"))
-        .select(col("doc_id"), phash(col("shingle")).as("h")), "lsh_against")
-    val shB = graft.ops.Scale.pinPersisted(
-      shingles(batch).select(col("doc_id"), phash(col("shingle")).as("h")),
+    val cand = graft.ops.Scale.pinPersisted(
+      SimJoin.probe(cBands, bandSignatures(batch, portableHash), Seq("band", "sig"),
+        col("b.doc_id").as("batch_id"), col("c.doc_id").as("corpus_id")),
       "lsh_against")
-    // Count-only verify over ONE consumption of the candidate set (the
-    // lshPairs shape): count(1) over the corpus-side fan-out IS the
-    // candidate corpus doc's shingle count (every candidate has bands,
-    // hence ≥ 1 shingle, so the inner sc join never drops a pair; a
-    // band collision with no shared shingle aggregates to inter=0 —
-    // the jaccard-0 row the old left-join+fill produced). The output
-    // equals the old shape's up to a ~2⁻⁶⁰ collision probability: a
-    // 60-bit intra-doc phash collision skews this |A| as well as |A∩B|.
-    // Drops the sizesC aggregate and the pair-keyed cand⋈inter rejoin.
-    val sizesB = shB.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = broadcast(cand)
-      .join(shC.as("sc"), col("corpus_id") === col("sc.doc_id"))
-      .join(broadcast(shB).as("sb"),
-        col("batch_id") === col("sb.doc_id") && col("sc.h") === col("sb.h"), "left")
-      .groupBy("batch_id", "corpus_id")
-      .agg(count(lit(1)).as("n2"), count(col("sb.doc_id")).as("inter"))
-    inter
-      .join(broadcast(sizesB).as("n1"), col("batch_id") === col("n1.doc_id"))
+    // verify on candidate docs only: the corpus prunes to candidate ids
+    // (broadcast semi join) before any shingling happens. Both hash
+    // frames are pinned because each feeds the verify join AND a size
+    // count; the corpus side is candidate-bounded, the batch side
+    // batch-bounded. Every candidate has bands, hence ≥ 1 shingle, so
+    // the count-only fan-out over the corpus side drops no pair.
+    val candIds = cand.select(col("corpus_id").as("doc_id")).distinct()
+    val shC = graft.ops.Scale.pinPersisted(SimJoin.shingleHashes(
+      corpus.join(broadcast(candIds), Seq("doc_id"), "left_semi"), portableHash = true),
+      "lsh_against")
+    val shB = graft.ops.Scale.pinPersisted(
+      SimJoin.shingleHashes(batch, portableHash = true), "lsh_against")
+    SimJoin.countVerify(broadcast(cand), "corpus_id", "batch_id", shC, broadcast(shB), "n2")
+      .join(broadcast(SimJoin.docSizes(shB)).as("n1"), col("batch_id") === col("n1.doc_id"))
       .select(col("batch_id"), col("corpus_id"),
-        (col("inter").cast("double") / (col("n1.n") + col("n2") - col("inter"))).as("jaccard"))
+        SimJoin.jaccard(col("inter"), col("n1.n") + col("n2") - col("inter")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -856,78 +767,39 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * final gate `inter·10⁶ ≥ tPpm·uni` compared in integers — so no
     * float-boundary row can differ from the DuckDB oracle.
     *
-    * Scale shape (100 TB): tokens ride as 60-bit hashes (never shingle
-    * strings); the frequency join and prefix aggregate shuffle compact
+    * Scale shape (100 TB): tokens ride as 60-bit native xxhash64 hashes
+    * (the pair set is hash-invariant, so no portable hash is needed);
+    * the frequency join and prefix aggregate shuffle compact
     * (doc_id, h, df) longs; candidates meet in prefix-token equi-join
     * buckets via the skew-salted [[graft.ops.Scale.selfPairs]] (never
     * all-pairs — PlanSpec); the length filter t·max(|A|,|B|) ≤
-    * min(|A|,|B|) prunes before any intersection work; verification
-    * re-joins only candidate ids against the compact (doc_id, h) side.
-    * At t→0 the prefix approaches the whole doc — the inherent cost of
-    * exact recall at low thresholds; production near-dup joins run at
-    * t ≥ 0.8 where the prefix is ≲ a fifth of each doc. The prefix
-    * table is [[graft.ops.Scale.materializeCompact]]-pinned: selfPairs'
-    * skew detection plus both join consumers would otherwise re-run the
-    * sort-and-slice aggregate per consumer.
+    * min(|A|,|B|) prunes before any intersection work; the count-only
+    * verify re-joins only candidate ids against the compact (doc_id, h)
+    * side. At t→0 the prefix approaches the whole doc — the inherent
+    * cost of exact recall at low thresholds; production near-dup joins
+    * run at t ≥ 0.8 where the prefix is ≲ a fifth of each doc.
     *
     * `persistLineage` caches the compact (doc_id, h) shingle frame that
     * FIVE consumers re-derive (frequency table, prefix aggregate, sizes,
-    * both verification sides) — the [[lshPairs]] knob, same tradeoff:
-    * at sf-scale recompute wins, at corpus scale the tokenize+explode
-    * chain dominates and caching it once pays 5×. */
+    * both verification sides) — see [[SimJoin.persistIf]]. */
   def jaccardJoin(docs: DataFrame, threshold: Double = 0.8,
-                  portableHash: Boolean = true,
                   persistLineage: Boolean = false): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val tPpm = math.round(threshold * 1e6)
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
-    val sh0 = shingles(docs).select(col("doc_id"), hashed.as("h"))
-    val sh = if (persistLineage)
-      sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sh0
-    val freq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    // per-doc canonical order (df asc, h asc) → prefix slice; one
-    // shuffle keyed on doc_id, array work bounded by doc length
-    val pref = graft.ops.Scale.materializeCompact(
-      sh.join(freq, Seq("h"))
-        .groupBy("doc_id")
-        .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("ord"))
-        .select(col("doc_id"), explode(expr(
-          s"""slice(transform(ord, x -> x.h), 1,
-             |  size(ord) - cast(($tPpm * size(ord) + 999999) div 1000000 as int) + 1)""".stripMargin))
-          .as("h")))
-    val cand = graft.ops.Scale.selfPairs(pref, Seq("h"), "doc_id")
-      .select(col("doc_id_1").as("d1"), col("doc_id_2").as("d2")).distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val tPpm = SimJoin.thresholdPpm(threshold)
+    val sh = SimJoin.shingleHashes(docs, portableHash = false, persistLineage)
+    val cand = SimJoin.selfCandidates(SimJoin.dfPrefix(sh, SimJoin.docFreq(sh), tPpm), Seq("h"))
+    val sizes = SimJoin.docSizes(sh)
     val candLen = cand
       .join(sizes.as("n1"), col("d1") === col("n1.doc_id"))
       .join(sizes.as("n2"), col("d2") === col("n2.doc_id"))
       .select(col("d1"), col("d2"), col("n1.n").as("na"), col("n2.n").as("nb"))
       .filter(lit(tPpm) * greatest(col("na"), col("nb"))
         <= lit(1000000L) * least(col("na"), col("nb")))
-    // Count-only verify over ONE consumption of the length-filtered
-    // candidate set (guide §2.4, the lshPairs/containJoin shape): the
-    // d2 side LEFT-joins on (d2, h) so count(1) over the d1 fan-out IS
-    // |A| — the former candLen⋈inter pair-keyed rejoin (and with it the
-    // second evaluation of the whole prefix-candidate subtree) drops
-    // out; |B| re-joins from the sizes table it already came from.
-    // Equivalence: candidates share ≥ 1 prefix token by construction,
-    // so the former inner verify never dropped a candidate pair.
-    val inter = candLen.select("d1", "d2")
-      .join(sh.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(sh.as("s2"),
-        col("d2") === col("s2.doc_id") && col("s1.h") === col("s2.h"), "left")
-      .groupBy("d1", "d2")
-      .agg(count(lit(1)).as("na"), count(col("s2.doc_id")).as("inter"))
-    inter
+    SimJoin.countVerify(candLen.select("d1", "d2"), "d1", "d2", sh, sh, "na")
       .join(sizes.as("n2"), col("d2") === col("n2.doc_id"))
       .select(col("d1"), col("d2"), col("inter"),
         (col("na") + col("n2.n") - col("inter")).as("uni"))
-      .filter(col("inter") * lit(1000000L) >= lit(tPpm) * col("uni"))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
+      .filter(SimJoin.ppmGate(tPpm, "uni"))
+      .withColumn("jaccard", SimJoin.jaccard(col("inter"), col("uni")))
   }
 
   /** The corpus-side document-frequency table (h, df) the incremental
@@ -935,15 +807,13 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * [[jaccardIndex]]; recompute both per corpus version. */
   def jaccardCorpusStats(corpus: DataFrame,
                          portableHash: Boolean = true,
-                         buildId: Option[String] = None): DataFrame = {
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
-    shingles(corpus).select(col("doc_id"), hashed.as("h"))
-      .groupBy("h")
-      .agg(count(lit(1)).as("df", indexMeta(KindCorpusDf, portableHash,
-        buildId = buildId)))
-  }
+                         buildId: Option[String] = None): DataFrame =
+    corpusDfFromHashes(SimJoin.shingleHashes(corpus, portableHash), portableHash, buildId)
+
+  private def corpusDfFromHashes(sh: DataFrame, portableHash: Boolean,
+                                 buildId: Option[String]): DataFrame =
+    sh.groupBy("h").agg(count(lit(1)).as("df",
+      indexMeta(KindCorpusDf, portableHash, buildId = buildId)))
 
   /** Schema-metadata keys stamped on an index's `h` column (and the
     * doc side's `hs`): the index KIND (a prefix-cut jaccard index and
@@ -1164,27 +1034,16 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * index carries no payload), and hs is plain h-ascending: the
     * verification is a set intersection, so the PREFIX order (df vs
     * hash) stays private to the bucket side. */
-  /** The compact (doc_id, h) shingle-hash frame every index build
-    * starts from — factored so [[writeJaccardIndexTables]] can pay the
-    * tokenize+shingle+hash pass ONCE for all three builds. */
-  private def shingleHashFrame(corpus: DataFrame, portableHash: Boolean): DataFrame = {
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
-    shingles(corpus).select(col("doc_id"), hashed.as("h"))
-  }
-
   private def docHashSideFromHashes(sh: DataFrame, portableHash: Boolean,
                                     buildId: Option[String] = None): DataFrame =
-    sh.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("h"))).as("hs"))
+    SimJoin.sortedHashes(sh, "hs")
       .select(col("doc_id"),
         col("hs").as("hs", indexMeta(KindDocSide, portableHash, buildId = buildId)),
         size(col("hs")).as("n"))
 
   def docHashSide(corpus: DataFrame, portableHash: Boolean = true,
                   buildId: Option[String] = None): DataFrame =
-    docHashSideFromHashes(shingleHashFrame(corpus, portableHash), portableHash,
+    docHashSideFromHashes(SimJoin.shingleHashes(corpus, portableHash), portableHash,
       buildId)
 
   /** Persist the corpus side of the incremental exact-Jaccard join as
@@ -1204,16 +1063,13 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * ([[graft.streaming.StreamOps.streamingJaccardGate]]) requires
     * `hashOrdered = true` (its per-row prefix is plain hash order —
     * a df-ordered prefix would need an unbounded per-token lookup,
-    * i.e. state) and REJECTS a df-ordered index at plan time — use
-    * [[writeStreamingJaccardIndexTables]] when building for the
-    * gate. */
+    * i.e. state) and REJECTS a df-ordered index at plan time. */
   def writeJaccardIndexTables(corpus: DataFrame, prefix: String,
                               threshold: Double = 0.8,
                               portableHash: Boolean = true,
                               buckets: Int = 64,
                               hashOrdered: Boolean = false): Unit = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
+    val tPpm = SimJoin.thresholdPpm(threshold)
     val spark = corpus.sparkSession
     // one fresh build id stamps ALL tables of this call: consumers
     // cross-check it between index and doc side (requireSameBuild), so
@@ -1223,15 +1079,12 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     // ONE tokenize+shingle+hash pass feeds all three builds — the
     // persistLineage doctrine: at corpus scale that chain dominates,
     // and three independent builds would pay it three times
-    val sh = shingleHashFrame(corpus, portableHash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = SimJoin.shingleHashes(corpus, portableHash, persist = true)
     try {
-      graft.ops.Scale.writeBucketed(
-        sh.groupBy("h").agg(count(lit(1)).as("df",
-          indexMeta(KindCorpusDf, portableHash, buildId = buildId))),
+      graft.ops.Scale.writeBucketed(corpusDfFromHashes(sh, portableHash, buildId),
         "h", buckets, s"${prefix}_df")
       graft.ops.Scale.writeBucketed(
-        jaccardIndexFromHashes(sh, math.round(threshold * 1e6), portableHash,
+        jaccardIndexFromHashes(sh, tPpm, portableHash,
           Some(spark.table(s"${prefix}_df")), hashOrdered, buildId),
         "h", buckets, s"${prefix}_idx")
       graft.ops.Scale.writeBucketed(
@@ -1239,18 +1092,6 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
         "doc_id", buckets, s"${prefix}_side")
     } finally sh.unpersist(blocking = false)
   }
-
-  /** [[writeJaccardIndexTables]] in the STREAMING-gate configuration
-    * (`hashOrdered = true` — the only order the stateless per-row
-    * prefix can compute): a gate-oriented front door so "build tables,
-    * point the gate at them" works with defaults on both calls instead
-    * of failing on the order stamp. */
-  def writeStreamingJaccardIndexTables(corpus: DataFrame, prefix: String,
-                                       threshold: Double = 0.8,
-                                       portableHash: Boolean = true,
-                                       buckets: Int = 64): Unit =
-    writeJaccardIndexTables(corpus, prefix, threshold, portableHash,
-      buckets, hashOrdered = true)
 
   /** The containment twin of [[writeJaccardIndexTables]]: persist the
     * FULL-token bucket index (`<prefix>_idx`, bucketed by h) and the
@@ -1262,8 +1103,7 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
                               buckets: Int = 64): Unit = {
     // one build id across both tables — see writeJaccardIndexTables
     val buildId = Some(java.util.UUID.randomUUID().toString)
-    val sh = shingleHashFrame(corpus, portableHash)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = SimJoin.shingleHashes(corpus, portableHash, persist = true)
     try {
       graft.ops.Scale.writeBucketed(
         sh.select(col("h").as("h", indexMeta(KindContainFull, portableHash,
@@ -1302,12 +1142,9 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
                    portableHash: Boolean = true,
                    corpusDf: Option[DataFrame] = None,
                    hashOrdered: Boolean = false,
-                   buildId: Option[String] = None): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    jaccardIndexFromHashes(shingleHashFrame(corpus, portableHash),
-      math.round(threshold * 1e6), portableHash, corpusDf, hashOrdered, buildId)
-  }
+                   buildId: Option[String] = None): DataFrame =
+    jaccardIndexFromHashes(SimJoin.shingleHashes(corpus, portableHash),
+      SimJoin.thresholdPpm(threshold), portableHash, corpusDf, hashOrdered, buildId)
 
   private def jaccardIndexFromHashes(sh: DataFrame, tPpm: Long,
                                      portableHash: Boolean,
@@ -1315,22 +1152,11 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
                                      hashOrdered: Boolean,
                                      buildId: Option[String] = None): DataFrame = {
     val withOrd =
-      if (hashOrdered)
-        sh.groupBy("doc_id").agg(sort_array(collect_list(col("h"))).as("hs"))
-      else {
-        val dfT = corpusDf.getOrElse(
-          sh.groupBy("h").agg(count(lit(1)).as("df")))
-        sh.join(dfT, Seq("h"))
-          .groupBy("doc_id")
-          .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("ord"))
-          .select(col("doc_id"), expr("transform(ord, x -> x.h)").as("hs"))
-      }
+      if (hashOrdered) SimJoin.sortedHashes(sh, "hs")
+      else SimJoin.dfOrdered(sh, corpusDf.getOrElse(SimJoin.docFreq(sh)))
+        .select(col("doc_id"), expr(SimJoin.OrdHashes).as("hs"))
     withOrd
-      .select(col("doc_id"),
-        explode(expr(
-          s"""slice(hs, 1,
-             |  size(hs) - cast(($tPpm * size(hs) + 999999) div 1000000 as int) + 1)""".stripMargin))
-          .as("h"))
+      .select(col("doc_id"), explode(SimJoin.prefix("hs", tPpm)).as("h"))
       .select(col("h").as("h", indexMeta(KindJaccardPrefix, portableHash,
         Some(tPpm), Some(hashOrdered), buildId)), col("doc_id"))
   }
@@ -1365,74 +1191,33 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
                          index: Option[DataFrame] = None,
                          docSide: Option[DataFrame] = None,
                          unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val tPpm = math.round(threshold * 1e6)
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
+    val tPpm = SimJoin.thresholdPpm(threshold)
     val dfT = corpusDf.getOrElse(jaccardCorpusStats(corpus, portableHash))
     val idx = index.getOrElse(
       jaccardIndex(corpus, threshold, portableHash, Some(dfT)))
-    requireIndexCompatible(idx, KindJaccardPrefix, portableHash,
-      tPpm = Some(tPpm), hashOrdered = Some(false),
-      strict = !unsafeAssumeCompatible)
     val side = docSide.getOrElse(docHashSide(corpus, portableHash))
-    requireIndexCompatible(side, KindDocSide, portableHash, column = "hs",
-      strict = !unsafeAssumeCompatible)
-    if (!unsafeAssumeCompatible) {
-      requireSameBuild(idx, side)
-      // the df table is a RECALL axis too: the batch prefix is sliced
-      // in dfT's order while the index's prefix rows were cut in the
-      // build df's order — the prefix theorem needs ONE common total
-      // order, so a stale df silently misses true pairs
+    SimJoin.requireProbeCompatible(idx, side, KindJaccardPrefix, portableHash,
+      unsafeAssumeCompatible, tPpm = Some(tPpm), hashOrdered = Some(false))
+    // the df table is a RECALL axis too: the batch prefix is sliced
+    // in dfT's order while the index's prefix rows were cut in the
+    // build df's order — the prefix theorem needs ONE common total
+    // order, so a stale df silently misses true pairs
+    if (!unsafeAssumeCompatible)
       requireSameBuild(idx, dfT, sideColumn = "df", sideName = "corpus-df")
-    }
-    val shB = shingles(batch).select(col("doc_id"), hashed.as("h"))
     // one row per batch doc: its full hash set in corpus-df prefix
     // order (the prefix slice needs the order; array_intersect does
     // not, so the same array serves both)
-    val batchSide = shB
-      .join(dfT, Seq("h"), "left")
-      .na.fill(0L, Seq("df"))
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("ord"))
-      .select(col("doc_id").as("batch_id"),
-        expr("transform(ord, x -> x.h)").as("bhs"))
+    val batchSide = SimJoin.dfOrdered(SimJoin.shingleHashes(batch, portableHash), dfT,
+        fillUnseen = true)
+      .select(col("doc_id").as("batch_id"), expr(SimJoin.OrdHashes).as("bhs"))
       .select(col("batch_id"), col("bhs"), size(col("bhs")).as("bn"))
-    val prefB = batchSide
-      .select(col("batch_id"),
-        explode(expr(
-          s"""slice(bhs, 1,
-             |  size(bhs) - cast(($tPpm * size(bhs) + 999999) div 1000000 as int) + 1)""".stripMargin))
-          .as("h"))
-    // candidate pairs meet on COMPACT rows only — the arrays join in
-    // after the distinct, once per candidate pair
-    val cand = idx
-      .join(broadcast(prefB), Seq("h"))
-      .select(col("batch_id"), col("doc_id").as("corpus_id"))
-      .distinct()
-    // INNER verification join ON PURPOSE — plan shape over a runtime
-    // null check: a LEFT join here (to raise on a candidate missing
-    // from a stale side) forfeits the broadcast-candidate inner plan —
-    // BroadcastHashJoin cannot preserve the stream side, so the
-    // corpus-sized hash-array side is forced through a sort-merge
-    // shuffle (measured 3.0x at 2M docs on the checkpointed-side
-    // path). Corpus-version mismatch is instead caught at PLAN time by
-    // the build-id stamp ([[requireSameBuild]] above) — zero runtime
-    // cost; a hand-assembled stamp-less pair remains the caller's
-    // contract (pass buildId to the builders to arm the check).
-    cand
-      .join(side.select(col("doc_id").as("corpus_id"), col("hs"),
-        col("n").as("cn")), Seq("corpus_id"))
-      .join(broadcast(batchSide), Seq("batch_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        size(array_intersect(col("bhs"), col("hs"))).cast("long").as("inter"),
-        col("bn"), col("cn"))
+    SimJoin.arrayVerify(
+        SimJoin.probe(idx, SimJoin.prefixRows(batchSide, tPpm), Seq("h")),
+        side, batchSide, Seq(col("n").as("cn")), Seq(col("bn"), col("cn")))
       .select(col("batch_id"), col("corpus_id"), col("inter"),
         (col("bn") + col("cn") - col("inter")).cast("long").as("uni"))
-      .filter(col("inter") * lit(1000000L) >= lit(tPpm) * col("uni"))
-      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
+      .filter(SimJoin.ppmGate(tPpm, "uni"))
+      .withColumn("jaccard", SimJoin.jaccard(col("inter"), col("uni")))
   }
 
   /** Full-token corpus bucket index for the streaming CONTAINMENT gate
@@ -1449,14 +1234,10 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * text). Persist bucketed by `h`, the doc side bucketed by
     * doc_id. */
   def containIndex(corpus: DataFrame, portableHash: Boolean = true,
-                   buildId: Option[String] = None): DataFrame = {
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
+                   buildId: Option[String] = None): DataFrame =
     shingles(corpus)
-      .select(hashed.as("h", indexMeta(KindContainFull, portableHash,
-        buildId = buildId)), col("doc_id"))
-  }
+      .select(SimJoin.shingleHash(portableHash).as("h", indexMeta(KindContainFull,
+        portableHash, buildId = buildId)), col("doc_id"))
 
   /** Exact-threshold CONTAINMENT join: every ordered pair (d1, d2),
     * d1 ≠ d2, where at least `threshold` of d1's shingle set appears in
@@ -1483,75 +1264,20 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * end-to-end. The oracle is the brute-force all-ordered-pairs
     * join: recall 1 is the contract. */
   def containJoin(docs: DataFrame, threshold: Double = 0.8,
-                  portableHash: Boolean = true,
                   persistLineage: Boolean = false,
                   hotThreshold: Long = 1000L): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val tPpm = math.round(threshold * 1e6)
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
-    val sh0 = shingles(docs).select(col("doc_id"), hashed.as("h"))
-    val sh = if (persistLineage)
-      sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sh0
-    val freq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    val pref = graft.ops.Scale.materializeCompact(
-      sh.join(freq, Seq("h"))
-        .groupBy("doc_id")
-        .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("ord"))
-        .select(col("doc_id"), explode(expr(
-          s"""slice(transform(ord, x -> x.h), 1,
-             |  size(ord) - cast(($tPpm * size(ord) + 999999) div 1000000 as int) + 1)""".stripMargin))
-          .as("h")))
-    // detect-then-salt, the selfPairs discipline for this ASYMMETRIC
-    // join: keys with df > hotThreshold (≤ |sh|/hotThreshold of them by
-    // construction — broadcastable) take the salted path so a
-    // template-clique shingle's prefDf×df pair fan-out spreads across
-    // reducers; cold keys pay only a broadcast-probe. The hot set stays
-    // a LAZY subtree on purpose: its three consumers' freq aggregations
-    // are byte-identical, so runtime exchange reuse executes freq once
-    // inside the main job — an eager collected detection (measured) and
-    // an eager checkpoint (measured) both cost a serialized extra pass
-    // that the lazy shape hides in the job's own parallelism
-    // (5.2 s / 5.1 s vs 4.6 s warm ONLY at sf0.1).
-    val prefK = pref.withColumnRenamed("doc_id", "d1")
-    val shK = sh.select(col("h"), col("doc_id").as("d2"))
-    val hot = freq.filter(col("df") > hotThreshold).select("h")
-    val candCold = prefK.join(broadcast(hot), Seq("h"), "left_anti")
-      .join(shK, Seq("h"))
-    val candHot = graft.ops.Scale.saltedJoin(
-      prefK.join(broadcast(hot), Seq("h"), "left_semi"),
-      shK.join(broadcast(hot), Seq("h"), "left_semi"), "h", saltFactor = 8)
-    val cand = candCold.select("d1", "d2")
-      .unionAll(candHot.select("d1", "d2"))
-      .filter(col("d1") =!= col("d2"))
-      .distinct()
-    // Count-only semi-verify, ONE consumption of the candidate set
-    // (guide §2 shuffle volume / §2.4 remove shuffles): fan d1's
-    // compact (doc_id, h) rows out once per candidate, LEFT-join the
-    // container side on (d2, h), and take BOTH counts from the same
-    // aggregation — count(1) over the fan-out IS |A| (the sizes table
-    // recomputed it from its own corpus re-shingle), and the matched
-    // rows are |A∩B|. Equivalence with the former
-    // cand⋈inter⋈sizes shape: every candidate pair shares ≥ 1 token by
-    // construction (cold and hot branches both meet on a shared h), so
-    // the inner verification join never dropped a candidate, and
-    // count(1) per (d1,d2) equals sizes.n because sh holds one row per
-    // distinct (doc_id, shingle). Removes the second candidate-subtree
-    // evaluation, the sizes corpus pass, and two pair-keyed joins.
-    val inter = cand
-      .join(sh.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(sh.as("s2"),
-        col("d2") === col("s2.doc_id") && col("s1.h") === col("s2.h"), "left")
-      .groupBy("d1", "d2")
-      .agg(count(lit(1)).as("n1"), count(col("s2.doc_id")).as("inter"))
-    inter
-      .filter(col("inter") * lit(1000000L) >= lit(tPpm) * col("n1"))
+    val tPpm = SimJoin.thresholdPpm(threshold)
+    val sh = SimJoin.shingleHashes(docs, portableHash = false, persistLineage)
+    val freq = SimJoin.docFreq(sh)
+    val cand = SimJoin.containCandidates(SimJoin.dfPrefix(sh, freq, tPpm), sh, freq,
+      hotThreshold)
+    // every candidate pair shares ≥ 1 token by construction (cold and
+    // hot branches both meet on a shared h), so the count-only verify
+    // drops none
+    SimJoin.countVerify(cand, "d1", "d2", sh, sh, "n1")
+      .filter(SimJoin.ppmGate(tPpm, "n1"))
       .select(col("d1"), col("d2"), col("inter"), col("n1"))
-      .withColumn("contain_ppm",
-        expr("inter * 1000000L div n1").cast("long"))
+      .withColumn("contain_ppm", SimJoin.containPpm("n1").cast("long"))
   }
 
   /** Incremental exact-threshold CONTAINMENT join: every (batch doc,
@@ -1578,48 +1304,21 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
                          index: Option[DataFrame] = None,
                          docSide: Option[DataFrame] = None,
                          unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    val tPpm = math.round(threshold * 1e6)
-    val hashed =
-      if (portableHash) phash(col("shingle"))
-      else pmod(xxhash64(col("shingle")), lit(1L << 60))
+    val tPpm = SimJoin.thresholdPpm(threshold)
     val idx = index.getOrElse(containIndex(corpus, portableHash))
+    val side = docSide.getOrElse(docHashSide(corpus, portableHash))
     // containment REQUIRES the full-token kind: a prefix-cut index has
     // the identical (h, doc_id) schema but is the documented recall
     // hole for this predicate — reject it at plan time
-    requireIndexCompatible(idx, KindContainFull, portableHash,
-      strict = !unsafeAssumeCompatible)
-    val side = docSide.getOrElse(docHashSide(corpus, portableHash))
-    requireIndexCompatible(side, KindDocSide, portableHash, column = "hs",
-      strict = !unsafeAssumeCompatible)
-    if (!unsafeAssumeCompatible) requireSameBuild(idx, side)
-    val batchSide = shingles(batch).select(col("doc_id"), hashed.as("h"))
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(col("h"))).as("bhs"))
+    SimJoin.requireProbeCompatible(idx, side, KindContainFull, portableHash,
+      unsafeAssumeCompatible)
+    val batchSide = SimJoin.sortedHashes(SimJoin.shingleHashes(batch, portableHash), "bhs")
       .select(col("doc_id").as("batch_id"), col("bhs"), size(col("bhs")).as("bn"))
-    val prefB = batchSide
-      .select(col("batch_id"),
-        explode(expr(
-          s"""slice(bhs, 1,
-             |  size(bhs) - cast(($tPpm * size(bhs) + 999999) div 1000000 as int) + 1)""".stripMargin))
-          .as("h"))
-    val cand = idx
-      .join(broadcast(prefB), Seq("h"))
-      .select(col("batch_id"), col("doc_id").as("corpus_id"))
-      .distinct()
-    // INNER verification join on purpose: see jaccardJoinAgainst — the
-    // left-join runtime staleness check was measured 3x at 2M (forced
-    // sort-merge of the array side); version mismatch is caught at
-    // plan time by the build-id stamp instead
-    cand
-      .join(side.select(col("doc_id").as("corpus_id"), col("hs")), Seq("corpus_id"))
-      .join(broadcast(batchSide), Seq("batch_id"))
-      .select(col("batch_id"), col("corpus_id"),
-        size(array_intersect(col("bhs"), col("hs"))).cast("long").as("inter"),
-        col("bn").cast("long").as("bn"))
-      .filter(col("inter") * lit(1000000L) >= lit(tPpm) * col("bn"))
-      .withColumn("contain_ppm", expr("inter * 1000000L div bn").cast("long"))
+    SimJoin.arrayVerify(
+        SimJoin.probe(idx, SimJoin.prefixRows(batchSide, tPpm), Seq("h")),
+        side, batchSide, Nil, Seq(col("bn").cast("long").as("bn")))
+      .filter(SimJoin.ppmGate(tPpm, "bn"))
+      .withColumn("contain_ppm", SimJoin.containPpm("bn").cast("long"))
   }
 
   /** LSH recall audit: how much of the EXACT pair set ([[jaccardJoin]],
@@ -1629,21 +1328,15 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * exact integer ppm (floor) so both engines emit the identical
     * value. [[lshPairs]] exact-verifies its candidates, so caught ⊆
     * exact and the join below is a pure membership probe.
-    * `portableHash`/`persistLineage` thread through to BOTH chains —
-    * the corpus-scale audit runs native xxhash64 with pinned lineage
-    * (each chain's hash choice is internal; the probe joins on doc
-    * ids, so the two chains need not agree). */
+    * `persistLineage` threads through to BOTH chains; `portableHash`
+    * picks the LSH side's hash (its banded pair set, which the oracle
+    * replays, is a function of it), while the exact side always runs
+    * xxhash64 (its pair set is hash-invariant). The probe joins on doc
+    * ids, so the two chains need not agree. */
   def lshRecallAudit(docs: DataFrame, threshold: Double = 0.5,
                      portableHash: Boolean = true,
-                     persistLineage: Boolean = false,
-                     portableHashExact: Option[Boolean] = None): DataFrame =
-    // the EXACT side's hash is internal (recall-1 candidates + exact
-    // verify ⇒ the pair set is hash-invariant), so it may run the
-    // cheaper production hash while the LSH side — whose banding pair
-    // set IS a function of the hash, and whose oracle replays it —
-    // keeps `portableHash`
-    jaccardJoin(docs, threshold, portableHashExact.getOrElse(portableHash),
-      persistLineage)
+                     persistLineage: Boolean = false): DataFrame =
+    jaccardJoin(docs, threshold, persistLineage)
       .select("d1", "d2")
       .join(lshPairs(docs, threshold, persistLineage, portableHash).select("d1", "d2")
         .withColumn("caught", lit(true)), Seq("d1", "d2"), "left")

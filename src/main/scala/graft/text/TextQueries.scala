@@ -169,25 +169,23 @@ object TextQueries
     },
     // exact-threshold similarity join (prefix filtering): oracle is the
     // BRUTE-FORCE all-pairs join — recall 1 is the correctness contract.
-    // Registered on the production hash (portableHash=false, xxhash64):
-    // these joins are EXACT (prefix filtering is recall-1 under any
+    // These joins are EXACT (prefix filtering is recall-1 under any
     // consistent token order and the verify counts real intersections),
-    // so the internal hash choice cannot change the output — unlike the
-    // LSH/minhash family, whose candidate sets are argmin-of-hash and
-    // stay on the md5 phash. Measured at sf0.1 steady-state:
-    // jaccardJoin 4.1 → 2.6 s, containJoin 5.1 → 4.2 s.
+    // so they always hash with xxhash64 — unlike the LSH/minhash family,
+    // whose candidate sets are argmin-of-hash and stay on the md5 phash.
+    // Measured at sf0.1 steady-state against md5: jaccardJoin 4.1 →
+    // 2.6 s, containJoin 5.1 → 4.2 s.
     "dedup_jaccard_join" -> { (s, dir) =>
-      jaccardJoin(Tables.documents(s, dir), threshold = 0.8, portableHash = false) },
+      jaccardJoin(Tables.documents(s, dir), threshold = 0.8) },
     // LSH recall audit against the exact join's ground truth — the LSH
     // side keeps the md5 phash (its pair set is hash-dependent; the
-    // oracle replays it), the exact side runs the production hash
+    // oracle replays it), the exact side runs xxhash64
     "lsh_recall" -> { (s, dir) =>
-      lshRecallAudit(Tables.documents(s, dir), threshold = 0.5,
-        portableHashExact = Some(false)) },
+      lshRecallAudit(Tables.documents(s, dir), threshold = 0.5) },
     // asymmetric exact containment join — the sub-document duplication
     // detector; brute-force all-ordered-pairs oracle
     "dedup_contain_join" -> { (s, dir) =>
-      containJoin(Tables.documents(s, dir), threshold = 0.8, portableHash = false) },
+      containJoin(Tables.documents(s, dir), threshold = 0.8) },
     // incremental exact join: odd-doc batch vs the even-doc corpus's
     // persistable prefix index — recall 1 against the brute-force
     // batch×corpus oracle

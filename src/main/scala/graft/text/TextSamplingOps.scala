@@ -664,13 +664,15 @@ private[text] trait TextSamplingOps { this: TextQueries.type =>
 
   /** quality_classifier oracle, rendered from the weights the query
     * just learned (absent until it runs — the Ivf.cachedCentroids
-    * pattern): the weight vector becomes a DuckDB list literal indexed
-    * by bucket, the bucket derivation is the shared portable-hash
-    * fragment, and both scores quantize at 1e-6. */
+    * pattern): the weight vector becomes a DuckDB list of exact
+    * doubles ([[graft.sim.DuckLiteral]]) indexed by bucket, the bucket
+    * derivation is the shared portable-hash fragment, and both scores
+    * quantize at 1e-6. */
   private[text] def qcOracles: Map[String, String] = cachedQc match {
     case None => Map.empty
-    case Some((bias, w)) =>
-      val wl = w.mkString("[", ", ", "]")
+    case Some((b, w)) =>
+      val bias = graft.sim.DuckLiteral.double(b)
+      val wl = graft.sim.DuckLiteral.list(w)
       def scoreCtes(docFilter: String) =
         s"""t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents$docFilter),
            |g AS (SELECT doc_id, unnest(list_concat(toks,

@@ -170,13 +170,13 @@ object ScanCountGate {
     "hist_per_axis" -> 2,
     "hist_rebin" -> 1,
     "lens_mcp_position" -> 1,
-    // 4 → 6 in r16: the audit's EXACT side now hashes shingles with the
-    // production xxhash64 while the LSH side keeps the oracle-replayed
-    // md5 phash (portableHashExact), so the two chains' shingle subtrees
-    // no longer canonicalize equal and their scans stop reusing — a
-    // DELIBERATE trade (the cheaper exact chain wins 2.3 s at sf0.1;
-    // at corpus scale the audit passes persistLineage=true, which
-    // collapses each chain's scans regardless)
+    // 4 → 6 in r16: the audit's EXACT side hashes shingles with
+    // xxhash64 (jaccardJoin always does: its pair set is hash-invariant)
+    // while the LSH side keeps the oracle-replayed md5 phash, so the two
+    // chains' shingle subtrees no longer canonicalize equal and their
+    // scans stop reusing — a DELIBERATE trade (the cheaper exact chain
+    // wins 2.3 s at sf0.1; at corpus scale the audit passes
+    // persistLineage=true, which collapses each chain's scans regardless)
     "lsh_recall" -> 6,
     "marker_multithresh" -> 1,
     "mm_frame_sample" -> 1,

@@ -883,10 +883,13 @@ class TextQueriesSpec extends AnyFunSuite {
         col("d1") === col("doc_id")).drop("doc_id")
       .filter(col("inter") * lit(1000000L) >= lit(800000L) * col("n1"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val full = TextQueries.containJoin(docs, threshold = 0.8)
-      .select("d1", "d2", "inter", "n1")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("d1", "d2", "inter", "n1")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    val full = rows(TextQueries.containJoin(docs, threshold = 0.8))
     assert(full.nonEmpty && full == brute)
+    // the corpus-scale lineage-cached path is the same computation
+    try assert(rows(TextQueries.containJoin(docs, threshold = 0.8, persistLineage = true)) == brute)
+    finally spark.catalog.clearCache()
   }
 
   test("containJoin salted (hot-key) path equals the plain path — detect-then-salt changes distribution, never output") {
@@ -1180,6 +1183,21 @@ class TextQueriesSpec extends AnyFunSuite {
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  test("the similarity-join pieces live only in SimJoin.scala: no re-forked prefix slice or shingle hash") {
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val pieces = Seq("999999) div 1000000 as int) + 1", "xxhash64(col(\"shingle\"))")
+    val sources = Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+    pieces.foreach { piece =>
+      val holders = sources.collect { case (p, text) if text.contains(piece) => p.getFileName.toString }
+      assert(holders.toSeq == Seq("SimJoin.scala"),
+        s"'$piece' must be written once, in graft.text.SimJoin; found in: ${holders.mkString(", ")}")
+    }
+  }
+
   test("materializeCompact storage: Dataset.unpersist is a NO-OP, releaseCompact frees it") {
     import graft.ops.Scale
     val sc = spark.sparkContext
@@ -1205,6 +1223,13 @@ class TextQueriesSpec extends AnyFunSuite {
     assert(nExact > 0, "fixture must contain exact pairs at 0.5")
     assert(nCaught <= nExact && ppm <= 1000000L && ppm >= 0L)
     assert(ppm == nCaught * 1000000L / nExact)
+    // lshPairs' corpus-scale lineage-cached path emits the same rows
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
+    val plain = pairs(TextQueries.lshPairs(docs, threshold = 0.5))
+    assert(plain.size == nCaught)
+    try assert(pairs(TextQueries.lshPairs(docs, threshold = 0.5, persistLineage = true)) == plain)
+    finally spark.catalog.clearCache()
     // identical docs collide in every band -> a pure clique corpus is
     // caught completely
     import spark.implicits._

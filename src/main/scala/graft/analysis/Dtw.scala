@@ -15,7 +15,8 @@ object Dtw {
     val n = a.length; val m = b.length
     require(n > 0 && m > 0)
     val inf = Double.PositiveInfinity
-    val cost = Array.fill(n + 1, m + 1)(inf)
+    val cost = Array.ofDim[Double](n + 1, m + 1)
+    cost.foreach(java.util.Arrays.fill(_, inf))
     cost(0)(0) = 0.0
     var i = 1
     while (i <= n) {

@@ -38,7 +38,12 @@ case class BinnedGrid(data: Array[Long], axes: Seq[BinAxis]) {
     data(flat.toInt)
   }
 
-  def totalCount: Long = data.sum
+  def totalCount: Long = {
+    var sum = 0L
+    var i = 0
+    while (i < data.length) { sum += data(i); i += 1 }
+    sum
+  }
 
   /** Axis coordinate vectors (midpoints, reference `utils.calcax`). */
   def axisValues: Seq[Array[Double]] = axes.map(_.midpoints)
@@ -139,7 +144,9 @@ case class BinnedGrid(data: Array[Long], axes: Seq[BinAxis]) {
     * per non-empty cell) for further distributed work. The cells travel
     * as two primitive arrays in one partition; rows are built in the task. */
   def toDF(spark: SparkSession): DataFrame = {
-    val n = data.count(_ != 0)
+    var n = 0
+    var i = 0
+    while (i < data.length) { if (data(i) != 0) n += 1; i += 1 }
     val flats = new Array[Int](n)
     val counts = new Array[Long](n)
     var flat = 0

@@ -1,5 +1,6 @@
 package graft.binning
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
@@ -60,14 +61,15 @@ case class BinAxis(name: String, nbins: Int, lo: Double, hi: Double) {
   *  - [[histogramGrid]] (`EventPipeline.distributedBinning`) returns a
   *    driver-resident [[BinnedGrid]]. Each task counts its events into
   *    dense per-tile counters (runs of 2^14 flat cells — Spangle's
-  *    chunking, PAPERS.md) and emits only the tiles it touched,
-  *    `reduceByKey` merges each tile on one reducer, and the driver
-  *    copies every non-empty tile into the grid once, as its reduce
-  *    task's result arrives. This is the reference's per-partition
-  *    histogram + parallel combine (`fprocessing.py:1722-1740`) with the
-  *    combine distributed by tile: no per-cell shuffle rows, and besides
-  *    the grid the driver holds only the tiles of the reduce results in
-  *    flight.
+  *    chunking, PAPERS.md) and emits only the tiles it touched, each
+  *    packed to its non-zero cells; one reducer per tile adds them into a
+  *    dense counter, and the driver adds every non-empty tile's packed
+  *    cells into the grid once, as its reduce task's result arrives. This
+  *    is the reference's per-partition histogram + parallel combine
+  *    (`fprocessing.py:1722-1740`) with the combine distributed by tile:
+  *    no per-cell shuffle rows, no zero cells on the wire, and besides
+  *    the grid the driver holds only the packed tiles of the reduce
+  *    results in flight.
   *
   *  - [[histogramNd]] (`EventPipeline.binnedTable`, the registered
   *    `hist_*` queries) returns `bin_<axis>…, cnt` rows and stays
@@ -140,14 +142,14 @@ object Binning {
   /** Bin `df` straight into a driver-resident [[BinnedGrid]] over `axes`
     * (same cells and counts as [[histogramNd]]'s rows). Catalyst runs the
     * range filter and the flat key; each task counts its events into
-    * per-tile [[TileCounter]]s and emits the tiles it touched, which
-    * `reduceByKey` merges over `min(tiles, spark.sql.shuffle.partitions)`
-    * reducers; the driver copies each non-empty tile into the grid as its
-    * reduce task's result arrives. The query runs as one SQL execution,
-    * so query listeners see it. */
+    * per-tile [[TileCounter]]s and emits the tiles it touched, packed,
+    * which `min(tiles, spark.sql.shuffle.partitions)` reducers merge by
+    * tile; the driver adds each non-empty tile's packed cells into the
+    * grid as its reduce task's result arrives ([[foreachTile]]). The
+    * query runs as one SQL execution, so query listeners see it. */
   def histogramGrid(df: DataFrame, axes: Seq[(Column, BinAxis)]): BinnedGrid = {
     val data = new Array[Long](gridCells(axes))
-    foreachTile(df, axes)((t, c) => c.copyInto(data, t * TileCounter.Cells))
+    foreachTile(df, axes)((t, p) => TileCounter.addPacked(p, data, t * TileCounter.Cells))
     BinnedGrid(data, axes.map(_._2))
   }
 
@@ -162,11 +164,18 @@ object Binning {
   }
 
   /** Run [[histogramGrid]]'s job and hand each merged, non-empty tile to
-    * `f` on the driver, one reduce partition at a time, so the driver
-    * holds only the tiles of the results in flight besides what `f`
-    * keeps. */
+    * `f` on the driver in its packed form ([[TileCounter.pack]]), one
+    * reduce partition at a time, so the driver holds only the packed
+    * tiles of the results in flight besides what `f` keeps.
+    *
+    * Tiles are dense in memory and packed on the wire: map tasks emit
+    * `(tile, packed)`, `combineByKey` (no map-side combine; each task
+    * already emits one record per touched tile) adds them into one dense
+    * [[TileCounter]] per tile on its reducer, and each reduce task
+    * returns its tiles packed again. Shuffle records and task results are
+    * plain `(Int, Array[Byte])` pairs, the same under any serializer. */
   private[binning] def foreachTile(df: DataFrame, axes: Seq[(Column, BinAxis)])(
-      f: (Int, TileCounter) => Unit): Unit = {
+      f: (Int, Array[Byte]) => Unit): Unit = {
     val n = gridCells(axes)
     val (filtered, flat) = filteredFlatKey(df, axes)
     val qe = filtered.select(flat).queryExecution
@@ -174,9 +183,11 @@ object Binning {
     SQLExecution.withNewExecutionId(qe, Some("histogramGrid")) {
       val merged = qe.toRdd
         .mapPartitions(rows => TileCounter.countTiles(rows, n))
-        .reduceByKey((a: TileCounter, b: TileCounter) => a.merge(b), reducers)
-      merged.sparkContext.runJob(merged, (it: Iterator[(Int, TileCounter)]) => it.toArray,
-        (_: Int, part: Array[(Int, TileCounter)]) => part.foreach { case (t, c) => f(t, c) })
+        .combineByKey(TileCounter.unpack, (c: TileCounter, p: Array[Byte]) => c.addPacked(p),
+          (a: TileCounter, b: TileCounter) => a.merge(b), new HashPartitioner(reducers), mapSideCombine = false)
+      merged.sparkContext.runJob(merged,
+        (it: Iterator[(Int, TileCounter)]) => it.map { case (t, c) => t -> c.pack() }.toArray,
+        (_: Int, part: Array[(Int, Array[Byte])]) => part.foreach { case (t, p) => f(t, p) })
     }
   }
 

@@ -66,6 +66,26 @@ class Analysis2DSpec extends AnyFunSuite {
     assert(math.abs(conv(0) - 35) <= 3 && math.abs(conv(1) - 55) <= 3)
   }
 
+  test("DTW distance equals a plain recursive DTW on short random traces") {
+    def naive(a: Array[Double], b: Array[Double]): Double = {
+      val memo = scala.collection.mutable.Map.empty[(Int, Int), Double]
+      // cost of aligning a(0..i) with b(0..j)
+      def d(i: Int, j: Int): Double =
+        if (i < 0 || j < 0) Double.PositiveInfinity
+        else memo.getOrElseUpdate((i, j), {
+          val here = math.abs(a(i) - b(j))
+          if (i == 0 && j == 0) here else here + Seq(d(i - 1, j), d(i, j - 1), d(i - 1, j - 1)).min
+        })
+      d(a.length - 1, b.length - 1)
+    }
+    val rng = new java.util.Random(5)
+    for (_ <- 1 to 20) {
+      val a = Array.fill(1 + rng.nextInt(12))(rng.nextGaussian())
+      val b = Array.fill(1 + rng.nextInt(12))(rng.nextGaussian())
+      assert(Dtw.dtw(a, b)._1 == naive(a, b), s"${a.toSeq} vs ${b.toSeq}")
+    }
+  }
+
   test("volume alignment recovers per-pixel shifts distributively") {
     import spark.implicits._
     val ref = Array.tabulate(120)(i => math.exp(-(i - 60.0) * (i - 60.0) / 50.0))

@@ -3,8 +3,9 @@ package graft.binning
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{ListenerBusDrain, SparkConf}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -53,10 +54,33 @@ class GridBinningSpec extends AnyFunSuite {
   private def grid(df: DataFrame, axes: Seq[BinAxis]): BinnedGrid =
     Binning.histogramGrid(df, axes.map(a => col(a.name) -> a))
 
-  private def mergedTiles(df: DataFrame, axes: Seq[BinAxis]): Seq[(Int, TileCounter)] = {
-    val tiles = Seq.newBuilder[(Int, TileCounter)]
-    Binning.foreachTile(df, axes.map(a => col(a.name) -> a))((t, c) => tiles += t -> c)
+  /** The ids of the merged tiles [[Binning.foreachTile]] hands to the
+    * driver, in arrival order. */
+  private def mergedTiles(df: DataFrame, axes: Seq[BinAxis]): Seq[Int] = {
+    val tiles = Seq.newBuilder[Int]
+    Binning.foreachTile(df, axes.map(a => col(a.name) -> a))((t, _) => tiles += t)
     tiles.result()
+  }
+
+  /** Sums of the task result sizes and shuffle write bytes of the tasks
+    * that end while `body` runs. */
+  private def taskBytes[T](body: => T): (T, Long, Long) = {
+    val results = new AtomicLong
+    val shuffled = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskMetrics != null) {
+        results.addAndGet(e.taskMetrics.resultSize)
+        shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain(sc)
+      (out, results.get, shuffled.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** [[Binning.histogramNd]]'s rows spread into a flat row-major grid. */
@@ -144,15 +168,23 @@ class GridBinningSpec extends AnyFunSuite {
     val rows = uniform(200000, axes, 11)
     checkAgainstReference(rows, axes)
     val tiles = mergedTiles(frame(rows, axes), axes)
-    assert(tiles.map(_._1).sorted == Seq(0, 1, 2))
+    assert(tiles.sorted == Seq(0, 1, 2))
   }
 
   test("a 2M-cell grid with few events: each touched tile reaches the driver once") {
     val axes = Seq(BinAxis("x", 2000, 0.0, 1.0), BinAxis("y", 1000, 0.0, 1.0))
     val rows = uniform(3000, axes, 13)
     checkAgainstReference(rows, axes)
-    val tiles = mergedTiles(frame(rows, axes), axes)
-    assert(tiles.length > 100 && tiles.map(_._1).distinct.length == tiles.length)
+    val df = frame(rows, axes)
+    val tiles = mergedTiles(df, axes)
+    assert(tiles.length > 100 && tiles.distinct.length == tiles.length)
+    // only non-zero cells travel: dense tiles would be 128 KB each (~16 MB)
+    // of shuffle and of task results
+    val (g, results, shuffled) = taskBytes(grid(df, axes))
+    assert(g.totalCount == 3000)
+    val dense = tiles.length.toLong * TileCounter.Cells * 8
+    assert(results < dense / 64, s"$results bytes of task results for ${tiles.length} tiles")
+    assert(shuffled > 0 && shuffled < dense / 64, s"$shuffled shuffle bytes for ${tiles.length} tiles")
   }
 
   test("3-D grid of 7 x 11 x 300 cells (a partial last tile)") {
@@ -235,5 +267,45 @@ class GridBinningSpec extends AnyFunSuite {
     b.add(0)
     val merged = cells(a.merge(b))
     assert(merged(3) == 4 && merged(99) == 2 && merged(0) == 1 && merged.sum == 7)
+  }
+
+  test("TileCounter: the packed form round-trips through Java and Kryo serialization") {
+    def dense(c: TileCounter, len: Int): Seq[Long] = {
+      val out = new Array[Long](len)
+      c.copyInto(out, 0)
+      out.toSeq
+    }
+    val full = TileCounter.Cells
+    // every cell of a full tile, counts 1..3
+    val everyCell = new TileCounter(full)
+    (0 until full).foreach(i => (0 to i % 3).foreach(_ => everyCell.add(i)))
+    // the first and last cell of a partial last tile, counted 2^35 and 2^36 times
+    val huge = new TileCounter(7232)
+    Seq(0, 7231, 7231).foreach(huge.add)
+    (1 to 35).foreach(_ => huge.merge(huge))
+    val sparse = new TileCounter(full)
+    Seq(0, 1, 1, 200, 16383).foreach(sparse.add)
+    val tiles = Seq(0 -> (new TileCounter(full), full), 1 -> (everyCell, full), 2 -> (sparse, full),
+      3 -> (huge, 7232))
+    assert(dense(huge, 7232)(7231) == 1L << 36)
+
+    val conf = new SparkConf(false)
+    for (ser <- Seq(new JavaSerializer(conf).newInstance(), new KryoSerializer(conf).newInstance())) {
+      // a grid of 3 full tiles and the partial one, filled from the packed records
+      val data = new Array[Long](3 * full + 7232)
+      for ((t, (c, len)) <- tiles) {
+        val rec = ser.deserialize[(Int, Array[Byte])](ser.serialize(t -> c.pack()))
+        assert(rec._1 == t)
+        TileCounter.addPacked(rec._2, data, t * full)
+        assert(dense(TileCounter.unpack(rec._2), len) == dense(c, len), s"tile $t via $ser")
+        assert(data.slice(t * full, t * full + len).toSeq == dense(c, len), s"tile $t via $ser")
+      }
+    }
+    // an all-zero tile packs to its length; cells below 2^21 counts take at most 6 bytes
+    assert(new TileCounter(full).pack().length == 3)
+    assert(everyCell.pack().length <= 3 + 6 * full)
+    assert(huge.pack().length <= 3 + 2 * 12)
+    // a tile never lands outside the grid
+    intercept[IllegalArgumentException](TileCounter.addPacked(sparse.pack(), new Array[Long](full), 1))
   }
 }

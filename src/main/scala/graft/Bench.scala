@@ -52,18 +52,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // ONLY mode (mirrors BenchLarge's SPARK_GRAFT_LARGE_ONLY): time a
     // named subset — adjudicating one query's drift should not cost a
     // full 204-query run. The JSON carries "only":true and is written
     // to a *_only.json path so a partial run never overwrites (or
     // reads as) the full-run artifact.
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_BENCH_ONLY names unregistered queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    val only: Seq[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Seq.empty)
+    val selected = SparkEntry.select(only)
     // WARM mode (ONLY-mode companion): cold ONLY numbers are biased
     // 2-3x high for sub-second queries — a full run warms each query
     // with the ~200 that precede it in the same JVM (shared codegen
@@ -85,30 +82,11 @@ object Bench {
     require(!warm || only.nonEmpty,
       "SPARK_GRAFT_BENCH_WARM is only meaningful with SPARK_GRAFT_BENCH_ONLY " +
         "(a full run self-warms: every query is preceded by the rest of the suite)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Size the generated-class cache to the suite's plan diversity
-      // (static conf; default 100 entries). 204 queries × ~10-20
-      // codegen units × the two-pass protocol is thousands of distinct
-      // generated sources, so at the default the cache thrashes and
-      // every pass re-compiles (Janino) and re-JITs classes that are
-      // byte-identical to already-compiled ones — measured on this
-      // suite as 600 s of aggregate JIT-compiler-thread time, 22 s of
-      // GC (Janino allocation churn), and a duration-graded tax that
-      // hit short multi-stage plans hardest (the r15 "scrub family
-      // drift" signature). With the cache sized to the suite: total
-      // 294.6 → 217.1 s, suite JIT time 421 s, GC 8.3 s. Not a
-      // core-count or scale-factor tune — the cache is keyed by
-      // generated source and sized to QUERY DIVERSITY, which is the
-      // same property a long-running production driver sizes it for.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Session.run(spark => timeAll(spark, sfDir, selected, warmSweeps, onlyMode = only.nonEmpty))
+  }
 
+  private def timeAll(spark: SparkSession, sfDir: String, selected: Seq[(String, SparkEntry.Query)],
+                      warmSweeps: Int, onlyMode: Boolean): Unit = {
     // JVM/codegen warm-up outside the timed region (the driver measures
     // steady-state throughput, not JIT compilation)
     try SparkEntry.queries("q1_agg")(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -118,8 +96,6 @@ object Bench {
     // compilation of each query's generated code, pass 2 is the
     // steady-state throughput a long-running cluster job sees
     val failures = scala.collection.mutable.ListBuffer[String]()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
     // warm sweep: every selected query once, untimed — pays the
     // cross-query JIT/infra warming a full run gives for free
     (1 to warmSweeps).foreach { _ =>
@@ -168,7 +144,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val fails = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val onlyTag = modeTags(only.nonEmpty, warm)
+    val onlyTag = modeTags(onlyMode, warmSweeps > 0)
     val line = s"""{"metric":"total","value":$total,"unit":"sec",$onlyTag"queries":$qs,"failures":$fails,"sf":"$sfDir"}"""
     println(line)
     // tail-proof reporting (the full line above IS the driver contract,
@@ -185,10 +161,9 @@ object Bench {
     // (or a human) can copy verbatim
     val out = outPathFor(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"),
-      onlyMode = only.nonEmpty)
+      onlyMode = onlyMode)
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] could not write $out: ${e.getMessage}") }
-    spark.stop()
   }
 }

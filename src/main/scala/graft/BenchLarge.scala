@@ -76,7 +76,9 @@ import org.apache.spark.sql.expressions.Window
   * regressions show up in diffs.
   *
   * Row counts are env-tunable (SPARK_GRAFT_LARGE_ROWS/DOCS/VECS) so the
-  * same harness can smoke-run small in CI.
+  * same harness can smoke-run small in CI. The session is
+  * [[graft.Session]]'s, `local[SPARK_GRAFT_CPUS]`: unset, that is 4
+  * cores (it was 32), so a full-size run sets its core count.
   *
   * Regression gate (VERDICT r5 #2): after printing the JSON line, the
   * run compares itself against the committed `BENCH_LARGE.json`
@@ -326,25 +328,12 @@ object BenchLarge {
       expr("transform(sequence(1, 64), d -> CAST(CAST(pmod(hash(id, d), 2000) AS DOUBLE) / 1000.0 - 1.0 AS FLOAT))")
         .as("embedding"))
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Session.run(bench)
+
+  private def bench(spark: SparkSession): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_LARGE_ROWS", "100000000").toLong
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_LARGE_DOCS", "2000000").toLong
     val nVecs = sys.env.getOrElse("SPARK_GRAFT_LARGE_VECS", "2000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // generated-class cache sized to the run's plan diversity (the
-      // graft.Bench rationale: at the 100-entry default, a long
-      // many-query JVM re-Janinos and re-JITs byte-identical generated
-      // classes every pass; gates are ceilings, so faster passes only
-      // tighten them)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import graft.binning.{BinAxis, Binning}
 
     val axes3 = Seq(
@@ -535,7 +524,6 @@ object BenchLarge {
     // without re-measuring the 30-minute query suite
     if (sys.env.get("SPARK_GRAFT_LARGE_CALIB_ONLY").contains("true")) {
       println(s"""{"metric":"bench_large_calib","calib":${f2(calibSec)},"calib_str":${f2(calibStrSec)}}""")
-      spark.stop()
       return
     }
 
@@ -2067,7 +2055,6 @@ object BenchLarge {
       "\"" + k + "\":[" + f2(calibSec) + "," + f2(calibStrSec) + "]")
       .mkString("{", ",", "}")
     println(s"""{"metric":"bench_large","value":${f2(total)},"unit":"sec","rows":$rows,"docs":$nDocs,"vecs":$nVecs,"events_per_sec":$evPerSec,"calib":${f2(calibSec)},"calib_str":${f2(calibStrSec)},"adaptive_cleared":$ac,"run_seals":$rs,"queries":$qs,"outputs":$cs}""")
-    spark.stop()
 
     // ---- regression gate against the committed baseline -------------
     baseOpt.foreach { base =>

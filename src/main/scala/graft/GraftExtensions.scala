@@ -10,8 +10,8 @@ import graft.binning.{BinAxis, NdHistogramAgg}
   * touching the Scala API:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
-  * // or spark.sql.extensions=graft.GraftExtensions
+  * // a session built with .withExtensions(new GraftExtensions),
+  * // or with spark.sql.extensions=graft.GraftExtensions
   * spark.sql("""
   *   SELECT nd_histogram(value, user_id, 100, 0.0, 500.0, 40, 0.0, 200.0)
   *   FROM events

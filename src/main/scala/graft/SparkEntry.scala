@@ -19,14 +19,29 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     EventQueries.queries("hist_3d")(spark, "/root/testdata/sf0.001")
 
+  /** A registered query: (session, scale-factor directory) → result. */
+  type Query = (SparkSession, String) => DataFrame
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, Query] =
     RelationalQueries.queries ++ EventQueries.queries ++
       TemporalQueries.queries ++ WarpQueries.queries ++ PipelineQueries.queries ++
       graft.text.TextQueries.queries ++ graft.text.PiiQueries.queries ++
       graft.text.ParagraphQueries.queries ++ graft.text.BinPack.queries ++
       graft.text.ByteBpe.queries ++ Sketches.queries ++
       graft.sim.SimilarityQueries.queries
+
+  /** The named queries (every query when `names` is empty), sorted by
+    * name. An unknown name fails here, before any work: a misspelled
+    * name would otherwise select nothing and give an empty green run. */
+  def select(names: Seq[String]): Seq[(String, Query)] = {
+    val all = queries
+    val unknown = names.toSet.diff(all.keySet)
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
+        s"known: ${all.keySet.toSeq.sorted.mkString(", ")}")
+    all.toSeq.sortBy(_._1).filter { case (name, _) => names.isEmpty || names.contains(name) }
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → driver rows-only check.

@@ -328,15 +328,11 @@ object BinnedGrid {
     }
   }
 
-  /** Load the metadata sidecar written by [[save]]. */
-  def loadMetadata(path: String): Map[String, String] = {
-    val p = java.nio.file.Paths.get(s"$path/metadata.json")
-    if (!java.nio.file.Files.exists(p)) return Map.empty
-    val json = java.nio.file.Files.readString(p)
-    """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-      .findAllMatchIn(json).map { m =>
-        def un(x: String) = x.replace("\\\"", "\"").replace("\\\\", "\\")
-        un(m.group(1)) -> un(m.group(2))
-      }.toMap
-  }
+  /** Load the metadata sidecar written by [[save]] as a flat map: its
+    * top-level string fields, with every JSON escape decoded. Nested
+    * trees (the `meta` form of [[save]]) are read with [[loadMeta]]. */
+  def loadMetadata(path: String): Map[String, String] =
+    loadMeta(path).fold(Map.empty[String, String])(_.fields.collect {
+      case (k, MetaNode.MStr(v)) => k -> v
+    }.toMap)
 }

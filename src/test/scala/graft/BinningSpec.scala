@@ -6,17 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.binning.{BinAxis, Binning, NdHistogramSql}
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.get(cpus = 4)
   val sfDir = "/root/testdata/sf0.001"
 }
 

@@ -160,8 +160,12 @@ class MetaTreeSpec extends AnyFunSuite {
   test("legacy flat sidecars parse as one-level trees (loadMeta) and via loadMetadata") {
     val grid = BinnedGrid(Array.fill(4)(1L), Seq(BinAxis("value", 4, 0.0, 4.0)))
     val tmp = java.nio.file.Files.createTempDirectory("graft_meta_flat").toString
-    BinnedGrid.save(grid, spark, tmp, metadata = Map("run" -> "demo \"42\""))
-    assert(BinnedGrid.loadMetadata(tmp)("run") == "demo \"42\"")
+    // every JSON escape the writer emits: quote, backslash, newline,
+    // carriage return, tab and a bare control character (U+0001)
+    val note = "line 1\nline 2\r\tC:\\data \u0001 end"
+    BinnedGrid.save(grid, spark, tmp, metadata = Map("run" -> "demo \"42\"", "note" -> note))
+    assert(BinnedGrid.loadMetadata(tmp) == Map("run" -> "demo \"42\"", "note" -> note))
     assert(BinnedGrid.loadMeta(tmp).get("run") == MStr("demo \"42\""))
+    assert(BinnedGrid.loadMeta(tmp).get("note") == MStr(note))
   }
 }

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * declared value. A count that RISES flags a recompute regression; a
   * count that FALLS means an improvement landed — update the map
   * deliberately in the same commit either way. Regenerate with
-  * `runMain graft.ScanAudit`.
+  * `runMain graft.Verify --scans <sfDir>`.
   *
   * Reading the numbers: a count above 1 is NOT itself a defect — it
   * counts ALL file scans, including scans of DISTINCT tables (the
@@ -267,13 +267,10 @@ object ScanCountGate {
   /** Execute shard `shard` of `of` and return the mismatch lines. */
   def runShard(shard: Int, of: Int): Seq[String] = {
     import SparkTestSession._
-    SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
+    SparkEntry.select(Nil).zipWithIndex
       .filter { case (_, i) => i % of == shard }
       .flatMap { case ((name, fn), _) =>
-        // a catalog cache left by an earlier query (or suite) would
-        // substitute into this plan and change its count
-        spark.catalog.clearCache()
-        val got = graft.ops.Scale.executedFileScans(fn(spark, sfDir))
+        val got = Verify.scanCount(spark, sfDir, fn)
         if (got == expected(name)) None
         else Some(s"$name: expected ${expected(name)}, executed $got")
       }

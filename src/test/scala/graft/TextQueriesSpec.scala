@@ -2163,19 +2163,66 @@ class TextQueriesSpec extends AnyFunSuite {
   }
 }
 
-/** Harness-integrity pins for the driver-contract dump main. */
+/** Harness-integrity pins for the driver-contract main, its `--scans`
+  * and `--plans` modes, and the one session factory. */
 class VerifySpec extends AnyFunSuite {
   import SparkTestSession._
+
+  /** What `body` prints to `Console.out`. */
+  private def stdout(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream
+    Console.withOut(buf)(body)
+    buf.toString("UTF-8")
+  }
 
   test("Verify.main fails loudly on unknown query names before any work") {
     spark // force the shared session so Verify.main joins it
     val out = java.nio.file.Files.createTempDirectory("graft_verify_bad").toString
-    val e = intercept[IllegalArgumentException] {
-      Verify.main(Array(sfDir, out, "case_expr", "no_such_query"))
+    val modes = Seq(Seq(sfDir, out), Seq("--scans", sfDir), Seq("--plans", sfDir, out, "t"))
+    modes.foreach { mode =>
+      val printed = stdout {
+        val e = intercept[IllegalArgumentException] {
+          Verify.main((mode ++ Seq("case_expr", "no_such_query")).toArray)
+        }
+        assert(e.getMessage.contains("no_such_query"), mode.head)
+      }
+      assert(printed.isEmpty, s"${mode.head}: printed before failing: $printed")
     }
-    assert(e.getMessage.contains("no_such_query"))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/oracle_sql.json")),
-      "a failed run must not leave a partial oracle dump")
+    assert(new java.io.File(out).list().isEmpty,
+      "a failed run must not leave a partial oracle dump or plan")
+  }
+
+  test("Verify --scans prints each named query's ScanCountGate count, in name order") {
+    spark
+    val names = Seq("sketch_quantiles", "q5_nation_revenue", "case_expr")
+    val printed = stdout(Verify.main(("--scans" +: sfDir +: names).toArray))
+    assert(printed.linesIterator.toSeq ==
+      names.sorted.map(n => s"$n ${ScanCountGate.expected(n)}"))
+    assert(!spark.sparkContext.isStopped, "--scans must not stop a session it did not create")
+  }
+
+  test("Verify --plans writes <query>_<tag>.txt holding the formatted physical plan") {
+    spark
+    val out = java.nio.file.Files.createTempDirectory("graft_verify_plans").toString
+    Verify.main(Array("--plans", sfDir, out, "before", "q1_agg"))
+    assert(new java.io.File(out).list().toSeq == Seq("q1_agg_before.txt"))
+    val plan = java.nio.file.Files.readString(java.nio.file.Paths.get(out, "q1_agg_before.txt"))
+    assert(plan.startsWith("== Physical Plan ==") && plan.contains("Scan parquet"), plan)
+    assert(!spark.sparkContext.isStopped, "--plans must not stop a session it did not create")
+  }
+
+  test("no source file outside Session.scala calls SparkSession.builder") {
+    import java.nio.file.{Files, Path, Paths}
+    val root = Paths.get("src")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val call = "SparkSession.builder" + "(" // split so this file does not match itself
+    // code only: block and line comments do not count
+    def code(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
+      .replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val offenders = Files.walk(root).toArray.map(_.asInstanceOf[Path])
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Session.scala")
+      .filter(p => code(p).contains(call)).toSeq
+    assert(offenders.isEmpty, s"get sessions from graft.Session: ${offenders.mkString(", ")}")
   }
 
   test("filtered Verify.main fails loudly when a selected query errors at execution") {

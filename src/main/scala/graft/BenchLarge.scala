@@ -1163,7 +1163,7 @@ object BenchLarge {
     // clique makes every one of its grams doc-frequent (df=50 > 5), so
     // those docs' start lists carry one entry per token — the rebuild's
     // worst case (the pre-r12 covered-array membership probe paid len²
-    // per fully-covered doc; the scrubSpans sorted-pairwise sweep is
+    // per fully-covered doc; the SpanDedup.scrub sorted-pairwise sweep is
     // linear). The check forces all three output columns.
     timed("longdoc_ngram_scrub", clearAfter = true) {
       graft.text.TextQueries.scrubFrequentNgrams(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.binning.BinAxis
 import graft.io.Sources
-import graft.text.{SimJoin, TextQueries}
+import graft.text.{SimJoin, SpanDedup, TextQueries}
 
 /** Structured Streaming surface (SURVEY.md §2.9). The reference has no
   * streaming engine — its events are batch rows with a reconstructed
@@ -678,7 +678,7 @@ object StreamOps {
     * matched starts (state linear in matched windows per in-flight
     * document, closed when the watermark passes its event time —
     * append mode). The scrub itself is the SAME projection the batch
-    * path runs ([[graft.text.TextQueries.scrubSpansCols]]).
+    * path runs ([[graft.text.SpanDedup.scrub]]).
     *
     * The index is checked strict at plan time (kind + window length k
     * + hash kind — a k or hash mismatch matches zero windows and every
@@ -692,33 +692,9 @@ object StreamOps {
   def streamingSubstringGate(docs: DataFrame, corpusIndex: DataFrame,
                              k: Int = 50, portableHash: Boolean = true,
                              watermark: String = "10 minutes",
-                             unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    import graft.text.TextQueries
-    require(k >= 2, s"window length must be >= 2 tokens, got $k")
-    TextQueries.requireIndexCompatible(corpusIndex, TextQueries.KindSubstringTok,
-      portableHash, strict = !unsafeAssumeCompatible,
-      params = Map("k" -> k.toLong))
-    val h: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (portableHash) TextQueries.phash else (c => xxhash64(c))
-    val win = docs.withWatermark("ts", watermark)
-      .select(col("doc_id").as("batch_id"), col("ts"), col("text"),
-        split(col("text"), " ").as("toks"))
-      // _outer: a document shorter than k tokens has no windows but
-      // must still pass the gate (null pos row, never matches)
-      .select(col("batch_id"), col("ts"), col("text"),
-        posexplode_outer(expr(TextQueries.ngramArrayExpr(k))).as(Seq("pos", "win")))
-      .select(col("batch_id"), col("ts"), col("text"), col("pos"),
-        h(col("win")).as("h"))
-    // left outer: unmatched windows keep their document alive with a
-    // null hit, which the conditional collect_set then skips
-    val starts = win
-      .join(corpusIndex.select(col("h"), lit(1).as("hit")), Seq("h"), "left_outer")
-      .groupBy(col("batch_id"), col("ts"), col("text"))
-      .agg(collect_set(when(col("hit") === 1, col("pos"))).as("starts"))
-    TextQueries.scrubSpansCols(
-      starts.withColumn("toks", split(col("text"), " ")),
-      k, Seq("batch_id", "ts"))
-  }
+                             unsafeAssumeCompatible: Boolean = false): DataFrame =
+    SpanDedup.gate(SpanDedup.tokens(k, portableHash), docs, corpusIndex, watermark,
+      unsafeAssumeCompatible)
 
   /** [[streamingSubstringGate]] at CHARACTER granularity (any-offset
     * L-char windows — Lee et al. §4.1's byte-exact semantics): probes
@@ -733,22 +709,9 @@ object StreamOps {
   def streamingSubstringCharsGate(docs: DataFrame, corpusIndex: DataFrame,
                                   L: Int = 100, portableHash: Boolean = true,
                                   watermark: String = "10 minutes",
-                                  unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    import graft.text.TextQueries
-    require(L >= 2, s"window length must be >= 2 chars, got $L")
-    TextQueries.requireIndexCompatible(corpusIndex, TextQueries.KindSubstringChar,
-      portableHash, strict = !unsafeAssumeCompatible,
-      params = Map("L" -> L.toLong))
-    val win = docs.withWatermark("ts", watermark)
-      .select(col("doc_id").as("batch_id"), col("ts"), col("text"),
-        posexplode_outer(TextQueries.charWinHashCol(L, portableHash))
-          .as(Seq("pos", "h")))
-    val starts = win
-      .join(corpusIndex.select(col("h"), lit(1).as("hit")), Seq("h"), "left_outer")
-      .groupBy(col("batch_id"), col("ts"), col("text"))
-      .agg(collect_set(when(col("hit") === 1, col("pos"))).as("starts"))
-    TextQueries.scrubCharSpansCols(starts, L, Seq("batch_id", "ts"))
-  }
+                                  unsafeAssumeCompatible: Boolean = false): DataFrame =
+    SpanDedup.gate(SpanDedup.chars(L, portableHash), docs, corpusIndex, watermark,
+      unsafeAssumeCompatible)
 
   /** Stream-static PARAGRAPH scrub gate — the CCNet-granularity member
     * of the streaming gate family (Wenzek et al. 2020 §3.1: dedup by
@@ -759,9 +722,9 @@ object StreamOps {
     * the gate emits the batch operator's exact contract per page:
     * (batch_id, ts, n_paras, n_removed, clean_hash) — bit-identical to
     * [[graft.text.ParagraphQueries.paragraphDedupAgainst]] on the same
-    * split (replay parity spec-pinned), zero-match pages included.
-    * Batch-internal duplication deliberately does NOT scrub, matching
-    * the batch contract.
+    * split (replay parity spec-pinned), zero-match and null-text pages
+    * included. Batch-internal duplication deliberately does NOT scrub,
+    * matching the batch contract.
     *
     * Scale shape: paragraph strings never leave their partition — each
     * occurrence reduces to a compact (page, idx, 60-bit hash) row
@@ -771,7 +734,7 @@ object StreamOps {
     * the watermark-scoped per-page collect_set of matched positions
     * (append mode — a page emits once the watermark passes its event
     * time). The rebuild is the SAME projection the batch path runs
-    * ([[graft.text.ParagraphQueries.rebuildCols]]).
+    * ([[graft.text.SpanDedup.scrub]]).
     *
     * The index is checked strict at plan time (kind + hash kind — a
     * token-window or char-window index under this consumer, or a
@@ -783,24 +746,9 @@ object StreamOps {
     */
   def streamingParagraphGate(docs: DataFrame, corpusIndex: DataFrame,
                              watermark: String = "10 minutes",
-                             unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    import graft.text.{ParagraphQueries, TextQueries}
-    TextQueries.requireIndexCompatible(corpusIndex,
-      TextQueries.KindParagraphHash, portableHash = true, column = "h",
-      strict = !unsafeAssumeCompatible)
-    val occ = docs.withWatermark("ts", watermark)
-      .select(col("doc_id").as("batch_id"), col("ts"), col("text"),
-        posexplode(split(col("text"), "\n")).as(Seq("idx", "para")))
-      .select(col("batch_id"), col("ts"), col("text"), col("idx"),
-        TextQueries.phash(col("para")).as("h"))
-    val removed = occ
-      .join(corpusIndex.select(col("h"), lit(1).as("hit")), Seq("h"), "left_outer")
-      .groupBy(col("batch_id"), col("ts"), col("text"))
-      .agg(collect_set(when(col("hit") === 1, col("idx"))).as("removed"))
-    ParagraphQueries.rebuildCols(
-      removed.withColumn("paras", split(col("text"), "\n")),
-      Seq("batch_id", "ts"))
-  }
+                             unsafeAssumeCompatible: Boolean = false): DataFrame =
+    SpanDedup.gate(SpanDedup.paragraphs, docs, corpusIndex, watermark,
+      unsafeAssumeCompatible)
 
   /** Stream-static EXACT-Jaccard gate: incoming documents probe the
     * persisted COMPACT prefix index ([[graft.text.TextQueries.jaccardIndex]]

@@ -42,7 +42,7 @@ import graft.Tables
   * newline-separated pages straight to the operators.
   */
 object ParagraphQueries {
-  import TextQueries.{phash, phashSql}
+  import TextQueries.phashSql
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -63,66 +63,23 @@ object ParagraphQueries {
         .as("text"))
   }
 
-  /** Per-occurrence paragraph rows: (page_id, idx, h) where h is the
-    * portable 60-bit hash of the idx-th (0-based) newline-separated
-    * paragraph. The paragraph string exists only partition-locally
-    * between the split and this projection.
-    */
-  private def occurrences(pages: DataFrame): DataFrame =
-    pages.select(col("page_id"), posexplode(split(col("text"), "\n")).as(Seq("idx", "para")))
-      .select(col("page_id"), col("idx"), phash(col("para")).as("h"))
-
-  /** Rebuild (page_id, n_paras, n_removed, clean_hash) from a
-    * (page_id, removed-idx-set) frame: both sides cluster on page_id,
-    * the kept paragraphs re-render with their original separators.
-    */
-  private def rebuild(pages: DataFrame, removed: DataFrame): DataFrame =
-    rebuildCols(
-      pages.repartition(col("page_id"))
-        .select(col("page_id"), split(col("text"), "\n").as("paras"))
-        .join(removed, Seq("page_id"), "left"),
-      Seq("page_id"))
-
-  /** The rebuild PROJECTION alone — `df` must carry `paras`
-    * (ARRAY<STRING>) and a nullable `removed` (ARRAY<INT> of 0-based
-    * scrub positions) plus the `keyCols` to emit; shared verbatim by
-    * the batch [[rebuild]] join and the streaming gate (the
-    * `scrubSpansCols` factoring discipline — one scrub semantics, two
-    * drivers). */
-  private[graft] def rebuildCols(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.select(
-      keyCols.map(col) ++ Seq(
-        size(col("paras")).as("n_paras"),
-        coalesce(size(col("removed")), lit(0)).as("n_removed"),
-        md5(expr(
-          """concat_ws(chr(10), filter(paras,
-            |  (p, j) -> NOT array_contains(coalesce(removed, CAST(array() AS ARRAY<INT>)), j)))""".stripMargin))
-          .as("clean_hash")): _*)
-
   /** CCNet paragraph-level dedup, keep-first: a paragraph whose hash
     * occurs ≥ 2 times corpus-wide is scrubbed everywhere EXCEPT its
     * corpus-wide first (page_id, idx) occurrence. Emits
     * (page_id, n_paras, n_removed, clean_hash).
     *
-    * Scale shape: pass 1 aggregates (h → count, min(struct(page_id,
-    * idx))) with map-side combine — one compact 60-bit-keyed shuffle of
-    * O(corpus paragraphs) 24-byte rows; pass 2 shuffle-joins the
-    * occurrence frame against it on h (the dup set is Zipf-large —
-    * a boilerplate paragraph shared by millions of pages — so it is
+    * Scale shape: the span-dedup core's keep-one pipeline at paragraph
+    * grain ([[SpanDedup.paragraphs]]): the (h → count, min(struct(
+    * page_id, idx))) aggregate combines map-side — one compact
+    * 60-bit-keyed shuffle of O(corpus paragraphs) 24-byte rows; the
+    * occurrence frame shuffle-joins it on h (the dup set is Zipf-large
+    * — a boilerplate paragraph shared by millions of pages — so it is
     * NOT broadcast; each occurrence row emits exactly once, bounded);
-    * pass 3 clusters on page_id and rebuilds per row.
+    * the removed positions collect per page and the linear scrub
+    * rebuilds each page with its kept paragraphs.
     */
-  def paragraphDedup(pages: DataFrame): DataFrame = {
-    val occ = occurrences(pages)
-    val stats = occ.groupBy("h").agg(
-      count(lit(1)).as("c"),
-      min(struct(col("page_id"), col("idx"))).as("first"))
-    val removed = occ.join(stats, "h")
-      .filter(col("c") >= 2 &&
-        !(col("page_id") === col("first.page_id") && col("idx") === col("first.idx")))
-      .groupBy("page_id").agg(collect_set(col("idx")).as("removed"))
-    rebuild(pages, removed)
-  }
+  def paragraphDedup(pages: DataFrame): DataFrame =
+    SpanDedup.dedup(SpanDedup.paragraphs, pages, SpanDedup.allButFirst(_, "page_id"))
 
   /** RefinedWeb/Dolma boilerplate-line scrub: lines whose DOCUMENT
     * frequency (distinct pages containing them) exceeds `maxDf` are
@@ -135,16 +92,8 @@ object ParagraphQueries {
     * it broadcasts — the [[TextQueries.scrubFrequentNgrams]] precedent;
     * the corpus-side pass never shuffles on a line key.
     */
-  def scrubFrequentLines(pages: DataFrame, maxDf: Long = 1): DataFrame = {
-    val occ = occurrences(pages)
-    val freq = occ.groupBy("h")
-      .agg(countDistinct(col("page_id")).as("df"))
-      .filter(col("df") > maxDf)
-      .select("h")
-    val removed = occ.join(broadcast(freq), "h")
-      .groupBy("page_id").agg(collect_set(col("idx")).as("removed"))
-    rebuild(pages, removed)
-  }
+  def scrubFrequentLines(pages: DataFrame, maxDf: Long = 1): DataFrame =
+    SpanDedup.dedup(SpanDedup.paragraphs, pages, SpanDedup.frequent(_, "page_id", maxDf))
 
   /** Incremental paragraph dedup: scrub from `batch` every paragraph
     * whose hash already exists in `corpusIdx` ([[paragraphIndex]] of
@@ -161,12 +110,8 @@ object ParagraphQueries {
     */
   def paragraphDedupAgainst(batch: DataFrame, corpusIdx: DataFrame,
                             unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    TextQueries.requireIndexCompatible(corpusIdx, TextQueries.KindParagraphHash,
-      portableHash = true, column = "h", strict = !unsafeAssumeCompatible)
-    val removed = occurrences(batch)
-      .join(corpusIdx.select("h"), Seq("h"), "left_semi")
-      .groupBy("page_id").agg(collect_set(col("idx")).as("removed"))
-    rebuild(batch, removed)
+    SpanDedup.checkIndex(SpanDedup.paragraphs, corpusIdx, unsafeAssumeCompatible)
+    SpanDedup.dedup(SpanDedup.paragraphs, batch, SpanDedup.present(_, corpusIdx.select("h")))
   }
 
   /** The persistable corpus paragraph-hash index: one distinct 60-bit
@@ -176,10 +121,7 @@ object ParagraphQueries {
     * [[paragraphDedupAgainst]] and the streaming gate.
     */
   def paragraphIndex(corpus: DataFrame, buildId: Option[String] = None): DataFrame =
-    occurrences(corpus).select("h").distinct()
-      .select(col("h").as("h",
-        TextQueries.indexMeta(TextQueries.KindParagraphHash,
-          portableHash = true, buildId = buildId)))
+    SpanDedup.index(SpanDedup.paragraphs, corpus, buildId)
 
   /** Persist [[paragraphIndex]] as a BUCKETED catalog table (bucketed +
     * sorted by `h`, the probe key) — the production layout: at probe
@@ -188,10 +130,8 @@ object ParagraphQueries {
     * version. */
   def writeParagraphIndexTable(corpus: DataFrame, table: String,
                                buckets: Int = 64,
-                               buildId: Option[String] = None): Unit = {
-    val id = buildId.orElse(Some(java.util.UUID.randomUUID().toString))
-    graft.ops.Scale.writeBucketed(paragraphIndex(corpus, id), "h", buckets, table)
-  }
+                               buildId: Option[String] = None): Unit =
+    SpanDedup.writeIndexTable(SpanDedup.paragraphs, corpus, table, buckets, buildId)
 
   /** C4-style line + page filtering (Raffel et al. 2020 §2.2): a line
     * survives iff it has ≥ `minWords` words, (optionally) ends in

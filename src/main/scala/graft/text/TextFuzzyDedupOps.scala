@@ -6,6 +6,11 @@ import graft.Tables
 
 /** Winnowing, edit-distance verification, CDC chunking, streaming model rows, exact-substring dedup.
   *
+  * The exact-substring forms (token and char grain: remove-all,
+  * keep-one, incremental, their indexes) and the frequent-n-gram scrub
+  * are compositions of the span-dedup core [[SpanDedup]], which also
+  * serves [[ParagraphQueries]] and the streaming scrub gates.
+  *
   * Mixed into [[TextQueries]] (`this: TextQueries.type`): one of the
   * line-range-preserving module splits of the original single file —
   * zero behavior change, member order (and therefore val
@@ -598,6 +603,15 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
          |  (acc, t) -> acc - ln(coalesce(CAST(element_at(uni_map, t) AS DOUBLE), $oovCount) / tot))
          |  / size(toks)""".stripMargin), 6)
 
+
+  // ---------------------------------------------------------------------------
+  // Exact-substring dedup and the frequent-n-gram scrub: compositions of
+  // the span-dedup core ([[SpanDedup]]) at k-token and L-char window
+  // granularity. Each form picks a grain and a selection policy; the
+  // occurrence frame, the per-doc start collection, the linear scrub
+  // rebuild and the index are the core's.
+  // ---------------------------------------------------------------------------
+
   /** Scrub word-n-gram spans that occur in more than `maxDf` distinct
     * documents — the token-level analogue of shared-line removal
     * (CCNet, Wenzek et al. 2020 §4.1) / exact substring deduplication
@@ -607,50 +621,24 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
     * n_tokens, n_removed, clean_hash) where clean_hash is the md5 of
     * the scrubbed text.
     *
-    * Scale shape (100 TB):
-    *  - pass 1 (doc-frequency) is the [[ngramShingles]] explode into a
-    *    map-side-combined count — the frequent set (`df > maxDf`) is
-    *    tiny by Zipf's law and BROADCASTS; the corpus is never
-    *    shuffled on a gram key;
-    *  - pass 2 explodes positional grams over a doc_id-clustered scan,
-    *    joins the BROADCAST frequent set, and collects matched start
-    *    positions per document — the positional fan-out never crosses
-    *    the network (the repartition sits below the explode), and only
-    *    MATCHED rows reach the aggregate;
-    *  - pass 3 (rebuild) joins the per-doc hit lists back on doc_id and
-    *    rebuilds per-row with the LINEAR sorted-pairwise sweep
-    *    ([[scrubSpans]] with span length n — never the O(len·|covered|)
-    *    per-index membership probe, which was len² on a
-    *    fully-duplicated long document). Both doc_id shuffles move
-    *    compact (doc_id, text) rows — they are separate exchanges (the
-    *    optimizer's isnotnull on the build side defeats exchange
-    *    reuse), so the corpus is scanned three times and shuffled
-    *    twice, compactly; at test scale the rebuild join
-    *    auto-broadcasts, at corpus scale it degrades gracefully to a
-    *    co-partitioned sort-merge join on doc_id (both sides already
-    *    clustered).
+    * Scale shape (100 TB): the doc-frequency pass is the
+    * [[ngramShingles]] explode into a map-side-combined count, keyed by
+    * the gram STRING — the frequent set (`df > maxDf`) is tiny by Zipf's
+    * law and BROADCASTS, so the corpus is never shuffled on a gram key.
+    * This is the one selection step that stays outside the core's
+    * hashed policies: the occurrences are keyed by the window string
+    * itself and probe that broadcast set. The rest is the core's
+    * pipeline (positional grams above the doc_id clustering, linear
+    * scrub rebuild); the corpus is scanned three times.
     */
   def scrubFrequentNgrams(docs: DataFrame, n: Int = 3, maxDf: Long = 5): DataFrame = {
     require(n >= 2, s"n-gram order must be >= 2, got $n")
     val freq = ngramShingles(docs, n)
       .groupBy("shingle").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
-      .select(col("shingle").as("gram"))
-    val gramExpr = ngramArrayExpr(n)
-    val pre = docs.repartition(col("doc_id"))
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    val hits = pre
-      .select(col("doc_id"), posexplode(expr(gramExpr)))
-      .join(broadcast(freq), col("col") === col("gram"))
-      .groupBy("doc_id")
-      .agg(collect_set(col("pos")).as("starts"))
-    // rebuild via the LINEAR sorted-pairwise sweep (an n-gram hit is a
-    // fixed-length span, so [[scrubSpans]] applies with k = n); the
-    // prior covered-array rebuild probed array_contains(covered, j)
-    // per token — O(len·|covered|), len² on a fully-duplicated long
-    // document (the long-doc pathology sf-scale correctness cannot
-    // see). n_spans is scrubSpans' extra column, not this contract.
-    scrubSpans(pre, hits, n)
+      .select(col("shingle").as("h"))
+    val byString = SpanDedup.tokens(n, portableHash = true).copy(hash = (c: Column) => c)
+    SpanDedup.dedup(byString, docs, SpanDedup.present(_, broadcast(freq)))
       .select("doc_id", "n_tokens", "n_removed", "clean_hash")
   }
 
@@ -671,99 +659,25 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
     * [[scrubFrequentNgrams]] output shape plus the maximal-span count,
     * clean_hash the md5 of the text with duplicated spans removed.
     *
-    * Scale shape (100 TB):
-    *  - pass 1 hashes every window and counts by hash: the window
-    *    STRINGS (an O(k)× amplification) exist only partition-locally
-    *    between the explode and the hash projection; what shuffles is
-    *    the map-side-combined (hash, count) aggregate — O(corpus
-    *    tokens) compact 16-byte rows, the same order of shuffle the
-    *    paper's suffix-array sort pays;
-    *  - pass 2 re-derives positional window hashes above the doc_id
-    *    clustering and LEFT-SEMI joins the duplicated-hash set on h:
-    *    the dup set is corpus-derived (NOT broadcastable — for a
-    *    template clique it is Zipf-large), so this is a shuffle join of
-    *    two compact keyed frames; a hyper-duplicated window (the same
-    *    boilerplate in millions of docs) lands its position rows on one
-    *    reducer but each row emits exactly once — bounded, no
-    *    fan-out;
-    *  - pass 3 joins the per-doc start lists back on doc_id (both
-    *    sides doc_id-clustered) and rebuilds per-row with the LINEAR
-    *    sorted-pairwise sweep ([[scrubSpans]]): marginal coverage,
-    *    span opens on gaps, gap-slice concatenation, md5.
-    *  - `portableHash=false` swaps the md5-based cross-engine hash for
-    *    native xxhash64 — the production configuration; md5 exists for
-    *    DuckDB-oracle parity.
+    * Scale shape (100 TB): the window STRINGS (an O(k)× amplification)
+    * exist only partition-locally between the explode and the hash
+    * projection, above the doc_id clustering; what shuffles is the
+    * map-side-combined (hash, count) aggregate and compact
+    * (h, doc_id, pos) rows — the same order of shuffle the paper's
+    * suffix-array sort pays. The dup set is corpus-derived (NOT
+    * broadcastable), so the start recovery is a shuffle semi-join of
+    * two compact keyed frames. `portableHash=false` swaps the md5-based
+    * cross-engine hash for native xxhash64 — the production
+    * configuration; md5 exists for DuckDB-oracle parity.
     */
   def exactSubstringDedup(docs: DataFrame, k: Int = 50,
                           portableHash: Boolean = true): DataFrame = {
-    require(k >= 2, s"window length must be >= 2 tokens, got $k")
-    val h: Column => Column = if (portableHash) phash else (c => xxhash64(c))
-    val pre = docs.repartition(col("doc_id"))
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    // the count branch needs no doc_id clustering (it aggregates on h)
-    // and no positions — scan → explode → hash, map-side combined
-    val dup = docs
-      .select(split(col("text"), " ").as("toks"))
-      .select(explode(expr(ngramArrayExpr(k))).as("win"))
-      .select(h(col("win")).as("h"))
-      .groupBy("h").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select("h")
-    val starts = pre
-      .select(col("doc_id"), posexplode(expr(ngramArrayExpr(k))).as(Seq("pos", "win")))
-      .select(col("doc_id"), col("pos"), h(col("win")).as("h"))
-      .join(dup, Seq("h"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("pos")).as("starts"))
-    scrubSpans(pre, starts, k)
+    val g = SpanDedup.tokens(k, portableHash)
+    // the count reads its own unclustered scan, no positions: counted
+    // off the doc_id-clustered occurrences (the char form's shape) the
+    // plan would carry a third doc_id exchange
+    SpanDedup.dedup(g, docs, SpanDedup.repeated(_, SpanDedup.hashes(g, docs)))
   }
-
-  /** The span-scrub rebuild all three substring-dedup forms share,
-    * LINEAR in document length: the sorted start list is walked ONCE as
-    * pairwise (start, next-start) comparisons — sorted ascending, the
-    * immediately preceding start always owns the maximal prior coverage
-    * end, so every overlap/gap decision is local to the pair. Removed
-    * count sums each start's marginal coverage min(k, next−cur); a span
-    * opens where the gap next−cur exceeds k; the clean text
-    * concatenates the head slice plus each start's post-coverage gap
-    * slice — never an O(len·|covered|) per-index membership probe (the
-    * prior `array_contains(covered, j)` sweep was worst-case quadratic:
-    * a fully-duplicated long doc paid len² — the long-doc pathology
-    * sf-scale correctness cannot see). */
-  private[text] def scrubSpans(pre: DataFrame, starts: DataFrame, k: Int): DataFrame =
-    scrubSpansCols(pre.join(starts, Seq("doc_id"), "left"), k, Seq("doc_id"))
-
-  /** The span-scrub PROJECTION over a frame already carrying `toks`
-    * (token array) and `starts` (matched 0-based window starts,
-    * possibly null): pure per-row expressions, which is what lets the
-    * STREAMING substring gate reuse it verbatim after its watermarked
-    * collect_set — bit-identical metrics to the batch path by
-    * construction. Emits `keyCols` ++ (n_tokens, n_removed, n_spans,
-    * clean_hash). */
-  private[graft] def scrubSpansCols(df: DataFrame, k: Int,
-                                    keyCols: Seq[String]): DataFrame =
-    df
-      .withColumn("ss", expr("array_sort(coalesce(starts, CAST(array() AS ARRAY<INT>)))"))
-      // each start's coverage is bounded by the NEXT start; the last
-      // runs to its own window end (every window start p satisfies
-      // p + k <= size(toks), so size(toks) caps it at exactly k)
-      .withColumn("nxt", expr(
-        s"""CASE WHEN size(ss) = 0 THEN CAST(array() AS ARRAY<INT>)
-           |ELSE concat(slice(ss, 2, size(ss) - 1), array(size(toks))) END""".stripMargin))
-      .select(
-        keyCols.map(col) ++ Seq(
-        size(col("toks")).as("n_tokens"),
-        expr(s"aggregate(zip_with(ss, nxt, (a, b) -> least($k, b - a)), 0, (acc, x) -> acc + x)")
-          .as("n_removed"),
-        expr(
-          s"""CASE WHEN size(ss) = 0 THEN 0
-             |ELSE 1 + size(filter(zip_with(slice(ss, 2, size(ss) - 1),
-             |  slice(ss, 1, size(ss) - 1), (cur, prev) -> cur > prev + $k), x -> x)) END""".stripMargin)
-          .as("n_spans"),
-        md5(expr(
-          s"""concat_ws(' ', CASE WHEN size(ss) = 0 THEN toks
-             |ELSE concat(slice(toks, 1, element_at(ss, 1)),
-             |  flatten(zip_with(ss, nxt,
-             |    (a, b) -> slice(toks, a + $k + 1, greatest(b - a - $k, 0))))) END)""".stripMargin))
-          .as("clean_hash")): _*)
 
   /** The persistable side of incremental exact-substring dedup: the
     * DISTINCT window-hash set of the existing corpus — compact 8-byte
@@ -773,17 +687,8 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
     * side carries no exchange). */
   def substringIndex(corpus: DataFrame, k: Int = 50,
                      portableHash: Boolean = true,
-                     buildId: Option[String] = None): DataFrame = {
-    require(k >= 2, s"window length must be >= 2 tokens, got $k")
-    val h: Column => Column = if (portableHash) phash else (c => xxhash64(c))
-    corpus
-      .select(split(col("text"), " ").as("toks"))
-      .select(explode(expr(ngramArrayExpr(k))).as("win"))
-      .select(h(col("win")).as("h",
-        indexMeta(KindSubstringTok, portableHash, buildId = buildId,
-          params = Map("k" -> k.toLong))))
-      .distinct()
-  }
+                     buildId: Option[String] = None): DataFrame =
+    SpanDedup.index(SpanDedup.tokens(k, portableHash), corpus, buildId)
 
   /** Persist [[substringIndex]] as a BUCKETED catalog table (bucketed +
     * sorted by `h`) — the production layout for incremental
@@ -794,11 +699,8 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
   def writeSubstringIndexTable(corpus: DataFrame, table: String,
                                k: Int = 50, portableHash: Boolean = true,
                                buckets: Int = 64,
-                               buildId: Option[String] = None): Unit = {
-    val id = buildId.orElse(Some(java.util.UUID.randomUUID().toString))
-    graft.ops.Scale.writeBucketed(
-      substringIndex(corpus, k, portableHash, id), "h", buckets, table)
-  }
+                               buildId: Option[String] = None): Unit =
+    SpanDedup.writeIndexTable(SpanDedup.tokens(k, portableHash), corpus, table, buckets, buildId)
 
   /** Incremental exact-substring dedup: scrub every k-token window of
     * a NEW batch that already appears in the existing corpus — the
@@ -813,35 +715,18 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
     * windows shuffle, the bucketed index does not. Within-batch
     * duplication is deliberately NOT scrubbed here (run
     * [[exactSubstringDedup]] on the batch for that); the two compose.
-    * Output is the [[exactSubstringDedup]] contract over batch docs.
+    * A handed-in index must match this consumer's window length and
+    * hash kind and, when both frames are build-stamped, this corpus
+    * snapshot. Output is the [[exactSubstringDedup]] contract over
+    * batch docs.
     */
   def exactSubstringDedupAgainst(batch: DataFrame, corpus: DataFrame,
                                  k: Int = 50,
                                  portableHash: Boolean = true,
                                  corpusIndex: Option[DataFrame] = None,
-                                 unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    require(k >= 2, s"window length must be >= 2 tokens, got $k")
-    // a handed-in (pre-materialized) index must match this consumer's
-    // window length and hash kind — a k or hash mismatch matches zero
-    // windows and every duplicated span survives the scrub unseen —
-    // and, when both frames are build-stamped, this corpus snapshot
-    corpusIndex.foreach { idx =>
-      requireIndexCompatible(idx, KindSubstringTok, portableHash,
-        strict = !unsafeAssumeCompatible, params = Map("k" -> k.toLong))
-      if (!unsafeAssumeCompatible)
-        requireSameBuild(idx, corpus, sideColumn = "text", sideName = "corpus")
-    }
-    val h: Column => Column = if (portableHash) phash else (c => xxhash64(c))
-    val pre = batch.repartition(col("doc_id"))
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    val starts = pre
-      .select(col("doc_id"), posexplode(expr(ngramArrayExpr(k))).as(Seq("pos", "win")))
-      .select(col("doc_id"), col("pos"), h(col("win")).as("h"))
-      .join(corpusIndex.getOrElse(substringIndex(corpus, k, portableHash)),
-        Seq("h"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("pos")).as("starts"))
-    scrubSpans(pre, starts, k)
-  }
+                                 unsafeAssumeCompatible: Boolean = false): DataFrame =
+    SpanDedup.against(SpanDedup.tokens(k, portableHash), batch, corpus,
+      corpusIndex, unsafeAssumeCompatible)
 
   /** [[exactSubstringDedup]] with keep-one semantics — the OTHER mode
     * of Lee et al. 2021's dedup tool ("remove all but one occurrence"):
@@ -855,56 +740,22 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
     * clean_hash).
     *
     * Scale shape (100 TB): ONE positional window derivation feeds both
-    * branches — `persistLineage=true` pins it once (the jaccardJoin /
-    * exactSubstringDedupChars knob: at sf-scale recompute wins, at
-    * corpus scale Catalyst would otherwise build the window fan-out
-    * TWICE, once under the dup aggregate and once under the
-    * starts-recovery join — a ~2× on the dominant cost); window
-    * strings never leave their partition, only (h, doc_id, pos) rows
-    * shuffle:
-    *  - the dup table adds an argmin to the count aggregate:
-    *    min(struct(doc_id, pos)) per hash, partially aggregated
-    *    map-side next to the count — same compact shuffle as the
-    *    remove-all counting pass, 16 extra bytes per hash;
-    *  - pass 2 is the same h-keyed semi-join shape, now an inner join
-    *    carrying the 2-field `first` struct so each occurrence can test
-    *    itself against the winner row-locally; a hyper-duplicated
-    *    window still emits each occurrence exactly once;
-    *  - pass 3 (rebuild) is unchanged.
-    *
-    * `persistLineage=true` caches are SESSION-OWNED (the TextMixOps
-    * convention): the pinned occurrence fan-out stays in the block
-    * manager until `spark.catalog.clearCache()` / session end — the
-    * cache cannot release itself mid-plan because the result is lazy
-    * and both consumers read it at action time. Long-running sessions
-    * calling this repeatedly should clearCache between corpus versions
-    * (the BenchLarge clearAfter discipline).
+    * the argmin-carrying count aggregate and the h-join that recovers
+    * the losers — `persistLineage=true` pins it once (at sf-scale
+    * recompute wins, at corpus scale Catalyst would otherwise build the
+    * window fan-out TWICE — a ~2× on the dominant cost). The pinned
+    * cache is SESSION-OWNED (the TextMixOps convention): it stays in
+    * the block manager until `spark.catalog.clearCache()` / session
+    * end, because the result is lazy and both consumers read it at
+    * action time. Long-running sessions calling this repeatedly should
+    * clearCache between corpus versions (the BenchLarge clearAfter
+    * discipline).
     */
   def exactSubstringDedupKeep(docs: DataFrame, k: Int = 50,
                               portableHash: Boolean = true,
-                              persistLineage: Boolean = false): DataFrame = {
-    require(k >= 2, s"window length must be >= 2 tokens, got $k")
-    val h: Column => Column = if (portableHash) phash else (c => xxhash64(c))
-    val pre = docs.repartition(col("doc_id"))
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-    val occ0 = pre
-      .select(col("doc_id"), posexplode(expr(ngramArrayExpr(k))).as(Seq("pos", "win")))
-      .select(col("doc_id"), col("pos"), h(col("win")).as("h"))
-    val occ = if (persistLineage)
-      occ0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else occ0
-    val dup = occ
-      .groupBy("h")
-      .agg(count(lit(1)).as("c"),
-        min(struct(col("doc_id"), col("pos"))).as("first"))
-      .filter(col("c") >= 2)
-      .select(col("h"), col("first"))
-    val starts = occ.join(dup, Seq("h"))
-      .filter(!(col("doc_id") === col("first.doc_id") &&
-        col("pos") === col("first.pos")))
-      .groupBy("doc_id").agg(collect_set(col("pos")).as("starts"))
-    scrubSpans(pre, starts, k)
-  }
+                              persistLineage: Boolean = false): DataFrame =
+    SpanDedup.dedup(SpanDedup.tokens(k, portableHash), docs,
+      SpanDedup.allButFirst(_, "doc_id"), persistLineage)
 
   // ---------------------------------------------------------------------------
   // Character-granularity exact-substring dedup — the byte-exact
@@ -916,163 +767,45 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
   // mid-token, anywhere.
   // ---------------------------------------------------------------------------
 
-  /** Every length-`L` character window of `text` at every character
-    * offset, as an array expression. Guarded: shorter-than-L docs get
-    * an empty array (a bare `sequence(0, len-L)` would count DOWN for
-    * negative bounds). */
-  private def charWinExpr(L: Int): String =
-    s"""CASE WHEN length(text) < $L THEN CAST(array() AS ARRAY<STRING>)
-       |ELSE transform(sequence(0, length(text) - $L),
-       |  i -> substring(text, i + 1, $L)) END""".stripMargin
-
-  /** The per-doc array of HASHED L-char windows (element k = window at
-    * char offset k) — the one fork point of the char-dedup family's two
-    * hash paths. `portableHash=true` materializes each window string
-    * and md5-digests it (O(n·L) bytes, what the DuckDB oracle replays);
-    * `portableHash=false` is the O(n) rolling-polynomial kernel
-    * ([[graft.functions.RollingHashWindows]]) that never materializes a
-    * window. Same window boundaries by construction (both count code
-    * points); result-level parity is spec-pinned. */
-  private[graft] def charWinHashCol(L: Int, portableHash: Boolean): org.apache.spark.sql.Column =
-    if (portableHash)
-      expr(s"transform(${charWinExpr(L)}, w -> ${phashFrag("w")})")
-    else
-      org.apache.spark.sql.GraftBridge.column(
-        graft.functions.RollingHashWindows(
-          org.apache.spark.sql.GraftBridge.expression(col("text")), L))
-
-  /** The char-span scrub rebuild the character family shares — the
-    * [[scrubSpans]] twin over character indices, same LINEAR
-    * sorted-pairwise sweep (the prior per-character
-    * `array_contains(covered, j)` probe was worst-case quadratic in
-    * doc length: a fully-duplicated long doc paid len²). Removed count
-    * sums each start's marginal coverage min(L, next−cur); spans open
-    * on gaps > L; clean text is the head substring plus each start's
-    * post-coverage gap substring (Spark `substring` with a
-    * non-positive length is empty, so overlaps need no guard).
-    * Output: (doc_id, n_chars, n_removed, n_spans, clean_hash). */
-  private[text] def scrubCharSpans(pre: DataFrame, starts: DataFrame, L: Int): DataFrame =
-    scrubCharSpansCols(pre.join(starts, Seq("doc_id"), "left"), L, Seq("doc_id"))
-
-  /** [[scrubSpansCols]] at character granularity: the span-scrub
-    * projection over a frame carrying `text` and `starts` — pure
-    * per-row expressions, shared verbatim by the batch path and the
-    * streaming char-substring gate. Emits `keyCols` ++ (n_chars,
-    * n_removed, n_spans, clean_hash). */
-  private[graft] def scrubCharSpansCols(df: DataFrame, L: Int,
-                                        keyCols: Seq[String]): DataFrame =
-    df
-      .withColumn("ss", expr("array_sort(coalesce(starts, CAST(array() AS ARRAY<INT>)))"))
-      // every window start p satisfies p + L <= length(text), so the
-      // last start's coverage cap length(text) yields exactly L
-      .withColumn("nxt", expr(
-        s"""CASE WHEN size(ss) = 0 THEN CAST(array() AS ARRAY<INT>)
-           |ELSE concat(slice(ss, 2, size(ss) - 1), array(length(text))) END""".stripMargin))
-      .select(
-        keyCols.map(col) ++ Seq(
-        length(col("text")).as("n_chars"),
-        expr(s"aggregate(zip_with(ss, nxt, (a, b) -> least($L, b - a)), 0, (acc, x) -> acc + x)")
-          .as("n_removed"),
-        expr(
-          s"""CASE WHEN size(ss) = 0 THEN 0
-             |ELSE 1 + size(filter(zip_with(slice(ss, 2, size(ss) - 1),
-             |  slice(ss, 1, size(ss) - 1), (cur, prev) -> cur > prev + $L), x -> x)) END""".stripMargin)
-          .as("n_spans"),
-        md5(expr(
-          s"""CASE WHEN size(ss) = 0 THEN text
-             |ELSE concat(substring(text, 1, element_at(ss, 1)),
-             |  concat_ws('', zip_with(ss, nxt,
-             |    (a, b) -> substring(text, a + $L + 1, b - a - $L)))) END""".stripMargin))
-          .as("clean_hash")): _*)
-
   /** Exact-substring dedup at CHARACTER granularity: remove every
     * ≥ L-character span that appears verbatim more than once in the
     * corpus, starting at ANY character offset (Lee et al. 2021 §4.1's
     * actual match semantics — their suffix array indexes every byte
     * position; the [[exactSubstringDedup]] token form rounds matches
-    * to token boundaries). Same two-pass window-hash shape: any
+    * to token boundaries). Same pipeline as the token form: any
     * duplicated run of length ≥ L is covered exactly because every one
-    * of its L-windows repeats wherever the run repeats.
+    * of its L-windows repeats wherever the run repeats. Emits (doc_id,
+    * n_chars, n_removed, n_spans, clean_hash).
     *
-    * Scale shape (100 TB) vs the token form:
-    *  - window DENSITY is one per character instead of one per token
-    *    (~6× for English), and each window string is L chars — an
-    *    O(L)× amplification that exists only partition-locally between
-    *    the transform and the hash projection; what shuffles is
-    *    unchanged in shape: map-side-combined (hash, count) rows in
-    *    pass 1, compact (h, doc_id, pos) rows in pass 2 — ~6× the
-    *    token form's row count, same order as the paper's suffix-array
-    *    sort (one entry per byte);
-    *  - hashing: the `portableHash=true` oracle path materializes each
-    *    window and md5-digests it — O(n·L) bytes, what DuckDB can
-    *    replay; the `portableHash=false` production path is the O(n)
-    *    rolling-polynomial kernel ([[graft.functions.RollingHashWindows]],
-    *    codegen'd, no window strings ever built) — the 2M-doc bench
-    *    measured the materialized xxhash64 form at ~200 s before the
-    *    kernel landed (BENCH_LARGE `substr_dedup_chars` carries the
-    *    kernel's number);
-    *  - the rebuild ([[scrubCharSpans]]) is LINEAR in doc length: a
-    *    sorted-pairwise sweep over the start list — a fully-duplicated
-    *    long doc pays O(len), not len² (both granularities share the
-    *    sweep).
+    * Scale shape (100 TB) vs the token form: window DENSITY is one per
+    * character instead of one per token (~6× for English); what
+    * shuffles is unchanged in shape — ~6× the token form's row count,
+    * the same order as the paper's suffix-array sort (one entry per
+    * byte). The `portableHash=true` oracle path materializes each
+    * window and md5-digests it, what DuckDB can replay; the
+    * `portableHash=false` production path is the O(n) rolling-polynomial
+    * kernel ([[graft.functions.RollingHashWindows]], codegen'd, no
+    * window strings ever built). `persistLineage` pins the
+    * kernel+posexplode fan-out once for its two consumers (the
+    * corpus-wide count and the start recovery).
     */
   def exactSubstringDedupChars(docs: DataFrame, L: Int = 100,
                                portableHash: Boolean = true,
-                               persistLineage: Boolean = false): DataFrame = {
-    require(L >= 2, s"window length must be >= 2 chars, got $L")
-    val pre = docs.repartition(col("doc_id")).select(col("doc_id"), col("text"))
-    // the positional window-hash fan-out feeds BOTH passes (the
-    // corpus-wide count and the per-doc start recovery) — at corpus
-    // scale cache it once instead of running the kernel + explode
-    // twice (the jaccardJoin persistLineage tradeoff: at sf-scale
-    // recompute wins, at corpus scale the fan-out dominates)
-    val occ0 = pre.select(col("doc_id"),
-      posexplode(charWinHashCol(L, portableHash)).as(Seq("pos", "h")))
-    val occ = if (persistLineage)
-      occ0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else occ0
-    val dup = occ.select("h")
-      .groupBy("h").agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2).select("h")
-    val starts = occ
-      .join(dup, Seq("h"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("pos")).as("starts"))
-    scrubCharSpans(pre, starts, L)
-  }
+                               persistLineage: Boolean = false): DataFrame =
+    SpanDedup.dedup(SpanDedup.chars(L, portableHash), docs,
+      occ => SpanDedup.repeated(occ, occ), persistLineage)
 
   /** [[exactSubstringDedupChars]] with keep-one semantics: a duplicated
     * L-char window survives at its corpus-wide first occurrence (the
     * lexicographically smallest (doc_id, pos)) and is scrubbed
     * everywhere else — the char-granularity member of the keep-one
-    * mode ([[exactSubstringDedupKeep]]). Same argmin-in-the-count-
-    * aggregate shuffle shape, one granularity down; `persistLineage`
-    * pins the kernel+posexplode fan-out once for its two consumers
-    * (the remove-all form's knob — without it Catalyst instantiates
-    * the dominant-cost subtree twice). The pinned cache is
-    * SESSION-OWNED — see [[exactSubstringDedupKeep]]. */
+    * mode ([[exactSubstringDedupKeep]], whose `persistLineage` and
+    * session-owned cache it shares). */
   def exactSubstringDedupCharsKeep(docs: DataFrame, L: Int = 100,
                                    portableHash: Boolean = true,
-                                   persistLineage: Boolean = false): DataFrame = {
-    require(L >= 2, s"window length must be >= 2 chars, got $L")
-    val pre = docs.repartition(col("doc_id")).select(col("doc_id"), col("text"))
-    val occ0 = pre
-      .select(col("doc_id"),
-        posexplode(charWinHashCol(L, portableHash)).as(Seq("pos", "h")))
-    val occ = if (persistLineage)
-      occ0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else occ0
-    val dup = occ
-      .groupBy("h")
-      .agg(count(lit(1)).as("c"),
-        min(struct(col("doc_id"), col("pos"))).as("first"))
-      .filter(col("c") >= 2)
-      .select(col("h"), col("first"))
-    val starts = occ.join(dup, Seq("h"))
-      .filter(!(col("doc_id") === col("first.doc_id") &&
-        col("pos") === col("first.pos")))
-      .groupBy("doc_id").agg(collect_set(col("pos")).as("starts"))
-    scrubCharSpans(pre, starts, L)
-  }
+                                   persistLineage: Boolean = false): DataFrame =
+    SpanDedup.dedup(SpanDedup.chars(L, portableHash), docs,
+      SpanDedup.allButFirst(_, "doc_id"), persistLineage)
 
   /** The persistable side of incremental char-level substring dedup:
     * the DISTINCT L-char window-hash set of the existing corpus (the
@@ -1080,17 +813,8 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
     * persistence discipline, ~6× the row count). */
   def substringCharsIndex(corpus: DataFrame, L: Int = 100,
                           portableHash: Boolean = true,
-                          buildId: Option[String] = None): DataFrame = {
-    require(L >= 2, s"window length must be >= 2 chars, got $L")
-    corpus
-      .select(explode(charWinHashCol(L, portableHash)).as("h"))
-      // second select: generator aliases drop explicitMetadata (see
-      // winnowIndex)
-      .select(col("h").as("h",
-        indexMeta(KindSubstringChar, portableHash, buildId = buildId,
-          params = Map("L" -> L.toLong))))
-      .distinct()
-  }
+                          buildId: Option[String] = None): DataFrame =
+    SpanDedup.index(SpanDedup.chars(L, portableHash), corpus, buildId)
 
   /** [[writeSubstringIndexTable]] one granularity down: persist
     * [[substringCharsIndex]] bucketed + sorted by `h`. Same probe
@@ -1098,41 +822,22 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
   def writeSubstringCharsIndexTable(corpus: DataFrame, table: String,
                                     L: Int = 100, portableHash: Boolean = true,
                                     buckets: Int = 64,
-                                    buildId: Option[String] = None): Unit = {
-    val id = buildId.orElse(Some(java.util.UUID.randomUUID().toString))
-    graft.ops.Scale.writeBucketed(
-      substringCharsIndex(corpus, L, portableHash, id), "h", buckets, table)
-  }
+                                    buildId: Option[String] = None): Unit =
+    SpanDedup.writeIndexTable(SpanDedup.chars(L, portableHash), corpus, table, buckets, buildId)
 
   /** Incremental char-level substring dedup: scrub every L-char window
     * of a NEW batch that already appears in the existing corpus —
-    * [[exactSubstringDedupAgainst]] at character granularity. The
-    * corpus contributes only its [[substringCharsIndex]]; the batch
-    * pays one positional window pass; the probe is a left-semi
-    * equi-join on the compact hash key. Within-batch duplication is
-    * deliberately NOT scrubbed here (run [[exactSubstringDedupChars]]
-    * on the batch for that); the two compose. */
+    * [[exactSubstringDedupAgainst]] at character granularity, with the
+    * same index contract (window length L and hash kind must match the
+    * index build). The corpus contributes only its
+    * [[substringCharsIndex]]; within-batch duplication is deliberately
+    * NOT scrubbed here (run [[exactSubstringDedupChars]] on the batch
+    * for that); the two compose. */
   def exactSubstringDedupCharsAgainst(batch: DataFrame, corpus: DataFrame,
                                       L: Int = 100,
                                       portableHash: Boolean = true,
                                       corpusIndex: Option[DataFrame] = None,
-                                      unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    require(L >= 2, s"window length must be >= 2 chars, got $L")
-    // same contract as [[exactSubstringDedupAgainst]], one granularity
-    // down: window length L and hash kind must match the index build
-    corpusIndex.foreach { idx =>
-      requireIndexCompatible(idx, KindSubstringChar, portableHash,
-        strict = !unsafeAssumeCompatible, params = Map("L" -> L.toLong))
-      if (!unsafeAssumeCompatible)
-        requireSameBuild(idx, corpus, sideColumn = "text", sideName = "corpus")
-    }
-    val pre = batch.repartition(col("doc_id")).select(col("doc_id"), col("text"))
-    val starts = pre
-      .select(col("doc_id"),
-        posexplode(charWinHashCol(L, portableHash)).as(Seq("pos", "h")))
-      .join(corpusIndex.getOrElse(substringCharsIndex(corpus, L, portableHash)),
-        Seq("h"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("pos")).as("starts"))
-    scrubCharSpans(pre, starts, L)
-  }
+                                      unsafeAssumeCompatible: Boolean = false): DataFrame =
+    SpanDedup.against(SpanDedup.chars(L, portableHash), batch, corpus,
+      corpusIndex, unsafeAssumeCompatible)
 }

@@ -192,7 +192,7 @@ private[text] trait TextOracleOps { this: TextQueries.type =>
        |FROM t LEFT JOIN hits h USING (doc_id)""".stripMargin
 
   /** Shared SELECT tail of the character-granularity substring-dedup
-    * oracles — the [[scrubCharSpans]] twin: covered char indices,
+    * oracles — the [[SpanDedup.scrub]] twin: covered char indices,
     * maximal-span count, md5 of the text with covered chars deleted.
     * Expects CTEs `t(doc_id, text)` and `hits(doc_id, covered)`. */
   private def charScrubSelectSql: String =

@@ -55,6 +55,41 @@ class ParagraphSpec extends AnyFunSuite {
     assert(got(2L) == ((2, 1, md5Of("c"))))
   }
 
+  test("paragraphDedup and scrubFrequentLines on a LONG page == brute-force reference") {
+    // the fixtures of the two tests above plus a 2400-paragraph page
+    // whose paragraphs mostly repeat (within the page and across a
+    // second long page) — the dense removed-position list the scrub
+    // must rebuild linearly. The reference is the semantics definition
+    // over paragraph STRINGS, computed independently of the plan.
+    val pool = (0 until 40).map(i => s"boiler plate line $i")
+    val long1 = (0 until 2400).map(i =>
+      if (i % 25 == 7) s"unique one $i" else pool(i % pool.size)).mkString("\n")
+    val long2 = (Seq("y", "foot") ++ (0 until 300).map(i => pool((i * 7) % pool.size)) ++
+      Seq("own tail")).mkString("\n")
+    val fixture = Seq(
+      (0L, "x\ny\nz"), (1L, "y\nw"), (2L, "y"),
+      (3L, "nav\na\nnav"), (4L, "b\nfoot"), (5L, "foot\nc"),
+      (6L, long1), (7L, long2))
+    val occ = for ((id, t) <- fixture; (p, j) <- t.split("\n", -1).zipWithIndex)
+      yield (id, j, p)
+    def expect(removed: ((Long, Int, String)) => Boolean): Map[Long, (Int, Int, String)] =
+      fixture.map { case (id, t) =>
+        val paras = t.split("\n", -1)
+        val gone = occ.filter(o => o._1 == id && removed(o)).map(_._2).toSet
+        id -> ((paras.length, gone.size,
+          md5Of(paras.indices.filterNot(gone).map(paras).mkString("\n"))))
+      }.toMap
+    val first = occ.groupBy(_._3).map { case (p, os) => p -> os.map(o => (o._1, o._2)).min }
+    val copies = occ.groupBy(_._3).map { case (p, os) => p -> os.size }
+    val pagesWith = occ.groupBy(_._3).map { case (p, os) => p -> os.map(_._1).distinct.size }
+    val pages = fixture.toDF("page_id", "text")
+    val dedupWant = expect(o => copies(o._3) >= 2 && first(o._3) != ((o._1, o._2)))
+    assert(dedupWant(6L)._2 > 2000, "the long page must be mostly repeats")
+    assert(rowsOf(ParagraphQueries.paragraphDedup(pages)) == dedupWant)
+    assert(rowsOf(ParagraphQueries.scrubFrequentLines(pages, maxDf = 1)) ==
+      expect(o => pagesWith(o._3) > 1))
+  }
+
   test("paragraphDedupAgainst scrubs corpus-known paragraphs, not batch-internal dups") {
     val corpus = Seq((0L, "old\nshared")).toDF("page_id", "text")
     val batch = Seq((10L, "shared\nnew\nnew")).toDF("page_id", "text")

@@ -85,6 +85,36 @@ class WarpFitSpec extends AnyFunSuite {
     assert(math.abs(fits("b").center - 55.0) < 1e-6)
   }
 
+  test("tracesFromHistogram + fitTraces recover planted Gaussians binned by histogramNd") {
+    // the fit_traces_gauss chain: events → per-key 1-D histogram →
+    // one trace per key → one Gaussian fit per trace. Centres and
+    // sigmas are planted in value units; the value axis has unit-width
+    // bins from 0, so bin i holds [i, i+1) and a fit over bin indices
+    // sees the centre at c - 0.5 and the sigma at s (plus the bin
+    // width's sqrt(1/12) smear)
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.binning.{BinAxis, Binning}
+    val planted = Seq((0, 20.3, 2.0), (1, 41.7, 3.5), (2, 12.0, 1.2), (3, 55.5, 5.0))
+    val rnd = new scala.util.Random(20261019L)
+    val events = planted.flatMap { case (k, c, s) =>
+      Seq.fill(20000)((k, c + s * rnd.nextGaussian()))
+    }.toDF("key", "value")
+    val hist = Binning.histogramNd(events, Seq(
+      col("key") -> BinAxis("key", 4, 0.0, 4.0),
+      col("value") -> BinAxis("value", 80, 0.0, 80.0)))
+    val traces = Fit.tracesFromHistogram(spark, hist, "bin_key", "bin_value", "cnt")
+    val xs = traces.collect().map(t => t.key -> t.xs.toSeq).toMap
+    assert(xs.keySet == planted.map(_._1.toString).toSet)
+    xs.foreach { case (k, x) => assert(x == x.sorted && x.distinct == x, s"trace $k: xs not sorted by bin") }
+    val fits = Fit.fitTraces(traces).collect().map(f => f.key -> f).toMap
+    planted.foreach { case (k, c, s) =>
+      val f = fits(k.toString)
+      assert(math.abs(f.center - (c - 0.5)) < 1.0, s"key $k: centre ${f.center} vs ${c - 0.5}")
+      assert(math.abs(math.abs(f.sigma) - s) < 1.0, s"key $k: sigma ${f.sigma} vs $s")
+    }
+  }
+
   test("Faddeeva wofz matches published values to 1e-6 (and well beyond)") {
     import graft.fit.Faddeeva.wofz
     // w(0) = 1 exactly

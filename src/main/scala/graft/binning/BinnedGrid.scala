@@ -1,8 +1,9 @@
 package graft.binning
 
 import graft.binning.MetaNode.{MArr, MInt, MNum, MObj, MStr}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Driver-resident dense N-D histogram volume — the engine's analogue of
@@ -141,8 +142,11 @@ case class BinnedGrid(data: Array[Long], axes: Seq[BinAxis]) {
   }
 
   /** Back to the sparse relational layout (`bin_<axis>…, cnt`, one row
-    * per non-empty cell) for further distributed work. The cells travel
-    * as two primitive arrays in one partition; rows are built in the task. */
+    * per non-empty cell, in flat order) for further distributed work. The
+    * cells travel as two primitive arrays in one partition and become
+    * `InternalRow`s inside its task. That partition is declared to the
+    * planner, so a keyed operator above it (`groupBy`, a window, a sort
+    * for a merge join) plans no exchange. */
   def toDF(spark: SparkSession): DataFrame = {
     var n = 0
     var i = 0
@@ -157,7 +161,20 @@ case class BinnedGrid(data: Array[Long], axes: Seq[BinAxis]) {
     }
     val schema = StructType(axes.map(a => StructField(s"bin_${a.name}", LongType)) :+
       StructField("cnt", LongType))
-    spark.createDataFrame(BinnedGrid.cellRows(spark, flats, counts, shape), schema)
+    val dims = shape.map(_.toLong).toArray
+    val str = strides
+    val rows = spark.sparkContext.parallelize(Seq((flats, counts)), 1).flatMap { case (fs, cs) =>
+      // one mutable row, reused: the scan above projects each row before
+      // asking for the next
+      val row = new SpecificInternalRow(schema.map(_.dataType))
+      fs.indices.iterator.map { k =>
+        var d = 0
+        while (d < dims.length) { row.setLong(d, (fs(k) / str(d)) % dims(d)); d += 1 }
+        row.setLong(d, cs(k))
+        row: InternalRow
+      }
+    }
+    GraftBridge.singlePartitionFrame(spark, schema, rows)
   }
 }
 
@@ -173,17 +190,6 @@ object BinnedGrid {
   /** Row-major strides of `shape`: flat index = Σ bin(d) · strides(d). */
   private[binning] def strides(shape: Seq[Int]): Array[Long] =
     shape.indices.map(i => shape.drop(i + 1).map(_.toLong).product).toArray
-
-  /** One partition holding the (flat index, count) arrays, expanded into
-    * `bin_<axis>…, cnt` rows inside the task. */
-  private def cellRows(spark: SparkSession, flats: Array[Int], counts: Array[Long],
-                       shape: Seq[Int]): RDD[Row] = {
-    val dims = shape.map(_.toLong).toArray
-    val str = strides(shape)
-    spark.sparkContext.parallelize(Seq((flats, counts)), 1).flatMap { case (fs, cs) =>
-      fs.indices.iterator.map(k => Row.fromSeq(dims.indices.map(d => (fs(k) / str(d)) % dims(d)) :+ cs(k)))
-    }
-  }
 
   /** Persist as a parquet of sparse cells plus a JSON axes sidecar —
     * the engine's equivalent of the reference's `binned/ + axes/` HDF5
@@ -217,7 +223,7 @@ object BinnedGrid {
     * Every `*.parquet` under `path/binned/` is read, so volumes that an
     * older Spark-job writer saved as several parts still load. */
   def load(spark: SparkSession, path: String): BinnedGrid =
-    CellsParquet.read(spark.sparkContext.hadoopConfiguration, s"$path/binned", readAxes(path))
+    CellsParquet.read(spark, s"$path/binned", readAxes(path))
 
   /** Persist a ≥2-D grid as separated per-slice datasets `V0..Vn` along
     * `cutAxis` — the reference's 4D export layout (`saveDict` h5 branch,
@@ -253,9 +259,8 @@ object BinnedGrid {
     val n = sliced.int("n").toInt
     require(n == axes(cutAxis).nbins, s"slice count $n != axis ${axes(cutAxis).name}")
     val restAxes = axes.patch(cutAxis, Nil, 1)
-    val conf = spark.sparkContext.hadoopConfiguration
     val slices = (0 until n).map { i =>
-      CellsParquet.read(conf, s"$path/binned/$sliceName$i", restAxes)
+      CellsParquet.read(spark, s"$path/binned/$sliceName$i", restAxes)
     }
     // inverse of sliceAlong's single row-major pass
     val shape = axes.map(_.nbins)

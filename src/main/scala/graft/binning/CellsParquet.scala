@@ -2,53 +2,172 @@ package graft.binning
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.bytes.HeapByteBufferAllocator
+import org.apache.parquet.column.{Encoding, ParquetProperties}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.column.values.delta.DeltaBinaryPackingValuesWriterForLong
+import org.apache.parquet.hadoop.{CodecFactory, ParquetFileWriter, ParquetInputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter, RecordConsumer, RecordMaterializer}
 import org.apache.parquet.schema.{MessageType, PrimitiveType, Types}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.vectorized.WritableColumnVector
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The saved volume's cell files, written and read on the driver.
   *
   * A volume directory holds parquet with one row per non-empty cell and
   * the columns `bin_<axis>…: long, cnt: long` — exactly what
-  * `spark.read.parquet` sees and what [[BinnedGrid.toDF]] yields. The
-  * writer walks `grid.data` by flat index straight into parquet-hadoop's
-  * record consumer and the reader decodes the columns straight into the
-  * `Array[Long]`, so neither builds a `Row` nor runs a Spark job: the
-  * volume is small next to the events, and moving it one relational row
-  * per cell through a task cost more than the aggregate that built it.
+  * `spark.read.parquet` sees and what [[BinnedGrid.toDF]] yields. Neither
+  * side builds a row or runs a Spark job: the volume is small next to the
+  * events, and moving it one record per cell cost more than the aggregate
+  * that built it.
+  *
+  * [[write]] lays the file out column by column through parquet-hadoop's
+  * file writer: REQUIRED INT64 columns, `DELTA_BINARY_PACKED` values (the
+  * bin columns of cells in flat order are runs of equal values) in SNAPPY
+  * pages, and min/max statistics on every page and column chunk, so a
+  * reader's filter on a bin column skips what it does not need.
+  *
+  * [[read]] decodes with Spark's own vectorized parquet reader, configured
+  * as a scan of the session would be, and scatters each batch into the
+  * dense array. One path serves [[write]]'s file and the several parts,
+  * OPTIONAL columns included, that a Spark writer leaves.
   */
 private[binning] object CellsParquet {
 
-  /** Replace `dir` with one `part-00000.parquet` of `grid`'s non-empty cells. */
-  def write(grid: BinnedGrid, conf: Configuration, dir: String): Unit = {
+  /** Cells per data page and per row group. */
+  private val PageCells = 1 << 16
+  private val GroupCells = 1 << 20
+
+  /** Replace `dir` with one `part-00000.parquet` of `grid`'s non-empty
+    * cells, in flat order. Each row group's flat indices are gathered into
+    * one reused buffer, then every column is encoded from it page by page. */
+  def write(grid: BinnedGrid, conf: Configuration, dir: String,
+            pageCells: Int = PageCells, groupCells: Int = GroupCells): Unit = {
     val d = new Path(dir)
     d.getFileSystem(conf).delete(d, true)
-    val w = new CellWriterBuilder(grid, new Path(d, "part-00000.parquet"), conf).build()
+    val data = grid.data
+    val n = data.length
+    val ncols = grid.axes.length + 1
+    val shape = grid.shape.map(_.toLong).toArray
+    val strides = BinnedGrid.strides(grid.shape)
+    val schema = CellsParquet.schema(grid.axes)
+    val descs = schema.getColumns
+    // no padding to file-system blocks, no encryption
+    val file = new ParquetFileWriter(HadoopOutputFile.fromPath(new Path(d, "part-00000.parquet"), conf), schema,
+      ParquetFileWriter.Mode.OVERWRITE, ParquetWriter.DEFAULT_BLOCK_SIZE, 0, null, ParquetProperties.builder().build())
+    val codecs = new CodecFactory(conf, ParquetWriter.DEFAULT_PAGE_SIZE)
+    val snappy = codecs.getCompressor(CompressionCodecName.SNAPPY)
+    val values = new DeltaBinaryPackingValuesWriterForLong(
+      1 << 16, ParquetWriter.DEFAULT_PAGE_SIZE, HeapByteBufferAllocator.getInstance)
+    val flats = new Array[Int](math.min(groupCells, n))
     try {
-      val data = grid.data
-      var flat = 0
-      while (flat < data.length) {
-        if (data(flat) != 0) w.write(flat)
-        flat += 1
+      file.start()
+      var next = 0
+      while (next < n) {
+        var rows = 0
+        while (next < n && rows < flats.length) {
+          if (data(next) != 0) { flats(rows) = next; rows += 1 }
+          next += 1
+        }
+        if (rows > 0) {
+          file.startBlock(rows)
+          var c = 0
+          while (c < ncols) {
+            file.startColumn(descs.get(c), rows, CompressionCodecName.SNAPPY)
+            var from = 0
+            while (from < rows) {
+              val until = math.min(rows, from + pageCells)
+              val stats = Statistics.createStats(descs.get(c).getPrimitiveType)
+              var k = from
+              while (k < until) {
+                val v = if (c < shape.length) (flats(k) / strides(c)) % shape(c) else data(flats(k))
+                values.writeLong(v)
+                stats.updateStats(v)
+                k += 1
+              }
+              val raw = values.getBytes
+              file.writeDataPage(until - from, raw.size.toInt, snappy.compress(raw), stats, (until - from).toLong,
+                Encoding.RLE, Encoding.RLE, Encoding.DELTA_BINARY_PACKED)
+              values.reset()
+              from = until
+            }
+            file.endColumn()
+            c += 1
+          }
+          file.endBlock()
+        }
       }
-    } finally w.close()
+      file.end(java.util.Collections.emptyMap[String, String]())
+    } finally {
+      values.close()
+      codecs.release()
+      file.close()
+    }
   }
 
   /** Densify every `*.parquet` under `dir` (names starting with `_` or
     * `.` skipped) into a grid over `axes` — one file from [[write]], or
     * the several parts a Spark writer leaves. */
-  def read(conf: Configuration, dir: String, axes: Seq[BinAxis]): BinnedGrid = {
+  def read(spark: SparkSession, dir: String, axes: Seq[BinAxis]): BinnedGrid = {
+    val cols = columns(axes)
+    val conf = graft.io.Sources.parquetConf(spark)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+      StructType(cols.map(StructField(_, LongType))).json)
     val d = new Path(dir)
     val files = d.getFileSystem(conf).listStatus(d).toSeq
-      .filter(s => s.isFile && isPart(s.getPath.getName)).map(_.getPath).sortBy(_.getName)
+      .filter(s => s.isFile && isPart(s.getPath.getName)).sortBy(_.getPath.getName)
     require(files.nonEmpty, s"no parquet cell files under $dir")
+    val n = axes.length
+    val shape = axes.map(_.nbins.toLong).toArray
+    val strides = BinnedGrid.strides(axes.map(_.nbins))
     val data = new Array[Long](axes.map(_.nbins).product)
-    files.foreach { f =>
-      val r = ParquetReader.builder(new CellReadSupport(axes, data, f), f).withConf(conf).build()
-      try while (r.read() != null) {} finally r.close()
+    val batchRows = spark.sessionState.conf.parquetVectorizedReaderBatchSize
+    val flats = new Array[Long](batchRows)
+    files.foreach { st =>
+      val file = st.getPath
+      val r = new VectorizedParquetRecordReader(false, batchRows)
+      try {
+        r.initialize(new FileSplit(file, 0, st.getLen, Array.empty[String]),
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+        val batch = r.resultBatch()
+        while (r.nextBatch()) {
+          val rows = batch.numRows
+          java.util.Arrays.fill(flats, 0, rows, 0L)
+          var c = 0
+          while (c <= n) {
+            val v = batch.column(c)
+            if (v.hasNull) {
+              if (v.asInstanceOf[WritableColumnVector].isAllNull)
+                throw new IllegalArgumentException(s"$file has no column ${cols(c)}")
+              throw new IllegalArgumentException(s"$file: a cell has a null column")
+            }
+            c += 1
+          }
+          c = 0
+          while (c < n) {
+            val v = batch.column(c)
+            var k = 0
+            while (k < rows) {
+              val b = v.getLong(k)
+              if (b < 0 || b >= shape(c))
+                throw new IllegalArgumentException(s"$file: ${cols(c)} = $b outside [0, ${shape(c)})")
+              flats(k) += b * strides(c)
+              k += 1
+            }
+            c += 1
+          }
+          val cnt = batch.column(n)
+          var k = 0
+          while (k < rows) { data(flats(k).toInt) = cnt.getLong(k); k += 1 }
+        }
+      } finally r.close()
     }
     BinnedGrid(data, axes)
   }
@@ -60,98 +179,7 @@ private[binning] object CellsParquet {
 
   private def schema(axes: Seq[BinAxis]): MessageType = {
     val b = Types.buildMessage()
-    columns(axes).foreach(c => b.optional(PrimitiveType.PrimitiveTypeName.INT64).named(c))
+    columns(axes).foreach(c => b.required(PrimitiveType.PrimitiveTypeName.INT64).named(c))
     b.named("spark_schema")
-  }
-
-  private final class CellWriterBuilder(grid: BinnedGrid, file: Path, conf: Configuration)
-      extends ParquetWriter.Builder[Integer, CellWriterBuilder](HadoopOutputFile.fromPath(file, conf)) {
-    withConf(conf)
-    withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-    withCompressionCodec(CompressionCodecName.SNAPPY)
-    protected def self(): CellWriterBuilder = this
-    protected def getWriteSupport(c: Configuration): WriteSupport[Integer] = new CellWriteSupport(grid)
-  }
-
-  /** A record is a flat cell index; its fields are the row-major bin
-    * coordinates and the count. */
-  private final class CellWriteSupport(grid: BinnedGrid) extends WriteSupport[Integer] {
-    private val names = columns(grid.axes).toArray
-    private val shape = grid.shape.map(_.toLong).toArray
-    private val strides = BinnedGrid.strides(grid.shape)
-    private var out: RecordConsumer = _
-
-    def init(c: Configuration): WriteSupport.WriteContext =
-      new WriteSupport.WriteContext(schema(grid.axes), java.util.Collections.emptyMap[String, String]())
-    def prepareForWrite(rc: RecordConsumer): Unit = out = rc
-
-    def write(flat: Integer): Unit = {
-      val f = flat.longValue
-      out.startMessage()
-      var d = 0
-      while (d < shape.length) {
-        put(d, (f / strides(d)) % shape(d))
-        d += 1
-      }
-      put(d, grid.data(flat))
-      out.endMessage()
-    }
-
-    private def put(i: Int, v: Long): Unit = {
-      out.startField(names(i), i)
-      out.addLong(v)
-      out.endField(names(i), i)
-    }
-  }
-
-  /** Reads the `bin_*`/`cnt` columns of one file (in axis order, whatever
-    * the file's column order) and stores each record's count at its flat
-    * index in `data`. Records are not materialised. */
-  private final class CellReadSupport(axes: Seq[BinAxis], data: Array[Long], file: Path)
-      extends ReadSupport[AnyRef] {
-    private val n = axes.length
-    private val shape = axes.map(_.nbins.toLong).toArray
-    private val strides = BinnedGrid.strides(axes.map(_.nbins))
-
-    override def init(ctx: InitContext): ReadSupport.ReadContext = {
-      val fileSchema = ctx.getFileSchema
-      val fields = columns(axes).map { c =>
-        require(fileSchema.containsField(c), s"$file has no column $c")
-        fileSchema.getType(fileSchema.getFieldIndex(c))
-      }
-      new ReadSupport.ReadContext(new MessageType(fileSchema.getName, fields: _*))
-    }
-
-    def prepareForRead(c: Configuration, kv: java.util.Map[String, String], fileSchema: MessageType,
-                       ctx: ReadSupport.ReadContext): RecordMaterializer[AnyRef] =
-      new RecordMaterializer[AnyRef] {
-        private val vals = new Array[Long](n + 1)
-        private var seen = 0
-        private val converters: Array[Converter] = Array.tabulate(n + 1) { i =>
-          new PrimitiveConverter {
-            override def addLong(v: Long): Unit = { vals(i) = v; seen += 1 }
-          }
-        }
-        private val root = new GroupConverter {
-          def getConverter(i: Int): Converter = converters(i)
-          def start(): Unit = seen = 0
-          def end(): Unit = {
-            if (seen != n + 1) throw new IllegalArgumentException(s"$file: a cell has a null column")
-            var flat = 0L
-            var d = 0
-            while (d < n) {
-              val b = vals(d)
-              if (b < 0 || b >= shape(d))
-                throw new IllegalArgumentException(s"$file: bin_${axes(d).name} = $b outside [0, ${shape(d)})")
-              flat += b * strides(d)
-              d += 1
-            }
-            data(flat.toInt) = vals(n)
-          }
-        }
-        // any non-null marker: the reader treats a null record as "skip"
-        def getCurrentRecord: AnyRef = this
-        def getRootConverter: GroupConverter = root
-      }
   }
 }

@@ -2,12 +2,14 @@ package graft.io
 
 import scala.util.Try
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink helpers — SURVEY.md §2.1 parity: FileCollection-style
@@ -105,7 +107,7 @@ object Sources {
     * chosen file (Spark then types the partition column itself).
     */
   def footerSchema(spark: SparkSession, paths: String*): Option[StructType] = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = parquetConf(spark)
     val roots = paths.map { p =>
       Try {
         val path = new Path(p)
@@ -126,7 +128,8 @@ object Sources {
       val keys = dirs.filter(_.contains('=')).map(_.takeWhile(_ != '=').toLowerCase).toSet
       Try {
         val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter(spark))
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+          new ParquetToSparkSchemaConverter(conf))
       }.toOption.filterNot(_.fieldNames.exists(n => keys(n.toLowerCase)))
     }
   }
@@ -176,16 +179,20 @@ object Sources {
 
   private def isSummary(name: String): Boolean = name == "_common_metadata" || name == "_metadata"
 
-  /** The converter Spark's inference builds, from the same session flags
-    * (`ParquetFileFormat.mergeSchemasInParallel`). */
-  private def converter(spark: SparkSession): ParquetToSparkSchemaConverter = {
+  /** The session's Hadoop conf with the flags Spark's parquet schema
+    * conversion reads set from the session, as `ParquetFileFormat` sets
+    * them on the conf of its readers and of its schema inference. */
+  private[graft] def parquetConf(spark: SparkSession): Configuration = {
     val c = spark.sessionState.conf
-    new ParquetToSparkSchemaConverter(
-      assumeBinaryIsString = c.isParquetBinaryAsString,
-      assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
-      inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
-      nanosAsLong = c.legacyParquetNanosAsLong,
-      respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+    val conf = spark.sessionState.newHadoopConf()
+    Seq(SQLConf.PARQUET_BINARY_AS_STRING -> c.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> c.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> c.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> c.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION -> c.parquetReaderRespectUnknownTypeAnnotation,
+      SQLConf.CASE_SENSITIVE -> c.caseSensitiveAnalysis
+    ).foreach { case (entry, v) => conf.setBoolean(entry.key, v) }
+    conf
   }
 
   /** Parquet sink with append option (`convert(form='parquet')`). */

@@ -2,7 +2,20 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.binning.{BinAxis, BinnedGrid}
+import scala.jdk.CollectionConverters._
+
+import graft.binning.{BinAxis, BinnedGrid, CellsWriter}
+import graft.fit.Fit
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.{PrimitiveType, Type}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -101,5 +114,133 @@ class BinnedGridIoSpec extends AnyFunSuite {
     val kx = axesJson.asInstanceOf[graft.binning.MetaNode.MArr].items.head
       .asInstanceOf[graft.binning.MetaNode.MObj]
     assert(kx.str("unit") == unit)
+  }
+
+  /** The non-empty cells of `grid` in flat order, as (bins…, count). */
+  private def cellsOf(grid: BinnedGrid): Seq[Seq[Long]] = {
+    val str = grid.shape.indices.map(i => grid.shape.drop(i + 1).product)
+    grid.data.indices.filter(grid.data(_) != 0).map { f =>
+      grid.shape.indices.map(d => ((f / str(d)) % grid.shape(d)).toLong) :+ grid.data(f)
+    }
+  }
+
+  private def withFooter[T](dir: String)(body: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(s"$dir/binned/part-00000.parquet"),
+      spark.sparkContext.hadoopConfiguration))
+    try body(r) finally r.close()
+  }
+
+  test("cells spanning several pages and row groups round-trip, counts of 2^31 and 2^32 included") {
+    val grid = sparseGrid(axes3, 7)
+    grid.data(5) = 1L << 31
+    grid.data(grid.data.length - 1) = 1L << 32
+    val dir = tmp("grid_io_pages")
+    CellsWriter.save(grid, spark, dir, pageCells = 7, groupCells = 100)
+    val n = grid.data.count(_ != 0)
+    withFooter(dir) { r =>
+      val groups = r.getRowGroups.asScala.toSeq
+      assert(groups.map(_.getRowCount) == Seq.fill(n / 100)(100L) ++ Seq(n % 100L).filter(_ > 0))
+      groups.foreach { g =>
+        g.getColumns.asScala.foreach { c =>
+          assert(r.readOffsetIndex(c).getPageCount == (g.getRowCount + 6) / 7, s"${c.getPath}")
+        }
+      }
+    }
+    val back = BinnedGrid.load(spark, dir)
+    assert(back.data.sameElements(grid.data))
+    assert(back.data(5) == (1L << 31) && back.data.last == (1L << 32))
+  }
+
+  test("the footer holds REQUIRED INT64 delta-packed SNAPPY chunks with each chunk's min/max") {
+    val grid = sparseGrid(axes3, 8)
+    grid.data(0) = 1L << 40
+    val dir = tmp("grid_io_stats")
+    CellsWriter.save(grid, spark, dir, pageCells = 16, groupCells = 150)
+    val cells = cellsOf(grid)
+    withFooter(dir) { r =>
+      val schema = r.getFooter.getFileMetaData.getSchema
+      assert(schema.getFields.asScala.map(_.getName) == Seq("bin_kx", "bin_ky", "bin_E", "cnt"))
+      schema.getFields.asScala.foreach { f =>
+        assert(f.isRepetition(Type.Repetition.REQUIRED))
+        assert(f.asPrimitiveType.getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT64)
+      }
+      val groups = r.getRowGroups.asScala.toSeq
+      assert(groups.length == (cells.length + 149) / 150)
+      groups.zipWithIndex.foreach { case (g, gi) =>
+        val rows = cells.slice(gi * 150, gi * 150 + 150)
+        g.getColumns.asScala.zipWithIndex.foreach { case (c, ci) =>
+          val st = c.getStatistics
+          assert(c.getCodec == CompressionCodecName.SNAPPY)
+          assert(c.getEncodings.contains(Encoding.DELTA_BINARY_PACKED))
+          assert(c.getValueCount == rows.length)
+          assert(st.getNumNulls == 0)
+          assert(st.genericGetMin == rows.map(_(ci)).min && st.genericGetMax == rows.map(_(ci)).max,
+            s"row group $gi, ${c.getPath}: [${st.genericGetMin}, ${st.genericGetMax}]")
+        }
+      }
+    }
+  }
+
+  test("Spark-written cells with a null column, a bin at nbins or no cnt column are refused") {
+    import spark.implicits._
+    val dir = tmp("grid_io_refused")
+    BinnedGrid.save(sparseGrid(axes3, 9), spark, dir)
+    def refused(df: DataFrame): String = {
+      df.write.mode("overwrite").parquet(s"$dir/binned")
+      intercept[IllegalArgumentException](BinnedGrid.load(spark, dir)).getMessage
+    }
+    val withNull = Seq((1L, 2L, 3L, Option(4L)), (1L, 2L, 4L, None)).toDF("bin_kx", "bin_ky", "bin_E", "cnt")
+    assert(refused(withNull).endsWith(": a cell has a null column"))
+    val atNbins = Seq((3L, 2L, 1L, 5L), (12L, 0L, 0L, 1L)).toDF("bin_kx", "bin_ky", "bin_E", "cnt")
+    assert(refused(atNbins).endsWith(": bin_kx = 12 outside [0, 12)"))
+    val noCnt = Seq((1L, 2L, 3L)).toDF("bin_kx", "bin_ky", "bin_E")
+    assert(refused(noCnt).endsWith(" has no column cnt"))
+  }
+
+  test("a filter on a bin column reads the same cells from disk as from toDF") {
+    val grid = sparseGrid(axes3, 10)
+    val dir = tmp("grid_io_filter")
+    BinnedGrid.save(grid, spark, dir)
+    def rows(df: DataFrame) = df.filter(col("bin_kx") === 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
+    val expected = rows(grid.toDF(spark))
+    assert(expected.nonEmpty)
+    assert(rows(spark.read.parquet(s"$dir/binned")) == expected)
+  }
+
+  test("toDF is one declared partition: a groupBy over it plans no exchange and sums to profile") {
+    val grid = sparseGrid(axes3, 11)
+    val df = grid.toDF(spark).groupBy("bin_kx").agg(sum("cnt"))
+    val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val plan = df.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.isEmpty, s"expected no exchange:\n$plan")
+    val profile = grid.profile(0)
+    assert(got == profile.indices.filter(profile(_) != 0).map(i => i.toLong -> profile(i)).toMap)
+  }
+
+  test("Gaussian fits of toDF's traces are bit-equal to fitGaussian on the same traces") {
+    val axes = Seq(BinAxis("kx", 4, -1.0, 1.0), BinAxis("ky", 3, -1.0, 1.0), BinAxis("E", 40, 0.0, 4.0))
+    val rnd = new scala.util.Random(12)
+    val data = Array.tabulate(4 * 3 * 40) { f =>
+      val (key, e) = (f / 40, f % 40)
+      math.round(500 * math.exp(-0.5 * math.pow((e - 10 - 2 * key) / 3.0, 2))) + rnd.nextInt(3)
+    }
+    val grid = BinnedGrid(data, axes)
+    assert(data.contains(0L))
+    val hist = grid.toDF(spark).withColumn("key", col("bin_kx") * 3 + col("bin_ky"))
+    val got = Fit.fitTraces(Fit.tracesFromHistogram(spark, hist, "key", "bin_E", "cnt"))
+      .collect().map(f => f.key -> f).toMap
+    val expected = (0 until 12).map { key =>
+      val es = (0 until 40).filter(e => data(key * 40 + e) != 0).toArray
+      val (a, c, s, sse, it) = Fit.fitGaussian(es.map(_.toDouble), es.map(e => data(key * 40 + e).toDouble))
+      key.toString -> Fit.GaussFit(key.toString, a, c, s, sse, it)
+    }.toMap
+    assert(got.keySet == expected.keySet)
+    expected.foreach { case (k, f) =>
+      assert(java.lang.Double.doubleToRawLongBits(got(k).center) == java.lang.Double.doubleToRawLongBits(f.center),
+        s"trace $k: ${got(k).center} vs ${f.center}")
+      assert(got(k) == f)
+    }
   }
 }

@@ -19,9 +19,9 @@ import graft.binning.{BinAxis, NdHistogramAgg}
   * }}}
   *
   * `nd_histogram(col1..colN, nbins1, lo1, hi1, ..., nbinsN, loN, hiN)`:
-  * the dense N-D histogram TypedImperativeAggregate (SURVEY.md §4.3.1)
-  * over one [[graft.binning.BinAxis]] per column; returns the flattened
-  * row-major Array[Long] grid.
+  * the N-D histogram aggregate ([[graft.binning.NdHistogramAgg]], counted
+  * in tiles) over one [[graft.binning.BinAxis]] per column; returns the
+  * flattened row-major Array[Long] grid.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,6 +1,6 @@
 package graft.analysis
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
 /** Volume alignment (reference `beamtime.py:18-220`): per-(x, y)-pixel
   * grid search for the (shift, scale) that best aligns each trace with a
@@ -13,6 +13,9 @@ object Alignment {
 
   final case class PixelTrace(x: Int, y: Int, trace: Array[Double])
   final case class AlignResult(x: Int, y: Int, shift: Double, scale: Double, err: Double)
+
+  // Built once: deriving a product encoder reflects over the case class.
+  private lazy val alignResultEncoder: Encoder[AlignResult] = Encoders.product[AlignResult]
 
   /** Evaluate one candidate: mean squared error between `ref` and the
     * shifted/scaled resampling of `trace` (linear interpolation). */
@@ -51,13 +54,11 @@ object Alignment {
   /** Distribute the per-pixel search across the cluster. */
   def alignVolume(traces: Dataset[PixelTrace], ref: Array[Double],
                   shifts: Seq[Double], scales: Seq[Double]): Dataset[AlignResult] = {
-    val spark = traces.sparkSession
-    import spark.implicits._
-    val refB = spark.sparkContext.broadcast(ref)
-    traces.map { t =>
+    val refB = traces.sparkSession.sparkContext.broadcast(ref)
+    traces.map { (t: PixelTrace) =>
       val (sh, sc, e) = gridSearch(refB.value, t.trace, shifts, scales)
       AlignResult(t.x, t.y, sh, sc, e)
-    }
+    }(alignResultEncoder)
   }
 
   /** Apply a fitted (shift, scale) to a trace (resampling). */

@@ -54,28 +54,11 @@ object LensTable {
       daRows(2), daRows(3), daRows(4), daRows(5))
   }
 
-  /** Igor `BinarySearch`: index of the last element <= v (ascending) /
-    * >= v (descending); -1 below the range. Delegates to the existing
-    * [[Analysis.binarySearch]] semantics but local to keep this module
-    * self-contained for arrays. */
-  def binarySearch(arr: Array[Double], v: Double): Int = {
-    val asc = arr.zip(arr.tail).forall { case (a, b) => a <= b }
-    if (asc) {
-      // np.searchsorted(side='left') - 1
-      val i = arr.indexWhere(_ >= v)
-      if (i < 0) arr.length - 1 else i - 1
-    } else {
-      val rev = arr.reverse
-      val i = rev.indexWhere(_ >= v)
-      val pos = if (i < 0) arr.length else i
-      arr.length - pos - 1
-    }
-  }
-
   /** Igor `BinarySearchInterp` (`legacy.py:28-39`): fractional index of
-    * `v` in `arr`, linear between the bracketing elements. */
+    * `v` in `arr`, linear between the bracketing elements; the bracket
+    * is Igor `BinarySearch`, [[Analysis.binarySearch]]. */
   def searchInterp(arr: Array[Double], v: Double): Double = {
-    val i = binarySearch(arr, v)
+    val i = Analysis.binarySearch(arr, v)
     // Exact left-edge match: searchsorted(side='left')-1 yields -1 and
     // the reference's scipy interp1d over the resulting empty slice
     // raises — Igor's real BinarySearch returns the matched index.

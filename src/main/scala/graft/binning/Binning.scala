@@ -52,35 +52,32 @@ case class BinAxis(name: String, nbins: Int, lo: Double, hi: Double) {
 }
 
 /** N-D histogram binning — the reference's core aggregation
-  * (`distributedBinning`, `fprocessing.py:2448-2486`). There are three
-  * entry points, chosen by where the caller wants the result; all three
-  * range-filter and key events with the same Catalyst expressions
+  * (`distributedBinning`, `fprocessing.py:2448-2486`). Every entry point
+  * range-filters and keys events with the same Catalyst expressions
   * ([[BinAxis.pred]], [[BinAxis.bin]], row-major flat key, built by
-  * [[rangedFlatKey]]):
+  * [[rangedFlatKey]]), and counts with one of two kernels, chosen by the
+  * result's shape:
   *
-  *  - [[histogramGrid]] (`EventPipeline.distributedBinning`) returns a
-  *    driver-resident [[BinnedGrid]]. Each task counts its events into
-  *    dense per-tile counters (runs of 2^14 flat cells — Spangle's
-  *    chunking, PAPERS.md) and emits only the tiles it touched, each
-  *    packed to its non-zero cells; one reducer per tile adds them into a
-  *    dense counter, and the driver adds every non-empty tile's packed
-  *    cells into the grid once, as its reduce task's result arrives. This
-  *    is the reference's per-partition histogram + parallel combine
-  *    (`fprocessing.py:1722-1740`) with the combine distributed by tile:
-  *    no per-cell shuffle rows, no zero cells on the wire, and besides
-  *    the grid the driver holds only the packed tiles of the reduce
-  *    results in flight.
+  *  - a dense result is counted in tiles ([[TileTally]]): runs of 2^14
+  *    flat cells — Spangle's chunking, PAPERS.md — of which a task holds
+  *    and ships only those its events touched, packed to their non-zero
+  *    cells. This is the reference's per-partition histogram + combine
+  *    (`fprocessing.py:1722-1740`). [[histogramGrid]]
+  *    (`EventPipeline.distributedBinning`) returns a driver-resident
+  *    [[BinnedGrid]]: one reducer per tile adds the tasks' tiles, and the
+  *    driver adds every non-empty tile into the grid once, as its reduce
+  *    task's result arrives, so the combine is distributed by tile. The
+  *    `nd_histogram` SQL function (`GraftExtensions`, [[NdHistogramAgg]])
+  *    returns the grid as one SQL array, merged by tile in its final
+  *    aggregate, for grids of up to [[NdHistogramAgg.DENSE_MAX_CELLS]]
+  *    cells.
   *
-  *  - [[histogramNd]] (`EventPipeline.binnedTable`, the registered
-  *    `hist_*` queries) returns `bin_<axis>…, cnt` rows and stays
-  *    relational: `groupBy(flat key).count()`, partial + final hash
-  *    aggregation keyed by cell. Its output stays distributed, so it
-  *    scales to grids no driver array could hold.
-  *
-  *  - the `nd_histogram` SQL function (`GraftExtensions`) returns the
-  *    flattened grid as one SQL array: [[NdHistogramAgg]] counts the
-  *    flat key into one dense buffer per task, for grids of up to
-  *    [[NdHistogramAgg.DENSE_MAX_CELLS]] cells.
+  *  - distributed rows are aggregated by cell in Catalyst:
+  *    [[histogramNd]] (`EventPipeline.binnedTable`, the registered
+  *    `hist_*` queries) returns `bin_<axis>…, cnt` rows through
+  *    `groupBy(flat key).count()`, partial + final hash aggregation
+  *    keyed by cell. Its output stays distributed, so it scales to grids
+  *    no driver array could hold.
   */
 object Binning {
 
@@ -94,6 +91,11 @@ object Binning {
     }
     (pred, flat)
   }
+
+  /** Cells of a grid of shape `nbins`, exact: an `Int` or `Long` product
+    * of large axes wraps. Each entry point checks it against its own
+    * limit before it sizes anything. */
+  private[binning] def cellCount(nbins: Seq[Int]): BigInt = nbins.map(BigInt(_)).product
 
   /** `df` range-filtered on `axes`, and the flat key ([[rangedFlatKey]]). */
   private def filteredFlatKey(df: DataFrame, axes: Seq[(Column, BinAxis)]): (DataFrame, Column) = {
@@ -118,10 +120,9 @@ object Binning {
         .groupBy(flat.as(s"bin_${axes.head._2.name}"))
         .agg(count(lit(1)).as("cnt"))
     } else {
-      // overflow-safe cell count; flat keys must stay below 2^53 because
-      // decomposition strides multiply back up through long arithmetic
-      // (and a BigInt bound also catches Long-overflowing products)
-      val cells = axes.map(a => BigInt(a._2.nbins)).product
+      // flat keys must stay below 2^53 because decomposition strides
+      // multiply back up through long arithmetic
+      val cells = cellCount(axes.map(_._2.nbins))
       require(cells < (BigInt(1) << 53), s"grid of $cells cells too large for flat key")
       val strides = BinnedGrid.strides(axes.map(_._2.nbins))
       val binCols = axes.zipWithIndex.map { case ((_, a), i) =>
@@ -141,8 +142,8 @@ object Binning {
 
   /** Bin `df` straight into a driver-resident [[BinnedGrid]] over `axes`
     * (same cells and counts as [[histogramNd]]'s rows). Catalyst runs the
-    * range filter and the flat key; each task counts its events into
-    * per-tile [[TileCounter]]s and emits the tiles it touched, packed,
+    * range filter and the flat key; each task counts its events into a
+    * [[TileTally]] and emits the tiles it touched, packed,
     * which `min(tiles, spark.sql.shuffle.partitions)` reducers merge by
     * tile; the driver adds each non-empty tile's packed cells into the
     * grid as its reduce task's result arrives ([[foreachTile]]). The
@@ -155,7 +156,7 @@ object Binning {
 
   /** Cell count of the grid over `axes`, refused above [[MaxGridCells]]. */
   private def gridCells(axes: Seq[(Column, BinAxis)]): Int = {
-    val cells = axes.map(a => BigInt(a._2.nbins)).product
+    val cells = cellCount(axes.map(_._2.nbins))
     require(cells <= MaxGridCells,
       s"grid ${axes.map(_._2.nbins).mkString("x")} = $cells cells exceeds the driver-array " +
         s"limit of $MaxGridCells; keep it distributed with EventPipeline.binnedTable " +
@@ -169,11 +170,10 @@ object Binning {
     * tiles of the results in flight besides what `f` keeps.
     *
     * Tiles are dense in memory and packed on the wire: map tasks emit
-    * `(tile, packed)`, `combineByKey` (no map-side combine; each task
-    * already emits one record per touched tile) adds them into one dense
-    * [[TileCounter]] per tile on its reducer, and each reduce task
-    * returns its tiles packed again. Shuffle records and task results are
-    * plain `(Int, Array[Byte])` pairs, the same under any serializer. */
+    * `(tile, packed)`, one record per touched tile, partitioned by tile;
+    * each reduce task adds its records into one [[TileTally]] and returns
+    * its tiles packed again. Shuffle records and task results are plain
+    * `(Int, Array[Byte])` pairs, the same under any serializer. */
   private[binning] def foreachTile(df: DataFrame, axes: Seq[(Column, BinAxis)])(
       f: (Int, Array[Byte]) => Unit): Unit = {
     val n = gridCells(axes)
@@ -183,10 +183,9 @@ object Binning {
     SQLExecution.withNewExecutionId(qe, Some("histogramGrid")) {
       val merged = qe.toRdd
         .mapPartitions(rows => TileCounter.countTiles(rows, n))
-        .combineByKey(TileCounter.unpack, (c: TileCounter, p: Array[Byte]) => c.addPacked(p),
-          (a: TileCounter, b: TileCounter) => a.merge(b), new HashPartitioner(reducers), mapSideCombine = false)
-      merged.sparkContext.runJob(merged,
-        (it: Iterator[(Int, TileCounter)]) => it.map { case (t, c) => t -> c.pack() }.toArray,
+        .partitionBy(new HashPartitioner(reducers))
+        .mapPartitions(tiles => new TileTally(n).addPacked(tiles).packed())
+      merged.sparkContext.runJob(merged, (it: Iterator[(Int, Array[Byte])]) => it.toArray,
         (_: Int, part: Array[(Int, Array[Byte])]) => part.foreach { case (t, p) => f(t, p) })
     }
   }
@@ -201,13 +200,11 @@ object Binning {
   }
 
   /** Per-axis 1D histograms for QC — reference `viewEventHistogram`
-    * (`fprocessing.py:2763-2805`). One row per (axis, bin). */
+    * (`fprocessing.py:2763-2805`): one [[histogramNd]] per axis, one row
+    * per (axis, bin). */
   def eventHistograms(df: DataFrame, axes: Seq[(Column, BinAxis)]): DataFrame =
     axes.map { case (c, a) =>
-      df.filter(a.pred(c))
-        .groupBy(a.bin(c).as("bin"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(lit(a.name).as("axis"), col("bin"), col("cnt"))
+      histogramNd(df, Seq(c -> a)).select(lit(a.name).as("axis"), col(s"bin_${a.name}").as("bin"), col("cnt"))
     }.reduce(_.unionByName(_))
 
   /** Block-rebin of a sparse histogram by integer factors per axis —

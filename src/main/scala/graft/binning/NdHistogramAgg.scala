@@ -1,7 +1,5 @@
 package graft.binning
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnsafeProjection}
@@ -11,66 +9,57 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.when
 import org.apache.spark.sql.types._
 
-/** The aggregate behind the `nd_histogram` SQL function: one dense
-  * row-major `Array[Long]` grid of shape `nbins` per task, merged
-  * map→final on one reducer, so grids are capped at
-  * [[NdHistogramAgg.DENSE_MAX_CELLS]]. Its one input is [[Binning]]'s
-  * flat key, null for an event outside the range (or null, or NaN) on
-  * any axis — the bin math lives in [[BinAxis]] alone — and `update`
-  * adds 1 at a non-null key. */
+/** The aggregate behind the `nd_histogram` SQL function: the flattened
+  * row-major grid of shape `nbins` as one SQL array. Each group counts
+  * into a [[TileTally]], so a task holds and ships only the tiles its
+  * events touched, packed, and the final merge adds tallies by tile.
+  * Its one input is [[Binning]]'s flat key, null for an event outside
+  * the range (or null, or NaN) on any axis — the bin math lives in
+  * [[BinAxis]] alone — and `update` counts a non-null key. The result is
+  * one SQL row, so grids are capped at [[NdHistogramAgg.DENSE_MAX_CELLS]]. */
 case class NdHistogramAgg(
     child: Expression,
     nbins: Array[Int],
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
+  extends TypedImperativeAggregate[TileTally] with UnaryLike[Expression] {
 
-  // Guard BEFORE any Int product: 65536x65536 axes would silently wrap
-  // nbins.product (to 0 or negative) and surface as an opaque
-  // NegativeArraySizeException deep inside the aggregate.
-  require(nbins.map(BigInt(_)).product <= NdHistogramAgg.DENSE_MAX_CELLS,
-    s"nd_histogram dense path: ${nbins.mkString("x")} = " +
-      s"${nbins.map(BigInt(_)).product} cells exceeds the dense-grid limit " +
-      s"of ${NdHistogramAgg.DENSE_MAX_CELLS} (per-partition buffers would " +
-      "dominate); use the relational path (Binning.histogramNd) for grids this large")
-
-  private val totalBins: Int = nbins.product
+  private val cells: Int = {
+    val n = Binning.cellCount(nbins)
+    require(n <= NdHistogramAgg.DENSE_MAX_CELLS,
+      s"nd_histogram dense path: ${nbins.mkString("x")} = $n cells exceeds the dense-grid limit " +
+        s"of ${NdHistogramAgg.DENSE_MAX_CELLS} (the grid is one SQL row); use the relational " +
+        "path (Binning.histogramNd) for grids this large")
+    n.toInt
+  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](totalBins)
+  override def createAggregationBuffer(): TileTally = new TileTally(cells)
 
   // Codegen-compiled projection of the key, built once per task:
   // per-row interpreted `child.eval` costs ~3-4x in the update hot loop
   // (measured at 50M rows).
   @transient private lazy val inputProj = UnsafeProjection.create(Seq(child))
 
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
+  override def update(buffer: TileTally, input: InternalRow): TileTally = {
     val row = inputProj(input)
-    if (!row.isNullAt(0)) buffer(row.getLong(0).toInt) += 1L
+    if (!row.isNullAt(0)) buffer.add(row.getLong(0).toInt)
     buffer
   }
 
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < totalBins) { b1(i) += b2(i); i += 1 }
-    b1
+  override def merge(b1: TileTally, b2: TileTally): TileTally = b1.merge(b2)
+
+  override def eval(buffer: TileTally): Any = {
+    val data = new Array[Long](cells)
+    buffer.addInto(data)
+    new GenericArrayData(data)
   }
 
-  override def eval(buffer: Array[Long]): Any = new GenericArrayData(buffer)
+  override def serialize(buffer: TileTally): Array[Byte] = buffer.write()
 
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(totalBins * 8)
-    bb.asLongBuffer().put(buffer)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](totalBins)
-    ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-    out
-  }
+  override def deserialize(bytes: Array[Byte]): TileTally = new TileTally(cells).read(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): NdHistogramAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -83,9 +72,9 @@ case class NdHistogramAgg(
 
 object NdHistogramAgg {
 
-  /** Hard cell-count ceiling (~1e7 cells = an 80 MB Array[Long] buffer
-    * per partition); beyond it the per-partition buffers dominate AND
-    * buffer sizing risks Int overflow, so the grid is refused outright. */
+  /** Hard cell-count ceiling: ~1e7 cells is an 80 MB `Array[Long]` in
+    * one SQL row, beyond which a grid belongs in rows
+    * ([[Binning.histogramNd]]) or on the driver ([[Binning.histogramGrid]]). */
   val DENSE_MAX_CELLS: BigInt = BigInt(10000000)
 
   /** `nd_histogram` over `axes`, each column cast to double and binned

@@ -1,5 +1,7 @@
 package graft.binning
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+
 import org.apache.spark.sql.catalyst.InternalRow
 
 /** Event counts of one tile of a flattened grid: the `len` consecutive
@@ -7,8 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
   *
   * Dense in memory, packed on the wire. A counter holds its cells as one
   * dense `Array[Long]` (128 KB for a full tile), which is what counting
-  * and merging index into; it stays `Serializable` in that form, so a
-  * reducer can spill it. Between tasks and to the driver a tile travels
+  * and merging index into. Between tasks and to the driver a tile travels
   * as [[pack]]'s bytes: the tile length, then one (gap, count) pair per
   * non-zero cell, every number an unsigned LEB128 varint. The gap is the
   * number of zero cells skipped since the previous non-zero cell (or the
@@ -74,13 +75,13 @@ private[binning] final class TileCounter(len: Int) extends Serializable {
 private[binning] object TileCounter {
 
   /** Cells per tile: a fixed run of 2^14 consecutive flat cells. */
-  private val Bits = 14
+  private[binning] val Bits = 14
   val Cells: Int = 1 << Bits
-  private val Mask = Cells - 1
+  private[binning] val Mask = Cells - 1
 
   /** Offsets a task stages per touched tile before it counts them into
     * the tile's dense array (4 KB of `Int`s). */
-  private val Staged = 1024
+  private[binning] val Staged = 1024
 
   def tiles(cells: Int): Int = (cells + Mask) >>> Bits
 
@@ -90,49 +91,11 @@ private[binning] object TileCounter {
 
   /** One task's counts: each row is one in-range event whose column 0 is
     * its `long` flat cell index. Emits `(tile, packed counts)` for the
-    * tiles the task touched only.
-    *
-    * The counting is buffered. A task may touch a hundred tiles, 128 KB
-    * each, more than a core's cache holds, so incrementing each event's
-    * cell directly would miss the cache on most events. Instead each
-    * touched tile gets a small buffer of in-tile offsets, appended to in
-    * order; a full buffer, and at the end every buffer, is counted into
-    * its one tile at a time, while that tile stays in cache. */
+    * tiles the task touched only. */
   def countTiles(rows: Iterator[InternalRow], cells: Int): Iterator[(Int, Array[Byte])] = {
-    val n = tiles(cells)
-    val counters = new Array[TileCounter](n)
-    val staged = new Array[Array[Int]](n)
-    val fill = new Array[Int](n)
-    while (rows.hasNext) {
-      val flat = rows.next().getLong(0).toInt
-      val t = flat >>> Bits
-      var buf = staged(t)
-      if (buf == null) {
-        buf = new Array[Int](Staged)
-        staged(t) = buf
-        counters(t) = new TileCounter(length(cells, t))
-      }
-      val k = fill(t)
-      buf(k) = flat & Mask
-      if (k + 1 == Staged) {
-        counters(t).addAll(buf, Staged)
-        fill(t) = 0
-      } else fill(t) = k + 1
-    }
-    (0 until n).iterator.filter(counters(_) != null).map { t =>
-      val c = counters(t)
-      c.addAll(staged(t), fill(t))
-      counters(t) = null
-      staged(t) = null
-      t -> c.pack()
-    }
-  }
-
-  /** A dense counter holding a packed tile's counts. */
-  def unpack(bytes: Array[Byte]): TileCounter = {
-    val len = new Reader(bytes).next()
-    require(len > 0 && len <= Cells, s"packed tile of $len cells")
-    new TileCounter(len.toInt).addPacked(bytes)
+    val tally = new TileTally(cells)
+    while (rows.hasNext) tally.add(rows.next().getLong(0).toInt)
+    tally.packed()
   }
 
   /** Add the counts of a packed tile ([[TileCounter.pack]]) into `into`
@@ -192,5 +155,103 @@ private[binning] object TileCounter {
       } while ((b & 0x80) != 0)
       v
     }
+  }
+}
+
+/** One task's counts over a grid of `cells` flat cells: a dense
+  * [[TileCounter]] for each tile its events touched, and nothing for the
+  * others. [[TileCounter.countTiles]] counts a task's rows in one, a
+  * [[Binning.histogramGrid]] reducer merges its tiles in one, and the
+  * `nd_histogram` aggregate ([[NdHistogramAgg]]) keeps one per group
+  * (hence public: it is that aggregate's buffer type).
+  *
+  * The counting is buffered. A task may touch a hundred tiles, 128 KB
+  * each, more than a core's cache holds, so incrementing each event's
+  * cell directly would miss the cache on most events. Instead each
+  * touched tile gets a small buffer of in-tile offsets, appended to in
+  * order; a full buffer, and at the end every buffer, is counted into
+  * its one tile at a time, while that tile stays in cache. */
+final class TileTally private[binning] (cells: Int) {
+  import TileCounter.{Bits, Mask, Staged}
+
+  private val counters = new Array[TileCounter](TileCounter.tiles(cells))
+  private val staged = new Array[Array[Int]](counters.length)
+  private val fill = new Array[Int](counters.length)
+
+  /** Count one event at flat cell `flat`. */
+  def add(flat: Int): Unit = {
+    val t = flat >>> Bits
+    var buf = staged(t)
+    if (buf == null) {
+      buf = new Array[Int](Staged)
+      staged(t) = buf
+      counter(t)
+    }
+    val k = fill(t)
+    buf(k) = flat & Mask
+    fill(t) = k + 1
+    if (k + 1 == Staged) flush(t)
+  }
+
+  /** Tile `t`'s counter, created on first use. */
+  private def counter(t: Int): TileCounter = {
+    if (counters(t) == null) counters(t) = new TileCounter(TileCounter.length(cells, t))
+    counters(t)
+  }
+
+  /** Count tile `t`'s staged offsets into its counter. */
+  private def flush(t: Int): Unit = {
+    counters(t).addAll(staged(t), fill(t))
+    fill(t) = 0
+  }
+
+  /** Add packed tiles, `(tile, packed counts)` as [[packed]] emits them,
+    * and return this tally. */
+  def addPacked(tiles: Iterator[(Int, Array[Byte])]): TileTally = {
+    for ((t, p) <- tiles) counter(t).addPacked(p)
+    this
+  }
+
+  /** Add `o`'s counts into this tally and return it; `o` is left empty. */
+  def merge(o: TileTally): TileTally = addPacked(o.packed())
+
+  /** The touched tiles as `(tile, packed counts)`, in tile order. Each
+    * tile is released as it is emitted, so the tally is empty once the
+    * iterator is through. */
+  def packed(): Iterator[(Int, Array[Byte])] = {
+    for (t <- counters.indices if fill(t) > 0) flush(t)
+    counters.indices.iterator.filter(counters(_) != null).map { t =>
+      val p = counters(t).pack()
+      counters(t) = null
+      staged(t) = null
+      t -> p
+    }
+  }
+
+  /** Add every touched tile's counts into `data`, a grid of `cells`
+    * cells, the way [[Binning.histogramGrid]]'s driver does; the tally is
+    * left empty. */
+  def addInto(data: Array[Long]): Unit =
+    for ((t, p) <- packed()) TileCounter.addPacked(p, data, t * TileCounter.Cells)
+
+  /** [[packed]]'s records as bytes: tile id, byte length, bytes. */
+  def write(): Array[Byte] = {
+    val bytes = new ByteArrayOutputStream
+    val out = new DataOutputStream(bytes)
+    for ((t, p) <- packed()) { out.writeInt(t); out.writeInt(p.length); out.write(p) }
+    out.close()
+    bytes.toByteArray
+  }
+
+  /** Add the tiles of [[write]]'s bytes into this tally and return it. */
+  def read(bytes: Array[Byte]): TileTally = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    while (in.available() > 0) {
+      val t = in.readInt()
+      val p = new Array[Byte](in.readInt())
+      in.readFully(p)
+      counter(t).addPacked(p)
+    }
+    this
   }
 }

@@ -1,6 +1,6 @@
 package graft.fit
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed per-trace curve fitting — the engine's replacement for the
@@ -20,6 +20,12 @@ object Fit {
                             sigma: Double, sse: Double, iters: Int)
   final case class VoigtFit(key: String, amp: Double, center: Double,
                             sigma: Double, gamma: Double, sse: Double, iters: Int)
+
+  // Built once: deriving a product encoder reflects over the case class,
+  // which costs more than fitting a small Dataset of traces.
+  private lazy val traceEncoder: Encoder[Trace] = Encoders.product[Trace]
+  private lazy val gaussFitEncoder: Encoder[GaussFit] = Encoders.product[GaussFit]
+  private lazy val voigtFitEncoder: Encoder[VoigtFit] = Encoders.product[VoigtFit]
 
   @inline def gaussian(amp: Double, ctr: Double, sig: Double, x: Double): Double =
     amp * math.exp(-(x - ctr) * (x - ctr) / (2 * sig * sig))
@@ -255,23 +261,19 @@ object Fit {
   }
 
   /** Fit every trace in parallel across the cluster. */
-  def fitTraces(traces: Dataset[Trace]): Dataset[GaussFit] = {
-    import traces.sparkSession.implicits._
-    traces.map { t =>
+  def fitTraces(traces: Dataset[Trace]): Dataset[GaussFit] =
+    traces.map { (t: Trace) =>
       val (a, c, s, sse, it) = fitGaussian(t.xs, t.ys)
       GaussFit(t.key, a, c, s, sse, it)
-    }
-  }
+    }(gaussFitEncoder)
 
   /** [[fitTraces]] with the true-Voigt lineshape — same distributed
     * shape (per-trace fits are independent `Dataset.map` work). */
-  def fitTracesVoigt(traces: Dataset[Trace]): Dataset[VoigtFit] = {
-    import traces.sparkSession.implicits._
-    traces.map { t =>
+  def fitTracesVoigt(traces: Dataset[Trace]): Dataset[VoigtFit] =
+    traces.map { (t: Trace) =>
       val (a, c, s, g, sse, it) = fitVoigt(t.xs, t.ys)
       VoigtFit(t.key, a, c, s, g, sse, it)
-    }
-  }
+    }(voigtFitEncoder)
 
   /** Sequential bootstrap fitting with forward parameter propagation
     * (reference `bootstrapfit` with `pbar=True`, `analysis.py:3132-3139`):
@@ -322,13 +324,11 @@ object Fit {
     * `keyCol`, (bin, cnt) pairs sorted by bin. */
   def tracesFromHistogram(spark: SparkSession,
                           hist: org.apache.spark.sql.DataFrame,
-                          keyCol: String, binCol: String, cntCol: String): Dataset[Trace] = {
-    import spark.implicits._
+                          keyCol: String, binCol: String, cntCol: String): Dataset[Trace] =
     hist.groupBy(col(keyCol))
       .agg(sort_array(collect_list(struct(col(binCol), col(cntCol)))).as("pts"))
       .select(col(keyCol).cast("string").as("key"),
         expr("transform(pts, p -> CAST(p." + binCol + " AS DOUBLE))").as("xs"),
         expr("transform(pts, p -> CAST(p." + cntCol + " AS DOUBLE))").as("ys"))
-      .as[Trace]
-  }
+      .as(traceEncoder)
 }

@@ -55,19 +55,13 @@ object StreamOps {
   }
 
   /** Windowed streaming histogram: per (tumbling time window, bin) counts
-    * with a watermark — the streaming form of the core binning operator.
+    * with a watermark — the streaming form of the core binning operator,
+    * [[batchHistogram]] over the watermarked stream.
     */
   def streamingHistogram(events: DataFrame, axis: BinAxis,
                          windowLen: String = "1 minute",
                          watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .filter(axis.pred(col("value")))
-      .groupBy(window(col("ts"), windowLen).as("w"),
-        axis.bin(col("value")).as(s"bin_${axis.name}"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(unix_timestamp(col("w.start")).as("w_start"),
-        col(s"bin_${axis.name}"), col("cnt"))
+    batchHistogram(events.withWatermark("ts", watermark), axis, windowLen)
 
   /** Streaming exact dedup: drop events whose dedup key was already
     * seen within the watermark horizon (`dropDuplicatesWithinWatermark`

@@ -7,6 +7,8 @@ import org.apache.spark.{ListenerBusDrain, SparkConf}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,8 +21,9 @@ import graft.ops.EventQueries
   * engine behind `EventPipeline.distributedBinning`),
   * [[Binning.histogramNd]]'s rows and the `nd_histogram` SQL function —
   * against a plain-Scala reference binner on the edge inputs real
-  * detector data brings; plus [[BinnedGrid]]'s index checks and
-  * [[TileCounter]]'s merge and serialization. */
+  * detector data brings; plus [[BinnedGrid]]'s index checks,
+  * [[TileCounter]]'s and [[TileTally]]'s merge and serialization, and
+  * the guard that keeps the tiled kernel the only counting kernel. */
 class GridBinningSpec extends AnyFunSuite {
 
   /** Reference binner, independent of Catalyst: coordinate d of a row is
@@ -185,6 +188,39 @@ class GridBinningSpec extends AnyFunSuite {
     val dense = tiles.length.toLong * TileCounter.Cells * 8
     assert(results < dense / 64, s"$results bytes of task results for ${tiles.length} tiles")
     assert(shuffled > 0 && shuffled < dense / 64, s"$shuffled shuffle bytes for ${tiles.length} tiles")
+    // nd_histogram's partial aggregates are the same packed tiles, not
+    // one whole grid per task
+    val (sql, _, sqlShuffled) = taskBytes(NdHistogramSql.grid(df, axes.map(a => col(a.name) -> a)))
+    assert(sql.sameElements(g.data))
+    assert(sqlShuffled > 0 && sqlShuffled < dense / 64, s"nd_histogram: $sqlShuffled shuffle bytes for ${tiles.length} tiles")
+  }
+
+  test("nd_histogram per group equals the reference when the aggregate falls back to sorting") {
+    // 40000 cells (3 tiles) in 7 groups over 4 partitions: with the
+    // fallback threshold at 2 groups, the partial and the final aggregate
+    // both serialize tallies mid-aggregation and merge them after the sort
+    val axes = Seq(BinAxis("x", 200, 0.0, 1.0), BinAxis("y", 200, 0.0, 1.0))
+    val rows = uniform(20000, axes, 19)
+    val groups = 7
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ (i % groups)) }, 4),
+      StructType(axes.map(a => StructField(a.name, DoubleType)) :+ StructField("g", IntegerType)))
+    val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "2")
+    val q = NdHistogramSql.grouped(df, axes.map(a => col(a.name) -> a), col("g"))
+    val got = try q.collect().map(r => r.getInt(0) -> r.getSeq[Long](1).toArray).toMap
+      finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(got.keySet == (0 until groups).toSet)
+    object stages extends AdaptiveSparkPlanHelper
+    val fellBack = stages.collect(q.queryExecution.executedPlan) {
+      case a: ObjectHashAggregateExec => a.metrics("numTasksFallBacked").value
+    }.sum
+    assert(fellBack >= 4, s"$fellBack aggregate tasks fell back to sorting")
+    for (g <- 0 until groups) {
+      val want = reference(rows.indices.filter(_ % groups == g).map(rows), axes)
+      assert(got(g).sameElements(want), s"group $g: first differing cell: ${want.indices.find(i => got(g)(i) != want(i))}")
+    }
   }
 
   test("3-D grid of 7 x 11 x 300 cells (a partial last tile)") {
@@ -289,23 +325,62 @@ class GridBinningSpec extends AnyFunSuite {
       3 -> (huge, 7232))
     assert(dense(huge, 7232)(7231) == 1L << 36)
 
+    // a tally over the same grid holding tiles 1 and 2's counts (tile 1
+    // fills its staging buffer many times over) and a few in tile 3
+    val cells = 3 * full + 7232
+    def tally(): TileTally = {
+      val t = new TileTally(cells)
+      (0 until full).foreach(i => (0 to i % 3).foreach(_ => t.add(full + i)))
+      Seq(0, 1, 1, 200, 16383).foreach(i => t.add(2 * full + i))
+      Seq(0, 7231, 7231).foreach(i => t.add(3 * full + i))
+      t
+    }
+    val tallied = new Array[Long](cells)
+    tally().addInto(tallied)
+    assert(tallied.slice(0, full).forall(_ == 0))
+    assert(tallied.slice(full, 2 * full).toSeq == dense(everyCell, full))
+    assert(tallied.slice(2 * full, 3 * full).toSeq == dense(sparse, full))
+    assert(tallied.sum == dense(everyCell, full).sum + 5 + 3)
+
     val conf = new SparkConf(false)
     for (ser <- Seq(new JavaSerializer(conf).newInstance(), new KryoSerializer(conf).newInstance())) {
       // a grid of 3 full tiles and the partial one, filled from the packed records
-      val data = new Array[Long](3 * full + 7232)
+      val data = new Array[Long](cells)
       for ((t, (c, len)) <- tiles) {
         val rec = ser.deserialize[(Int, Array[Byte])](ser.serialize(t -> c.pack()))
         assert(rec._1 == t)
         TileCounter.addPacked(rec._2, data, t * full)
-        assert(dense(TileCounter.unpack(rec._2), len) == dense(c, len), s"tile $t via $ser")
+        assert(dense(new TileCounter(len).addPacked(rec._2), len) == dense(c, len), s"tile $t via $ser")
         assert(data.slice(t * full, t * full + len).toSeq == dense(c, len), s"tile $t via $ser")
       }
+      // the tally's bytes read back to the same cells, and merge adds
+      val back = new TileTally(cells).read(ser.deserialize[Array[Byte]](ser.serialize(tally().write())))
+      val twice = new Array[Long](cells)
+      back.merge(new TileTally(cells).read(tally().write())).addInto(twice)
+      assert(twice.toSeq == tallied.map(_ * 2).toSeq, s"tally via $ser")
     }
+    assert(new TileTally(cells).write().isEmpty)
     // an all-zero tile packs to its length; cells below 2^21 counts take at most 6 bytes
     assert(new TileCounter(full).pack().length == 3)
     assert(everyCell.pack().length <= 3 + 6 * full)
     assert(huge.pack().length <= 3 + 2 * 12)
     // a tile never lands outside the grid
     intercept[IllegalArgumentException](TileCounter.addPacked(sparse.pack(), new Array[Long](full), 1))
+  }
+
+  test("one counting kernel: TileCounter is built only in TileCounter.scala, no whole-grid buffer") {
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val sources = Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+    def holders(piece: String): Seq[String] =
+      sources.collect { case (p, text) if text.contains(piece) => p.getFileName.toString }.toSeq
+    assert(holders("new TileCounter(") == Seq("TileCounter.scala"),
+      s"tiles are counted through TileTally; found in: ${holders("new TileCounter(").mkString(", ")}")
+    // a whole-grid aggregation buffer per task grows with the grid, not the events
+    assert(holders("TypedImperativeAggregate[Array[Long]]").isEmpty,
+      s"whole-grid aggregation buffer in: ${holders("TypedImperativeAggregate[Array[Long]]").mkString(", ")}")
   }
 }

@@ -14,11 +14,23 @@ object NdHistogramSql {
     val spark = df.sparkSession
     GraftExtensions.register(spark)
     df.select(axes.indices.map(d => axes(d)._1.as(s"a$d")): _*).createOrReplaceTempView("nd_histogram_in")
-    val args = axes.indices.map(d => s"a$d") ++
-      axes.flatMap { case (_, a) => Seq(a.nbins.toString, a.lo.toString, a.hi.toString) }
-    spark.sql(s"SELECT nd_histogram(${args.mkString(", ")}) FROM nd_histogram_in")
+    spark.sql(s"SELECT nd_histogram(${args(axes)}) FROM nd_histogram_in")
       .head().getSeq[Long](0).toArray
   }
+
+  /** `nd_histogram` with `GROUP BY key`: one `(k, grid)` row per value of
+    * `key`, each grid as [[grid]] returns it. */
+  def grouped(df: DataFrame, axes: Seq[(Column, BinAxis)], key: Column): DataFrame = {
+    val spark = df.sparkSession
+    GraftExtensions.register(spark)
+    df.select(key.as("k") +: axes.indices.map(d => axes(d)._1.as(s"a$d")): _*)
+      .createOrReplaceTempView("nd_histogram_in")
+    spark.sql(s"SELECT k, nd_histogram(${args(axes)}) AS grid FROM nd_histogram_in GROUP BY k")
+  }
+
+  private def args(axes: Seq[(Column, BinAxis)]): String =
+    (axes.indices.map(d => s"a$d") ++
+      axes.flatMap { case (_, a) => Seq(a.nbins.toString, a.lo.toString, a.hi.toString) }).mkString(", ")
 
   /** The non-empty cells of [[grid]], as bin tuple → count. */
   def cells(df: DataFrame, axes: Seq[(Column, BinAxis)]): Map[Seq[Long], Long] =

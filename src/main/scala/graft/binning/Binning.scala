@@ -2,7 +2,7 @@ package graft.binning
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -20,8 +20,10 @@ import org.apache.spark.sql.types.LongType
   * tree — a single source of truth for bin math.
   */
 case class BinAxis(name: String, nbins: Int, lo: Double, hi: Double) {
-  require(nbins > 0 && hi > lo, s"bad axis $name")
   val width: Double = hi - lo
+  // an infinite lo, hi or width (hi - lo overflowing) sends every event to bin 0
+  require(nbins > 0 && hi > lo && !lo.isInfinite && !hi.isInfinite && !width.isInfinite,
+    s"bad axis $name: $nbins bins over [$lo, $hi)")
   def step: Double = width / nbins
 
   /** Bin index expression (LongType) for a value column. Clamped to
@@ -66,11 +68,14 @@ case class BinAxis(name: String, nbins: Int, lo: Double, hi: Double) {
   *    (`EventPipeline.distributedBinning`) returns a driver-resident
   *    [[BinnedGrid]]: one reducer per tile adds the tasks' tiles, and the
   *    driver adds every non-empty tile into the grid once, as its reduce
-  *    task's result arrives, so the combine is distributed by tile. The
-  *    `nd_histogram` SQL function (`GraftExtensions`, [[NdHistogramAgg]])
-  *    returns the grid as one SQL array, merged by tile in its final
-  *    aggregate, for grids of up to [[NdHistogramAgg.DENSE_MAX_CELLS]]
-  *    cells.
+  *    task's result arrives, so the combine is distributed by tile. Its
+  *    map side is chosen by the executed plan: a columnar file scan →
+  *    literal-comparison filter → key on scan columns is counted straight
+  *    from the scan's column batches ([[BatchBinner]]), any other plan
+  *    from Catalyst's rows. The `nd_histogram` SQL function
+  *    (`GraftExtensions`, [[NdHistogramAgg]]) returns the grid as one SQL
+  *    array, merged by tile in its final aggregate, for grids of up to
+  *    [[NdHistogramAgg.DENSE_MAX_CELLS]] cells.
   *
   *  - distributed rows are aggregated by cell in Catalyst:
   *    [[histogramNd]] (`EventPipeline.binnedTable`, the registered
@@ -141,9 +146,11 @@ object Binning {
   private val MaxGridCells: Int = Int.MaxValue - 8
 
   /** Bin `df` straight into a driver-resident [[BinnedGrid]] over `axes`
-    * (same cells and counts as [[histogramNd]]'s rows). Catalyst runs the
-    * range filter and the flat key; each task counts its events into a
-    * [[TileTally]] and emits the tiles it touched, packed,
+    * (same cells and counts as [[histogramNd]]'s rows). The range filter
+    * and the flat key are Catalyst's, evaluated from column batches on a
+    * columnar scan → filter → key plan and as rows otherwise (the
+    * executed plan chooses, [[foreachTile]]); each task counts its events
+    * into a [[TileTally]] and emits the tiles it touched, packed,
     * which `min(tiles, spark.sql.shuffle.partitions)` reducers merge by
     * tile; the driver adds each non-empty tile's packed cells into the
     * grid as its reduce task's result arrives ([[foreachTile]]). The
@@ -173,21 +180,39 @@ object Binning {
     * `(tile, packed)`, one record per touched tile, partitioned by tile;
     * each reduce task adds its records into one [[TileTally]] and returns
     * its tiles packed again. Shuffle records and task results are plain
-    * `(Int, Array[Byte])` pairs, the same under any serializer. */
+    * `(Int, Array[Byte])` pairs, the same under any serializer.
+    *
+    * The executed key query chooses the map side ([[BatchBinner.of]]): a
+    * columnar file scan under a filter of column-vs-literal comparisons,
+    * keyed on scan columns — a pre-calibrated event table re-binned —
+    * is counted from its column batches by [[BatchBinner]]; every other
+    * plan (computed axis columns such as a calibration or a jitter, a
+    * non-file input, a disabled vectorized reader) runs as rows
+    * (`qe.toRdd`) through [[TileCounter.countTiles]]. Both emit the same
+    * records. */
   private[binning] def foreachTile(df: DataFrame, axes: Seq[(Column, BinAxis)])(
       f: (Int, Array[Byte]) => Unit): Unit = {
     val n = gridCells(axes)
-    val (filtered, flat) = filteredFlatKey(df, axes)
-    val qe = filtered.select(flat).queryExecution
+    val qe = keyQuery(df, axes)
     val reducers = math.min(TileCounter.tiles(n), qe.sparkSession.sessionState.conf.numShufflePartitions)
     SQLExecution.withNewExecutionId(qe, Some("histogramGrid")) {
-      val merged = qe.toRdd
-        .mapPartitions(rows => TileCounter.countTiles(rows, n))
+      val counted = BatchBinner.of(qe.executedPlan, axes.map(_._2)) match {
+        case Some((scan, kernel)) => scan.executeColumnar().mapPartitions(kernel.countTiles(_, n))
+        case None => qe.toRdd.mapPartitions(rows => TileCounter.countTiles(rows, n))
+      }
+      val merged = counted
         .partitionBy(new HashPartitioner(reducers))
         .mapPartitions(tiles => new TileTally(n).addPacked(tiles).packed())
       merged.sparkContext.runJob(merged, (it: Iterator[(Int, Array[Byte])]) => it.toArray,
         (_: Int, part: Array[(Int, Array[Byte])]) => part.foreach { case (t, p) => f(t, p) })
     }
+  }
+
+  /** The query [[foreachTile]] runs: `df` range-filtered on `axes`,
+    * projected to the flat key. */
+  private[binning] def keyQuery(df: DataFrame, axes: Seq[(Column, BinAxis)]): QueryExecution = {
+    val (filtered, flat) = filteredFlatKey(df, axes)
+    filtered.select(flat).queryExecution
   }
 
   /** Oracle SQL for [[histogramNd]] over a named table. `cols(i)` is the

@@ -17,10 +17,8 @@ import org.apache.spark.sql.catalyst.InternalRow
   * never more than 12, against the 8 bytes of a dense cell. A task creates
   * a counter only for a tile its events touch, so what it holds and ships
   * follows the occupied tiles and cells, not the grid's size. */
-private[binning] final class TileCounter(len: Int) extends Serializable {
+private[binning] final class TileCounter(len: Int) {
   private val counts = new Array[Long](len)
-
-  def add(off: Int): Unit = counts(off) += 1
 
   /** Count one event at each of `offs(0 until n)`. */
   def addAll(offs: Array[Int], n: Int): Unit = {
@@ -28,21 +26,11 @@ private[binning] final class TileCounter(len: Int) extends Serializable {
     while (i < n) { counts(offs(i)) += 1; i += 1 }
   }
 
-  /** Add `o`'s counts into this counter and return it. */
-  def merge(o: TileCounter): TileCounter = {
-    var i = 0
-    while (i < len) { counts(i) += o.counts(i); i += 1 }
-    this
-  }
-
   /** Add a packed tile's counts into this counter and return it. */
   def addPacked(bytes: Array[Byte]): TileCounter = {
     TileCounter.addPacked(bytes, counts, 0)
     this
   }
-
-  /** Write this tile's counts into `data` from flat index `base` on. */
-  def copyInto(data: Array[Long], base: Int): Unit = System.arraycopy(counts, 0, data, base, len)
 
   /** This tile in its wire form (see the class comment). */
   def pack(): Array[Byte] = {
@@ -160,7 +148,8 @@ private[binning] object TileCounter {
 
 /** One task's counts over a grid of `cells` flat cells: a dense
   * [[TileCounter]] for each tile its events touched, and nothing for the
-  * others. [[TileCounter.countTiles]] counts a task's rows in one, a
+  * others. [[TileCounter.countTiles]] counts a task's rows in one,
+  * [[BatchBinner.countTiles]] a task's column batches, a
   * [[Binning.histogramGrid]] reducer merges its tiles in one, and the
   * `nd_histogram` aggregate ([[NdHistogramAgg]]) keeps one per group
   * (hence public: it is that aggregate's buffer type).

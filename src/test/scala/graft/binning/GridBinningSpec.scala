@@ -1,12 +1,15 @@
 package graft.binning
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.{ListenerBusDrain, SparkConf}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.serializer.{JavaSerializer, KryoSerializer}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.functions._
@@ -14,16 +17,19 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession._
-import graft.Tables
+import graft.{EventPipeline, Tables}
 import graft.ops.EventQueries
 
 /** The three binning entry points — [[Binning.histogramGrid]] (the
   * engine behind `EventPipeline.distributedBinning`),
   * [[Binning.histogramNd]]'s rows and the `nd_histogram` SQL function —
   * against a plain-Scala reference binner on the edge inputs real
-  * detector data brings; plus [[BinnedGrid]]'s index checks,
-  * [[TileCounter]]'s and [[TileTally]]'s merge and serialization, and
-  * the guard that keeps the tiled kernel the only counting kernel. */
+  * detector data brings, from in-memory rows and from parquet (which
+  * [[Binning.histogramGrid]] counts from column batches, [[BatchBinner]]);
+  * plus the choice between batches and rows, [[BinAxis]]'s and
+  * [[BinnedGrid]]'s checks, [[TileCounter]]'s and [[TileTally]]'s merge
+  * and serialization, and the guard that keeps the tiled kernel the only
+  * counting kernel. */
 class GridBinningSpec extends AnyFunSuite {
 
   /** Reference binner, independent of Catalyst: coordinate d of a row is
@@ -96,15 +102,38 @@ class GridBinningSpec extends AnyFunSuite {
     out
   }
 
-  /** All three entry points over `rows` equal the reference binner. */
+  /** Whether [[Binning.foreachTile]] counts `df` over `axes` from column
+    * batches. */
+  private def columnar(df: DataFrame, axes: Seq[BinAxis]): Boolean = {
+    val cols = axes.map(a => col(a.name) -> a)
+    BatchBinner.of(Binning.keyQuery(df, cols).executedPlan, axes).isDefined
+  }
+
+  /** `body` over `df` written to parquet and read back through
+    * [[EventPipeline.read]], the files removed after. */
+  private def viaParquet[T](df: DataFrame)(body: DataFrame => T): T = {
+    val dir = Files.createTempDirectory("grid_binning").resolve("events").toString
+    try {
+      df.write.parquet(dir)
+      body(EventPipeline.read(spark, dir).df)
+    } finally FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
+  }
+
+  /** All three entry points over `rows`, and [[Binning.histogramGrid]]
+    * over the same rows read from parquet (counted from column batches),
+    * equal the reference binner. */
   private def checkAgainstReference(rows: Seq[Row], axes: Seq[BinAxis], t: DataType = DoubleType): BinnedGrid = {
     val df = frame(rows, axes, t)
     val cols = axes.map(a => col(a.name) -> a)
     val g = grid(df, axes)
     val want = reference(rows, axes)
+    val parquet = viaParquet(df) { p =>
+      assert(columnar(p, axes), "a parquet input is counted from column batches")
+      grid(p, axes).data
+    }
     assert(g.axes == axes)
     for ((path, got) <- Seq("histogramGrid" -> g.data, "histogramNd" -> relationalGrid(df, cols),
-                            "nd_histogram" -> NdHistogramSql.grid(df, cols)))
+                            "nd_histogram" -> NdHistogramSql.grid(df, cols), "parquet batches" -> parquet))
       assert(got.sameElements(want),
         s"$path: first differing cell: ${got.indices.find(i => got(i) != want(i))}")
     g
@@ -149,7 +178,11 @@ class GridBinningSpec extends AnyFunSuite {
     val ax = BinAxis("v", 5, 0.0, 5.0)
     def all(df: DataFrame): Seq[Seq[Long]] = {
       val cols = Seq(col("v") -> ax)
-      Seq(grid(df, Seq(ax)).data, relationalGrid(df, cols), NdHistogramSql.grid(df, cols)).map(_.toSeq)
+      val parquet = viaParquet(df) { p =>
+        assert(columnar(p, Seq(ax)))
+        grid(p, Seq(ax)).data
+      }
+      Seq(grid(df, Seq(ax)).data, relationalGrid(df, cols), NdHistogramSql.grid(df, cols), parquet).map(_.toSeq)
     }
     assert(all(Seq.empty[Double].toDF("v")).forall(_ == Seq.fill(5)(0L)))
     assert(all(Seq(7.0, -1.0).toDF("v")).forall(_.sum == 0))
@@ -228,6 +261,59 @@ class GridBinningSpec extends AnyFunSuite {
     checkAgainstReference(uniform(5000, axes, 17) ++ Seq(Row(6.999, 0.999, 2.9999)), axes)
   }
 
+  test("the executed plan chooses column batches or rows; both give the same grid") {
+    val axes = Seq(BinAxis("x", 40, 0.0, 10.0), BinAxis("y", 30, -2.0, 2.0))
+    val rows = uniform(20000, axes, 23) ++ Seq(Row(null, 0.5), Row(Double.NaN, 1.0), Row(2.5, null))
+    def filtered(df: DataFrame) = EventPipeline(df).applyFilter("x", 1.0, 9.0).applyFilter("y", -1.5, 1.75)
+    val rowGrid = filtered(frame(rows, axes)).distributedBinning(axes).data
+    assert(rowGrid.sum > 0)
+    def run(pl: EventPipeline) = (columnar(pl.df, axes), pl.distributedBinning(axes).data)
+    def readerOff[T](body: => T): T = {
+      val key = "spark.sql.parquet.enableVectorizedReader"
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, "false")
+      try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    viaParquet(frame(rows, axes)) { p =>
+      // a zero-amplitude jitter keeps every value's bin, but rand() is no scan column
+      for ((what, batches, (chosen, got)) <- Seq(
+        ("parquet -> applyFilter", true, run(filtered(p))),
+        ("createDataFrame", false, run(filtered(frame(rows, axes)))),
+        ("rand() jitter column", false, run(filtered(p).applyJitter(Seq("x" -> 0.0), seed = 5))),
+        ("vectorized reader off", false, readerOff(run(filtered(p)))))) {
+        assert(chosen == batches, s"$what: counted from ${if (chosen) "column batches" else "rows"}")
+        assert(got.sameElements(rowGrid), s"$what: first differing cell: ${got.indices.find(i => got(i) != rowGrid(i))}")
+      }
+    }
+  }
+
+  test("BatchBinner's ranges keep exactly what Catalyst's comparisons keep") {
+    import BatchBinner._
+    val in = Input(0, float = false)
+    val edges = Seq(Double.NaN, Double.NegativeInfinity, Double.PositiveInfinity, 0.0, -0.0,
+      Double.MinPositiveValue, -Double.MinPositiveValue, Double.MaxValue, -Double.MaxValue,
+      1.0, math.nextUp(1.0), math.nextDown(1.0), -2.5)
+    val ops = Seq[(Op, Int => Boolean)](Gt -> (_ > 0), Ge -> (_ >= 0), Lt -> (_ < 0), Le -> (_ <= 0), Eq -> (_ == 0))
+    for (lit <- edges; (op, want) <- ops; x <- edges)
+      assert(range(in, op, lit).keeps(x) == want(SQLOrderingUtil.compareDoubles(x, lit)), s"$x $op $lit")
+    // a column's conjuncts intersect
+    val ranges = for (lit <- edges; (op, _) <- ops) yield range(in, op, lit)
+    for (a <- ranges; b <- ranges; x <- edges)
+      assert(a.and(b).keeps(x) == (a.keeps(x) && b.keeps(x)), s"$x in $a and $b")
+    // float comparisons order like their widened doubles
+    val floats = Seq(Float.NaN, Float.NegativeInfinity, Float.PositiveInfinity, 0f, -0f, Float.MinPositiveValue,
+      Float.MaxValue, 0.1f, math.nextUp(0.1f), -3.75f)
+    for (x <- floats; y <- floats)
+      assert(Integer.signum(SQLOrderingUtil.compareFloats(x, y)) ==
+        Integer.signum(SQLOrderingUtil.compareDoubles(x.toDouble, y.toDouble)), s"$x vs $y")
+  }
+
+  test("BinAxis refuses an infinite lo, hi or width") {
+    for ((lo, hi) <- Seq((Double.NegativeInfinity, 10.0), (0.0, Double.PositiveInfinity), (-1e308, 1e308)))
+      intercept[IllegalArgumentException](BinAxis("x", 10, lo, hi))
+    assert(BinAxis("x", 10, -1e307, 1e307).width == 2e307)
+  }
+
   test("equals histogramNd's rows on the events table in 1-D to 4-D") {
     val ev = Tables.events(spark, sfDir)
     val all = EventQueries.cols4d(ev).zip(EventQueries.axes4d)
@@ -286,41 +372,25 @@ class GridBinningSpec extends AnyFunSuite {
       BinnedGrid(Array.empty[Long], Seq(BinAxis("a", 65536, 0.0, 1.0), BinAxis("b", 65536, 0.0, 1.0))))
   }
 
-  test("TileCounter: Java serialization round-trips, merge adds") {
-    def cells(c: TileCounter): Seq[Long] = {
-      val out = new Array[Long](100)
-      c.copyInto(out, 0)
-      out.toSeq
-    }
-    val a = new TileCounter(100)
-    Seq(3, 3, 99).foreach(a.add)
-    val bytes = new ByteArrayOutputStream
-    val out = new ObjectOutputStream(bytes)
-    out.writeObject(a)
-    out.close()
-    val b = new ObjectInputStream(new ByteArrayInputStream(bytes.toByteArray)).readObject().asInstanceOf[TileCounter]
-    assert(cells(b) == cells(a))
-    b.add(0)
-    val merged = cells(a.merge(b))
-    assert(merged(3) == 4 && merged(99) == 2 && merged(0) == 1 && merged.sum == 7)
-  }
-
   test("TileCounter: the packed form round-trips through Java and Kryo serialization") {
     def dense(c: TileCounter, len: Int): Seq[Long] = {
       val out = new Array[Long](len)
-      c.copyInto(out, 0)
+      TileCounter.addPacked(c.pack(), out, 0)
       out.toSeq
+    }
+    def counter(len: Int, offs: Seq[Int]): TileCounter = {
+      val c = new TileCounter(len)
+      c.addAll(offs.toArray, offs.length)
+      c
     }
     val full = TileCounter.Cells
     // every cell of a full tile, counts 1..3
-    val everyCell = new TileCounter(full)
-    (0 until full).foreach(i => (0 to i % 3).foreach(_ => everyCell.add(i)))
-    // the first and last cell of a partial last tile, counted 2^35 and 2^36 times
-    val huge = new TileCounter(7232)
-    Seq(0, 7231, 7231).foreach(huge.add)
-    (1 to 35).foreach(_ => huge.merge(huge))
-    val sparse = new TileCounter(full)
-    Seq(0, 1, 1, 200, 16383).foreach(sparse.add)
+    val everyCell = counter(full, (0 until full).flatMap(i => Seq.fill(i % 3 + 1)(i)))
+    // the first and last cell of a partial last tile, counted 2^35 and 2^36
+    // times: adding a tile's packed form into itself doubles it
+    val huge = counter(7232, Seq(0, 7231, 7231))
+    (1 to 35).foreach(_ => huge.addPacked(huge.pack()))
+    val sparse = counter(full, Seq(0, 1, 1, 200, 16383))
     val tiles = Seq(0 -> (new TileCounter(full), full), 1 -> (everyCell, full), 2 -> (sparse, full),
       3 -> (huge, 7232))
     assert(dense(huge, 7232)(7231) == 1L << 36)

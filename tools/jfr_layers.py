@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Break the driver thread's CPU samples of a perfbench run down by layer.
+"""Break the CPU samples of a perfbench run down by layer.
 
 Reads the JSON that `jfr print --json --stack-depth 256 --events
 jdk.ExecutionSample REC.jfr` writes for a flight recording of
@@ -12,12 +12,23 @@ pass. The pass's own plumbing is looked through: the workload classes,
 lambdas. A sample with no such frame below the pass counts as the pass's
 self time.
 
+With --executor it keeps instead the samples of Spark's task threads
+(`Executor task launch worker ...`) and groups each by the innermost
+frame that names one of the categories in EXECUTOR_LAYERS, in the order
+listed there: parquet decode, parquet open/footer, the generated row loop
+(whole-stage codegen), the batch kernel (graft.binning.BatchBinner), tally
+(TileTally/TileCounter), shuffle, serialization, Hadoop conf. Column
+vector accessors (`org.apache.spark.sql.execution.vectorized`) are looked
+through, so a read of a decoded vector counts for the loop that reads it.
+A sample with no such frame counts as other.
+
 Usage:
   python3 tools/jfr_layers.py SAMPLES.json [TOP]
+  python3 tools/jfr_layers.py --executor SAMPLES.json
 
 Prints one line per group, largest first (TOP lines, default 25): samples,
-share of the main thread's in-pass samples, group. The header gives the
-main thread's sample count and how many of them lie inside a pass. See
+share of the main thread's in-pass samples (of all executor-thread
+samples with --executor), group. The header gives the sample counts. See
 the verify skill for the recording recipe.
 """
 import json
@@ -29,6 +40,33 @@ PASSES = {("perfbench.E1", "pass"), ("perfbench.Explore", "pass")}
 PLUMBING = ("perfbench.E1", "perfbench.Explore", "perfbench.Workload",
             "perfbench.Collector", "perfbench.Tally")
 LAMBDA = re.compile(r"\$anonfun\$(.+?)\$\d+(\$adapted)?$")
+
+EXECUTOR_THREAD = "Executor task launch worker"
+PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+# (category, class-name prefixes, method names or None for any method);
+# a frame takes the first category it matches
+EXECUTOR_LAYERS = (
+    ("parquet open/footer", (PARQUET + "ParquetFooterReader", "org.apache.parquet.format.",
+                             "org.apache.parquet.format.converter.", PARQUET + "ParquetFileFormat"),
+     None),
+    ("parquet open/footer", ("org.apache.parquet.hadoop.ParquetFileReader",),
+     ("readFooter", "readFooterFromStream", "<init>", "open")),
+    ("parquet open/footer", (PARQUET + "VectorizedParquetRecordReader", PARQUET + "SpecificParquetRecordReaderBase"),
+     ("initialize", "initBatch")),
+    ("parquet decode", (PARQUET, "org.apache.parquet.", "org.xerial.snappy.", "com.github.luben.zstd.",
+                        "io.airlift.compress.", "org.apache.hadoop.io.compress."), None),
+    ("generated row loop", ("org.apache.spark.sql.catalyst.expressions.GeneratedClass",
+                            "org.apache.spark.sql.execution.ColumnarToRowExec",
+                            "org.apache.spark.sql.execution.BufferedRowIterator"), None),
+    ("batch kernel", ("graft.binning.BatchBinner",), None),
+    ("tally", ("graft.binning.TileTally", "graft.binning.TileCounter"), None),
+    ("shuffle", ("org.apache.spark.shuffle.", "org.apache.spark.storage.",
+                 "org.apache.spark.util.collection."), None),
+    ("serialization", ("org.apache.spark.serializer.", "com.esotericsoftware.kryo.",
+                       "java.io.ObjectOutputStream", "java.io.ObjectInputStream"), None),
+    ("Hadoop conf", ("org.apache.hadoop.conf.Configuration",), None),
+)
+LOOKED_THROUGH = ("org.apache.spark.sql.execution.vectorized.", "org.apache.spark.sql.vectorized.")
 
 
 def frame_name(frame):
@@ -58,16 +96,30 @@ def group(frames):
     return "%s.%s (self)" % names[start]
 
 
+def executor_layer(frames):
+    """The category of one executor-thread sample (frames innermost first)."""
+    for frame in frames:
+        cls, method = frame_name(frame)
+        if cls.startswith(LOOKED_THROUGH):
+            continue
+        for layer, prefixes, methods in EXECUTOR_LAYERS:
+            if cls.startswith(prefixes) and (methods is None or method in methods):
+                return layer
+    return "other"
+
+
 def events(doc):
     return doc.get("recording", doc).get("events", [])
 
 
 def main(argv):
-    if len(argv) not in (2, 3):
+    executor = len(argv) > 1 and argv[1] == "--executor"
+    args = argv[2:] if executor else argv[1:]
+    if len(args) not in (1, 2) or (executor and len(args) != 1):
         print(__doc__.strip(), file=sys.stderr)
         return 2
-    top = int(argv[2]) if len(argv) == 3 else 25
-    with open(argv[1], encoding="utf-8") as fh:
+    top = int(args[1]) if len(args) == 2 else 25
+    with open(args[0], encoding="utf-8") as fh:
         doc = json.load(fh)
     total = 0
     groups = Counter()
@@ -75,18 +127,21 @@ def main(argv):
         if ev.get("type") != "jdk.ExecutionSample":
             continue
         values = ev["values"]
-        thread = values.get("sampledThread") or {}
-        if thread.get("javaName") != "main":
+        thread = (values.get("sampledThread") or {}).get("javaName") or ""
+        if not (thread.startswith(EXECUTOR_THREAD) if executor else thread == "main"):
             continue
         total += 1
-        trace = values.get("stackTrace") or {}
-        g = group(trace.get("frames") or [])
+        frames = (values.get("stackTrace") or {}).get("frames") or []
+        g = executor_layer(frames) if executor else group(frames)
         if g is not None:
             groups[g] += 1
-    in_pass = sum(groups.values())
-    print("main thread: %d samples, %d inside a pass" % (total, in_pass))
+    counted = sum(groups.values())
+    if executor:
+        print("executor threads: %d samples" % total)
+    else:
+        print("main thread: %d samples, %d inside a pass" % (total, counted))
     for g, n in groups.most_common(top):
-        print("%7d  %5.1f%%  %s" % (n, 100.0 * n / in_pass, g))
+        print("%7d  %5.1f%%  %s" % (n, 100.0 * n / max(counted, 1), g))
     return 0
 
 

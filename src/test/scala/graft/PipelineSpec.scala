@@ -1,5 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.analysis.GridOps
@@ -71,6 +76,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(gc2.forall(_(0) == 0.0) && gr2(0)(0) == 2.0)
   }
 
+  /** The codecs of every column chunk of the parquet files in `dir`. */
+  private def codecs(dir: String): Set[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath), conf))
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+      finally r.close()
+    }.toSet
+  }
+
   test("Sources: natural sort, gather, select, tsv read, split write") {
     assert(Sources.naturalSort(Seq("f10", "f2", "f1")) == Seq("f1", "f2", "f10"))
     assert(Sources.naturalSort(Seq("a2b10", "a2b2", "a10b1")) == Seq("a2b2", "a2b10", "a10b1"))
@@ -82,6 +97,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(got == Seq("run_1.txt", "run_2.txt", "run_10.txt"))
     assert(Sources.select(got, Seq(0, 2)) == Seq("run_1.txt", "run_10.txt"))
 
+    // fnmatch patterns: only *, ?, [seq] and [!seq] are special; dot-files
+    // only for a pattern that starts with a dot
+    val globDir = tmp.resolve("glob")
+    java.nio.file.Files.createDirectory(globDir)
+    val names = Seq("scan(1).parquet", "scan1.parquet", "a+b.parquet", "aab.parquet", "x[1.txt",
+      "^.txt", "-.txt", "b.txt", ".part-00000.crc", "._SUCCESS.crc")
+    names.foreach(n => java.nio.file.Files.writeString(globDir.resolve(n), "x"))
+    def gather(pattern: String) = Sources.gather(globDir.toString, pattern).map(p => new java.io.File(p).getName).toSet
+    assert(gather("scan(1)*") == Set("scan(1).parquet"))
+    assert(gather("a+b*") == Set("a+b.parquet"))
+    assert(gather("*") == names.filterNot(_.startsWith(".")).toSet)
+    assert(gather(".*") == Set(".part-00000.crc", "._SUCCESS.crc"))
+    assert(gather("scan?.parquet") == Set("scan1.parquet"))
+    assert(gather("[ab]*.parquet") == Set("a+b.parquet", "aab.parquet"))
+    assert(gather("[!a]*.parquet") == Set("scan(1).parquet", "scan1.parquet"))
+    assert(gather("[a-c].txt") == Set("b.txt"))
+    assert(gather("[c-a].txt").isEmpty)
+    assert(gather("[^-].txt") == Set("^.txt", "-.txt"))
+    assert(gather("x[1*") == Set("x[1.txt"))
+    assert(gather("*.{txt}").isEmpty)
+
     java.nio.file.Files.writeString(tmp.resolve("t.tsv"), "a\tb\n1\t2\n3\t4\n")
     val df = Sources.readFiles(spark, Seq(tmp.resolve("t.tsv").toString), "tsv")
     assert(df.count() == 2 && df.columns.toSeq == Seq("a", "b"))
@@ -91,5 +127,25 @@ class PipelineSpec extends AnyFunSuite {
     val files = new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
     assert(files == 4)
     assert(spark.read.parquet(out).count() == Tables.events(spark, sfDir).count())
+
+    // the event-table sinks write uncompressed pages; an append onto a
+    // table Spark wrote with its snappy default reads back both writes
+    assert(codecs(out) == Set("UNCOMPRESSED"))
+    def rows(from: Long, until: Long) = spark.range(from, until, 1, 3).selectExpr("id", "CAST(id / 8 AS FLOAT) AS v")
+    val plain = tmp.resolve("plain").toString
+    Sources.writeParquet(rows(0, 500), plain)
+    assert(codecs(plain) == Set("UNCOMPRESSED"))
+    val mixed = tmp.resolve("mixed").toString
+    rows(0, 1000).write.parquet(mixed)
+    assert(codecs(mixed) == Set("SNAPPY"))
+    Sources.writeParquet(rows(1000, 1500), mixed, append = true)
+    assert(codecs(mixed) == Set("SNAPPY", "UNCOMPRESSED"))
+    val back = Sources.parquet(spark, mixed).collect().map(r => r.getLong(0) -> r.getFloat(1)).sortBy(_._1)
+    assert(back.toSeq == (0L until 1500L).map(i => i -> i.toFloat / 8))
+    // the corpus sink keeps the session's snappy
+    val sorted = tmp.resolve("sorted").toString
+    Sources.writeSorted(rows(0, 500), sorted, Seq("id"), nPartitions = 2, maxRecordsPerFile = 1000)
+    assert(codecs(sorted) == Set("SNAPPY"))
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 }

@@ -18,15 +18,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession._
 import graft.{EventPipeline, Tables}
+import graft.io.Sources
 import graft.ops.EventQueries
 
 /** The three binning entry points — [[Binning.histogramGrid]] (the
   * engine behind `EventPipeline.distributedBinning`),
   * [[Binning.histogramNd]]'s rows and the `nd_histogram` SQL function —
   * against a plain-Scala reference binner on the edge inputs real
-  * detector data brings, from in-memory rows and from parquet (which
-  * [[Binning.histogramGrid]] counts from column batches, [[BatchBinner]]);
-  * plus the choice between batches and rows, [[BinAxis]]'s and
+  * detector data brings, from in-memory rows and from parquet written by
+  * the engine's event sink (which [[Binning.histogramGrid]] counts from
+  * column batches, [[BatchBinner]]); plus the choice between batches and
+  * rows, on plain and snappy pages, [[BinAxis]]'s and
   * [[BinnedGrid]]'s checks, [[TileCounter]]'s and [[TileTally]]'s merge
   * and serialization, and the guard that keeps the tiled kernel the only
   * counting kernel. */
@@ -110,11 +112,13 @@ class GridBinningSpec extends AnyFunSuite {
   }
 
   /** `body` over `df` written to parquet and read back through
-    * [[EventPipeline.read]], the files removed after. */
-  private def viaParquet[T](df: DataFrame)(body: DataFrame => T): T = {
+    * [[EventPipeline.read]], the files removed after. The engine's event
+    * sink writes plain pages; `snappy` writes with Spark's default codec
+    * instead, as files a user brings may be. */
+  private def viaParquet[T](df: DataFrame, snappy: Boolean = false)(body: DataFrame => T): T = {
     val dir = Files.createTempDirectory("grid_binning").resolve("events").toString
     try {
-      df.write.parquet(dir)
+      if (snappy) df.write.parquet(dir) else Sources.writeParquet(df, dir)
       body(EventPipeline.read(spark, dir).df)
     } finally FileUtils.deleteDirectory(new java.io.File(dir).getParentFile)
   }
@@ -275,9 +279,11 @@ class GridBinningSpec extends AnyFunSuite {
       try body finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
     viaParquet(frame(rows, axes)) { p =>
+      val snappy = viaParquet(frame(rows, axes), snappy = true)(p => run(filtered(p)))
       // a zero-amplitude jitter keeps every value's bin, but rand() is no scan column
       for ((what, batches, (chosen, got)) <- Seq(
         ("parquet -> applyFilter", true, run(filtered(p))),
+        ("snappy parquet -> applyFilter", true, snappy),
         ("createDataFrame", false, run(filtered(frame(rows, axes)))),
         ("rand() jitter column", false, run(filtered(p).applyJitter(Seq("x" -> 0.0), seed = 5))),
         ("vectorized reader off", false, readerOff(run(filtered(p)))))) {

@@ -13,14 +13,17 @@ lambdas. A sample with no such frame below the pass counts as the pass's
 self time.
 
 With --executor it keeps instead the samples of Spark's task threads
-(`Executor task launch worker ...`) and groups each by the innermost
-frame that names one of the categories in EXECUTOR_LAYERS, in the order
-listed there: parquet decode, parquet open/footer, the generated row loop
-(whole-stage codegen), the batch kernel (graft.binning.BatchBinner), tally
-(TileTally/TileCounter), shuffle, serialization, Hadoop conf. Column
-vector accessors (`org.apache.spark.sql.execution.vectorized`) are looked
-through, so a read of a decoded vector counts for the loop that reads it.
-A sample with no such frame counts as other.
+(`Executor task launch worker ...`). A sample with a DECOMPRESSION frame
+anywhere in its stack counts as page decompression (parquet-mr copying a
+compressed page out through its codec's stream, and the codecs). Any other
+sample goes by its innermost frame that names one of the categories in
+EXECUTOR_LAYERS, in the order listed there: parquet open/footer, parquet
+decode, the generated row loop (whole-stage codegen), the batch kernel
+(graft.binning.BatchBinner), tally (TileTally/TileCounter), shuffle,
+serialization, Hadoop conf. Column vector accessors
+(`org.apache.spark.sql.execution.vectorized`) are looked through, so a read
+of a decoded vector counts for the loop that reads it. A sample with no
+such frame counts as other.
 
 Usage:
   python3 tools/jfr_layers.py SAMPLES.json [TOP]
@@ -42,6 +45,14 @@ PLUMBING = ("perfbench.E1", "perfbench.Explore", "perfbench.Workload",
 LAMBDA = re.compile(r"\$anonfun\$(.+?)\$\d+(\$adapted)?$")
 
 EXECUTOR_THREAD = "Executor task launch worker"
+# parquet-mr copying a compressed page out through its codec's stream, and
+# the codecs; matched anywhere in a sample's stack, since the JIT inlines the
+# copy loop into BytesInput.from under the decompressor
+DECOMPRESSION = ("org.apache.parquet.bytes.BytesInput$StreamBytesInput",
+                 "org.apache.parquet.hadoop.CodecFactory$HeapBytesDecompressor",
+                 "org.apache.parquet.hadoop.codec.", "org.xerial.snappy.",
+                 "org.apache.hadoop.io.compress.", "io.airlift.compress.",
+                 "com.github.luben.zstd.")
 PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
 # (category, class-name prefixes, method names or None for any method);
 # a frame takes the first category it matches
@@ -53,8 +64,7 @@ EXECUTOR_LAYERS = (
      ("readFooter", "readFooterFromStream", "<init>", "open")),
     ("parquet open/footer", (PARQUET + "VectorizedParquetRecordReader", PARQUET + "SpecificParquetRecordReaderBase"),
      ("initialize", "initBatch")),
-    ("parquet decode", (PARQUET, "org.apache.parquet.", "org.xerial.snappy.", "com.github.luben.zstd.",
-                        "io.airlift.compress.", "org.apache.hadoop.io.compress."), None),
+    ("parquet decode", (PARQUET, "org.apache.parquet."), None),
     ("generated row loop", ("org.apache.spark.sql.catalyst.expressions.GeneratedClass",
                             "org.apache.spark.sql.execution.ColumnarToRowExec",
                             "org.apache.spark.sql.execution.BufferedRowIterator"), None),
@@ -98,8 +108,10 @@ def group(frames):
 
 def executor_layer(frames):
     """The category of one executor-thread sample (frames innermost first)."""
-    for frame in frames:
-        cls, method = frame_name(frame)
+    names = [frame_name(f) for f in frames]
+    if any(cls.startswith(DECOMPRESSION) for cls, _ in names):
+        return "page decompression"
+    for cls, method in names:
         if cls.startswith(LOOKED_THROUGH):
             continue
         for layer, prefixes, methods in EXECUTOR_LAYERS:

@@ -32,10 +32,19 @@ object Tables {
     * layouts.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    eventsTs(table(spark, dir, "events"))
+  }
+
+  /** `raw` with its `ts` normalized to a microsecond TimestampType, by
+    * the type it was read as: raw nanos (TIMESTAMP(NANOS) under the
+    * legacy conf) convert ns→µs, TIMESTAMP_NTZ casts to the same
+    * wall-clock instants under the UTC session, TimestampType passes.
+    * The batch [[events]] reader and the streaming
+    * [[graft.streaming.StreamOps.readEvents]] both go through it. */
+  private[graft] def eventsTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))

@@ -111,22 +111,11 @@ object Ivf {
     // different partitions of the space, so qualifying neighbors land
     // in cells the query never probes — silent recall loss, the
     // jaccard/winnow index class in the ANN family. Checked strict by
-    // streamingAnnAgainst; survives parquet/catalog round-trips.
+    // streamingAnnAgainst and the recall audits; survives
+    // parquet/catalog round-trips.
+    val spec = graft.text.IndexContract.ivfCell(centroids)
     out.select(out.columns.map { c =>
-      if (c == "cell")
-        col(c).as(c, graft.text.TextQueries.indexMeta(
-          graft.text.TextQueries.KindIvfCell, portableHash = true,
-          params = Map("nlist" -> centroids.length.toLong,
-            "dim" -> centroids.head.length.toLong,
-            // chash_fmt versions the fingerprint DEFINITION (2 = raw
-            // IEEE-754 bits, the r14 format; 1 = the retired toString
-            // rendering): a format bump re-fingerprints every persisted
-            // corpus, and without the version key the strict check
-            // would report that as a generic value mismatch — implying
-            // stale centroids when the centroids are fine
-            "chash_fmt" -> 2L,
-            "chash" -> centroidFingerprint(centroids))))
-      else col(c)
+      if (c == spec.column) spec.stamped(col(c), None) else col(c)
     }: _*)
   }
 

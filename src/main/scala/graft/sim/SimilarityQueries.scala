@@ -915,13 +915,7 @@ object SimilarityQueries {
   def annRecallOnAssigned(assigned: DataFrame, exact: DataFrame,
                           cents: Array[Array[Double]],
                           nQ: Int = 10, k: Int = 5, nprobe: Int = 1): DataFrame = {
-    graft.text.TextQueries.requireIndexCompatible(assigned,
-      graft.text.TextQueries.KindIvfCell, portableHash = true,
-      column = "cell", strict = true,
-      params = Map("nlist" -> cents.length.toLong,
-        "dim" -> cents.head.length.toLong,
-        "chash_fmt" -> 2L,
-        "chash" -> Ivf.centroidFingerprint(cents)))
+    graft.text.IndexContract.ivfCell(cents).check(assigned)
     // the nQ query rows are collected ONCE (bounded by construction)
     // into a local relation: a table-backed query side would re-scan
     // the corpus-sized index for every consumer of the frame (probe
@@ -997,13 +991,7 @@ object SimilarityQueries {
                             cbs: Array[Array[Array[Double]]],
                             nQ: Int = 10, k: Int = 5, nprobe: Int = 1,
                             shortlist: Int = Pq.SHORTLIST): DataFrame = {
-    graft.text.TextQueries.requireIndexCompatible(coded,
-      graft.text.TextQueries.KindIvfCell, portableHash = true,
-      column = "cell", strict = true,
-      params = Map("nlist" -> cents.length.toLong,
-        "dim" -> cents.head.length.toLong,
-        "chash_fmt" -> 2L,
-        "chash" -> Ivf.centroidFingerprint(cents)))
+    graft.text.IndexContract.ivfCell(cents).check(coded)
     val queries = localQueriesOf(coded, nQ)
     val qp = Ivf.withProbesFast(queries, cents, nprobe)
       .select(col("vec_id").as("qid"), col("embedding").as("e1"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.binning.BinAxis
 import graft.io.Sources
-import graft.text.{SimJoin, SpanDedup, TextQueries}
+import graft.text.{IndexContract, SimJoin, SpanDedup, TextQueries}
 
 /** Structured Streaming surface (SURVEY.md §2.9). The reference has no
   * streaming engine — its events are batch rows with a reconstructed
@@ -46,12 +46,7 @@ object StreamOps {
       case f if f.name == "ts" => f.copy(dataType = tsType)
       case f                   => f
     })
-    val raw = spark.readStream.schema(schema).parquet(eventsDir)
-    tsType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _                => raw
-    }
+    graft.Tables.eventsTs(spark.readStream.schema(schema).parquet(eventsDir))
   }
 
   /** Windowed streaming histogram: per (tumbling time window, bin) counts
@@ -441,16 +436,10 @@ object StreamOps {
     */
   def streamingLshAgainst(docs: DataFrame, corpusIndex: DataFrame,
                           threshold: Double = 0.5,
-                          watermark: String = "10 minutes",
-                          unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                          watermark: String = "10 minutes"): DataFrame = {
     // the gate's per-row band expressions are md5-based — a
-    // native-hash index collides on ZERO signatures; strict because a
-    // stripped index is the same surface with the guard disarmed
-    graft.text.TextQueries.requireIndexCompatible(corpusIndex,
-      graft.text.TextQueries.KindLshBand, portableHash = true,
-      column = "sig", strict = !unsafeAssumeCompatible,
-      params = Map("K" -> graft.text.TextQueries.K.toLong,
-        "bands" -> graft.text.TextQueries.BANDS.toLong))
+    // native-hash index collides on ZERO signatures
+    IndexContract.lshBand(portableHash = true).check(corpusIndex)
     val enriched = docs
       .withWatermark("ts", watermark)
       .select(col("doc_id").as("batch_id"), col("ts"),
@@ -487,16 +476,10 @@ object StreamOps {
     */
   def streamingSimhashGate(docs: DataFrame, corpusIndex: DataFrame,
                            maxHamming: Int = 3,
-                           watermark: String = "10 minutes",
-                           unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    import graft.text.TextQueries
+                           watermark: String = "10 minutes"): DataFrame = {
     // the static index must carry this gate's band geometry (4×15 over
-    // 60 bits) — a different banding silently misses matches; strict
-    // because a gate is a recall-1-by-pigeonhole consumer
-    TextQueries.requireIndexCompatible(corpusIndex,
-      TextQueries.KindSimhashBand, portableHash = true, column = "bk",
-      strict = !unsafeAssumeCompatible,
-      params = Map("bands" -> 4L, "bits" -> 60L))
+    // 60 bits) — a different banding silently misses matches
+    IndexContract.simhashBand.check(corpusIndex)
     val enriched = docs
       .withWatermark("ts", watermark)
       .select(col("doc_id").as("batch_id"), col("ts"),
@@ -538,17 +521,12 @@ object StreamOps {
   def streamingWinnowGate(docs: DataFrame, corpusIndex: DataFrame,
                           k: Int = 3, w: Int = 4,
                           watermark: String = "10 minutes",
-                          unsafeAssumeCompatible: Boolean = false,
                           maxDf: Long = 0): DataFrame = {
     // the static index must have been winnowed at THIS gate's
     // (k, w, max_df) — different k/w select disjoint fingerprints and
     // the probe join matches nothing, silently waving every duplicate
     // through; a different df cap yields a different match set
-    graft.text.TextQueries.requireIndexCompatible(corpusIndex,
-      graft.text.TextQueries.KindWinnowFp, portableHash = true,
-      column = "fp", strict = !unsafeAssumeCompatible,
-      params = Map("k" -> k.toLong, "w" -> w.toLong,
-        "max_df" -> math.max(maxDf, 0L)))
+    IndexContract.winnowFp(k, w, maxDf).check(corpusIndex)
     docs.withWatermark("ts", watermark)
       .select(col("doc_id").as("batch_id"), col("ts"),
         explode(graft.text.TextQueries.winnowFpsExpr(k, w)).as("fp"))
@@ -623,16 +601,10 @@ object StreamOps {
                             k: Int = 3, w: Int = 4, minShared: Long = 1,
                             minSimPpm: Long = 500000L,
                             watermark: String = "10 minutes",
-                            unsafeAssumeCompatible: Boolean = false,
                             maxDf: Long = 0): DataFrame = {
-    import graft.text.TextQueries
-    TextQueries.requireIndexCompatible(corpusIndex, TextQueries.KindWinnowFp,
-      portableHash = true, column = "fp", strict = !unsafeAssumeCompatible,
-      params = Map("k" -> k.toLong, "w" -> w.toLong,
-        "max_df" -> math.max(maxDf, 0L)))
-    if (!unsafeAssumeCompatible)
-      TextQueries.requireSameBuild(corpusIndex, corpusText, idxColumn = "fp",
-        sideColumn = "text", sideName = "corpusText")
+    val spec = IndexContract.winnowFp(k, w, maxDf)
+    spec.check(corpusIndex)
+    spec.checkBuild(corpusIndex, corpusText, sideName = "corpusText")
     // stateless stages first: fp probe, then text attach per candidate
     // (carrying t1/t2 through the count's group key keeps the query at
     // ONE stateful operator — the substring gates' carry-text idiom)
@@ -685,10 +657,8 @@ object StreamOps {
     */
   def streamingSubstringGate(docs: DataFrame, corpusIndex: DataFrame,
                              k: Int = 50, portableHash: Boolean = true,
-                             watermark: String = "10 minutes",
-                             unsafeAssumeCompatible: Boolean = false): DataFrame =
-    SpanDedup.gate(SpanDedup.tokens(k, portableHash), docs, corpusIndex, watermark,
-      unsafeAssumeCompatible)
+                             watermark: String = "10 minutes"): DataFrame =
+    SpanDedup.gate(SpanDedup.tokens(k, portableHash), docs, corpusIndex, watermark)
 
   /** [[streamingSubstringGate]] at CHARACTER granularity (any-offset
     * L-char windows — Lee et al. §4.1's byte-exact semantics): probes
@@ -702,10 +672,8 @@ object StreamOps {
     * collect_set, the batch scrub projection. */
   def streamingSubstringCharsGate(docs: DataFrame, corpusIndex: DataFrame,
                                   L: Int = 100, portableHash: Boolean = true,
-                                  watermark: String = "10 minutes",
-                                  unsafeAssumeCompatible: Boolean = false): DataFrame =
-    SpanDedup.gate(SpanDedup.chars(L, portableHash), docs, corpusIndex, watermark,
-      unsafeAssumeCompatible)
+                                  watermark: String = "10 minutes"): DataFrame =
+    SpanDedup.gate(SpanDedup.chars(L, portableHash), docs, corpusIndex, watermark)
 
   /** Stream-static PARAGRAPH scrub gate — the CCNet-granularity member
     * of the streaming gate family (Wenzek et al. 2020 §3.1: dedup by
@@ -739,10 +707,8 @@ object StreamOps {
     * newline-separated page per row.
     */
   def streamingParagraphGate(docs: DataFrame, corpusIndex: DataFrame,
-                             watermark: String = "10 minutes",
-                             unsafeAssumeCompatible: Boolean = false): DataFrame =
-    SpanDedup.gate(SpanDedup.paragraphs, docs, corpusIndex, watermark,
-      unsafeAssumeCompatible)
+                             watermark: String = "10 minutes"): DataFrame =
+    SpanDedup.gate(SpanDedup.paragraphs, docs, corpusIndex, watermark)
 
   /** Stream-static EXACT-Jaccard gate: incoming documents probe the
     * persisted COMPACT prefix index ([[graft.text.TextQueries.jaccardIndex]]
@@ -771,21 +737,19 @@ object StreamOps {
     * recall 1 under any common order makes the order private to the
     * plan (StreamingSpec-pinned). An index built at a HIGHER threshold
     * than the gate's is rejected at plan time via the schema metadata
-    * [[graft.text.TextQueries.requireIndexCompatible]] reads.
+    * [[graft.text.IndexContract.check]] reads.
     *
     * Input schema: (doc_id LONG, ts TIMESTAMP, text STRING).
     */
   def streamingJaccardGate(docs: DataFrame, corpusIndex: DataFrame,
                            corpusDocSide: DataFrame,
                            threshold: Double = 0.8,
-                           watermark: String = "10 minutes",
-                           unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                           watermark: String = "10 minutes"): DataFrame = {
     val tPpm = SimJoin.thresholdPpm(threshold)
     // this gate always hashes incoming text with the portable md5
     // expression, and its per-row prefix is plain hash order
-    SimJoin.requireProbeCompatible(corpusIndex, corpusDocSide,
-      TextQueries.KindJaccardPrefix, portableHash = true, unsafeAssumeCompatible,
-      tPpm = Some(tPpm), hashOrdered = Some(true))
+    IndexContract.jaccardPrefix(portableHash = true, tPpm, hashOrdered = true)
+      .checkWithSide(corpusIndex, corpusDocSide)
     SimJoin.streamVerify(docs, watermark, tPpm, corpusIndex, corpusDocSide,
         Seq(col("n").as("cn")))
       .withColumn("uni", col("bn") + col("cn") - col("inter"))
@@ -816,15 +780,13 @@ object StreamOps {
   def streamingContainGate(docs: DataFrame, corpusIndex: DataFrame,
                            corpusDocSide: DataFrame,
                            threshold: Double = 0.8,
-                           watermark: String = "10 minutes",
-                           unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                           watermark: String = "10 minutes"): DataFrame = {
     val tPpm = SimJoin.thresholdPpm(threshold)
     // the containment theorem requires the FULL-token index: a
     // prefix-cut jaccardIndex has the identical compact schema but is
     // the documented recall hole — and a non-portable-hash index can
     // never match this gate's md5-hashed incoming tokens
-    SimJoin.requireProbeCompatible(corpusIndex, corpusDocSide,
-      TextQueries.KindContainFull, portableHash = true, unsafeAssumeCompatible)
+    IndexContract.containFull(portableHash = true).checkWithSide(corpusIndex, corpusDocSide)
     SimJoin.streamVerify(docs, watermark, tPpm, corpusIndex, corpusDocSide, Nil)
       .filter(SimJoin.ppmGate(tPpm, "bn"))
       .select(col("batch_id"), col("ts"), col("dup_of"),
@@ -944,8 +906,7 @@ object StreamOps {
     */
   def streamingBloomGate(docs: DataFrame, seen: Option[DataFrame] = None,
                          m: Long = 1L << 24, k: Int = 5,
-                         bits: Option[DataFrame] = None,
-                         unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                         bits: Option[DataFrame] = None): DataFrame = {
     import graft.text.TextQueries
     require(seen.isDefined != bits.isDefined,
       "pass exactly ONE filter source: seen (corpus to rebuild from) OR " +
@@ -957,11 +918,7 @@ object StreamOps {
     // it must carry this gate's geometry stamps, checked strict — a
     // wrong-(m, k) filter turns seen documents into silent false
     // negatives (they pass the gate and re-enter the corpus)
-    bits.foreach { b =>
-      TextQueries.requireIndexCompatible(b, TextQueries.KindBloomBits,
-        portableHash = true, column = "bit", strict = !unsafeAssumeCompatible,
-        params = Map("m" -> m, "k" -> k.toLong))
-    }
+    bits.foreach(IndexContract.bloomBits(m, k).check)
     // the dense word-array row is a driver-built LocalRelation
     // (bounded at m/64 longs by construction) — nothing to cache; each
     // micro-batch re-broadcasts the ~2 MB row for free. Dense array,
@@ -1201,16 +1158,13 @@ object StreamOps {
     * or stale centroid set buckets the two sides by different
     * partitions of the space, so qualifying neighbors sit in cells the
     * query never probes — silent recall loss with zero errors.
-    * `unsafeAssumeCompatible` downgrades to lenient for hand-assigned
-    * frames.
     *
     * Input schema: (vec_id LONG, ts TIMESTAMP, embedding ARRAY<FLOAT>).
     */
   def streamingAnnAgainst(vecs: DataFrame, corpusAssigned: DataFrame,
                           centroids: Array[Array[Double]],
                           threshold: Double = 0.25,
-                          nprobe: Int = 1,
-                          unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                          nprobe: Int = 1): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     require(centroids.nonEmpty && centroids.head.nonEmpty,
       "centroid matrix must be non-empty (nlist >= 1, dim >= 1): an empty " +
@@ -1228,10 +1182,9 @@ object StreamOps {
     // indistinguishable from a mismatch, which is why v1 was retired)
     // and a re-assignment under the same centroid set resolves both.
     val cellMeta = corpusAssigned.schema("cell").metadata
-    val chashKey = graft.text.TextQueries.IndexParamPrefix + "chash"
-    val fmtKey = graft.text.TextQueries.IndexParamPrefix + "chash_fmt"
-    if (!unsafeAssumeCompatible &&
-        cellMeta.contains(chashKey) && !cellMeta.contains(fmtKey)) {
+    val chashKey = IndexContract.ParamPrefix + "chash"
+    val fmtKey = IndexContract.ParamPrefix + "chash_fmt"
+    if (cellMeta.contains(chashKey) && !cellMeta.contains(fmtKey)) {
       val v2 = graft.sim.Ivf.centroidFingerprint(centroids)
       val stamped = cellMeta.getLong(chashKey)
       if (stamped == v2)
@@ -1251,13 +1204,7 @@ object StreamOps {
             "genuinely different centroid set; re-run Ivf.withCell over " +
             "the corpus with this gate's centroid set to re-stamp it")
     }
-    graft.text.TextQueries.requireIndexCompatible(corpusAssigned,
-      graft.text.TextQueries.KindIvfCell, portableHash = true,
-      column = "cell", strict = !unsafeAssumeCompatible,
-      params = Map("nlist" -> centroids.length.toLong,
-        "dim" -> centroids.head.length.toLong,
-        "chash_fmt" -> 2L,
-        "chash" -> graft.sim.Ivf.centroidFingerprint(centroids)))
+    IndexContract.ivfCell(centroids).check(corpusAssigned)
     val stream =
       if (nprobe == 1)
         graft.sim.Ivf.withCell(vecs, centroids)

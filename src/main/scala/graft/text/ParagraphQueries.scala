@@ -105,12 +105,10 @@ object ParagraphQueries {
     * char-window or token index under this consumer, or an index
     * rebuilt with a native hash, matches zero paragraph hashes and
     * every known paragraph survives the scrub unseen); a stripped
-    * index fails loudly, and `unsafeAssumeCompatible` downgrades to
-    * the lenient stamped-axes-only mode — never to unchecked.
+    * index fails loudly.
     */
-  def paragraphDedupAgainst(batch: DataFrame, corpusIdx: DataFrame,
-                            unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    SpanDedup.checkIndex(SpanDedup.paragraphs, corpusIdx, unsafeAssumeCompatible)
+  def paragraphDedupAgainst(batch: DataFrame, corpusIdx: DataFrame): DataFrame = {
+    IndexContract.paragraphHash.check(corpusIdx)
     SpanDedup.dedup(SpanDedup.paragraphs, batch, SpanDedup.present(_, corpusIdx.select("h")))
   }
 

@@ -23,7 +23,7 @@ import graft.ops.Scale
   * (doc_id, ~40-byte string) to (doc_id, long).
   */
 private[graft] object SimJoin {
-  import TextQueries.{phash, requireIndexCompatible, requireSameBuild, shingles, KindDocSide}
+  import TextQueries.{phash, shingles}
 
   // ---- hash frame ----
 
@@ -206,8 +206,7 @@ private[graft] object SimJoin {
     * the stream side, so the corpus-sized hash-array side is forced
     * through a sort-merge shuffle (measured 3.0x at 2M docs). Corpus
     * version mismatch is caught at plan time by the build-id stamp
-    * ([[requireProbeCompatible]]); a stamp-less hand-assembled pair is
-    * the caller's contract. */
+    * ([[IndexContract.checkWithSide]]). */
   def arrayVerify(cand: DataFrame, side: DataFrame, batchSide: DataFrame,
                   sideCols: Seq[Column], out: Seq[Column]): DataFrame =
     cand
@@ -250,23 +249,4 @@ private[graft] object SimJoin {
   def containPpm(n: String): Column = expr(s"inter * 1000000L div $n")
 
   def jaccard(inter: Column, uni: Column): Column = inter.cast("double") / uni
-
-  // ---- compatibility ----
-
-  /** The plan-time check of an index consumer: the bucket index's kind,
-    * hash, threshold and order, the doc side's kind and hash, and — when
-    * both are build-stamped — that they come from one corpus snapshot.
-    * Strict unless the caller vouches via `unsafeAssumeCompatible`: a
-    * schema-stripped index is the same silent-recall surface with the
-    * guards disarmed. */
-  def requireProbeCompatible(index: DataFrame, side: DataFrame, kind: String,
-                             portableHash: Boolean, unsafeAssumeCompatible: Boolean,
-                             tPpm: Option[Long] = None,
-                             hashOrdered: Option[Boolean] = None): Unit = {
-    requireIndexCompatible(index, kind, portableHash, tPpm = tPpm,
-      hashOrdered = hashOrdered, strict = !unsafeAssumeCompatible)
-    requireIndexCompatible(side, KindDocSide, portableHash, column = "hs",
-      strict = !unsafeAssumeCompatible)
-    if (!unsafeAssumeCompatible) requireSameBuild(index, side)
-  }
 }

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.Scale
 
 /** The occurrence→scrub core of span-level dedup: every piece the
   * token-window, char-window and paragraph forms
@@ -27,7 +26,7 @@ import graft.ops.Scale
   * the hash projection: what shuffles is compact (h, key, pos) rows.
   */
 private[graft] object SpanDedup {
-  import TextQueries.{indexMeta, phash, phashFrag, requireIndexCompatible, requireSameBuild}
+  import TextQueries.{phash, phashFrag}
 
   // ---- granularity ----
 
@@ -48,19 +47,11 @@ private[graft] object SpanDedup {
     *                grain slices `text` itself and joins with ""
     * @param count   name of the unit-count output column
     * @param spans   whether the output carries the maximal-span count
-    * @param clusterFirst derive the batch occurrences above the key
-    *                clustering, so window rows never cross the network
-    *                (tokens, chars); else straight off the input, so
-    *                only compact (key, pos, h) rows do and the full text
-    *                shuffles once, for the rebuild (paragraphs)
-    * @param kind    index kind stamped on, and checked against, `h`
-    * @param params  window-length stamps of the index
-    * @param portableHash md5-based (DuckDB-replayable) or native hash
+    * @param contract the contract of the grain's corpus index on `h`
     */
   final case class Grain(key: String, unit: String, units: Column, windows: Column,
                          hash: Column => Column, window: Int, sep: String,
-                         count: String, spans: Boolean, clusterFirst: Boolean,
-                         kind: String, params: Map[String, Long], portableHash: Boolean) {
+                         count: String, spans: Boolean, contract: IndexContract) {
     /** The char grain's units are the code points of `text` itself. */
     def textUnits: Boolean = unit == "text"
   }
@@ -72,8 +63,7 @@ private[graft] object SpanDedup {
     require(k >= 2, s"window length must be >= 2 tokens, got $k")
     Grain("doc_id", "toks", split(col("text"), " "), expr(TextQueries.ngramArrayExpr(k)),
       if (portableHash) phash else (c => xxhash64(c)), k, " ", "n_tokens",
-      spans = true, clusterFirst = true,
-      TextQueries.KindSubstringTok, Map("k" -> k.toLong), portableHash)
+      spans = true, IndexContract.substringTok(k, portableHash))
   }
 
   /** L-char windows at every code-point offset (the suffix-array tool's
@@ -81,8 +71,7 @@ private[graft] object SpanDedup {
   def chars(L: Int, portableHash: Boolean): Grain = {
     require(L >= 2, s"window length must be >= 2 chars, got $L")
     Grain("doc_id", "text", col("text"), charWinHashCol(L, portableHash), c => c,
-      L, "", "n_chars", spans = true, clusterFirst = true,
-      TextQueries.KindSubstringChar, Map("L" -> L.toLong), portableHash)
+      L, "", "n_chars", spans = true, IndexContract.substringChar(L, portableHash))
   }
 
   /** Newline-separated paragraphs of a page (CCNet's granularity): a
@@ -90,8 +79,7 @@ private[graft] object SpanDedup {
   def paragraphs: Grain = {
     val paras = split(col("text"), "\n")
     Grain("page_id", "paras", paras, paras, phash,
-      1, "\n", "n_paras", spans = false, clusterFirst = false,
-      TextQueries.KindParagraphHash, Map.empty, portableHash = true)
+      1, "\n", "n_paras", spans = false, IndexContract.paragraphHash)
   }
 
   /** Every length-`L` character window of `text` at every character
@@ -180,18 +168,26 @@ private[graft] object SpanDedup {
 
   // ---- batch pipeline ----
 
-  /** Derive the occurrences of `docs` (above its key clustering when
-    * the grain says `clusterFirst`), select with `policy`, collect the
-    * selected starts per key and scrub the key-clustered join-back.
-    * `persist` pins the occurrence fan-out for a policy that reads it
-    * twice (see [[SimJoin.persistIf]]; the cache is session-owned). */
+  /** Cluster `docs` by key, derive the occurrences above the clustering
+    * (window rows never cross the network), select with `policy`,
+    * collect the selected starts per key and scrub the join-back onto
+    * the same clustering. The occurrence side and the rebuild read one
+    * clustered frame, and the key is made non-null on both up front:
+    * left to the optimizer, only the occurrence side would get the
+    * `isnotnull` the join infers, the two exchanges would differ, and
+    * the full text would cross the network twice instead of once (AQE
+    * reuses identical exchanges). Rows without a key are not documents
+    * and are dropped. `persist` pins the occurrence fan-out for a policy
+    * that reads it twice (see [[SimJoin.persistIf]]; the cache is
+    * session-owned). */
   def dedup(g: Grain, docs: DataFrame, policy: DataFrame => DataFrame,
             persist: Boolean = false): DataFrame = {
-    val pre = docs.repartition(col(g.key)).select(col(g.key), g.units.as(g.unit))
+    val clustered = docs.filter(col(g.key).isNotNull).repartition(col(g.key))
     val occ = SimJoin.persistIf(
-      occurrences(g, if (g.clusterFirst) pre else docs, Seq(g.key)), persist)
+      occurrences(g, clustered.withColumn(g.unit, g.units), Seq(g.key)), persist)
     val starts = policy(occ).groupBy(g.key).agg(collect_set(col("pos")).as("starts"))
-    scrub(g, pre.join(starts, Seq(g.key), "left"), Seq(g.key))
+    scrub(g, clustered.select(col(g.key), g.units.as(g.unit))
+      .join(starts, Seq(g.key), "left"), Seq(g.key))
   }
 
   /** The span-scrub PROJECTION over a frame carrying the grain's `unit`
@@ -250,40 +246,29 @@ private[graft] object SpanDedup {
   def index(g: Grain, corpus: DataFrame, buildId: Option[String]): DataFrame =
     hashes(g, corpus)
       // a select after the generator's: generator aliases drop explicit metadata
-      .select(col("h").as("h",
-        indexMeta(g.kind, g.portableHash, buildId = buildId, params = g.params)))
+      .select(g.contract.stamped(col("h"), buildId))
       .distinct()
 
   /** Persist [[index]] as a catalog table bucketed + sorted by `h`, the
     * probe key, under one fresh build id unless `buildId` is given: the
     * per-batch probe then meets the static side Exchange-free. */
   def writeIndexTable(g: Grain, corpus: DataFrame, table: String, buckets: Int,
-                      buildId: Option[String]): Unit = {
-    val id = buildId.orElse(Some(java.util.UUID.randomUUID().toString))
-    Scale.writeBucketed(index(g, corpus, id), "h", buckets, table)
-  }
-
-  /** Reject, at plan time, an index built for another grain, window
-    * length or hash kind: it matches zero windows and every duplicated
-    * span survives the scrub unseen. Strict unless
-    * `unsafeAssumeCompatible`, which also skips the same-build check
-    * against `corpus` (when given, both build-stamped frames must come
-    * from one corpus snapshot). */
-  def checkIndex(g: Grain, idx: DataFrame, unsafeAssumeCompatible: Boolean,
-                 corpus: Option[DataFrame] = None): Unit = {
-    requireIndexCompatible(idx, g.kind, g.portableHash,
-      strict = !unsafeAssumeCompatible, params = g.params)
-    if (!unsafeAssumeCompatible)
-      corpus.foreach(requireSameBuild(idx, _, sideColumn = "text", sideName = "corpus"))
-  }
+                      buildId: Option[String]): Unit =
+    g.contract.write(index(g, corpus, IndexContract.buildId(buildId)), table, buckets)
 
   /** The batch incremental form: scrub every window of `batch` already
     * in `corpus`, which contributes only its [[index]] (pre-built and
-    * checked, or derived here). Within-batch duplication is not
-    * scrubbed; run the self-dedup on the batch for that. */
+    * checked, or derived here). A handed-in index built for another
+    * grain, window length or hash kind matches zero windows, so it is
+    * rejected at plan time, as is one of another corpus snapshot.
+    * Within-batch duplication is not scrubbed; run the self-dedup on the
+    * batch for that. */
   def against(g: Grain, batch: DataFrame, corpus: DataFrame,
-              corpusIndex: Option[DataFrame], unsafeAssumeCompatible: Boolean): DataFrame = {
-    corpusIndex.foreach(checkIndex(g, _, unsafeAssumeCompatible, Some(corpus)))
+              corpusIndex: Option[DataFrame]): DataFrame = {
+    corpusIndex.foreach { idx =>
+      g.contract.check(idx)
+      g.contract.checkBuild(idx, corpus)
+    }
     dedup(g, batch, present(_, corpusIndex.getOrElse(index(g, corpus, None))))
   }
 
@@ -297,9 +282,8 @@ private[graft] object SpanDedup {
     * gate emits the batch [[against]] contract with key columns
     * (batch_id, ts), bit-identical on the same split, window-less
     * documents included. */
-  def gate(g: Grain, docs: DataFrame, corpusIndex: DataFrame, watermark: String,
-           unsafeAssumeCompatible: Boolean): DataFrame = {
-    checkIndex(g, corpusIndex, unsafeAssumeCompatible)
+  def gate(g: Grain, docs: DataFrame, corpusIndex: DataFrame, watermark: String): DataFrame = {
+    g.contract.check(corpusIndex)
     val group = Seq("batch_id", "ts", "text")
     val occ = occurrences(g, docs.withWatermark("ts", watermark)
       .select(col("doc_id").as("batch_id"), col("ts"), col("text"))

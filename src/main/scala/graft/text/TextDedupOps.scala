@@ -324,9 +324,7 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     // now plan-time-checked instead of scaladoc-only
     bandFrame(minhashWide(sh))
       .select(col("doc_id"), col("band"),
-        col("sig").as("sig", indexMeta(KindLshBand, portableHash,
-          buildId = buildId,
-          params = Map("K" -> K.toLong, "bands" -> BANDS.toLong))))
+        IndexContract.lshBand(portableHash).stamped(col("sig"), buildId))
   }
 
   /** Incremental dedup: match a NEW batch against an EXISTING corpus —
@@ -353,11 +351,9 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
   def lshPairsAgainst(batch: DataFrame, corpus: DataFrame,
                       threshold: Double = 0.5,
                       corpusBands: Option[DataFrame] = None,
-                      portableHash: Boolean = true,
-                      unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                      portableHash: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = lshMatchesAgainst(batch, corpus, threshold, corpusBands,
-      portableHash, unsafeAssumeCompatible)
+    val scored = lshMatchesAgainst(batch, corpus, threshold, corpusBands, portableHash)
     val best = Window.partitionBy("batch_id")
       .orderBy(col("jaccard").desc, col("corpus_id"))
     scored.withColumn("rn", row_number().over(best)).filter(col("rn") === 1)
@@ -379,18 +375,14 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
   def lshMatchesAgainst(batch: DataFrame, corpus: DataFrame,
                         threshold: Double = 0.5,
                         corpusBands: Option[DataFrame] = None,
-                        portableHash: Boolean = true,
-                        unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                        portableHash: Boolean = true): DataFrame = {
     // a handed-in band index must carry THIS call's hash kind (the
     // zero-collision hole above) and band geometry, and — when both
     // frames are build-stamped — come from THIS corpus snapshot
     corpusBands.foreach { bands =>
-      requireIndexCompatible(bands, KindLshBand, portableHash,
-        column = "sig", strict = !unsafeAssumeCompatible,
-        params = Map("K" -> K.toLong, "bands" -> BANDS.toLong))
-      if (!unsafeAssumeCompatible)
-        requireSameBuild(bands, corpus, idxColumn = "sig",
-          sideColumn = "text", sideName = "corpus")
+      val spec = IndexContract.lshBand(portableHash)
+      spec.check(bands)
+      spec.checkBuild(bands, corpus)
     }
     val cBands = corpusBands.getOrElse(bandSignatures(corpus, portableHash))
     // PINNED, not recomputed: three consumers (the corpus-id prune, the
@@ -455,10 +447,9 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * per corpus version. */
   def writeLshIndexTable(corpus: DataFrame, table: String,
                          buckets: Int = 64,
-                         buildId: Option[String] = None): Unit = {
-    val id = buildId.orElse(Some(java.util.UUID.randomUUID().toString))
-    graft.ops.Scale.writeBucketed(corpusIndex(corpus, id), "sig", buckets, table)
-  }
+                         buildId: Option[String] = None): Unit =
+    IndexContract.lshBand(portableHash = true).write(
+      corpusIndex(corpus, IndexContract.buildId(buildId)), table, buckets)
 
   /** Doc ids of `corpus` sharing at least one word-n-gram with
     * `benchmark` — the contamination set, shared by [[decontaminate]]
@@ -582,9 +573,7 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     seen.select(explode(expr(bloomPositionsExpr(m, k))).as("bit")).distinct()
       // metadata in a SECOND select: an Alias over a generator loses
       // its explicitMetadata when the analyzer rewrites it
-      .select(col("bit").as("bit",
-        indexMeta(KindBloomBits, portableHash = true, buildId = buildId,
-          params = Map("m" -> m, "k" -> k.toLong))))
+      .select(IndexContract.bloomBits(m, k).stamped(col("bit"), buildId))
 
   /** Probe a batch against a built filter: a document is flagged iff
     * ALL its (distinct) bit positions are set — Bloom's contract: a
@@ -595,8 +584,6 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * The filter is checked STRICT at plan time (kind + hash kind +
     * (m, k) — the geometry the probe recomputes positions under; any
     * mismatch turns seen documents into silent false negatives).
-    * `unsafeAssumeCompatible` downgrades to the lenient
-    * stamped-axes-only mode for hand-built bit tables.
     *
     * Scale shape: the batch fans out to k compact (doc_id, bit) rows
     * per doc and equi-joins the filter on the uniformly-distributed bit
@@ -606,11 +593,8 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * neither side ever pays an all-pairs comparison.
     */
   def bloomProbe(batch: DataFrame, bits: DataFrame,
-                 m: Long = 1L << 24, k: Int = 5,
-                 unsafeAssumeCompatible: Boolean = false): DataFrame = {
-    requireIndexCompatible(bits, KindBloomBits, portableHash = true,
-      column = "bit", strict = !unsafeAssumeCompatible,
-      params = Map("m" -> m, "k" -> k.toLong))
+                 m: Long = 1L << 24, k: Int = 5): DataFrame = {
+    IndexContract.bloomBits(m, k).check(bits)
     batch
       .select(col("doc_id"), explode(expr(bloomPositionsExpr(m, k))).as("bit"))
       .join(bits.select("bit").withColumn("present", lit(true)), Seq("bit"), "left")
@@ -641,9 +625,8 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
       .agg(expr("bit_or(shiftleft(1L, cast(bit % 64 as int)))").as("word"))
       .collect().foreach { r =>
         val w = r.getLong(0)
-        // a bit position >= m is reachable only through
-        // unsafeAssumeCompatible or a hand-built bits frame whose
-        // geometry disagrees with the m passed here — name the
+        // a bit position >= m is reachable only through a bits frame
+        // whose geometry disagrees with the m passed here — name the
         // mismatch instead of throwing a bare AIOOBE
         require(w >= 0 && w < nWords,
           s"bloomDenseWordsRow: bit position in word $w exceeds the " +
@@ -697,9 +680,7 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
       // same geometry stamps as bloomBuild, own kind: a forget pass at
       // the wrong (m, k) subtracts the wrong cells and corrupts the
       // counters silently — checked strict by cbfForget
-      .select(col("bit").as("bit",
-        indexMeta(KindCbfCells, portableHash = true, buildId = buildId,
-          params = Map("m" -> m, "k" -> k.toLong))), col("cnt"))
+      .select(IndexContract.cbfCells(m, k).stamped(col("bit"), buildId), col("cnt"))
 
   /** Forget a document slice: subtract the slice's own counter table
     * cell-for-cell and drop exhausted cells. EXACT — because inserts
@@ -711,14 +692,11 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * shows up as negative cells — filtered here, pinned impossible
     * under the contract in the spec. */
   def cbfForget(counters: DataFrame, removed: DataFrame,
-                m: Long = 1L << 24, k: Int = 5,
-                unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                m: Long = 1L << 24, k: Int = 5): DataFrame = {
     // a forget pass under the wrong geometry subtracts the WRONG cells
     // — membership goes silently wrong in both directions (false
     // negatives for remaining docs, ghost positives for removed ones)
-    requireIndexCompatible(counters, KindCbfCells, portableHash = true,
-      column = "bit", strict = !unsafeAssumeCompatible,
-      params = Map("m" -> m, "k" -> k.toLong))
+    IndexContract.cbfCells(m, k).check(counters)
     counters.join(
         cbfCounters(removed, m, k).select(col("bit"), col("cnt").as("rm")),
         Seq("bit"), "left")
@@ -730,18 +708,11 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
   /** Adapter: the still-set positions of a counter table, in the shape
     * [[bloomProbe]]/[[bloomWordMapRow]] consume — the counting filter
     * serves every downstream the plain filter does. A stamped counter
-    * table re-stamps its geometry under [[KindBloomBits]] so the strict
-    * probe stays armed through the adapter; an unstamped one passes
-    * through unstamped (and the strict probe then fails loudly). */
-  def cbfBits(counters: DataFrame): DataFrame = {
-    val out = counters.filter(col("cnt") > 0).select("bit")
-    val m = counters.schema("bit").metadata
-    if (m.contains(IndexKindKey) && m.getString(IndexKindKey) == KindCbfCells) {
-      val b = new org.apache.spark.sql.types.MetadataBuilder().withMetadata(m)
-        .putString(IndexKindKey, KindBloomBits).build()
-      out.select(col("bit").as("bit", b))
-    } else out
-  }
+    * table re-stamps its geometry as Bloom bits so the strict probe
+    * stays armed through the adapter; an unstamped one passes through
+    * unstamped (and the strict probe then fails loudly). */
+  def cbfBits(counters: DataFrame): DataFrame =
+    IndexContract.asBloomBits(counters.filter(col("cnt") > 0).select("bit"))
 
   // ---- exact-threshold set-similarity join (Bayardo, Ma & Srikant
   // 2007 "Scaling Up All Pairs Similarity Search" prefix filtering, in
@@ -813,216 +784,20 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
   private def corpusDfFromHashes(sh: DataFrame, portableHash: Boolean,
                                  buildId: Option[String]): DataFrame =
     sh.groupBy("h").agg(count(lit(1)).as("df",
-      indexMeta(KindCorpusDf, portableHash, buildId = buildId)))
-
-  /** Schema-metadata keys stamped on an index's `h` column (and the
-    * doc side's `hs`): the index KIND (a prefix-cut jaccard index and
-    * a full-token containment index now share the same compact
-    * (h, doc_id) schema — probing a prefix index with a containment
-    * consumer is the documented recall hole), the HASH KIND (an
-    * xxhash64-built index probed by an md5-hashing consumer matches
-    * zero tokens — total silent recall loss), the build threshold
-    * (exact integer ppm — prefix rows below it were cut at build
-    * time), and the canonical token order a prefix index was cut under
-    * (both sides must share ONE total order). Metadata rides the
-    * schema through parquet round-trips, localCheckpoint, and the
-    * session catalog, costs zero bytes per row, and lets every
-    * consumer REJECT an incompatible index at plan time instead of
-    * silently losing recall. */
-  private[graft] val IndexKindKey = "graft.index.kind"
-  private[graft] val IndexPortableHashKey = "graft.index.portable_hash"
-  private[graft] val IndexTPpmKey = "graft.index.t_ppm"
-  private[graft] val IndexHashOrderedKey = "graft.index.hash_ordered"
-  private[graft] val IndexBuildIdKey = "graft.index.build_id"
-  /** Family-parameter stamps (`graft.index.param.<name>`): integer
-    * build parameters an index's VALUES depend on — winnow k/window,
-    * substring window length, simhash band geometry. A consumer
-    * probing with a different value matches structurally (same
-    * schema, same hash kind) but semantically never: a winnow index
-    * built at k=3 probed by a k=4 consumer shares zero fingerprints
-    * and silently waves every near-duplicate through — the identical
-    * failure class the kind/hash stamps close, one axis further in. */
-  private[graft] val IndexParamPrefix = "graft.index.param."
-  private[graft] val KindJaccardPrefix = "jaccard_prefix"
-  private[graft] val KindContainFull = "contain_full"
-  private[graft] val KindDocSide = "doc_hash_side"
-  private[graft] val KindCorpusDf = "corpus_df"
-  private[graft] val KindWinnowFp = "winnow_fp"
-  private[graft] val KindLshBand = "lsh_band"
-  private[graft] val KindSimhashBand = "simhash_band"
-  private[graft] val KindSubstringTok = "substring_tok"
-  private[graft] val KindSubstringChar = "substring_char"
-  private[graft] val KindParagraphHash = "paragraph_hash"
-  private[graft] val KindBloomBits = "bloom_bits"
-  private[graft] val KindCbfCells = "cbf_cells"
-  private[graft] val KindIvfCell = "ivf_cell"
-
-  private[graft] def indexMeta(kind: String, portableHash: Boolean,
-                        tPpm: Option[Long] = None,
-                        hashOrdered: Option[Boolean] = None,
-                        buildId: Option[String] = None,
-                        params: Map[String, Long] = Map.empty) = {
-    val b = new org.apache.spark.sql.types.MetadataBuilder()
-      .putString(IndexKindKey, kind)
-      .putBoolean(IndexPortableHashKey, portableHash)
-    tPpm.foreach(b.putLong(IndexTPpmKey, _))
-    hashOrdered.foreach(b.putBoolean(IndexHashOrderedKey, _))
-    buildId.foreach(b.putString(IndexBuildIdKey, _))
-    params.toSeq.sortBy(_._1).foreach { case (k, v) =>
-      b.putLong(IndexParamPrefix + k, v) }
-    b.build()
-  }
+      IndexContract.corpusDf(portableHash).stamp(buildId)))
 
   /** Stamp a corpus SNAPSHOT frame with a build id (on its `text`
     * column) so the lazy-index consumers — winnow / simhash /
     * substring / edit-distance `*Against` — can cross-check the index
     * they were handed against the corpus version they were pointed at
-    * ([[requireSameBuild]]'s contract for the families whose builders
+    * ([[IndexContract.checkBuild]], for the families whose builders
     * have no multi-table writer). Stamp the snapshot once when it is
     * sealed, pass the SAME id to the index builders run from it; a
     * consumer fed the index of one snapshot and the text of another
     * then fails at plan time instead of silently under-matching. */
   def stampCorpusBuild(docs: DataFrame, buildId: String,
-                       column: String = "text"): DataFrame = {
-    val m = new org.apache.spark.sql.types.MetadataBuilder()
-      .withMetadata(docs.schema(column).metadata)
-      .putString(IndexBuildIdKey, buildId).build()
-    docs.withColumn(column, col(column).as(column, m))
-  }
-
-  /** Cross-frame CORPUS-IDENTITY gate: the per-frame stamps record
-    * kind/hash/threshold/order but cannot see which corpus VERSION a
-    * frame was built from — an index and a doc side from different
-    * snapshots pass every axis, and the inner verification join then
-    * silently drops candidates whose doc_id is missing from the stale
-    * side (recall loss). The table writers stamp one fresh build id
-    * per call across all their outputs; this check fails loudly when
-    * both frames carry ids that DIFFER. Frames without ids (ad-hoc
-    * lazy builds — pass `buildId` to the builders to arm this) skip
-    * the check: version coupling is then the caller's contract, as
-    * documented on the consumers. A runtime left-join null check was
-    * rejected on measurement: preserving the candidate side forfeits
-    * the broadcast-candidate inner plan and forces the corpus-sized
-    * array side through a sort-merge shuffle (3.0x at 2M docs). */
-  private[graft] def requireSameBuild(idx: DataFrame, side: DataFrame,
-                                      idxColumn: String = "h",
-                                      sideColumn: String = "hs",
-                                      sideName: String = "doc-side"): Unit = {
-    val mi = idx.schema(idxColumn).metadata
-    val ms = side.schema(sideColumn).metadata
-    if (mi.contains(IndexBuildIdKey) && ms.contains(IndexBuildIdKey)) {
-      val (bi, bs) = (mi.getString(IndexBuildIdKey), ms.getString(IndexBuildIdKey))
-      require(bi == bs,
-        s"index build '$bi' does not match $sideName build '$bs': the two " +
-          "frames were built from different corpus versions — a stale " +
-          "doc side silently drops candidates (recall loss) and a stale " +
-          "df table breaks the common prefix order the recall-1 theorem " +
-          "needs; rebuild from one snapshot (one writer call stamps all " +
-          "its tables)")
-    }
-  }
-
-  /** Plan-time compatibility gate for a persisted index: the consumer
-    * states the kind, hash, threshold, and token order IT will probe
-    * with; any stamped-and-mismatched axis fails loudly. Every
-    * mismatch here is a SILENT recall hole otherwise: wrong kind
-    * (prefix index under a containment probe), wrong hash (zero token
-    * matches), lower threshold (prefix rows already cut), different
-    * order (no common total order).
-    *
-    * ABSENT metadata (an index round-tripped through a
-    * schema-stripping transform — e.g. rebuilt via a bare
-    * `select(col("h"), ...)`) is the same failure surface with the
-    * guards disarmed, so consumers whose contract is recall 1 pass
-    * `strict = true`: every axis they demand must be PRESENT and
-    * matching, and a stripped index fails loudly instead of silently
-    * skipping the checks. Their `unsafeAssumeCompatible` escape hatch
-    * (for hand-built frames whose compatibility the caller vouches
-    * for) downgrades to the lenient stamped-axes-only mode — never to
-    * no checking at all.
-    *
-    * MIGRATION NOTE (strict-by-default rollout): `bloomProbe`,
-    * `cbfForget`, `paragraphDedupAgainst`, `streamingAnnAgainst`, the
-    * winnow/simhash/substring `*Against` consumers, and every
-    * index-consuming streaming gate check strict by default as of the
-    * round that introduced each stamp family. Indexes and assigned
-    * corpora PERSISTED BEFORE their family's stamps existed carry no
-    * metadata and now fail at plan time — by design (an unverifiable
-    * index is the silent-recall surface itself). To migrate: rebuild
-    * each persisted index once with the current builders (they stamp
-    * automatically), or pass `unsafeAssumeCompatible = true` to vouch
-    * for a known-compatible legacy frame while scheduling the rebuild.
-    * The same applies when a stamp's DEFINITION changes (e.g. the IVF
-    * centroid fingerprint moving from string renderings to raw IEEE-754
-    * bits): re-stamp by re-running the builder over the same inputs —
-    * values are unchanged, only the metadata is refreshed. */
-  private[graft] def requireIndexCompatible(idx: DataFrame, kind: String,
-                                            portableHash: Boolean,
-                                            tPpm: Option[Long] = None,
-                                            hashOrdered: Option[Boolean] = None,
-                                            column: String = "h",
-                                            strict: Boolean = false,
-                                            params: Map[String, Long] = Map.empty): Unit = {
-    val m = idx.schema(column).metadata
-    // kind FIRST: a stamped-but-wrong-kind index (e.g. the char-level
-    // substring index under the token-level consumer — identical
-    // one-column schema) should fail with the kind diagnosis, not a
-    // misleading "missing param" message from the strict presence check
-    if (m.contains(IndexKindKey)) {
-      val built = m.getString(IndexKindKey)
-      require(built == kind,
-        s"index kind '$built' does not match this consumer's required " +
-          s"'$kind': a prefix-cut index under a containment probe (or vice " +
-          "versa) is a silent recall hole — build the right index")
-    }
-    if (strict) {
-      val needed = Seq(IndexKindKey, IndexPortableHashKey) ++
-        tPpm.map(_ => IndexTPpmKey) ++ hashOrdered.map(_ => IndexHashOrderedKey) ++
-        params.keys.toSeq.sorted.map(IndexParamPrefix + _)
-      val missing = needed.filterNot(m.contains)
-      require(missing.isEmpty,
-        s"index column '$column' carries no build metadata for " +
-          s"${missing.mkString(", ")}: this consumer's contract is recall 1 " +
-          "and an unverifiable index is the same silent-recall-loss surface " +
-          "the stamps exist to close — keep persisted indexes on " +
-          "metadata-carrying paths (parquet / catalog / localCheckpoint), " +
-          "or pass unsafeAssumeCompatible = true to vouch for a hand-built " +
-          "frame")
-    }
-    if (m.contains(IndexPortableHashKey)) {
-      val built = m.getBoolean(IndexPortableHashKey)
-      require(built == portableHash,
-        s"index hash kind (portableHash=$built) does not match this " +
-          s"consumer's (portableHash=$portableHash): mismatched hashes match " +
-          "ZERO tokens and every duplicate is silently waved through")
-    }
-    for (t <- tPpm if m.contains(IndexTPpmKey)) {
-      val built = m.getLong(IndexTPpmKey)
-      require(t >= built,
-        s"query threshold $t ppm is below the index build threshold " +
-          s"$built ppm: the index's prefix rows were cut at build time, so " +
-          "probing below it silently breaks the recall-1 guarantee — " +
-          "rebuild the index at the lower threshold")
-    }
-    for (ho <- hashOrdered if m.contains(IndexHashOrderedKey)) {
-      val built = m.getBoolean(IndexHashOrderedKey)
-      require(built == ho,
-        s"index token order (hashOrdered=$built) does not match this " +
-          s"consumer's prefix order (hashOrdered=$ho): the prefix " +
-          "theorem requires ONE total order common to both sides")
-    }
-    for ((name, want) <- params.toSeq.sortBy(_._1);
-         key = IndexParamPrefix + name if m.contains(key)) {
-      val built = m.getLong(key)
-      require(built == want,
-        s"index build parameter $name=$built does not match this " +
-          s"consumer's $name=$want: the fingerprint/window values the two " +
-          "sides compute share nothing under different parameters, so the " +
-          "probe join matches (near) zero rows and every duplicate is " +
-          "silently waved through — rebuild the index at this consumer's " +
-          "parameters or probe at the index's")
-    }
-  }
+                       column: String = "text"): DataFrame =
+    IndexContract.stampBuild(docs, buildId, column)
 
   /** The per-doc verification side of the exact-join indexes:
     * (doc_id, hs, n) — ONE row per corpus document carrying its full
@@ -1037,8 +812,7 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
   private def docHashSideFromHashes(sh: DataFrame, portableHash: Boolean,
                                     buildId: Option[String] = None): DataFrame =
     SimJoin.sortedHashes(sh, "hs")
-      .select(col("doc_id"),
-        col("hs").as("hs", indexMeta(KindDocSide, portableHash, buildId = buildId)),
+      .select(col("doc_id"), IndexContract.docSide(portableHash).stamped(col("hs"), buildId),
         size(col("hs")).as("n"))
 
   def docHashSide(corpus: DataFrame, portableHash: Boolean = true,
@@ -1072,24 +846,23 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     val tPpm = SimJoin.thresholdPpm(threshold)
     val spark = corpus.sparkSession
     // one fresh build id stamps ALL tables of this call: consumers
-    // cross-check it between index and doc side (requireSameBuild), so
-    // mixing this call's index with an older call's side fails at plan
-    // time instead of silently dropping the stale side's candidates
-    val buildId = Some(java.util.UUID.randomUUID().toString)
+    // cross-check it between index and doc side, so mixing this call's
+    // index with an older call's side fails at plan time instead of
+    // silently dropping the stale side's candidates
+    val buildId = IndexContract.buildId()
     // ONE tokenize+shingle+hash pass feeds all three builds — the
     // persistLineage doctrine: at corpus scale that chain dominates,
     // and three independent builds would pay it three times
     val sh = SimJoin.shingleHashes(corpus, portableHash, persist = true)
     try {
-      graft.ops.Scale.writeBucketed(corpusDfFromHashes(sh, portableHash, buildId),
-        "h", buckets, s"${prefix}_df")
-      graft.ops.Scale.writeBucketed(
+      IndexContract.corpusDf(portableHash).write(corpusDfFromHashes(sh, portableHash, buildId),
+        s"${prefix}_df", buckets, by = "h")
+      IndexContract.jaccardPrefix(portableHash, tPpm, hashOrdered).write(
         jaccardIndexFromHashes(sh, tPpm, portableHash,
           Some(spark.table(s"${prefix}_df")), hashOrdered, buildId),
-        "h", buckets, s"${prefix}_idx")
-      graft.ops.Scale.writeBucketed(
-        docHashSideFromHashes(sh, portableHash, buildId),
-        "doc_id", buckets, s"${prefix}_side")
+        s"${prefix}_idx", buckets)
+      IndexContract.docSide(portableHash).write(docHashSideFromHashes(sh, portableHash, buildId),
+        s"${prefix}_side", buckets, by = "doc_id")
     } finally sh.unpersist(blocking = false)
   }
 
@@ -1102,16 +875,14 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
                               portableHash: Boolean = true,
                               buckets: Int = 64): Unit = {
     // one build id across both tables — see writeJaccardIndexTables
-    val buildId = Some(java.util.UUID.randomUUID().toString)
+    val buildId = IndexContract.buildId()
+    val spec = IndexContract.containFull(portableHash)
     val sh = SimJoin.shingleHashes(corpus, portableHash, persist = true)
     try {
-      graft.ops.Scale.writeBucketed(
-        sh.select(col("h").as("h", indexMeta(KindContainFull, portableHash,
-          buildId = buildId)), col("doc_id")),
-        "h", buckets, s"${prefix}_idx")
-      graft.ops.Scale.writeBucketed(
-        docHashSideFromHashes(sh, portableHash, buildId),
-        "doc_id", buckets, s"${prefix}_side")
+      spec.write(sh.select(spec.stamped(col("h"), buildId), col("doc_id")),
+        s"${prefix}_idx", buckets)
+      IndexContract.docSide(portableHash).write(docHashSideFromHashes(sh, portableHash, buildId),
+        s"${prefix}_side", buckets, by = "doc_id")
     } finally sh.unpersist(blocking = false)
   }
 
@@ -1126,7 +897,7 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
     * 1k-token doc would repeat its 8 KB hash array across ~200 prefix
     * rows, >1000× amplification, and every probe would scan and
     * shuffle it). The `h` column carries the build threshold and token
-    * order as schema metadata ([[IndexTPpmKey]]) so consumers reject
+    * order as schema metadata ([[IndexContract.jaccardPrefix]]) so consumers reject
     * incompatible probes at plan time.
     *
     * `hashOrdered=true` switches the canonical token order from
@@ -1157,8 +928,8 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
         .select(col("doc_id"), expr(SimJoin.OrdHashes).as("hs"))
     withOrd
       .select(col("doc_id"), explode(SimJoin.prefix("hs", tPpm)).as("h"))
-      .select(col("h").as("h", indexMeta(KindJaccardPrefix, portableHash,
-        Some(tPpm), Some(hashOrdered), buildId)), col("doc_id"))
+      .select(IndexContract.jaccardPrefix(portableHash, tPpm, hashOrdered)
+        .stamped(col("h"), buildId), col("doc_id"))
   }
 
   /** Incremental exact-threshold similarity join: every (batch doc,
@@ -1189,21 +960,19 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
                          portableHash: Boolean = true,
                          corpusDf: Option[DataFrame] = None,
                          index: Option[DataFrame] = None,
-                         docSide: Option[DataFrame] = None,
-                         unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                         docSide: Option[DataFrame] = None): DataFrame = {
     val tPpm = SimJoin.thresholdPpm(threshold)
     val dfT = corpusDf.getOrElse(jaccardCorpusStats(corpus, portableHash))
     val idx = index.getOrElse(
       jaccardIndex(corpus, threshold, portableHash, Some(dfT)))
     val side = docSide.getOrElse(docHashSide(corpus, portableHash))
-    SimJoin.requireProbeCompatible(idx, side, KindJaccardPrefix, portableHash,
-      unsafeAssumeCompatible, tPpm = Some(tPpm), hashOrdered = Some(false))
+    val spec = IndexContract.jaccardPrefix(portableHash, tPpm, hashOrdered = false)
+    spec.checkWithSide(idx, side)
     // the df table is a RECALL axis too: the batch prefix is sliced
     // in dfT's order while the index's prefix rows were cut in the
     // build df's order — the prefix theorem needs ONE common total
     // order, so a stale df silently misses true pairs
-    if (!unsafeAssumeCompatible)
-      requireSameBuild(idx, dfT, sideColumn = "df", sideName = "corpus-df")
+    spec.checkBuild(idx, dfT, sideColumn = "df", sideName = "corpus-df")
     // one row per batch doc: its full hash set in corpus-df prefix
     // order (the prefix slice needs the order; array_intersect does
     // not, so the same array serves both)
@@ -1236,8 +1005,8 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
   def containIndex(corpus: DataFrame, portableHash: Boolean = true,
                    buildId: Option[String] = None): DataFrame =
     shingles(corpus)
-      .select(SimJoin.shingleHash(portableHash).as("h", indexMeta(KindContainFull,
-        portableHash, buildId = buildId)), col("doc_id"))
+      .select(IndexContract.containFull(portableHash)
+        .stamped(SimJoin.shingleHash(portableHash), buildId), col("doc_id"))
 
   /** Exact-threshold CONTAINMENT join: every ordered pair (d1, d2),
     * d1 ≠ d2, where at least `threshold` of d1's shingle set appears in
@@ -1302,16 +1071,14 @@ private[text] trait TextDedupOps { this: TextQueries.type =>
                          threshold: Double = 0.8,
                          portableHash: Boolean = true,
                          index: Option[DataFrame] = None,
-                         docSide: Option[DataFrame] = None,
-                         unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                         docSide: Option[DataFrame] = None): DataFrame = {
     val tPpm = SimJoin.thresholdPpm(threshold)
     val idx = index.getOrElse(containIndex(corpus, portableHash))
     val side = docSide.getOrElse(docHashSide(corpus, portableHash))
     // containment REQUIRES the full-token kind: a prefix-cut index has
     // the identical (h, doc_id) schema but is the documented recall
     // hole for this predicate — reject it at plan time
-    SimJoin.requireProbeCompatible(idx, side, KindContainFull, portableHash,
-      unsafeAssumeCompatible)
+    IndexContract.containFull(portableHash).checkWithSide(idx, side)
     val batchSide = SimJoin.sortedHashes(SimJoin.shingleHashes(batch, portableHash), "bhs")
       .select(col("doc_id").as("batch_id"), col("bhs"), size(col("bhs")).as("bn"))
     SimJoin.arrayVerify(

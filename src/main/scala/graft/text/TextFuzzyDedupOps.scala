@@ -230,7 +230,7 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
     * curation noise, not a near-duplicate signal. `maxDf = 0`
     * (default) keeps the exact recall-1 index.
     *
-    * The cap is STAMPED (`graft.index.param.max_df`) and checked by
+    * The cap is STAMPED (the `max_df` index parameter) and checked by
     * every consumer like k/w: a consumer expecting the exact index fed
     * a capped one (or vice versa) computes different match sets with
     * no visible error otherwise.
@@ -262,11 +262,7 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
     // metadata in a SECOND select: an Alias over a generator loses
     // its explicitMetadata when the analyzer rewrites it to the
     // Generate node's output attribute
-    kept.select(col("dup_of"),
-      col("fp").as("fp",
-        indexMeta(KindWinnowFp, portableHash = true, buildId = buildId,
-          params = Map("k" -> k.toLong, "w" -> w.toLong,
-            "max_df" -> math.max(maxDf, 0L)))))
+    kept.select(col("dup_of"), IndexContract.winnowFp(k, w, maxDf).stamped(col("fp"), buildId))
   }
 
   /** Persist [[winnowIndex]] as a BUCKETED catalog table (bucketed +
@@ -283,9 +279,8 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
                             k: Int = 3, w: Int = 4, buckets: Int = 64,
                             buildId: Option[String] = None,
                             maxDf: Long = 0): Unit = {
-    val id = buildId.orElse(Some(java.util.UUID.randomUUID().toString))
-    val idx = winnowIndex(corpus, k, w, id, maxDf)
-    try graft.ops.Scale.writeBucketed(idx, "fp", buckets, table)
+    val idx = winnowIndex(corpus, k, w, IndexContract.buildId(buildId), maxDf)
+    try IndexContract.winnowFp(k, w, maxDf).write(idx, table, buckets)
     finally graft.ops.Scale.releaseCompact(idx)
   }
 
@@ -307,13 +302,11 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
   def winnowDedupAgainst(batch: DataFrame, corpus: DataFrame,
                          k: Int = 3, w: Int = 4, minShared: Long = 1,
                          corpusIndex: Option[DataFrame] = None,
-                         unsafeAssumeCompatible: Boolean = false,
                          maxDf: Long = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val best = Window.partitionBy("batch_id")
       .orderBy(col("n_shared").desc, col("dup_of"))
-    winnowMatchCounts(batch, corpus, k, w, corpusIndex, unsafeAssumeCompatible,
-      maxDf)
+    winnowMatchCounts(batch, corpus, k, w, corpusIndex, maxDf)
       .filter(col("n_shared") >= minShared)
       .withColumn("rn", row_number().over(best)).filter(col("rn") === 1)
       .select(col("batch_id"), col("dup_of"), col("n_shared"), col("n_fps"))
@@ -326,23 +319,16 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
   private[graft] def winnowMatchCounts(batch: DataFrame, corpus: DataFrame,
                                        k: Int, w: Int,
                                        corpusIndex: Option[DataFrame],
-                                       unsafeAssumeCompatible: Boolean,
                                        maxDf: Long = 0): DataFrame = {
     // a handed-in index must have been built at THIS consumer's
     // (k, w, max_df) — different k/w share zero fingerprints and
     // silently wave every near-duplicate through; a different df cap
-    // computes a different match set with no visible error (strict: a
-    // stripped index is the same surface with the guards disarmed) —
-    // and, when both frames are build-stamped, from THIS corpus
-    // snapshot
+    // computes a different match set with no visible error — and, when
+    // both frames are build-stamped, from THIS corpus snapshot
     corpusIndex.foreach { idx =>
-      requireIndexCompatible(idx, KindWinnowFp, portableHash = true,
-        column = "fp", strict = !unsafeAssumeCompatible,
-        params = Map("k" -> k.toLong, "w" -> w.toLong,
-          "max_df" -> math.max(maxDf, 0L)))
-      if (!unsafeAssumeCompatible)
-        requireSameBuild(idx, corpus, idxColumn = "fp", sideColumn = "text",
-          sideName = "corpus")
+      val spec = IndexContract.winnowFp(k, w, maxDf)
+      spec.check(idx)
+      spec.checkBuild(idx, corpus)
     }
     val cIdx = corpusIndex.getOrElse(winnowIndex(corpus, k, w, maxDf = maxDf))
     val bf = winnowFrame(batch, k, w)
@@ -366,13 +352,11 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
   def editDistAgainst(batch: DataFrame, corpus: DataFrame,
                       k: Int = 3, w: Int = 4, minSimPpm: Long = 500000L,
                       corpusIndex: Option[DataFrame] = None,
-                      unsafeAssumeCompatible: Boolean = false,
                       maxDf: Long = 0): DataFrame = {
     // guards (kind / k / w / max_df / build-id vs the corpus snapshot)
     // live in the candidate stage — this wrapper adds only the
     // text-verify join
-    val cand = winnowDedupAgainst(batch, corpus, k, w,
-      corpusIndex = corpusIndex, unsafeAssumeCompatible = unsafeAssumeCompatible,
+    val cand = winnowDedupAgainst(batch, corpus, k, w, corpusIndex = corpusIndex,
       maxDf = maxDf)
     val bt = batch.select(col("doc_id").as("batch_id"), col("text").as("t1"))
     val ct = corpus.select(col("doc_id").as("dup_of"), col("text").as("t2"))
@@ -418,10 +402,8 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
                              minSimPpm: Long = 500000L,
                              maxMatchesPerDoc: Int = 0,
                              corpusIndex: Option[DataFrame] = None,
-                             unsafeAssumeCompatible: Boolean = false,
                              maxDf: Long = 0): DataFrame = {
-    val cand0 = winnowMatchCounts(batch, corpus, k, w,
-        corpusIndex, unsafeAssumeCompatible, maxDf)
+    val cand0 = winnowMatchCounts(batch, corpus, k, w, corpusIndex, maxDf)
       .filter(col("n_shared") >= minShared)
       .select(col("batch_id"), col("dup_of"), col("n_shared"))
     val cand =
@@ -723,10 +705,8 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
   def exactSubstringDedupAgainst(batch: DataFrame, corpus: DataFrame,
                                  k: Int = 50,
                                  portableHash: Boolean = true,
-                                 corpusIndex: Option[DataFrame] = None,
-                                 unsafeAssumeCompatible: Boolean = false): DataFrame =
-    SpanDedup.against(SpanDedup.tokens(k, portableHash), batch, corpus,
-      corpusIndex, unsafeAssumeCompatible)
+                                 corpusIndex: Option[DataFrame] = None): DataFrame =
+    SpanDedup.against(SpanDedup.tokens(k, portableHash), batch, corpus, corpusIndex)
 
   /** [[exactSubstringDedup]] with keep-one semantics — the OTHER mode
     * of Lee et al. 2021's dedup tool ("remove all but one occurrence"):
@@ -836,8 +816,6 @@ private[text] trait TextFuzzyDedupOps { this: TextQueries.type =>
   def exactSubstringDedupCharsAgainst(batch: DataFrame, corpus: DataFrame,
                                       L: Int = 100,
                                       portableHash: Boolean = true,
-                                      corpusIndex: Option[DataFrame] = None,
-                                      unsafeAssumeCompatible: Boolean = false): DataFrame =
-    SpanDedup.against(SpanDedup.chars(L, portableHash), batch, corpus,
-      corpusIndex, unsafeAssumeCompatible)
+                                      corpusIndex: Option[DataFrame] = None): DataFrame =
+    SpanDedup.against(SpanDedup.chars(L, portableHash), batch, corpus, corpusIndex)
 }

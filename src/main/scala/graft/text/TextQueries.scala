@@ -609,9 +609,8 @@ object TextQueries
     // cap must sit BELOW the corpus's noise-df band. Near-dup recall
     // survives: a planted pair's distinctive fingerprints live in
     // exactly ONE corpus doc (df=1 on the corpus side by definition).
-    // The cap is a stamped contract parameter (graft.index.param
-    // .max_df), so handing this index to an exact-index consumer
-    // fails at plan time ----
+    // The cap is a stamped contract parameter (max_df), so handing
+    // this index to an exact-index consumer fails at plan time ----
     "dedup_editdist_dfcap" -> { (s, dir) =>
       val docs = Tables.documents(s, dir)
       editDistMatchesAgainst(docs.filter(col("doc_id") % 2 === 1),

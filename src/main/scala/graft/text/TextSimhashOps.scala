@@ -143,9 +143,8 @@ private[text] trait TextSimhashOps { this: TextQueries.type =>
     simhashFrameWide(corpus)
       .select(col("doc_id").as("dup_of"), col("simhash").as("h"),
         explode(expr("sequence(0, 3)")).as("b"))
-      .select(expr("b * 32768 + ((h >> (15 * b)) & 32767)")
-          .as("bk", indexMeta(KindSimhashBand, portableHash = true,
-            buildId = buildId, params = Map("bands" -> 4L, "bits" -> 60L))),
+      .select(IndexContract.simhashBand.stamped(
+          expr("b * 32768 + ((h >> (15 * b)) & 32767)"), buildId),
         col("h"), col("dup_of"))
 
   /** Persist [[simhashIndex]] as a BUCKETED catalog table (bucketed +
@@ -155,10 +154,9 @@ private[text] trait TextSimhashOps { this: TextQueries.type =>
     * geometry + one build id. Rebuild per corpus version. */
   def writeSimhashIndexTable(corpus: DataFrame, table: String,
                              buckets: Int = 64,
-                             buildId: Option[String] = None): Unit = {
-    val id = buildId.orElse(Some(java.util.UUID.randomUUID().toString))
-    graft.ops.Scale.writeBucketed(simhashIndex(corpus, id), "bk", buckets, table)
-  }
+                             buildId: Option[String] = None): Unit =
+    IndexContract.simhashBand.write(simhashIndex(corpus, IndexContract.buildId(buildId)),
+      table, buckets)
 
   /** ALL batch-vs-corpus matches at hamming <= `maxHamming` —
     * (batch_id, dup_of, hamming). Candidates meet in the banded index
@@ -168,8 +166,7 @@ private[text] trait TextSimhashOps { this: TextQueries.type =>
     * batch-parity reference. */
   def simhashMatchesAgainst(batch: DataFrame, corpus: DataFrame,
                             maxHamming: Int = 3,
-                            corpusIndex: Option[DataFrame] = None,
-                            unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                            corpusIndex: Option[DataFrame] = None): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"4 bands over 60 bits guarantee recall only to hamming 3, got $maxHamming")
     // a handed-in index must carry THIS probe's band geometry (4×15
@@ -178,12 +175,8 @@ private[text] trait TextSimhashOps { this: TextQueries.type =>
     // guarantee silently) and, when both frames are build-stamped,
     // come from THIS corpus snapshot
     corpusIndex.foreach { idx =>
-      requireIndexCompatible(idx, KindSimhashBand, portableHash = true,
-        column = "bk", strict = !unsafeAssumeCompatible,
-        params = Map("bands" -> 4L, "bits" -> 60L))
-      if (!unsafeAssumeCompatible)
-        requireSameBuild(idx, corpus, idxColumn = "bk", sideColumn = "text",
-          sideName = "corpus")
+      IndexContract.simhashBand.check(idx)
+      IndexContract.simhashBand.checkBuild(idx, corpus)
     }
     val cIdx = corpusIndex.getOrElse(simhashIndex(corpus))
     val b = simhashFrameWide(batch).localCheckpoint()
@@ -204,13 +197,11 @@ private[text] trait TextSimhashOps { this: TextQueries.type =>
     * [[lshPairsAgainst]]'s (batch_id, dup_of, score) contract. */
   def simhashDedupAgainst(batch: DataFrame, corpus: DataFrame,
                           maxHamming: Int = 3,
-                          corpusIndex: Option[DataFrame] = None,
-                          unsafeAssumeCompatible: Boolean = false): DataFrame = {
+                          corpusIndex: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val best = Window.partitionBy("batch_id")
       .orderBy(col("hamming"), col("dup_of"))
-    simhashMatchesAgainst(batch, corpus, maxHamming, corpusIndex,
-      unsafeAssumeCompatible)
+    simhashMatchesAgainst(batch, corpus, maxHamming, corpusIndex)
       .withColumn("rn", row_number().over(best)).filter(col("rn") === 1)
       .select(col("batch_id"), col("dup_of"), col("hamming"))
   }

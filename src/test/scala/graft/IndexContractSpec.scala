@@ -6,14 +6,15 @@ import graft.text.TextQueries
 
 /** Index-contract stamps for the NON-jaccard incremental families —
   * winnow, simhash, exact-substring (token and char) — the same
-  * silent-recall-loss class `requireIndexCompatible`/`requireSameBuild`
-  * closed for the jaccard/contain families one module over: a
+  * silent-recall-loss class `IndexContract.check`/`checkBuild` close
+  * for the jaccard/contain families one module over: a
   * persistable index side built with different parameters (winnow k/w,
   * substring window length, simhash band geometry), a different hash
   * kind, a stripped schema, or a different corpus VERSION silently
   * under-matches (often to zero) instead of failing. Every test here
   * feeds a wrong index to a consumer and asserts the LOUD plan-time
-  * failure; the escape hatch must stay result-identical.
+  * failure; a compatible handed-in index must stay result-identical to
+  * the consumer's own build.
   */
 class IndexContractSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -57,17 +58,14 @@ class IndexContractSpec extends AnyFunSuite {
         corpusIndex = Some(stripped(idx34, "fp")))
     }
     assert(eS.getMessage.contains("no build metadata"), eS.getMessage)
-    // escape hatch: stripped-but-genuinely-compatible under
-    // unsafeAssumeCompatible=true equals the stamped path
+    // the stamped index handed in equals the consumer's lazy build
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.select("batch_id", "dup_of", "n_shared").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val want = snap(TextQueries.winnowDedupAgainst(batch, corpus,
-      corpusIndex = Some(idx34)))
+    val want = snap(TextQueries.winnowDedupAgainst(batch, corpus))
     assert(want.nonEmpty, "fixture must produce winnow matches")
     assert(snap(TextQueries.winnowDedupAgainst(batch, corpus,
-      corpusIndex = Some(stripped(idx34, "fp")),
-      unsafeAssumeCompatible = true)) == want)
+      corpusIndex = Some(idx34))) == want)
   }
 
   test("winnow: df-cap (max_df) is a stamped contract parameter — mismatch fails loudly, capped index only removes candidate evidence") {
@@ -97,11 +95,10 @@ class IndexContractSpec extends AnyFunSuite {
     // recall contract: the capped index's match set is a SUBSET of the
     // exact index's per (batch, corpus) pair, with n_shared <= exact —
     // dropping a fingerprint can only remove candidate evidence
-    val exact = TextQueries.winnowMatchCounts(batch, corpus, 3, 4, None,
-      unsafeAssumeCompatible = false).collect()
+    val exact = TextQueries.winnowMatchCounts(batch, corpus, 3, 4, None).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val cappedCounts = TextQueries.winnowMatchCounts(batch, corpus, 3, 4, None,
-      unsafeAssumeCompatible = false, maxDf = 8).collect()
+      maxDf = 8).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(cappedCounts.nonEmpty, "fixture must keep low-df matches")
     cappedCounts.foreach { case (pair, n) =>
@@ -148,8 +145,7 @@ class IndexContractSpec extends AnyFunSuite {
     val want = snap(TextQueries.simhashMatchesAgainst(batch, corpus))
     assert(want.nonEmpty, "fixture must produce simhash matches")
     assert(snap(TextQueries.simhashMatchesAgainst(batch, corpus,
-      corpusIndex = Some(stripped(idx, "bk")),
-      unsafeAssumeCompatible = true)) == want)
+      corpusIndex = Some(idx))) == want)
     // the streaming gate rejects a stripped static index at plan time
     // (before any stream starts)
     val in = spark.readStream.schema(
@@ -261,14 +257,13 @@ class IndexContractSpec extends AnyFunSuite {
         TextQueries.stampCorpusBuild(corpus, "v2"),
         corpusBands = Some(TextQueries.bandSignatures(corpus, buildId = Some("v1"))))
     }
-    // escape hatch: stripped-but-compatible == stamped
+    // the stamped bands handed in == the lazy build
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val want = snap(TextQueries.lshMatchesAgainst(batch, corpus))
     assert(want.nonEmpty, "fixture must produce lsh matches")
     assert(snap(TextQueries.lshMatchesAgainst(batch, corpus,
-      corpusBands = Some(stripped(bandsMd5, "sig")),
-      unsafeAssumeCompatible = true)) == want)
+      corpusBands = Some(bandsMd5))) == want)
     // the streaming gate rejects a stripped static index at plan time;
     // a corpusIndex-built (stamped) one passes
     val in = spark.readStream.schema(
@@ -366,8 +361,6 @@ class IndexContractSpec extends AnyFunSuite {
         (r.getLong(0), r.getInt(1), r.getInt(2), r.getString(3))).toSet
     val want = snap(ParagraphQueries.paragraphDedupAgainst(batchPages, idx))
     assert(want.exists(_._3 > 0), "fixture must scrub at least one paragraph")
-    assert(snap(ParagraphQueries.paragraphDedupAgainst(batchPages,
-      stripped(idx, "h"), unsafeAssumeCompatible = true)) == want)
     // the streaming gate rejects a stripped static index at plan time
     val in = spark.readStream.schema(
       org.apache.spark.sql.types.StructType.fromDDL(
@@ -420,8 +413,7 @@ class IndexContractSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       TextQueries.bloomProbe(batch, bits, k = 7)
     }
-    // stripped bits table fails strict; the escape hatch must equal
-    // the stamped path exactly
+    // stripped bits table fails strict
     val eS = intercept[IllegalArgumentException] {
       TextQueries.bloomProbe(batch, stripped(bits, "bit"))
     }
@@ -431,8 +423,6 @@ class IndexContractSpec extends AnyFunSuite {
     // probe ALL docs: the seen half must flag (no false negatives)
     val want = snap(TextQueries.bloomProbe(docs, bits))
     assert(want.exists(_._2), "fixture must contain bloom hits")
-    assert(snap(TextQueries.bloomProbe(docs, stripped(bits, "bit"),
-      unsafeAssumeCompatible = true)) == want)
     // counting filter: a forget pass at the wrong geometry would
     // subtract the WRONG cells — rejected at plan time
     val counters = TextQueries.cbfCounters(seen)
@@ -507,8 +497,7 @@ class IndexContractSpec extends AnyFunSuite {
       graft.streaming.StreamOps.streamingAnnAgainst(stream, corpusV1, centsV1b)
     }
     assert(eF.getMessage.contains("chash"), eF.getMessage)
-    // stripped assigned corpus fails strict; the escape hatch restores
-    // the pre-stamp behavior exactly
+    // stripped assigned corpus fails strict
     intercept[IllegalArgumentException] {
       graft.streaming.StreamOps.streamingAnnAgainst(stream,
         stripped(corpusV1, "cell"), centsV1)
@@ -518,9 +507,6 @@ class IndexContractSpec extends AnyFunSuite {
     val want = snap(graft.streaming.StreamOps.streamingAnnAgainst(
       stream, corpusV1, centsV1, threshold = 0.1))
     assert(want.nonEmpty, "fixture must produce same-cell matches")
-    assert(snap(graft.streaming.StreamOps.streamingAnnAgainst(stream,
-      stripped(corpusV1, "cell"), centsV1, threshold = 0.1,
-      unsafeAssumeCompatible = true)) == want)
   }
 
   test("ivf: a legacy-v1 fingerprint stamp (chash without chash_fmt) fails naming the FORMAT change, not stale centroids") {
@@ -530,15 +516,14 @@ class IndexContractSpec extends AnyFunSuite {
     // simulate a pre-r14 persisted corpus: same stamp axes but the
     // fingerprint was computed under the retired toString definition —
     // identified by the ABSENCE of chash_fmt (the version key)
-    val legacy = assigned.select(assigned.columns.map { c =>
+    val spec = graft.text.IndexContract.ivfCell(cents)
+    def restamped(chash: Long) = assigned.select(assigned.columns.map { c =>
       if (c == "cell")
-        col(c).as(c, TextQueries.indexMeta(TextQueries.KindIvfCell,
-          portableHash = true,
-          params = Map("nlist" -> cents.length.toLong,
-            "dim" -> cents.head.length.toLong,
-            "chash" -> 12345L)))
+        spec.copy(params = spec.params - "chash_fmt" + ("chash" -> chash))
+          .stamped(col(c), None)
       else col(c)
     }: _*)
+    val legacy = restamped(12345L)
     val stream = all.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id"),
         lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")).as("ts"),
@@ -552,15 +537,7 @@ class IndexContractSpec extends AnyFunSuite {
     // raw-IEEE fingerprint before the version key existed — the chash
     // VALUE matches v2 exactly, so the message must say the values are
     // identical (metadata-only refresh), never imply stale centroids
-    val r14 = assigned.select(assigned.columns.map { c =>
-      if (c == "cell")
-        col(c).as(c, TextQueries.indexMeta(TextQueries.KindIvfCell,
-          portableHash = true,
-          params = Map("nlist" -> cents.length.toLong,
-            "dim" -> cents.head.length.toLong,
-            "chash" -> graft.sim.Ivf.centroidFingerprint(cents))))
-      else col(c)
-    }: _*)
+    val r14 = restamped(graft.sim.Ivf.centroidFingerprint(cents))
     val e2 = intercept[IllegalArgumentException] {
       graft.streaming.StreamOps.streamingAnnAgainst(stream, r14, cents)
     }
@@ -568,9 +545,8 @@ class IndexContractSpec extends AnyFunSuite {
       e2.getMessage.contains("identical"), e2.getMessage)
     // the migration is RE-STAMPING (Ivf.withCell under the same
     // centroids), which the v2-stamped `assigned` frame demonstrates;
-    // the escape hatch cannot vouch past a chash VALUE mismatch by
-    // design (value checks run even lenient), so a legacy frame must
-    // be re-assigned — exactly what the error message says
+    // nothing vouches past a chash VALUE mismatch, so a legacy frame
+    // must be re-assigned — exactly what the error message says
     assert(graft.streaming.StreamOps.streamingAnnAgainst(stream, assigned,
       cents, threshold = 0.1).count() > 0)
   }
@@ -584,5 +560,39 @@ class IndexContractSpec extends AnyFunSuite {
     assert(m.getLong("graft.index.param.k") == 3L &&
       m.getLong("graft.index.param.w") == 4L)
     assert(m.getString("graft.index.build_id") == "rt-1")
+  }
+
+  test("the index contract is written only in IndexContract.scala; no consumer can bypass it") {
+    import java.nio.file.{Files, Paths}
+    import graft.text.IndexContract
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val sources = Files.walk(root).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    def holders(hit: String => Boolean): Seq[String] =
+      sources.collect { case (f, text) if hit(text) => f }.toSeq.sorted
+    assert(holders(_.contains("unsafeAssumeCompatible")).isEmpty,
+      s"no index check may be bypassed; found in: ${holders(_.contains("unsafeAssumeCompatible"))}")
+    // every kind's stamp: its metadata keys, its kind literal, and no
+    // Kind* constants restating one elsewhere
+    val kinds = Seq(IndexContract.lshBand(true), IndexContract.jaccardPrefix(true, 1L, false),
+      IndexContract.containFull(true), IndexContract.docSide(true), IndexContract.corpusDf(true),
+      IndexContract.simhashBand, IndexContract.winnowFp(3, 4, 0), IndexContract.substringTok(3, true),
+      IndexContract.substringChar(3, true), IndexContract.paragraphHash,
+      IndexContract.bloomBits(64, 2), IndexContract.cbfCells(64, 2),
+      IndexContract.ivfCell(Array(Array(0.0)))).map(_.kind)
+    assert(kinds.distinct.size == 13, s"kinds must be distinct: $kinds")
+    val KindConst = "\\bKind[A-Z]\\w*".r
+    (("graft.index." -> ((t: String) => t.contains("graft.index."))) +:
+      ("Kind* constants" -> ((t: String) => KindConst.findFirstIn(t).isDefined)) +:
+      kinds.map(k => k -> ((t: String) => t.contains("\"" + k + "\"")))).foreach { case (what, hit) =>
+      assert(holders(hit) == Seq("IndexContract.scala"),
+        s"'$what' must be written only in graft.text.IndexContract; found in: ${holders(hit).mkString(", ")}")
+    }
+    // every consumer checks strictly: no check takes a strict flag
+    val StrictFlag = "\\bstrict\\s*[:=]".r
+    assert(holders(t => StrictFlag.findFirstIn(t).isDefined).isEmpty,
+      s"a strict flag is back in: ${holders(t => StrictFlag.findFirstIn(t).isDefined)}")
   }
 }

@@ -318,9 +318,11 @@ class PlanSpec extends AnyFunSuite {
   test("dedup_substring: window fan-out partition-local; hash counts combine map-side") {
     val p = plan("dedup_substring")
     assert(!p.contains("CartesianProduct"), "no all-pairs anywhere")
-    // two compact-row doc_id exchanges (position-collect branch +
-    // rebuild join-back), both moving un-exploded (doc_id, text) rows —
-    // the count branch aggregates on h and needs no doc_id clustering
+    // two doc_id exchanges in the plan (position-collect branch +
+    // rebuild join-back), both over the same un-exploded (doc_id, text)
+    // scan — identical, so AQE runs one and reuses it (pinned executed
+    // below); the count branch aggregates on h and needs no doc_id
+    // clustering
     val nDoc = "Exchange hashpartitioning\\(doc_id".r.findAllIn(p).size
     assert(nDoc == 2,
       s"expected two compact-row doc_id shuffles, got $nDoc:\n${p.take(2500)}")
@@ -336,6 +338,31 @@ class PlanSpec extends AnyFunSuite {
     val partial = p.indexOf("partial_count", shuffleH)
     assert(shuffleH >= 0 && partial > shuffleH,
       s"window-hash counts must combine map-side below their exchange:\n${p.take(2500)}")
+  }
+
+  test("span dedup: every grain shuffles the full text once; the rebuild reuses the occurrence side's exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    // executed (AQE-final) shuffles carrying `text`; a reused exchange
+    // runs no shuffle of its own
+    def textShuffles(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => textShuffles(a.executedPlan)
+      case q: QueryStageExec => textShuffles(q.plan)
+      case _: ReusedExchangeExec => 0
+      case e: ShuffleExchangeExec =>
+        (if (e.child.output.exists(_.name == "text")) 1 else 0) + textShuffles(e.child)
+      case other => other.children.map(textShuffles).sum
+    }
+    for (q <- Seq("dedup_substring", "dedup_substring_keep", "dedup_substring_incr",
+                  "dedup_substring_chars", "dedup_substring_chars_keep",
+                  "dedup_substring_chars_incr", "txt_scrub_ngrams", "dedup_paragraph",
+                  "dedup_paragraph_incr", "txt_scrub_lines")) {
+      val df = SparkEntry.queries(q)(spark, sfDir)
+      df.collect()
+      val n = textShuffles(df.queryExecution.executedPlan)
+      assert(n == 1, s"$q: the full text must shuffle once, got $n:\n${df.queryExecution.executedPlan}")
+    }
   }
 
   test("emb_semdedup: survivors anti-join a BROADCAST drop-set; corpus scanned once") {

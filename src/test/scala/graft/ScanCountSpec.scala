@@ -22,10 +22,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * counts ALL file scans, including scans of DISTINCT tables (the
   * TPC-H joins: q5_nation_revenue = 5 one-per-table) and deliberate
   * multi-pass designs. The documented multi-pass families:
-  *  - three-pass scrubs (txt_scrub_lines/_ngrams, dedup_substring,
-  *    dedup_paragraph, corpus_tokenize = count + positional collect +
-  *    rebuild): the optimizer's isnotnull on the build side defeats
-  *    exchange reuse between the passes, each moves compact rows;
+  *  - span scrubs: the occurrence side and the rebuild share one
+  *    reused key-clustered exchange (SpanDedup.dedup), so a scrub that
+  *    counts its own occurrences reads the input once
+  *    (dedup_paragraph, txt_scrub_lines, the keep and char forms), one
+  *    that counts over a separate scan reads it twice
+  *    (dedup_substring, txt_scrub_ngrams), and an incremental form adds
+  *    the index's scan (corpus_tokenize, a scrub feeding its later
+  *    stages, reads 3);
   *  - index + doc-side + probe dedup joins (dedup_jaccard_join 3,
   *    dedup_contain_join 3, dedup_lsh_pairs 4, *_incr): each input
   *    contributes its own scan by design, plus the verification join's
@@ -103,18 +107,18 @@ object ScanCountGate {
     "dedup_keep_best" -> 2,
     "dedup_lsh_pairs" -> 4,
     "dedup_minhash_sig" -> 1,
-    "dedup_paragraph" -> 3,
-    "dedup_paragraph_incr" -> 3,
+    "dedup_paragraph" -> 1,
+    "dedup_paragraph_incr" -> 2,
     "dedup_simhash" -> 1,
     "dedup_simhash_incr" -> 1,
     "dedup_simhash_pairs" -> 0,
     "dedup_stats" -> 0,
-    "dedup_substring" -> 3,
-    "dedup_substring_chars" -> 2,
+    "dedup_substring" -> 2,
+    "dedup_substring_chars" -> 1,
     "dedup_substring_chars_incr" -> 2,
-    "dedup_substring_chars_keep" -> 2,
+    "dedup_substring_chars_keep" -> 1,
     "dedup_substring_incr" -> 2,
-    "dedup_substring_keep" -> 2,
+    "dedup_substring_keep" -> 1,
     "dedup_winnow_incr" -> 0,
     "dedup_winnow_pairs" -> 0,
     "dfield_lookup" -> 1,
@@ -244,8 +248,8 @@ object ScanCountGate {
     "txt_readability" -> 1,
     "txt_repetition" -> 1,
     "txt_repetition_keep" -> 1,
-    "txt_scrub_lines" -> 3,
-    "txt_scrub_ngrams" -> 3,
+    "txt_scrub_lines" -> 1,
+    "txt_scrub_ngrams" -> 2,
     "txt_signals" -> 1,
     "txt_stats" -> 1,
     "txt_tfidf" -> 1,

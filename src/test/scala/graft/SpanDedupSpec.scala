@@ -110,9 +110,9 @@ class SpanDedupSpec extends AnyFunSuite {
       SpanDedup.chars(4, portableHash = true), SpanDedup.paragraphs)
     for (g <- grains) {
       val want = SpanDedup.against(g, batch.withColumnRenamed("doc_id", g.key),
-        corpus.withColumnRenamed("doc_id", g.key), None, unsafeAssumeCompatible = false)
+        corpus.withColumnRenamed("doc_id", g.key), None)
       val got = SpanDedup.gate(g, batch.withColumn("ts", lit(ts)),
-        SpanDedup.index(g, corpus, None), "1 minute", unsafeAssumeCompatible = false)
+        SpanDedup.index(g, corpus, None), "1 minute")
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.drop("ts").collect().map(r => r.toSeq.map(Option(_))).toSet
       assert(rows(want).exists(_(2).contains(0)) && rows(want).exists(r => r(2).exists(_ != 0)),

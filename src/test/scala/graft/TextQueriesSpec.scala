@@ -1079,7 +1079,7 @@ class TextQueriesSpec extends AnyFunSuite {
     assert(side.schema("hs").metadata.getString("graft.index.kind") == "doc_hash_side")
   }
 
-  test("STRIPPED index metadata fails loudly on every recall-1 consumer; unsafeAssumeCompatible is the explicit escape hatch") {
+  test("STRIPPED index metadata fails loudly on every recall-1 consumer") {
     val corpus = docs.filter(col("doc_id") % 2 === 0)
     val batch = docs.filter(col("doc_id") % 2 === 1)
     // cast+alias rebuilds the column without its metadata — the
@@ -1121,13 +1121,12 @@ class TextQueriesSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.streaming.StreamOps.streamingContainGate(stream, sCidx, side)
     }
-    // the escape hatch: a stripped-but-genuinely-compatible pair under
-    // unsafeAssumeCompatible=true is result-identical to the stamped path
+    // the stamped pair handed in is result-identical to the lazy build
     def snap(df: org.apache.spark.sql.DataFrame) = df
       .select("batch_id", "corpus_id", "inter", "uni").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     assert(snap(TextQueries.jaccardJoinAgainst(batch, corpus, threshold = 0.8,
-        index = Some(sIdx), docSide = Some(sSide), unsafeAssumeCompatible = true)) ==
+        index = Some(idx), docSide = Some(side))) ==
       snap(TextQueries.jaccardJoinAgainst(batch, corpus, threshold = 0.8)))
   }
 
